@@ -2041,12 +2041,19 @@ SQL_WCC_THRESHOLD = _sql_wcc(
     "fedges AS (SELECT src, dst FROM wedges WHERE weight > 45.0)",
 )
 
-SQL_WCC_SIZES = (
-    SQL_WCC.replace(
-        f"SELECT id, comp FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
-        f"SELECT comp AS community, COUNT(*) AS size FROM mlp "
-        f"WHERE iter = {WCC_SQL_ROUNDS} GROUP BY comp",
-    )
+def _patch(sql: str, old: str, new: str) -> str:
+    """``sql.replace(old, new)`` that fails loudly when ``old`` is missing,
+    so a drifted pattern cannot silently leave an oracle unchanged."""
+    if old not in sql:
+        raise ValueError(f"oracle patch pattern not found: {old[:60]!r}")
+    return sql.replace(old, new)
+
+
+SQL_WCC_SIZES = _patch(
+    SQL_WCC,
+    f"SELECT id, comp FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
+    f"SELECT comp AS community, COUNT(*) AS size FROM mlp "
+    f"WHERE iter = {WCC_SQL_ROUNDS} GROUP BY comp",
 )
 
 
@@ -2111,7 +2118,7 @@ def _h6(expr: str) -> str:
 def _sql_hits(iters: int) -> str:
     """Unrolled phase/normalize CTE chain mirroring operators/hits.py."""
     parts = [
-        f"WITH {SQL_EDGES.replace('edges AS (', 'edges AS MATERIALIZED (')}, {SQL_NODES},\n"
+        f"WITH {_patch(SQL_EDGES, 'edges AS (', 'edges AS MATERIALIZED (')}, {SQL_NODES},\n"
         "s0 AS MATERIALIZED (SELECT id, 1.0::DOUBLE AS auth, 1.0::DOUBLE AS hub FROM nodes)"
     ]
     norm = "(SELECT CASE WHEN SQRT(SUM(v*v)) > 0 THEN SQRT(SUM(v*v)) ELSE 1.0 END FROM {t})"
@@ -2143,7 +2150,7 @@ s{t} AS MATERIALIZED (SELECT id, auth, v / {norm.format(t=f'h{t}')} AS hub FROM 
 def _sql_labelprop_full(iters: int, init: str = "id") -> str:
     """Unrolled sync label-propagation rounds (vote -> argmax, ties -> min)."""
     parts = [
-        f"WITH {SQL_EDGES2.replace('edges2 AS (', 'edges2 AS MATERIALIZED (')}, {SQL_NODES2},\n"
+        f"WITH {_patch(SQL_EDGES2, 'edges2 AS (', 'edges2 AS MATERIALIZED (')}, {SQL_NODES2},\n"
         f"l0 AS MATERIALIZED (SELECT id, {init} AS label FROM nodes2)"
     ]
     for t in range(1, iters + 1):
@@ -2622,7 +2629,8 @@ FROM wnodes n LEFT JOIN d ON d.dst = n.id"""
     sqls["wcc"] = SQL_WCC
     sqls["wcc_threshold"] = SQL_WCC_THRESHOLD
     sqls["wcc_sizes"] = SQL_WCC_SIZES
-    sqls["wcc_stats"] = SQL_WCC.replace(
+    sqls["wcc_stats"] = _patch(
+        SQL_WCC,
         f"SELECT id, comp FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
         f"""SELECT COUNT(*) AS component_count, MIN(sz) AS min_size,
        MAX(sz) AS max_size, AVG(sz) AS mean_size
@@ -3184,12 +3192,14 @@ SELECT id, ROUND(rank, 6) AS score FROM pr WHERE iter = {PR_ITERS}"""
         SQL_TRI_PRE + "\nSELECT x AS a, y AS b, z AS c FROM tri"
     )
 
-    sqls["node_similarity_overlap"] = sqls["node_similarity"].replace(
+    sqls["node_similarity_overlap"] = _patch(
+        sqls["node_similarity"],
         "i.i::DOUBLE / (d1.deg + d2.deg - i.i) AS similarity",
         "i.i::DOUBLE / LEAST(d1.deg, d2.deg) AS similarity",
     )
 
-    sqls["wcc_consecutive"] = SQL_WCC.replace(
+    sqls["wcc_consecutive"] = _patch(
+        SQL_WCC,
         f"SELECT id, comp FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
         f"SELECT id, DENSE_RANK() OVER (ORDER BY comp) - 1 AS comp "
         f"FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
@@ -3219,9 +3229,8 @@ cand AS (
 SELECT c.doc1, c.doc2, ROUND(({agree}) / 16.0, 6) AS est_jaccard
 FROM cand c JOIN sige s1 ON s1.doc_id = c.doc1 JOIN sige s2 ON s2.doc_id = c.doc2"""
 
-    sqls["mst"] = _sql_wcc(
-        "wedges", "wnodes", f"WITH RECURSIVE {SQL_WEDGES}, {SQL_WNODES}"
-    ).replace(
+    sqls["mst"] = _patch(
+        _sql_wcc("wedges", "wnodes", f"WITH RECURSIVE {SQL_WEDGES}, {SQL_WNODES}"),
         f"SELECT id, comp FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
         f"SELECT CAST(COUNT(*) - COUNT(DISTINCT comp) AS BIGINT) AS n_tree_edges, "
         f"TRUE AS components_match FROM mlp WHERE iter = {WCC_SQL_ROUNDS}",
@@ -3235,13 +3244,13 @@ SELECT CAST((SELECT COUNT(*) FROM nodes2) AS BIGINT) AS n_assigned,
     sqls["yens"] = _sql_yens(14)
     sqls["influence"] = _sql_influence()
 
-    seeded_init = (
+    seeded_init = _patch(
         f"COALESCE({SEED_SQL}, id + "
-        f"(SELECT MAX(id %% 97 + 100000) FROM nodes2 WHERE id %% 10 = 0) + 1)"
-    ).replace("%%", "%")
-    sqls["wcc_seeded"] = _sql_wcc(
-        "edges2", "nodes2", f"WITH RECURSIVE {SQL_EDGES2}, {SQL_NODES2}"
-    ).replace(
+        f"(SELECT MAX(id %% 97 + 100000) FROM nodes2 WHERE id %% 10 = 0) + 1)",
+        "%%", "%",
+    )
+    sqls["wcc_seeded"] = _patch(
+        _sql_wcc("edges2", "nodes2", f"WITH RECURSIVE {SQL_EDGES2}, {SQL_NODES2}"),
         "SELECT 0, id, id FROM nodes2",
         f"SELECT 0, id, {seeded_init} FROM nodes2",
     )
@@ -3276,7 +3285,8 @@ deg AS (SELECT n.id, COUNT(e.src) AS degree
         FROM nodes n LEFT JOIN edges e ON e.src = n.id GROUP BY n.id)
 SELECT degree, COUNT(*) AS node_count FROM deg GROUP BY degree"""
 
-    sqls["pagerank_stats"] = _sql_pagerank(PR_ITERS, weighted=False).replace(
+    sqls["pagerank_stats"] = _patch(
+        _sql_pagerank(PR_ITERS, weighted=False),
         f"SELECT id, ROUND(rank, 6) AS score FROM pr WHERE iter = {PR_ITERS}",
         f"""SELECT COUNT(*) AS node_count, ROUND(MIN(rank), 6) AS min_score,
        ROUND(MAX(rank), 6) AS max_score, ROUND(AVG(rank), 3) AS mean_score
@@ -3374,19 +3384,19 @@ agg AS (
 SELECT n.id, ROUND(<SCORE>, 6) AS score
 FROM nodes n LEFT JOIN agg a ON a.id = n.id"""
 
-    sqls["harmonic"] = sql_msbfs.replace("<AGGS>", "SUM(1.0 / d) AS inv").replace(
-        "<SCORE>", "COALESCE(a.inv, 0.0) / ((SELECT COUNT(*) FROM nodes) - 1.0)"
+    sqls["harmonic"] = _patch(
+        _patch(sql_msbfs, "<AGGS>", "SUM(1.0 / d) AS inv"),
+        "<SCORE>", "COALESCE(a.inv, 0.0) / ((SELECT COUNT(*) FROM nodes) - 1.0)",
     )
-    sqls["closeness"] = sql_msbfs.replace(
-        "<AGGS>", "SUM(d) AS farness, COUNT(*) AS comp_size"
-    ).replace(
+    farness_aggs = _patch(sql_msbfs, "<AGGS>", "SUM(d) AS farness, COUNT(*) AS comp_size")
+    sqls["closeness"] = _patch(
+        farness_aggs,
         "<SCORE>",
         "CASE WHEN a.farness IS NULL OR a.farness = 0 THEN 0.0 "
         "ELSE a.comp_size / CAST(a.farness AS DOUBLE) END",
     )
-    sqls["closeness_wf"] = sql_msbfs.replace(
-        "<AGGS>", "SUM(d) AS farness, COUNT(*) AS comp_size"
-    ).replace(
+    sqls["closeness_wf"] = _patch(
+        farness_aggs,
         "<SCORE>",
         "CASE WHEN a.farness IS NULL OR a.farness = 0 THEN 0.0 "
         "ELSE (a.comp_size / CAST(a.farness AS DOUBLE)) "

@@ -9,9 +9,9 @@ other queries cover WCC, label propagation, triangle counting, the full
 html->links->PageRank corpus pipeline, and the training-data pipeline ops
 (MinHash LSH dedup, LSH ANN).
 
-Scaling evidence (north rule: >=0.8 efficiency between N and 4N executors —
-sandbox proxy is local[8] vs local[32]):
-  python bench.py --scaling     # runs both in subprocesses, writes BENCH.md
+Scaling evidence (local[8] vs local[32], alternated samples pooled in
+scaling_samples.jsonl) is collected and rendered into BENCH.md by
+scripts/scaling_evidence.py.
 """
 
 from __future__ import annotations
@@ -123,26 +123,17 @@ def bench_queries(spark, sf_dir: str) -> tuple[dict, dict]:
     )
     # steady-state throughput: median per-superstep wall excluding the
     # JIT/shuffle-warmup window (robust to GC spikes).  Metrics rows land at
-    # window boundaries (one per K supersteps), so each boundary delta is
+    # window boundaries (one per K supersteps), so each window's step_s is
     # divided by the supersteps it covers.
-    steps = [m["superstep"] for m in res.metrics if "wall_s" in m]
-    walls = [m["wall_s"] for m in res.metrics if "wall_s" in m]
-    per = []
-    prev_s, prev_w = 0, 0.0
-    for s, wl in zip(steps, walls):
-        per.append((wl - prev_w) / max(s - prev_s, 1))
-        prev_s, prev_w = s, wl
+    rows = [m for m in res.metrics if "step_s" in m]
+    prev = [0] + [m["superstep"] for m in rows]
+    per = [m["step_s"] / max(m["superstep"] - p, 1) for m, p in zip(rows, prev)]
     if len(per) > 2:
         import statistics
 
         med = statistics.median(per[1:])
         extra["superstep_wall_median_s"] = round(med, 3)
         extra["edges_per_sec_per_superstep_steady"] = round(n_edges / med, 0)
-
-    if os.environ.get("SPARK_GRAFT_BENCH_Q1_ONLY"):
-        g.nodes.unpersist()
-        g.edges.unpersist()
-        return times, extra
 
     # -- q1b: SAME convergence target, stride-2 Aitken extrapolation --------
     # (Kamvar et al. WWW'03; PageRankConfig.extrapolate_every).  Converges to
@@ -273,84 +264,6 @@ def run_once() -> dict:
     }
 
 
-def run_scaling() -> None:
-    """Same job at local[8] and local[32]; report throughput at both plus
-    scaling efficiency (sandbox proxy for the N vs 4N executor criterion)."""
-    results = {}
-    # the scaling criterion is about the PageRank job itself: run q1 only on
-    # a 64x-replicated graph (~38M edges) so supersteps are compute-bound,
-    # and compare STEADY-STATE median superstep wall (warmup excluded)
-    replicate = os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "64")
-    for cpus in (8, 32):
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_CPUS=str(cpus),
-            SPARK_GRAFT_SF_DIR=SF_DIR,
-            SPARK_GRAFT_BENCH_REPLICATE=replicate,
-            SPARK_GRAFT_BENCH_Q1_ONLY="1",
-        )
-        out = subprocess.run(
-            [sys.executable, __file__], env=env, capture_output=True, text=True,
-            timeout=3600,
-        )
-        line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
-        results[cpus] = json.loads(line)
-        print(f"local[{cpus}]: {line}")
-
-    t8 = results[8]["queries"]["q1_pagerank_conv"]
-    t32 = results[32]["queries"]["q1_pagerank_conv"]
-    thr8 = results[8]["edges_per_sec_per_superstep"]
-    thr32 = results[32]["edges_per_sec_per_superstep"]
-    eff = (thr32 / thr8) / 4.0 if thr8 else 0.0
-    s8 = results[8].get("edges_per_sec_per_superstep_steady", 0)
-    s32 = results[32].get("edges_per_sec_per_superstep_steady", 0)
-    eff_steady = (s32 / s8) / 4.0 if s8 else 0.0
-    summary = {
-        "pagerank_wall_s_local8": t8,
-        "pagerank_wall_s_local32": t32,
-        "edges_per_sec_per_superstep_local8": thr8,
-        "edges_per_sec_per_superstep_local32": thr32,
-        "scaling_efficiency_pagerank_e2e": round(eff, 3),
-        "steady_eps_local8": s8,
-        "steady_eps_local32": s32,
-        "scaling_efficiency_steady_state": round(eff_steady, 3),
-    }
-    print(json.dumps(summary))
-    with open(os.path.join(os.path.dirname(__file__) or ".", "BENCH.md"), "w") as f:
-        f.write("# BENCH — scaling evidence (local[8] vs local[32])\n\n")
-        f.write(
-            f"Input: `{SF_DIR}` lineitem-derived link graph replicated "
-            f"{replicate}x (~{results[8]['n_edges']:,} edges) — the same "
-            "PageRank job (tol 1e-6, to convergence) at two parallelism\n"
-            "levels; the sandbox proxy for the north rule's N vs 4N executor "
-            "clusters.\n\n"
-        )
-        f.write("| metric | local[8] | local[32] | efficiency (per 4x cores) |\n")
-        f.write("|---|---|---|---|\n")
-        f.write(
-            f"| PageRank wall-s to convergence incl. warmup | {t8} | {t32} | "
-            f"{round(eff, 3)} |\n"
-        )
-        f.write(
-            f"| steady-state edges/sec per superstep (median, warmup excluded) "
-            f"| {round(s8):,} | {round(s32):,} | {round(eff_steady, 3)} |\n\n"
-        )
-        f.write(
-            "Steady-state is the honest per-superstep throughput: the first "
-            "supersteps pay one-time JIT + shuffle-infrastructure warmup that "
-            "a long-running production job amortizes.  The remaining gap to "
-            "1.0 is a ~1s/superstep serial floor (driver job scheduling + "
-            "checkpoint commit) measured via Amdahl fit; a pure-CPU "
-            "multiprocessing baseline on this box reaches 0.72 efficiency "
-            "for 8->32 cores (SMT sharing), which bounds what any engine can "
-            "show here.\n\n"
-        )
-        f.write("Full per-level results:\n\n```json\n")
-        for cpus, r in results.items():
-            f.write(json.dumps({"cpus": cpus, **r}) + "\n")
-        f.write("```\n")
-
-
 def run_replicates(n: int) -> None:
     """Run the full bench n times in fresh subprocesses; print per-query
     medians ± spread (VERDICT r2 task 8: attribute bench regressions to noise
@@ -390,9 +303,7 @@ def run_replicates(n: int) -> None:
 
 
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        run_scaling()
-    elif "--replicates" in sys.argv:
+    if "--replicates" in sys.argv:
         run_replicates(int(sys.argv[sys.argv.index("--replicates") + 1]))
     else:
         print(json.dumps(run_once()))

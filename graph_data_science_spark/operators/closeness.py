@@ -32,12 +32,13 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
 from graph_data_science_spark.session import no_aqe
 
 
@@ -72,7 +73,6 @@ def msbfs_aggregates(
     """Bit-packed MSBFS: (id, farness, comp_size, inv_farness) per reached
     node, aggregated over all reaching sources (sources exclude depth 0)."""
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, None)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = (
         graph.oriented_edges(orientation)
@@ -82,56 +82,52 @@ def msbfs_aggregates(
         .cache()
     )
 
-    roots = _indexed_roots(graph, sources)
-    state = roots.select(
-        "batch",
-        F.col("root").alias("id"),
-        F.col("mask").alias("seen"),
-        F.col("mask").alias("frontier"),
-        F.lit(0.0).alias("farness"),
-        F.lit(0).cast("long").alias("cnt"),
-        F.lit(0.0).alias("inv"),
-    )
-    state = ckpt.checkpoint(state, 0, name="msbfs")
+    def init():
+        return _indexed_roots(graph, sources).select(
+            "batch",
+            F.col("root").alias("id"),
+            F.col("mask").alias("seen"),
+            F.col("mask").alias("frontier"),
+            F.lit(0.0).alias("farness"),
+            F.lit(0).cast("long").alias("cnt"),
+            F.lit(0.0).alias("inv"),
+        ), {}
 
-    with no_aqe(spark):
-        for depth in range(1, max_depth + 1):
-            fr = state.where(F.col("frontier") != 0).select(
-                "batch", F.col("id").alias("src"), "frontier"
-            )
-            msgs = (
-                fr.join(edges, "src")
-                .groupBy("batch", F.col("dst").alias("id"))
-                .agg(F.bit_or("frontier").alias("m"))
-            )
-            merged = state.join(msgs, ["batch", "id"], "full").select(
-                "batch",
-                "id",
-                F.coalesce("seen", F.lit(0)).alias("seen"),
-                F.coalesce("m", F.lit(0)).alias("m"),
-                F.coalesce("farness", F.lit(0.0)).alias("farness"),
-                F.coalesce("cnt", F.lit(0).cast("long")).alias("cnt"),
-                F.coalesce("inv", F.lit(0.0)).alias("inv"),
-            )
-            new = F.col("m").bitwiseAND(F.bitwise_not(F.col("seen")))
-            nbits = F.bit_count(new).cast("long")
-            nxt = merged.select(
-                "batch",
-                "id",
-                F.col("seen").bitwiseOR(F.col("m")).alias("seen"),
-                new.alias("frontier"),
-                (F.col("farness") + F.lit(float(depth)) * nbits).alias("farness"),
-                (F.col("cnt") + nbits).alias("cnt"),
-                (F.col("inv") + nbits / F.lit(float(depth))).alias("inv"),
-            )
-            obs = Observation()
-            nxt = nxt.observe(obs, F.sum(F.bit_count("frontier")).alias("active"))
-            state = ckpt.checkpoint(nxt, depth, name="msbfs")
-            active = int(obs.get["active"] or 0)
-            ckpt.log(depth, algorithm="msbfs", active_bits=active)
-            if active == 0:
-                break
+    def step(state, seen, depth):
+        fr = state.where(F.col("frontier") != 0).select(
+            "batch", F.col("id").alias("src"), "frontier"
+        )
+        msgs = (
+            fr.join(edges, "src")
+            .groupBy("batch", F.col("dst").alias("id"))
+            .agg(F.bit_or("frontier").alias("m"))
+        )
+        merged = state.join(msgs, ["batch", "id"], "full").select(
+            "batch",
+            "id",
+            F.coalesce("seen", F.lit(0)).alias("seen"),
+            F.coalesce("m", F.lit(0)).alias("m"),
+            F.coalesce("farness", F.lit(0.0)).alias("farness"),
+            F.coalesce("cnt", F.lit(0).cast("long")).alias("cnt"),
+            F.coalesce("inv", F.lit(0.0)).alias("inv"),
+        )
+        new = F.col("m").bitwiseAND(F.bitwise_not(F.col("seen")))
+        nbits = F.bit_count(new).cast("long")
+        nxt = merged.select(
+            "batch",
+            "id",
+            F.col("seen").bitwiseOR(F.col("m")).alias("seen"),
+            new.alias("frontier"),
+            (F.col("farness") + F.lit(float(depth)) * nbits).alias("farness"),
+            (F.col("cnt") + nbits).alias("cnt"),
+            (F.col("inv") + nbits / F.lit(float(depth))).alias("inv"),
+        )
+        return nxt, {"active_bits": F.sum(F.bit_count("frontier"))}
 
+    state = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="msbfs",
+        max_steps=max_depth, done=zero("active_bits"),
+    ).state
     edges.unpersist()
     return state.groupBy("id").agg(
         F.sum("farness").alias("farness"),

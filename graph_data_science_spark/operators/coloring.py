@@ -13,12 +13,12 @@ gather neighbor colors (`collect_set` after a join), pick the min free color
 via a vectorized search over the sorted set (JVM-side `aggregate` over
 `sort_array`), with id-based tie-breaking between two conflicting endpoints
 (only the higher id of a conflicting edge recolors — guarantees progress and
-determinism).  Each round = one join + one groupBy; state parquet-checkpointed.
+determinism).  Each round = one join + one groupBy and ONE Spark action: the
+conflict count rides the state's checkpoint write.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -60,7 +60,6 @@ def _min_free_color(colors_set):
 def k1coloring(graph: LinkGraph, cfg: Optional[K1ColoringConfig] = None) -> K1ColoringResult:
     cfg = cfg or K1ColoringConfig()
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # coloring is over the undirected conflict graph
@@ -73,45 +72,43 @@ def k1coloring(graph: LinkGraph, cfg: Optional[K1ColoringConfig] = None) -> K1Co
     )
     sym = cache_copartitioned(sym, n_part, "src")
 
-    state = graph.nodes.select("id", F.lit(0).cast("long").alias("color"))
-    state = ckpt.checkpoint(state, 0)
+    # round t recolors the conflicts of round t-1's coloring; their count
+    # rides the write, so a round with none leaves the coloring unchanged
+    def step(state, seen, t):
+        c_src = state.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
+        c_dst = state.select(F.col("id").alias("dst"), F.col("color").alias("c_dst"))
+        colored_edges = sym.join(c_src, "src").join(c_dst, "dst")
+        # conflict rule: on a monochromatic edge only the HIGHER id recolors
+        conflicted = (
+            colored_edges.where(
+                (F.col("c_src") == F.col("c_dst")) & (F.col("src") > F.col("dst"))
+            )
+            .select(F.col("src").alias("id"))
+            .distinct()
+        )
+        # conflicted nodes gather ALL neighbor colors and take the min free one
+        nbr_colors = (
+            sym.join(conflicted, sym["src"] == conflicted["id"], "left_semi")
+            .join(c_dst, "dst")
+            .groupBy("src")
+            .agg(F.collect_set("c_dst").alias("ncolors"))
+            .select(F.col("src").alias("id"), _min_free_color(F.col("ncolors")).alias("new_color"))
+        )
+        recolored = state.join(nbr_colors, "id", "left").select(
+            "id",
+            F.coalesce("new_color", "color").alias("color"),
+            F.col("new_color").isNotNull().alias("recolored"),
+        )
+        return recolored, {"conflicts": F.sum(F.col("recolored").cast("long"))}
 
-    ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(1, cfg.max_iterations + 1):
-            c_src = state.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
-            c_dst = state.select(F.col("id").alias("dst"), F.col("color").alias("c_dst"))
-            colored_edges = sym.join(c_src, "src").join(c_dst, "dst")
-            # conflict rule: on a monochromatic edge only the HIGHER id recolors
-            conflicted = (
-                colored_edges.where(
-                    (F.col("c_src") == F.col("c_dst")) & (F.col("src") > F.col("dst"))
-                )
-                .select(F.col("src").alias("id"))
-                .distinct()
-            )
-            n_conf = conflicted.count()
-            ckpt.log(t, algorithm="k1coloring", conflicts=n_conf, wall_s=time.time() - t0)
-            if n_conf == 0:
-                ran, converged = t, True
-                break
-            # conflicted nodes gather ALL neighbor colors and take the min free one
-            nbr_colors = (
-                sym.join(conflicted, sym["src"] == conflicted["id"], "left_semi")
-                .join(c_dst, "dst")
-                .groupBy("src")
-                .agg(F.collect_set("c_dst").alias("ncolors"))
-                .select(F.col("src").alias("id"), _min_free_color(F.col("ncolors")).alias("new_color"))
-            )
-            state = (
-                state.join(nbr_colors, "id", "left")
-                .select("id", F.coalesce("new_color", "color").alias("color"))
-            )
-            state = ckpt.checkpoint(state, t)
-
+    run = run_supersteps(
+        graph.nodes, graph.edges,
+        lambda: (graph.nodes.select("id", F.lit(0).cast("long").alias("color")), {}),
+        step, algorithm="k1coloring", max_steps=cfg.max_iterations,
+        done=zero("conflicts"), checkpoint_path=cfg.checkpoint_path,
+    )
     sym.unpersist()
-    return K1ColoringResult(state.select("id", "color"), ran, converged, ckpt.metrics)
+    return K1ColoringResult(run.state, run.steps, run.converged, run.metrics)
 
 
 def validate_coloring(graph: LinkGraph, colors: DataFrame) -> int:

@@ -20,11 +20,12 @@ import time
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 from graph_data_science_spark.session import cache_copartitioned, no_aqe
 
 
@@ -75,10 +76,10 @@ def hits(graph: LinkGraph, cfg: Optional[HitsConfig] = None) -> HitsResult:
                 F.col("auth").alias("auth_prev"),
                 "hub",
             )
-            obs_a = Observation()
-            s1 = s1.observe(obs_a, F.sum(F.col("auth_new") ** 2).alias("ss"))
-            s1 = ckpt.checkpoint(s1, t, name="auth_phase")
-            na = float(obs_a.get["ss"] or 0.0) ** 0.5 or 1.0
+            s1, seen = write(
+                ckpt, s1, {"ss": F.sum(F.col("auth_new") ** 2)}, t, name="auth_phase"
+            )
+            na = float(seen["ss"]) ** 0.5 or 1.0
 
             # hub phase: hub(u) = Σ auth(v) for u->v; normalized auth derived
             # lazily from the materialized raw column + the observed scalar
@@ -93,16 +94,16 @@ def hits(graph: LinkGraph, cfg: Optional[HitsConfig] = None) -> HitsResult:
                 F.col("auth_prev"),
                 F.coalesce("hub_raw", F.lit(0.0)).alias("hub_new"),
             )
-            obs_h = Observation()
-            s2 = s2.observe(
-                obs_h,
-                F.sum(F.col("hub_new") ** 2).alias("ss"),
-                F.sqrt(F.sum((F.col("auth") - F.col("auth_prev")) ** 2)).alias("delta"),
+            s2, row = write(
+                ckpt, s2,
+                {
+                    "ss": F.sum(F.col("hub_new") ** 2),
+                    "delta": F.sqrt(F.sum((F.col("auth") - F.col("auth_prev")) ** 2)),
+                },
+                t, name="hub_phase",
             )
-            s2 = ckpt.checkpoint(s2, t, name="hub_phase")
-            row = obs_h.get
-            nh = float(row["ss"] or 0.0) ** 0.5 or 1.0
-            delta = float(row["delta"] or 0.0)
+            nh = float(row["ss"]) ** 0.5 or 1.0
+            delta = float(row["delta"])
             state = s2.select(
                 "id", "auth", (F.col("hub_new") / F.lit(nh)).alias("hub")
             )

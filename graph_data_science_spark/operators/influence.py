@@ -24,11 +24,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 from graph_data_science_spark.session import no_aqe
 
 
@@ -99,10 +100,8 @@ def influence_maximization(
                 .distinct()
                 .join(member, ["set_id", "id"], "left_anti")
             )
-            obs = Observation()
-            nxt = nxt.observe(obs, F.count(F.lit(1)).alias("c"))
-            nxt = ckpt.checkpoint(nxt, depth, name="rr_frontier")
-            if int(obs.get["c"] or 0) == 0:
+            nxt, seen = write(ckpt, nxt, {"c": F.count(F.lit(1))}, depth, name="rr_frontier")
+            if seen["c"] == 0:
                 break
             member = ckpt.checkpoint(member.unionByName(nxt), depth, name="rr")
             frontier = nxt

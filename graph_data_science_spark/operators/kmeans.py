@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 
 
 @dataclass
@@ -99,34 +100,21 @@ def kmeans(
     assign = None
     ran, converged = cfg.max_iterations, False
     t0 = time.time()
-    from pyspark.sql import Observation
-
     for t in range(1, cfg.max_iterations + 1):
         new_assign = assign_step(centroids)
+        aggs = {"sse": F.sum("d2")}
         # change-count rides the checkpoint write (observe) — one extra join
         # against the previous assignment, zero extra jobs
         if assign is not None:
             new_assign = new_assign.join(
                 assign.select("id", F.col("cluster").alias("_old")), "id"
             )
-            obs = Observation()
-            new_assign = new_assign.observe(
-                obs,
-                F.sum((F.col("cluster") != F.col("_old")).cast("long")).alias("chg"),
-                F.sum("d2").alias("sse"),
-            ).select("id", "v", "cluster", "d2")
-        else:
-            obs = Observation()
-            new_assign = new_assign.observe(obs, F.sum("d2").alias("sse")).select(
-                "id", "v", "cluster", "d2"
-            )
-        new_assign = ckpt.checkpoint(new_assign, t)
-        row = obs.get
-        changed = int(row["chg"] or 0) if "chg" in row else -1
-        assign = new_assign
+            aggs["chg"] = F.sum((F.col("cluster") != F.col("_old")).cast("long"))
+        assign, row = write(ckpt, new_assign, aggs, t, ["id", "v", "cluster", "d2"])
+        changed = row.get("chg", -1)
         ckpt.log(
             t, algorithm="kmeans", changed=changed,
-            sse=float(row["sse"] or 0.0), wall_s=time.time() - t0,
+            sse=float(row["sse"]), wall_s=time.time() - t0,
         )
         if changed == 0:
             ran, converged = t, True

@@ -23,7 +23,6 @@ compare+swap.  Converged when no label changed (LabelPropagation.java:131-135).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -31,8 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -53,14 +52,14 @@ class LabelPropagationResult:
     metrics: list = field(default_factory=list)
 
 
-def _init_labels(graph: LinkGraph, cfg: LabelPropagationConfig) -> DataFrame:
-    nodes = graph.nodes
-    if cfg.seed_property and cfg.seed_property in nodes.columns:
-        max_seed = nodes.agg(F.max(cfg.seed_property)).collect()[0][0]
+def seed_labels(nodes: DataFrame, seed_property: str | None) -> DataFrame:
+    """(id, label): the seed where present, else maxSeedLabel + nodeId + 1
+    (InitStep.java:58-79); plain node ids without a seed column."""
+    if seed_property and seed_property in nodes.columns:
+        max_seed = nodes.agg(F.max(seed_property)).collect()[0][0]
         max_seed = -1 if max_seed is None else int(max_seed)
-        # missing-seed rule: maxSeedLabel + nodeId + 1 (InitStep.java:73-75)
         label = F.coalesce(
-            F.col(cfg.seed_property).cast("long"),
+            F.col(seed_property).cast("long"),
             F.col("id") + F.lit(max_seed + 1),
         )
     else:
@@ -73,25 +72,7 @@ def label_propagation(
 ) -> LabelPropagationResult:
     cfg = cfg or LabelPropagationConfig()
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm="labelprop",
-            weighted=cfg.weighted,
-            seed_property=cfg.seed_property,
-            node_weight_property=cfg.node_weight_property,
-            orientation=str(cfg.orientation),
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("labelprop", graph.nodes, graph.edges, cfg.max_iterations))
 
     # gather direction matches the reference's forEachRelationship: a node
     # adopts labels from its out-neighbors under the given orientation
@@ -111,58 +92,42 @@ def label_propagation(
         edges.select("src", "dst", vote_w.alias("vote")), n_part, "dst"
     )
 
-    # resume (north rule: every superstep resumable mid-iteration): the sync
-    # update is a deterministic function of the previous label state, so
-    # continuing from the latest COMMITTED superstep replays exactly the
-    # trajectory an uninterrupted run would have taken.  The fingerprint gate
-    # (graph content + config identity) refuses stale state from a different
-    # graph or config at the same path.
-    start_t = 0
-    resumed = ckpt.latest_superstep()
-    if resumed is not None and 0 < resumed < cfg.max_iterations:
-        state = ckpt.load(resumed)
-        start_t = resumed
-        ckpt.log(resumed, algorithm="labelprop", resumed_from=resumed)
-    else:
-        state = _init_labels(graph, cfg)
-        state = ckpt.checkpoint(state, 0)
+    # the sync update is a deterministic function of the previous label
+    # state, so a resumed run replays exactly the uninterrupted trajectory
+    def step(state, seen, t):
+        nbr_labels = state.select(F.col("id").alias("dst"), F.col("label").alias("nbr_label"))
+        votes = (
+            edges.join(nbr_labels, "dst")
+            .groupBy("src", "nbr_label")
+            .agg(F.sum("vote").alias("w"))
+        )
+        top = votes.withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("src").orderBy(F.desc("w"), F.asc("nbr_label"))
+            ),
+        ).where("rn = 1").select(F.col("src").alias("id"), F.col("nbr_label").alias("new_label"))
+        merged = state.join(top, "id", "left").select(
+            "id",
+            F.coalesce("new_label", "label").alias("label"),
+            (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
+        )
+        return merged, {"changed": F.sum(F.col("changed").cast("long"))}
 
-    ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(start_t + 1, cfg.max_iterations + 1):
-            nbr_labels = state.select(F.col("id").alias("dst"), F.col("label").alias("nbr_label"))
-            votes = (
-                edges.join(nbr_labels, "dst")
-                .groupBy("src", "nbr_label")
-                .agg(F.sum("vote").alias("w"))
-            )
-            top = votes.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("src").orderBy(F.desc("w"), F.asc("nbr_label"))
-                ),
-            ).where("rn = 1").select(F.col("src").alias("id"), F.col("nbr_label").alias("new_label"))
-            merged = state.join(top, "id", "left").select(
-                "id",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
-            )
-            # changed-count rides the checkpoint write (observe) — no extra job
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            observed = merged.observe(
-                obs, F.sum(F.col("changed").cast("long")).alias("c")
-            ).select("id", "label")
-            state = ckpt.checkpoint(observed, t)
-            changed = int(obs.get["c"] or 0)
-            ckpt.log(t, algorithm="labelprop", changed=changed, wall_s=time.time() - t0)
-            if changed == 0:
-                ran, converged = t, True
-                break
-
-    return LabelPropagationResult(state.select("id", "label"), ran, converged, ckpt.metrics)
+    run = run_supersteps(
+        graph.nodes, graph.edges, lambda: (seed_labels(graph.nodes, cfg.seed_property), {}), step,
+        algorithm="labelprop", max_steps=cfg.max_iterations, done=zero("changed"),
+        checkpoint_path=cfg.checkpoint_path,
+        identity={
+            "weighted": cfg.weighted,
+            "seed_property": cfg.seed_property,
+            "node_weight_property": cfg.node_weight_property,
+            "orientation": str(cfg.orientation),
+        },
+    )
+    return LabelPropagationResult(
+        run.state.select("id", "label"), run.steps, run.converged, run.metrics
+    )
 
 
 def label_propagation_async_oracle(

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 
 
 @dataclass
@@ -193,22 +194,19 @@ def _local_moving(
             F.col("new_comm").isNotNull().alias("_cand"),
             (F.col("new_comm").isNotNull() & apply_gate).alias("_moved"),
         )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = merged.observe(
-            obs,
-            F.sum(F.col("_cand").cast("long")).alias("cand_moves"),
-            F.sum(F.col("_moved").cast("long")).alias("moved"),
-        ).select("id", "community", "deg")
-        comm = ckpt.checkpoint(observed, it, name=f"louvain_l{level}")
-        row = obs.get
-        cand_moves, moved = int(row["cand_moves"] or 0), int(row["moved"] or 0)
-        ckpt.log(
-            it, algorithm="louvain_move", level=level, moved=moved,
-            cand_moves=cand_moves,
+        comm, seen = write(
+            ckpt, merged,
+            {
+                "cand_moves": F.sum(F.col("_cand").cast("long")),
+                "moved": F.sum(F.col("_moved").cast("long")),
+            },
+            it, ["id", "community", "deg"], f"louvain_l{level}",
         )
-        if cand_moves == 0:
+        ckpt.log(
+            it, algorithm="louvain_move", level=level, moved=seen["moved"],
+            cand_moves=seen["cand_moves"],
+        )
+        if seen["cand_moves"] == 0:
             break
 
     nodes_deg.unpersist()

@@ -22,12 +22,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 from graph_data_science_spark.session import no_aqe
 
 
@@ -130,12 +131,11 @@ def approx_max_k_cut(
                     F.col("new_p").isNotNull() & (F.col("new_p") != F.col("partition"))
                 ).alias("_cand"),
             )
-            obs = Observation()
-            observed = merged.observe(
-                obs, F.sum(F.col("_cand").cast("long")).alias("cand")
-            ).select("id", "partition")
-            assign = ckpt.checkpoint(observed, it, name="kcut")
-            cand = int(obs.get["cand"] or 0)
+            assign, seen = write(
+                ckpt, merged, {"cand": F.sum(F.col("_cand").cast("long"))},
+                it, ["id", "partition"], "kcut",
+            )
+            cand = seen["cand"]
             cut = _cut_weight(graph, assign)
             if cut > best_cut:
                 best_assign = ckpt.checkpoint(assign, it, name="kcut_best")

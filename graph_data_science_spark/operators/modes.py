@@ -95,16 +95,19 @@ def _triangles():
     )
 
 
+class _FrameResult:
+    """Result shape for operators that return a bare DataFrame."""
+
+    def __init__(self, df):
+        self.df = df
+        self.metrics = []
+
+
 def _degree():
     from graph_data_science_spark.operators import degree as deg
 
-    class _R:
-        def __init__(self, df):
-            self.df = df
-            self.metrics = []
-
     return AlgoSpec(
-        lambda g, cfg: _R(deg.degree_centrality(g, **cfg)),
+        lambda g, cfg: _FrameResult(deg.degree_centrality(g, **cfg)),
         lambda r: r.df,
         "score",
         "centrality",
@@ -154,15 +157,10 @@ def _hits():
 def _closeness(harmonic: bool):
     from graph_data_science_spark.operators import closeness as cl
 
-    class _R:
-        def __init__(self, df):
-            self.df = df
-            self.metrics = []
-
     fn = cl.harmonic_centrality if harmonic else cl.closeness_centrality
 
     return AlgoSpec(
-        lambda g, cfg: _R(fn(g, **cfg)),
+        lambda g, cfg: _FrameResult(fn(g, **cfg)),
         lambda r: r.df,
         "score",
         "centrality",
@@ -174,13 +172,8 @@ def _closeness(harmonic: bool):
 def _betweenness():
     from graph_data_science_spark.operators import betweenness as bt
 
-    class _R:
-        def __init__(self, df):
-            self.df = df
-            self.metrics = []
-
     return AlgoSpec(
-        lambda g, cfg: _R(bt.betweenness_centrality(g, **cfg)),
+        lambda g, cfg: _FrameResult(bt.betweenness_centrality(g, **cfg)),
         lambda r: r.df,
         "score",
         "centrality",
@@ -248,13 +241,8 @@ def _k1coloring():
 def _node_similarity():
     from graph_data_science_spark.operators import similarity as sim
 
-    class _R:
-        def __init__(self, df):
-            self.df = df
-            self.metrics = []
-
     return AlgoSpec(
-        lambda g, cfg: _R(sim.node_similarity(g, **cfg)),
+        lambda g, cfg: _FrameResult(sim.node_similarity(g, **cfg)),
         lambda r: r.df.select(
             F.col("node1").alias("src"), F.col("node2").alias("dst"),
             F.col("similarity").alias("weight"),
@@ -269,15 +257,10 @@ def _node_similarity():
 def _knn():
     from graph_data_science_spark.operators import ann
 
-    class _R:
-        def __init__(self, df):
-            self.df = df
-            self.metrics = []
-
     def run(g, cfg):
         vecs, cfg = _node_vectors(g, dict(cfg))
         prop = vecs.columns[1]
-        return _R(ann.knn(vecs, id_col="id", vec_col=prop, **cfg))
+        return _FrameResult(ann.knn(vecs, id_col="id", vec_col=prop, **cfg))
 
     return AlgoSpec(
         run,
@@ -352,13 +335,8 @@ def _sssp():
 def _bfs():
     from graph_data_science_spark.operators import paths as p
 
-    class _R:
-        def __init__(self, df):
-            self.df = df
-            self.metrics = []
-
     return AlgoSpec(
-        lambda g, cfg: _R(p.bfs(g, **cfg)),
+        lambda g, cfg: _FrameResult(p.bfs(g, **cfg)),
         lambda r: r.df,
         "hops",
         "centrality",

@@ -37,7 +37,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import (
+    begin,
+    job_tags,
+    run_supersteps,
+    write,
+)
 from graph_data_science_spark.session import cache_copartitioned, no_aqe
 
 
@@ -130,6 +135,16 @@ def _out_shares(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Data
     return cache_copartitioned(shares, n_part, "src")
 
 
+def _teleport(cfg: PageRankConfig):
+    """Initial rank (and teleport mass) per node: 1 - d, only at the source
+    nodes when personalized."""
+    alpha = F.lit(1.0 - cfg.damping_factor)
+    if cfg.source_nodes:
+        srcs = sorted({int(s) for s in cfg.source_nodes})
+        return F.when(F.col("id").isin(srcs), alpha).otherwise(F.lit(0.0))
+    return alpha
+
+
 def page_rank(graph: LinkGraph, cfg: PageRankConfig | None = None) -> CentralityResult:
     cfg = cfg or PageRankConfig()
     return _delta_push(graph, cfg, denominator="degree")
@@ -142,55 +157,14 @@ def article_rank(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Central
 
 def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> CentralityResult:
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm=denominator,
-            damping=cfg.damping_factor,
-            tolerance=cfg.tolerance,
-            source_nodes=cfg.source_nodes,
-            weighted=cfg.weighted,
-            orientation=str(cfg.orientation),
-            # seeded and unseeded runs must not resume each other's
-            # checkpoints; distinct seeds should use distinct paths
-            seeded=cfg.seed_ranks is not None,
-            # extrapolated runs follow a different superstep trajectory
-            extrapolate_every=cfg.extrapolate_every,
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
-    alpha = 1.0 - cfg.damping_factor
+    algorithm = "pagerank" if denominator == "degree" else "articlerank"
     d = cfg.damping_factor
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report(
-        "pagerank" if denominator == "degree" else "articlerank",
-        graph.nodes, graph.edges, cfg.max_iterations,
-    ))
     shares = _out_shares(graph, cfg, denominator)
+    init = _teleport(cfg)
 
-    if cfg.source_nodes:
-        srcs = set(int(s) for s in cfg.source_nodes)
-        init = (
-            F.when(F.col("id").isin(list(srcs)), F.lit(alpha)).otherwise(F.lit(0.0))
-        )
-    else:
-        init = F.lit(alpha)
-
-    # resume: with a durable checkpoint path, continue from the latest
-    # COMMITTED superstep (north rule: resumable mid-iteration; a partial
-    # write without the _COMMITTED manifest is never trusted).
-    start_t = 0
-    resumed = ckpt.latest_superstep()
-    if resumed is not None and 0 < resumed < cfg.max_iterations:
-        state = ckpt.load(resumed)
-        start_t = resumed
-        ckpt.log(resumed, algorithm="pagerank", resumed_from=resumed)
-    elif cfg.seed_ranks is not None:
+    def initial_state():
+        if cfg.seed_ranks is None:
+            return graph.nodes.select("id", init.alias("rank"), init.alias("delta")), {}
         # warm start: one Jacobi step from the seed, then iterate on the
         # residual.  rank_0 = init + d*M^T r0 (the seed pushed through one
         # superstep) and delta_0 = rank_0 - r0; the delta-push loop then adds
@@ -207,15 +181,28 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
             .agg((F.lit(d) * F.sum(F.col("r0") * F.col("share"))).alias("m"))
             .select(F.col("dst").alias("id"), "m")
         )
-        state = r0.join(msg, "id", "left").select(
+        return r0.join(msg, "id", "left").select(
             "id",
             (init + F.coalesce("m", F.lit(0.0))).alias("rank"),
             (init + F.coalesce("m", F.lit(0.0)) - F.col("r0")).alias("delta"),
-        )
-        state = ckpt.checkpoint(state, 0)
-    else:
-        state = graph.nodes.select("id", init.alias("rank"), init.alias("delta"))
-        state = ckpt.checkpoint(state, 0)
+        ), {}
+
+    ckpt, state, _, start_t = begin(
+        graph.nodes, graph.edges, initial_state, algorithm=algorithm,
+        max_steps=cfg.max_iterations, checkpoint_path=cfg.checkpoint_path,
+        identity={
+            "damping": cfg.damping_factor,
+            "tolerance": cfg.tolerance,
+            "source_nodes": cfg.source_nodes,
+            "weighted": cfg.weighted,
+            "orientation": str(cfg.orientation),
+            # seeded and unseeded runs must not resume each other's
+            # checkpoints; distinct seeds should use distinct paths
+            "seeded": cfg.seed_ranks is not None,
+            # extrapolated runs follow a different superstep trajectory
+            "extrapolate_every": cfg.extrapolate_every,
+        },
+    )
 
     # ranIterations mirrors Pregel.run (pregel/.../Pregel.java:154-190): on
     # convergence the 0-based index of the converged iteration is reported;
@@ -253,11 +240,13 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
     every = max(1, int(cfg.checkpoint_every))
     from pyspark import StorageLevel
 
-    with no_aqe(spark):
+    lap = t0
+    with no_aqe(spark), job_tags(spark) as describe:
         delta = None  # in-window chained (id, delta) stream; None = at boundary
         window: list = []
         last_x = start_t  # superstep of the latest extrapolation (or start)
         for t in range(start_t + 1, cfg.max_iterations):
+            describe(f"{algorithm}:{t}")
             # superstep t receives what superstep t-1 sent; on the initial
             # superstep every node sends regardless of tolerance
             # (PageRankComputation.java:90 `delta > tolerance || isInitialSuperstep`).
@@ -394,31 +383,24 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
                     (init + F.coalesce("m", F.lit(0.0))).alias("rank"),
                     (init + F.coalesce("m", F.lit(0.0)) - F.col("r0")).alias("delta"),
                 )
-            obs = None
-            if cfg.tolerance > 0.0:
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                new_state = new_state.observe(
-                    obs,
-                    F.sum(
-                        (F.abs(F.col("delta")) > cfg.tolerance).cast("long")
-                    ).alias("active"),
-                )
-            state = ckpt.checkpoint(new_state, t)
+            active_col = (F.abs(F.col("delta")) > cfg.tolerance).cast("long")
+            state, seen = write(
+                ckpt, new_state,
+                {"active": F.sum(active_col)} if cfg.tolerance > 0.0 else {}, t,
+            )
             for w_df in window:
                 w_df.unpersist()
             delta, window = None, []
-            active = int(obs.get["active"] or 0) if obs is not None else -1
+            active = seen.get("active", -1)
+            now = time.time()
             ckpt.log(
-                t,
-                algorithm="pagerank" if denominator == "degree" else "articlerank",
-                active=active,
-                wall_s=time.time() - t0,
+                t, algorithm=algorithm, active=active,
+                wall_s=now - t0, step_s=now - lap,
                 # an extrapolated boundary spends one extra M^T·r product on
                 # the restart — counted here for honest edges/sec accounting
                 extrapolated=bool(do_x),
             )
+            lap = now
             if active == 0:
                 ran, converged = t, True
                 break
@@ -443,13 +425,8 @@ def pagerank_residual(
     loop comment).
     """
     cfg = cfg or PageRankConfig()
-    alpha = 1.0 - cfg.damping_factor
     shares = _out_shares(graph, cfg, "degree")
-    if cfg.source_nodes:
-        srcs = [int(s) for s in cfg.source_nodes]
-        init = F.when(F.col("id").isin(srcs), F.lit(alpha)).otherwise(F.lit(0.0))
-    else:
-        init = F.lit(alpha)
+    init = _teleport(cfg)
     r = scores.select("id", F.col("score").alias("r"))
     msg = (
         r.hint("shuffle_hash")
@@ -478,14 +455,6 @@ def pagerank_residual(
 def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> CentralityResult:
     """Eigenvector centrality (EigenvectorComputation.java; FIXTURES.md §B4)."""
     cfg = cfg or PageRankConfig()
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report(
-        "eigenvector", graph.nodes, graph.edges, cfg.max_iterations
-    ))
     shares = _out_shares(graph, cfg, denominator="one_or_wdeg")
 
     n = graph.node_count()
@@ -498,83 +467,66 @@ def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Centrali
 
     # ONE action per superstep and NOTHING recomputed: the pre-normalization
     # state is checkpointed with the L2 sum-of-squares riding the write as an
-    # observe metric; the normalized rank column then derives LAZILY from the
-    # materialized `next` column and the observed scalar (masterCompute
-    # analog).  The convergence count (nodes with |rank - prev_rank| > tol)
-    # also rides the write — it compares the two previous ranks carried in
-    # the frame, so convergence detection lags one superstep and the scores
-    # of the CONVERGED superstep are returned (GDS reports the iteration the
-    # check passed on).
-    from pyspark.sql import Observation
+    # observed driver-only scalar (_ss); the normalized rank column then
+    # derives LAZILY from the materialized `next` column and that scalar
+    # (masterCompute analog).  The convergence count (nodes with
+    # |rank - prev_rank| > tol) also rides the write — it compares the two
+    # previous ranks carried in the frame, so convergence detection lags one
+    # superstep and the scores of the CONVERGED superstep are returned (GDS
+    # reports the iteration the check passed on): they are the frame's
+    # prev_rank column.
+    def sum_sq():
+        return F.sum(F.col("next") ** 2)
 
-    pre = graph.nodes.select(
-        "id", init.alias("next"), F.lit(None).cast("double").alias("prev_rank")
-    )
-    obs0 = Observation()
-    pre = pre.observe(obs0, F.sum(F.col("next") ** 2).alias("ss"))
-    pre = ckpt.checkpoint(pre, 0)
-    norm = float(obs0.get["ss"] or 0.0) ** 0.5 or 1.0
-
-    def _normalized(df, nrm):
-        return df.select(
+    def normalized(state, seen):
+        norm = float(seen["_ss"]) ** 0.5 or 1.0
+        return state.select(
             "id",
-            (F.col("next") / F.lit(nrm)).alias("rank"),
+            (F.col("next") / F.lit(norm)).alias("rank"),
             F.col("next").alias("sent_base"),
             "prev_rank",
         )
 
-    state = _normalized(pre, norm)
-    prev_scores = state
-    ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(1, cfg.max_iterations):
-            msgs = (
-                state.select("id", "sent_base")
-                .join(shares, state["id"] == shares["src"])
-                .groupBy("dst")
-                .agg(F.sum(F.col("sent_base") * F.col("share")).alias("msg"))
-            )
-            nxt = (
-                state.join(msgs, state["id"] == msgs["dst"], "left")
-                .select(
-                    state["id"],
-                    F.col("rank").alias("prev_rank"),
-                    F.col("prev_rank").alias("prev2"),
-                    (F.col("rank") + F.coalesce(F.col("msg"), F.lit(0.0))).alias("next"),
-                )
-            )
-            obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.sum(F.col("next") ** 2).alias("ss"),
-                F.sum(
-                    (F.abs(F.col("prev_rank") - F.col("prev2")) > cfg.tolerance).cast(
-                        "long"
-                    )
-                ).alias("lag_active"),
-            )
-            nxt = ckpt.checkpoint(nxt.drop("prev2"), t)
-            row = obs.get
-            norm = float(row["ss"] or 0.0) ** 0.5 or 1.0
-            lag_active = row["lag_active"]
-            prev_scores = state
-            state = _normalized(nxt, norm)
-            ckpt.log(
-                t, algorithm="eigenvector", lag_active=lag_active,
-                wall_s=time.time() - t0,
-            )
-            # lag_active compares superstep t-1 vs t-2 (null on t=1): if the
-            # t-1 update changed nothing beyond tolerance, t-1 converged —
-            # return ITS scores (this superstep's work is discarded).
-            if t > 1 and int(lag_active or 0) == 0:
-                ran, converged = t - 1, True
-                state = prev_scores
-                break
+    def init_state():
+        return graph.nodes.select(
+            "id", init.alias("next"), F.lit(None).cast("double").alias("prev_rank")
+        ), {"_ss": sum_sq()}
 
-    scores = state.select("id", F.col("rank").alias("score"))
+    def step(pre, seen, t):
+        state = normalized(pre, seen)
+        msgs = (
+            state.select("id", "sent_base")
+            .join(shares, state["id"] == shares["src"])
+            .groupBy("dst")
+            .agg(F.sum(F.col("sent_base") * F.col("share")).alias("msg"))
+        )
+        nxt = state.join(msgs, state["id"] == msgs["dst"], "left").select(
+            state["id"],
+            F.col("rank").alias("prev_rank"),
+            F.col("prev_rank").alias("prev2"),
+            (F.col("rank") + F.coalesce(F.col("msg"), F.lit(0.0))).alias("next"),
+        )
+        lagging = F.abs(F.col("prev_rank") - F.col("prev2")) > cfg.tolerance
+        return nxt, {"_ss": sum_sq(), "lag_active": F.sum(lagging.cast("long"))}
+
+    # lag_active compares superstep t-1 vs t-2 (none on t=1): if the t-1
+    # update changed nothing beyond tolerance, t-1 converged
+    run = run_supersteps(
+        graph.nodes, graph.edges, init_state, step,
+        algorithm="eigenvector", max_steps=cfg.max_iterations - 1,
+        done=lambda pre, seen, t: t > 1 and seen["lag_active"] == 0,
+        checkpoint_path=cfg.checkpoint_path,
+    )
+    if run.converged:
+        scores = run.state.select("id", F.col("prev_rank").alias("score"))
+        ran = run.steps - 1
+    else:
+        scores = normalized(run.state, run.seen).select(
+            "id", F.col("rank").alias("score")
+        )
+        ran = cfg.max_iterations
     if cfg.scaler and cfg.scaler.upper() != "NONE":
         from graph_data_science_spark.operators.scaling import scale_property
 
         scores = scale_property(scores, "score", cfg.scaler)
-    return CentralityResult(scores, ran, converged, ckpt.metrics)
+    return CentralityResult(scores, ran, run.converged, run.metrics)

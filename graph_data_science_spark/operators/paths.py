@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 from graph_data_science_spark.session import cache_copartitioned, no_aqe
 
 
@@ -175,8 +176,18 @@ def sssp_delta(
     the PQ).  With non-negative weights every value assigned after this
     round is >= the round's minimum improved distance, so once every
     target is reached AND min(frontier distance) >= max(target distance)
-    the targets are final; all checks ride the existing per-round
-    Observation (zero extra Spark actions)."""
+    the targets are final; the per-round checks ride the existing
+    Observation.  The exit is unsound for negative weights, so a weighted
+    run with `targets` first checks min(weight) on the cached edges (one
+    scan that also builds the cache round 1 reads) and raises ValueError
+    on a negative one.  Without `targets` the Bellman-Ford fixpoint
+    handles negative weights (no negative cycles).
+
+    The min-id predecessor tie-break of `shortest_paths` assumes strictly
+    positive weights when `targets` is set: with zero-weight edges a node
+    at exactly the target horizon may be unsettled at the exit, so the
+    chosen path is a shortest path but may differ from the untargeted
+    run's min-id one."""
     spark = graph.nodes.sparkSession
     ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -189,7 +200,13 @@ def sssp_delta(
     frontier = dist
     rounds = 0
     tset = sorted({int(t) for t in targets}) if targets else []
-    from pyspark.sql import Observation
+    if tset and weighted:
+        min_w = edges.agg(F.min("w")).first()[0]
+        if min_w is not None and min_w < 0:
+            raise ValueError(
+                f"sssp_delta: targets early exit needs non-negative weights, "
+                f"found weight {min_w}; run without targets instead"
+            )
 
     with no_aqe(spark):
         for r in range(1, max_rounds + 1):
@@ -208,27 +225,22 @@ def sssp_delta(
                 ).alias("distance"),
             )
             # improved-count rides the checkpoint write — one action per round
-            obs = Observation()
             improved_flag = F.col("distance") < F.col("old")
-            aggs = [F.sum(improved_flag.cast("long")).alias("imp")]
+            aggs = {"imp": F.sum(improved_flag.cast("long"))}
             if tset:
                 is_t = F.col("id").isin(tset)
-                aggs += [
-                    F.min(F.when(improved_flag, F.col("distance"))).alias("fmin"),
-                    F.max(F.when(is_t, F.col("distance"))).alias("tmax"),
-                    F.count(F.when(is_t, F.lit(1))).alias("treached"),
-                ]
-            merged = merged.observe(obs, *aggs)
-            merged = ckpt.checkpoint(merged, r)
-            got = obs.get
-            improved = int(got["imp"] or 0)
+                aggs["fmin"] = F.min(F.when(improved_flag, F.col("distance")))
+                aggs["tmax"] = F.max(F.when(is_t, F.col("distance")))
+                aggs["treached"] = F.count(F.when(is_t, F.lit(1)))
+            merged, got = write(ckpt, merged, aggs, r)
+            improved = got["imp"]
             frontier = merged.where(F.col("distance") < F.col("old")).select("id", "distance")
             ckpt.log(r, algorithm="sssp_delta", improved=improved)
             dist = merged.select("id", "distance")
             if improved == 0:
                 break
             # improved > 0 here, so fmin (min improved distance) is non-null
-            if tset and int(got["treached"] or 0) == len(tset):
+            if tset and got["treached"] == len(tset):
                 if got["fmin"] >= got["tmax"]:
                     ckpt.log(r, algorithm="sssp_delta", targets_settled=True)
                     break
@@ -324,8 +336,6 @@ def shortest_paths(
         )
     )
     state = ckpt.checkpoint(state, 0, name="paths")
-    from pyspark.sql import Observation
-
     for r in range(1, 64):
         anc_map = state.select(
             F.col("id").alias("anc"), F.col("anc").alias("anc2"), F.col("seg").alias("seg2")
@@ -339,12 +349,11 @@ def shortest_paths(
             .otherwise(F.concat("seg2", "seg"))
             .alias("seg"),
         )
-        obs = Observation()
-        merged = merged.observe(
-            obs, F.sum(F.col("anc").isNotNull().cast("long")).alias("open")
+        state, seen = write(
+            ckpt, merged, {"open": F.sum(F.col("anc").isNotNull().cast("long"))},
+            r, name="paths",
         )
-        state = ckpt.checkpoint(merged, r, name="paths")
-        if int(obs.get["open"] or 0) == 0:
+        if seen["open"] == 0:
             break
 
     paths = state.select(

@@ -33,7 +33,6 @@ this driver is the cross-check test).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -41,8 +40,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps
+from graph_data_science_spark.session import cache_copartitioned
 
 REDUCERS = {
     "sum": F.sum,
@@ -93,106 +92,75 @@ def run_pregel(
 ) -> PregelResult:
     cfg = cfg or PregelConfig()
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None and cfg.computation_id is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm=f"pregel:{cfg.computation_id}",
-            reducer=comp.reducer,
-            orientation=str(cfg.orientation),
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("pregel", graph.nodes, graph.edges, cfg.max_iterations))
-
     reducer = REDUCERS[comp.reducer]
     edges = cache_copartitioned(
         graph.oriented_edges(cfg.orientation), n_part, "src"
     )
+    initial = comp.init(graph.nodes)
+    state_cols = [c for c in initial.columns if c != "id"]
 
-    state = comp.init(graph.nodes)
-    state_cols = [c for c in state.columns if c != "id"]
-    # resume: the superstep is a deterministic function of the previous
-    # (state, _computed) snapshot, so continuing from the latest committed
-    # superstep replays the uninterrupted trajectory exactly.  Only attempted
-    # when a computation_id made the fingerprint specific (see PregelConfig).
-    start_t = 0
-    resumed = ckpt.latest_superstep() if fp is not None else None
-    if resumed is not None and 0 < resumed < cfg.max_iterations:
-        state = ckpt.load(resumed)
-        start_t = resumed
-        ckpt.log(resumed, algorithm="pregel", resumed_from=resumed)
-    else:
-        # _computed: the node ran compute() last superstep (initially: all).
-        # Sending is an EVENT tied to being computed — a node that receives no
-        # messages is not invoked and must NOT re-send its stale state
-        # (ComputeStep.java:95 skips halted nodes without messages).
-        state = state.withColumn("_computed", F.lit(True))
-        state = ckpt.checkpoint(state, 0)
+    # _computed (a state column): the node ran compute() last superstep
+    # (initially: all).  Sending is an EVENT tied to being computed — a node
+    # that receives no messages is not invoked and must NOT re-send its stale
+    # state (ComputeStep.java:95 skips halted nodes without messages).
+    def step(state, seen, t):
+        senders = state.where(F.col("_computed"))
+        if comp.send_when is not None:
+            gate = comp.send_when(senders)
+            # the initial superstep always sends (isInitialSuperstep)
+            senders = senders.where(gate if t > 1 else (gate | F.lit(t == 1)))
+        sender_edges = senders.hint("shuffle_hash").join(
+            edges, senders["id"] == edges["src"]
+        )
+        msgs = (
+            sender_edges.select(
+                F.col("dst"), comp.message(sender_edges).alias("_m")
+            )
+            .groupBy("dst")
+            .agg(reducer("_m").alias("msg"))
+            .hint("shuffle_hash")
+        )
+        joined = state.join(msgs, state["id"] == msgs["dst"], "left")
+        received = F.col("msg").isNotNull()
+        new_cols = comp.update(joined, F.col("msg"))
+        assert len(new_cols) == len(state_cols), (
+            "update must return one column per state col"
+        )
+        new_state = joined.select(
+            state["id"],
+            *[
+                # non-computed nodes keep their state untouched
+                F.when(received, c).otherwise(F.col(name)).alias(name)
+                for name, c in zip(state_cols, new_cols)
+            ],
+            received.alias("_computed"),
+        )
+        # convergence = nobody will send next superstep
+        will_send = F.col("_computed")
+        if comp.send_when is not None:
+            will_send = will_send & comp.send_when(new_state)
+        return new_state, {"active": F.sum(will_send.cast("long"))}
 
-    ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(start_t + 1, cfg.max_iterations + 1):
-            senders = state.where(F.col("_computed"))
-            if comp.send_when is not None:
-                gate = comp.send_when(senders)
-                # the initial superstep always sends (isInitialSuperstep)
-                senders = senders.where(gate if t > 1 else (gate | F.lit(t == 1)))
-            sender_edges = senders.hint("shuffle_hash").join(
-                edges, senders["id"] == edges["src"]
-            )
-            msgs = (
-                sender_edges.select(
-                    F.col("dst"), comp.message(sender_edges).alias("_m")
-                )
-                .groupBy("dst")
-                .agg(reducer("_m").alias("msg"))
-                .hint("shuffle_hash")
-            )
-            joined = state.join(msgs, state["id"] == msgs["dst"], "left")
-            received = F.col("msg").isNotNull()
-            new_cols = comp.update(joined, F.col("msg"))
-            assert len(new_cols) == len(state_cols), (
-                "update must return one column per state col"
-            )
-            new_state = joined.select(
-                state["id"],
-                *[
-                    # non-computed nodes keep their state untouched
-                    F.when(received, c).otherwise(F.col(name)).alias(name)
-                    for name, c in zip(state_cols, new_cols)
-                ],
-                received.alias("_computed"),
-            )
-            # convergence = nobody will send next superstep
-            will_send = F.col("_computed")
-            if comp.send_when is not None:
-                will_send = will_send & comp.send_when(new_state)
+    def done(state, seen, t):
+        if comp.master_compute:
+            seen.update(comp.master_compute(state))
+        return seen["active"] == 0
 
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            new_state = new_state.observe(
-                obs, F.sum(will_send.cast("long")).alias("active")
-            )
-            state = ckpt.checkpoint(new_state, t)
-            active = int(obs.get["active"] or 0)
-
-            globals_row = comp.master_compute(state) if comp.master_compute else {}
-            ckpt.log(
-                t, algorithm="pregel", active=active, wall_s=time.time() - t0,
-                **globals_row,
-            )
-            if active == 0:
-                ran, converged = t, True
-                break
-
+    # resume needs a computation_id (see PregelConfig): the superstep is a
+    # deterministic function of the previous (state, _computed) snapshot
+    run = run_supersteps(
+        graph.nodes, graph.edges,
+        lambda: (initial.withColumn("_computed", F.lit(True)), {}), step,
+        algorithm="pregel", max_steps=cfg.max_iterations, done=done,
+        checkpoint_path=cfg.checkpoint_path,
+        identity=None if cfg.computation_id is None else {
+            "computation": cfg.computation_id,
+            "reducer": comp.reducer,
+            "orientation": str(cfg.orientation),
+        },
+    )
     edges.unpersist()
-    return PregelResult(state.select("id", *state_cols), ran, converged, ckpt.metrics)
+    return PregelResult(
+        run.state.select("id", *state_cols), run.steps, run.converged, run.metrics
+    )

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 from graph_data_science_spark.session import no_aqe
 
 
@@ -278,12 +279,11 @@ def scc(
                         (F.coalesce("nbr_max", F.col("color")) > F.col("color")).alias("_chg"),
                     )
                     color = merged.select("id", "color")
-                obs = Observation()
-                merged = merged.observe(obs, F.sum(F.col("_chg").cast("long")).alias("c"))
-                color = ckpt.checkpoint(
-                    merged.select("id", "color"), outer * 100 + it, name="color"
+                color, seen = write(
+                    ckpt, merged, {"c": F.sum(F.col("_chg").cast("long"))},
+                    outer * 100 + it, ["id", "color"], "color",
                 )
-                if int(obs.get["c"] or 0) == 0:
+                if seen["c"] == 0:
                     break
             ckpt.log(outer, algorithm="scc_color", rounds=it, wall_s=time.time() - t0)
 
@@ -333,12 +333,11 @@ def scc(
                     member = member.select(
                         "root", "id", F.lit(False).alias("_new")
                     ).unionByName(nxt.withColumn("_new", F.lit(True)))
-                obs = Observation()
-                member = member.observe(
-                    obs, F.sum(F.col("_new").cast("long")).alias("c")
+                member, seen = write(
+                    ckpt, member, {"c": F.sum(F.col("_new").cast("long"))},
+                    outer * 100 + it, name="member",
                 )
-                member = ckpt.checkpoint(member, outer * 100 + it, name="member")
-                if int(obs.get["c"] or 0) == 0:
+                if seen["c"] == 0:
                     break
             ckpt.log(outer, algorithm="scc_backward", rounds=it, wall_s=time.time() - t0)
             member = member.select("root", "id")

@@ -23,11 +23,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import write
 from graph_data_science_spark.session import no_aqe
 
 
@@ -95,10 +96,8 @@ def minimum_spanning_forest(
                 .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), F.col("p.w").alias("w"))
                 .distinct()
             )
-            obs = Observation()
-            chosen = chosen.observe(obs, F.count(F.lit(1)).alias("n"))
-            chosen = ckpt.checkpoint(chosen, r, name="mst_chosen")
-            n_chosen = int(obs.get["n"] or 0)
+            chosen, seen = write(ckpt, chosen, {"n": F.count(F.lit(1))}, r, name="mst_chosen")
+            n_chosen = seen["n"]
             ckpt.log(r, algorithm="boruvka", chosen=n_chosen)
             if n_chosen == 0:
                 break

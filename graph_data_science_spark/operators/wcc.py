@@ -21,15 +21,15 @@ checkpointed (plan truncation + resume).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.operators.labelprop import seed_labels
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -56,23 +56,7 @@ class WccResult:
 def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
     cfg = cfg or WccConfig()
     spark = graph.nodes.sparkSession
-    fp = None
-    if cfg.checkpoint_path is not None:
-        from graph_data_science_spark.plans.checkpoint import graph_fingerprint
-
-        fp = graph_fingerprint(
-            graph.nodes,
-            graph.edges,
-            algorithm="wcc",
-            threshold=cfg.threshold,
-            seed_property=cfg.seed_property,
-        )
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path, fingerprint=fp)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("wcc", graph.nodes, graph.edges, cfg.max_rounds if hasattr(cfg, 'max_rounds') else 50))
 
     edges = graph.edges
     if cfg.threshold is not None:
@@ -93,78 +77,55 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
     # value collides with an unrelated node's id.  Min-propagation over seed
     # labels converges to min(init) per component, which equals relabelling
     # the node-id fixpoint by min(init) over each component's members —
-    # connectivity is seed-independent.
-    # resume (north rule: every superstep resumable mid-iteration): with a
-    # durable checkpoint path, continue from the latest COMMITTED round —
-    # min-label propagation is monotone, so restarting from any committed
-    # state converges to the same fixpoint.
-    start_r = 0
-    resumed = ckpt.latest_superstep()
-    if resumed is not None and 0 < resumed < cfg.max_rounds:
-        state = ckpt.load(resumed)
-        start_r = resumed
-        ckpt.log(resumed, algorithm="wcc", resumed_from=resumed)
-    else:
-        state = graph.nodes.select(
+    # connectivity is seed-independent.  Min-label propagation is monotone,
+    # so resuming from any committed round converges to the same fixpoint.
+    def init():
+        return graph.nodes.select(
             "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
+        ), {}
+
+    def step(state, seen, r):
+        frontier = state.where("changed").select("id", "comp")
+        # neighbor-min: each changed node offers its comp to its neighbors
+        offers = (
+            frontier.join(sym, frontier["id"] == sym["src"])
+            .groupBy("dst")
+            .agg(F.min("comp").alias("nbr_min"))
         )
-        state = ckpt.checkpoint(state, 0)
+        merged = state.join(offers, state["id"] == offers["dst"], "left").select(
+            state["id"],
+            F.col("comp").alias("old_comp"),
+            F.least(F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))).alias("comp"),
+        )
+        # pointer jumping: comp := comp[comp] (component ids are node ids, so
+        # indexing the comp table by comp is well-defined)
+        lookup = merged.select(F.col("id").alias("p_id"), F.col("comp").alias("p_comp"))
+        jumped = merged.join(lookup, merged["comp"] == lookup["p_id"], "left").select(
+            merged["id"],
+            "old_comp",
+            F.least(F.col("comp"), F.coalesce(F.col("p_comp"), F.col("comp"))).alias("comp"),
+        )
+        state = jumped.select(
+            "id", "comp", (F.col("comp") < F.col("old_comp")).alias("changed")
+        )
+        return state, {"changed": F.sum(F.col("changed").cast("long"))}
 
-    rounds, converged = cfg.max_rounds, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for r in range(start_r + 1, cfg.max_rounds + 1):
-            frontier = state.where("changed").select("id", "comp")
-            # neighbor-min: each changed node offers its comp to its neighbors
-            offers = (
-                frontier.join(sym, frontier["id"] == sym["src"])
-                .groupBy("dst")
-                .agg(F.min("comp").alias("nbr_min"))
-            )
-            merged = state.join(offers, state["id"] == offers["dst"], "left").select(
-                state["id"],
-                F.col("comp").alias("old_comp"),
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))).alias("comp"),
-            )
-            # pointer jumping: comp := comp[comp] (component ids are node ids, so
-            # indexing the comp table by comp is well-defined)
-            lookup = merged.select(F.col("id").alias("p_id"), F.col("comp").alias("p_comp"))
-            jumped = merged.join(lookup, merged["comp"] == lookup["p_id"], "left").select(
-                merged["id"],
-                "old_comp",
-                F.least(F.col("comp"), F.coalesce(F.col("p_comp"), F.col("comp"))).alias("comp"),
-            )
-            state = jumped.select(
-                "id", "comp", (F.col("comp") < F.col("old_comp")).alias("changed")
-            )
-            # changed-count rides the checkpoint write (observe) — no extra job
-            from pyspark.sql import Observation
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step,
+        algorithm="wcc", max_steps=cfg.max_rounds, done=zero("changed"),
+        checkpoint_path=cfg.checkpoint_path,
+        identity={"threshold": cfg.threshold, "seed_property": cfg.seed_property},
+    )
 
-            obs = Observation()
-            state = state.observe(obs, F.sum(F.col("changed").cast("long")).alias("c"))
-            state = ckpt.checkpoint(state, r)
-            changed = int(obs.get["c"] or 0)
-            ckpt.log(r, algorithm="wcc", changed=changed, wall_s=time.time() - t0)
-            if changed == 0:
-                rounds, converged = r, True
-                break
-
-    comps = state.select("id", "comp")
+    comps = run.state.select("id", "comp")
     if cfg.seed_property and cfg.seed_property in graph.nodes.columns:
         # Seeded / incremental relabel (Wcc.java:90-104, InitStep convention):
         # seeded nodes contribute their seed, unseeded maxSeed + id + 1; the
         # component's final id is the minimum such label among its members.
-        max_seed = graph.nodes.agg(F.max(cfg.seed_property)).collect()[0][0]
-        max_seed = -1 if max_seed is None else int(max_seed)
-        init = F.coalesce(
-            F.col(cfg.seed_property).cast("long"),
-            F.col("id") + F.lit(max_seed + 1),
-        )
-        seeds = graph.nodes.select("id", init.alias("_init"))
         relabel = (
-            comps.join(seeds, "id")
+            comps.join(seed_labels(graph.nodes, cfg.seed_property), "id")
             .groupBy("comp")
-            .agg(F.min("_init").alias("_seed_comp"))
+            .agg(F.min("label").alias("_seed_comp"))
         )
         comps = (
             comps.join(relabel, "comp")
@@ -172,7 +133,7 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
         )
     if cfg.consecutive_ids:
         comps = consecutive_ids(comps)
-    return WccResult(comps, rounds, converged, ckpt.metrics)
+    return WccResult(comps, run.steps, run.converged, run.metrics)
 
 
 def consecutive_ids(components: DataFrame, comp_col: str = "comp") -> DataFrame:

@@ -167,16 +167,7 @@ class SuperstepCheckpointer:
     def load(self, superstep: int, name: str = "state") -> DataFrame:
         return self.spark.read.parquet(self._state_path(superstep, name))
 
-    # -- metrics / lineage -----------------------------------------------------
-    def partition_lineage(self, df: DataFrame) -> list[dict[str, int]]:
-        """Per-partition row counts — the lineage record for one superstep."""
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .collect()
-        )
-        return [{"partition_id": r["partition_id"], "rows": r["count"]} for r in rows]
-
+    # -- metrics ---------------------------------------------------------------
     def log(self, superstep: int, **kw: Any) -> None:
         rec = {"run_id": self.run_id, "superstep": superstep, "ts": time.time(), **kw}
         self._metrics.append(rec)

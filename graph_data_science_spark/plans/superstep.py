@@ -1,0 +1,160 @@
+"""One superstep loop for every iterative operator.
+
+Reference: pregel/src/main/java/org/neo4j/gds/beta/pregel/Pregel.java:154-190
+runs every iterative algorithm through one loop — compute, masterCompute,
+stop test.  ``run_supersteps`` is that loop for DataFrame state; an operator
+supplies only its superstep body:
+
+- ``init() -> (frame, aggregates)``: the superstep-0 state.  Its columns are
+  the state schema: every later superstep keeps exactly these columns.
+- ``step(state, seen, t) -> (frame, aggregates)``: superstep ``t`` from the
+  previous state and the aggregates observed on its write.  The frame may
+  carry extra columns for its aggregates; they are dropped before the write.
+- ``done(state, seen, t) -> bool``: the stop test, run on the driver after
+  each write (the masterCompute analog).  It may add driver-side globals to
+  ``seen``; they are logged with the superstep.
+
+``aggregates`` maps names to Column aggregates.  They ride the checkpoint
+write as ``observe()`` metrics, so a superstep is ONE Spark action; a
+``None`` result (no rows) is read as 0.  Names starting with ``_`` are
+driver-only scalars (e.g. a norm) and are not logged.
+
+The loop owns everything else: the (graph, config) fingerprint, the
+checkpointer with its superstep-0 cost report, durable resume, AQE off,
+the per-superstep metrics row (``wall_s`` cumulative, ``step_s`` for the
+step alone) and the ``algorithm:superstep`` Spark job description.
+"""
+
+from __future__ import annotations
+
+import time
+from contextlib import contextmanager
+from typing import Callable, NamedTuple, Optional
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+from graph_data_science_spark.plans.checkpoint import (
+    SuperstepCheckpointer,
+    graph_fingerprint,
+)
+from graph_data_science_spark.plans.estimate import cost_report
+from graph_data_science_spark.session import no_aqe
+
+Aggregates = dict[str, Column]
+Frame = tuple[DataFrame, Aggregates]
+
+
+class Run(NamedTuple):
+    state: DataFrame  # the last committed superstep
+    seen: dict  # aggregates observed on its write (+ globals added by done)
+    steps: int  # the superstep that stopped the loop, else max_steps
+    converged: bool
+    metrics: list
+
+
+@contextmanager
+def job_tags(spark: SparkSession):
+    """Yield a setter for the Spark job description; the caller's own
+    description is restored on exit, also when the body raises."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    try:
+        yield sc.setJobDescription
+    finally:
+        sc.setJobDescription(caller)
+
+
+def write(
+    ckpt: SuperstepCheckpointer,
+    frame: DataFrame,
+    aggregates: Aggregates,
+    t: int,
+    columns: Optional[list] = None,
+    name: str = "state",
+) -> tuple[DataFrame, dict]:
+    """Checkpoint superstep ``t`` of stream ``name`` (projected to
+    ``columns``) with its aggregates observed on the write: one action."""
+    obs = Observation()
+    if aggregates:
+        frame = frame.observe(obs, *[c.alias(k) for k, c in aggregates.items()])
+    state = ckpt.checkpoint(frame.select(*columns) if columns else frame, t, name)
+    if not aggregates:
+        return state, {}
+    return state, {k: 0 if v is None else v for k, v in obs.get.items()}
+
+
+def begin(
+    nodes: DataFrame,
+    edges: DataFrame,
+    init: Callable[[], Frame],
+    *,
+    algorithm: str,
+    max_steps: int,
+    checkpoint_path: Optional[str] = None,
+    identity: Optional[dict] = None,
+) -> tuple[SuperstepCheckpointer, DataFrame, dict, int]:
+    """(checkpointer, state, seen, superstep to continue from) of one run.
+
+    The superstep-0 cost report is logged first.  With both a durable path
+    and an ``identity`` (the config that decides the result), committed
+    supersteps are stamped with a (graph, config) fingerprint, and the run
+    resumes from its latest COMMITTED superstep when one lies strictly
+    inside (0, max_steps): every step is a deterministic (or monotone)
+    function of the previous state, so the resumed run lands where an
+    uninterrupted one would.  Otherwise superstep 0 is built and written.
+    """
+    fp = None
+    if checkpoint_path is not None and identity is not None:
+        fp = graph_fingerprint(nodes, edges, algorithm=algorithm, **identity)
+    ckpt = SuperstepCheckpointer(nodes.sparkSession, checkpoint_path, fingerprint=fp)
+    ckpt.log(0, estimate=cost_report(algorithm, nodes, edges, max_steps))
+    resumed = ckpt.latest_superstep() if fp is not None else None
+    if resumed is not None and 0 < resumed < max_steps:
+        ckpt.log(resumed, algorithm=algorithm, resumed_from=resumed)
+        return ckpt, ckpt.load(resumed), {}, resumed
+    state, seen = write(ckpt, *init(), 0)
+    return ckpt, state, seen, 0
+
+
+def zero(name: str) -> Callable[[DataFrame, dict, int], bool]:
+    """Stop test: the observed aggregate ``name`` reached 0."""
+    return lambda state, seen, t: seen[name] == 0
+
+
+def run_supersteps(
+    nodes: DataFrame,
+    edges: DataFrame,
+    init: Callable[[], Frame],
+    step: Callable[[DataFrame, dict, int], Frame],
+    *,
+    algorithm: str,
+    max_steps: int,
+    done: Callable[[DataFrame, dict, int], bool],
+    checkpoint_path: Optional[str] = None,
+    identity: Optional[dict] = None,
+) -> Run:
+    """Run supersteps 1..max_steps until ``done`` (see module docstring)."""
+    spark = nodes.sparkSession
+    with job_tags(spark) as describe:
+        describe(f"{algorithm}:0")
+        ckpt, state, seen, first = begin(
+            nodes, edges, init, algorithm=algorithm, max_steps=max_steps,
+            checkpoint_path=checkpoint_path, identity=identity,
+        )
+        columns = state.columns
+        t0 = time.time()
+        with no_aqe(spark):
+            for t in range(first + 1, max_steps + 1):
+                describe(f"{algorithm}:{t}")
+                lap = time.time()
+                state, seen = write(ckpt, *step(state, seen, t), t, columns)
+                stop = done(state, seen, t)
+                now = time.time()
+                ckpt.log(
+                    t, algorithm=algorithm,
+                    **{k: v for k, v in seen.items() if not k.startswith("_")},
+                    wall_s=now - t0, step_s=now - lap,
+                )
+                if stop:
+                    return Run(state, seen, t, True, ckpt.metrics)
+    return Run(state, seen, max_steps, False, ckpt.metrics)

@@ -86,3 +86,20 @@ def test_degree_histogram_exact(spark):
             for r in degree_histogram(g).collect()}
     # node 0 has out-degree 3; nodes 1..8 out-degree 1; 9,10 out-degree 0
     assert hist == {3: 1, 1: 8, 0: 2}
+
+
+def test_targets_refuse_negative_weights(spark):
+    """The settled-target exit is only sound for non-negative weights: a
+    targeted run refuses them, the untargeted Bellman-Ford run does not."""
+    from graph_data_science_spark.operators.paths import sssp_delta
+
+    rows = [(0, 1, 4.0), (0, 2, 1.0), (2, 3, 1.0), (1, 3, -3.0), (3, 4, 1.0)]
+    e = spark.createDataFrame(rows, "src long, dst long, weight double")
+    g = LinkGraph.from_edges(spark, e)
+    with pytest.raises(ValueError, match="non-negative"):
+        sssp_delta(g, 0, targets=[4])
+    with pytest.raises(ValueError, match="non-negative"):
+        dijkstra_source_target(g, 0, 4, weighted=True)
+    res = sssp_delta(g, 0)
+    dist = {r["id"]: r["distance"] for r in res.distances.collect()}
+    assert dist == {0: 0.0, 1: 4.0, 2: 1.0, 3: 1.0, 4: 2.0}

@@ -1,0 +1,151 @@
+"""Contract of the shared superstep loop (plans/superstep.py): one metrics
+row shape for every iterative operator, and Spark jobs described as
+``algorithm:superstep``."""
+
+import time
+
+import pytest
+from pyspark.sql import functions as F
+
+from tests.conftest import edges_from
+from graph_data_science_spark.operators.graph import LinkGraph
+from graph_data_science_spark.operators.labelprop import (
+    LabelPropagationConfig,
+    label_propagation,
+)
+from graph_data_science_spark.operators.pagerank import PageRankConfig, eigenvector
+from graph_data_science_spark.operators.pregel import (
+    PregelComputation,
+    PregelConfig,
+    run_pregel,
+)
+from graph_data_science_spark.operators.wcc import WccConfig, wcc
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
+
+COMMON = {"run_id", "superstep", "ts", "algorithm", "wall_s", "step_s"}
+LETTERS = "abcdefg"
+SPEC = "a->b, b->c, c->a, c->d, d->e, f->g, g->f"
+
+
+def _graph(spark):
+    return LinkGraph.from_edges(spark, edges_from(LETTERS, SPEC), nodes=range(7))
+
+
+def _chain(spark, n=8):
+    return LinkGraph.from_edges(spark, [(i, i + 1) for i in range(n)], nodes=range(n + 1))
+
+
+def _hops():
+    inf = float("inf")
+    return PregelComputation(
+        init=lambda nodes: nodes.select(
+            "id", F.when(F.col("id") == 0, 0.0).otherwise(F.lit(inf)).alias("dist")
+        ),
+        message=lambda se: F.col("dist") + F.lit(1.0),
+        update=lambda st, msg: [F.least(F.col("dist"), msg)],
+        reducer="min",
+        send_when=lambda st: F.col("dist") < F.lit(inf),
+    )
+
+
+def _superstep_rows(metrics):
+    return [m for m in metrics if "estimate" not in m and "resumed_from" not in m]
+
+
+def test_every_operator_logs_one_row_shape(spark):
+    g = _graph(spark)
+    runs = {
+        "changed": wcc(g).metrics,
+        "active": run_pregel(_chain(spark), _hops(), PregelConfig(max_iterations=20)).metrics,
+        "lag_active": eigenvector(g, PageRankConfig(max_iterations=6)).metrics,
+    }
+    lp = label_propagation(g, LabelPropagationConfig(max_iterations=5)).metrics
+    for name, metrics in [*runs.items(), ("changed", lp)]:
+        rows = _superstep_rows(metrics)
+        assert rows, name
+        prev_wall = 0.0
+        for i, row in enumerate(rows, start=1):
+            assert set(row) == COMMON | {name}, row
+            assert row["superstep"] == i
+            # None (no rows, or no lag yet on eigenvector's first step) is 0
+            assert isinstance(row[name], int)
+            # wall_s is cumulative; step_s is this superstep alone
+            assert row["wall_s"] >= prev_wall
+            assert 0.0 <= row["step_s"] <= row["wall_s"] - prev_wall + 1e-6
+            prev_wall = row["wall_s"]
+    assert _superstep_rows(runs["lag_active"])[0]["lag_active"] == 0
+
+
+def test_estimate_and_resume_rows_carry_no_wall_time(spark, tmp_path):
+    """perfbench differences consecutive wall_s rows: only superstep rows
+    may carry one."""
+    g = _chain(spark, 30)
+    ck = str(tmp_path / "wcc_ck")
+    wcc(g, WccConfig(max_rounds=2, checkpoint_path=ck))
+    res = wcc(g, WccConfig(checkpoint_path=ck))
+    est = [m for m in res.metrics if "estimate" in m]
+    resumed = [m for m in res.metrics if "resumed_from" in m]
+    assert len(est) == 1 and est[0]["superstep"] == 0
+    assert [m["resumed_from"] for m in resumed] == [2]
+    assert not any("wall_s" in m or "step_s" in m for m in est + resumed)
+    assert [m["superstep"] for m in _superstep_rows(res.metrics)] == list(
+        range(3, res.rounds + 1)
+    )
+
+
+def _descriptions(sc, job_ids, timeout=10.0):
+    """Job id -> description from the status store, once every job is in."""
+    store = sc._jsc.sc().statusStore()
+    deadline = time.time() + timeout
+    while True:
+        try:
+            out = {}
+            for j in job_ids:
+                d = store.job(j).description()
+                out[j] = d.get() if d.isDefined() else None
+            return out
+        except Exception:
+            if time.time() > deadline:
+                raise
+            time.sleep(0.2)
+
+
+def test_jobs_carry_algorithm_superstep_tag(spark):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobDescription("caller")
+    try:
+        res = wcc(_chain(spark, 12))
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    new = sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    tags = set(_descriptions(sc, new).values())
+    assert res.did_converge and res.rounds > 1
+    for t in range(0, res.rounds + 1):
+        assert f"wcc:{t}" in tags, (t, tags)
+
+
+def test_caller_description_restored_when_a_step_raises(spark):
+    sc = spark.sparkContext
+    g = _chain(spark, 4)
+
+    def step(state, seen, t):
+        if t == 2:
+            raise RuntimeError("boom")
+        return state.select("id", F.lit(1).cast("long").alias("x")), {
+            "n": F.count(F.lit(1))
+        }
+
+    sc.setJobDescription("caller")
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            run_supersteps(
+                g.nodes, g.edges,
+                lambda: (g.nodes.select("id", F.lit(0).cast("long").alias("x")), {}),
+                step, algorithm="probe", max_steps=5, done=zero("n"),
+            )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
