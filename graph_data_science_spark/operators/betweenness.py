@@ -9,8 +9,9 @@ bc(v) += delta(v) for v != s.  Source sampling (`SelectionStrategy`) trades
 exactness for cost; with all nodes as sources the result is exact.
 
 Spark decomposition (all sources advance together, MSBFS-style):
-- forward: a (root, id) pair frontier; sigma(root, v) = sum of sigma over
-  predecessor-frontier rows reaching v — one join + one groupBy per level.
+- forward: the superstep kernel's `reach` over (root, id) pairs; sigma(root,
+  v) = sum of sigma over predecessor-frontier rows reaching v — one join +
+  one groupBy per level.
 - backward: iterate levels from deepest to 1; each step joins level-L nodes
   with their predecessors (edges reversed) and aggregates the dependency sum
   — again one join + one groupBy per level.
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import reach
 from graph_data_science_spark.session import no_aqe
 
 # All-sources exact mode materializes O(n * reachable) (root, id) pairs.
@@ -99,48 +101,27 @@ def betweenness_centrality(
     exact: bool = False,
 ) -> DataFrame:
     """id, score (unnormalized dependency sums, Brandes semantics)."""
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, None)
+    roots = guard_all_sources(graph, sources, exact, "betweenness_centrality")
     edges = graph.oriented_edges(orientation).select("src", "dst").distinct().cache()
 
-    roots = guard_all_sources(graph, sources, exact, "betweenness_centrality").select(
-        F.col("id").alias("root")
+    # forward phase: levels[(root, id, sigma, level)]
+    def hop(frontier, t):
+        return frontier.join(edges, frontier["id"] == edges["src"]).groupBy(
+            "root", F.col("dst").alias("nid")
+        ).agg(F.sum("sigma").alias("sigma")).withColumnRenamed("nid", "id")
+
+    run = reach(
+        graph.nodes, graph.edges,
+        roots.select(F.col("id").alias("root"), "id", F.lit(1.0).alias("sigma")),
+        hop, keys=["root", "id"], level="level", algorithm="betweenness",
+        max_steps=max_depth,
     )
-    # forward phase: levels[(root, id, level, sigma)]
-    frontier = roots.select(
-        "root", F.col("root").alias("id"), F.lit(0).alias("level"),
-        F.lit(1.0).alias("sigma"),
-    )
-    visited = frontier
-    depth = 0
+    levels = run.state.cache()
+    max_level = run.steps - 1 if run.converged else run.steps
+
+    spark = graph.nodes.sparkSession
+    ckpt = SuperstepCheckpointer(spark, None)
     with no_aqe(spark):
-        while depth < max_depth:
-            depth += 1
-            expanded = (
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .groupBy("root", F.col("dst").alias("nid"))
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            nxt = (
-                expanded.join(
-                    visited.select("root", F.col("id").alias("nid")),
-                    ["root", "nid"],
-                    "left_anti",
-                )
-                .select(
-                    "root", F.col("nid").alias("id"), F.lit(depth).alias("level"),
-                    "sigma",
-                )
-            )
-            nxt = ckpt.checkpoint(nxt, depth, name="fwd")
-            if nxt.isEmpty():
-                break
-            visited = ckpt.checkpoint(visited.unionByName(nxt), depth, name="vis")
-            frontier = nxt
-
-        levels = visited.cache()
-        max_level = levels.agg(F.max("level")).collect()[0][0] or 0
-
         # backward phase: delta per (root, id), deepest level first.
         # Per-level dependency frames are checkpointed individually and only
         # UNIONED LAZILY at the end — the accumulator is never re-written per

@@ -23,9 +23,10 @@ memory and shuffle are O(ceil(|sources|/64) x touched nodes), 64x less
 than a (root, id) pair frontier, and no per-pair visited set ever exists.
 The convergence count rides the checkpoint write (observe).
 
-`hop_distances` keeps the explicit (root, id, dist) pair frontier for
-callers that need the distances themselves (the allShortestPaths stream
-analog); the centrality aggregates use the packed path.
+`hop_distances` returns the explicit (root, id, dist) pairs for callers
+that need the distances themselves (the allShortestPaths stream analog):
+it is the superstep kernel's `reach` keyed on (root, id).  The centrality
+aggregates use the packed path.
 """
 
 from __future__ import annotations
@@ -37,9 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import run_supersteps, zero
-from graph_data_science_spark.session import no_aqe
+from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
 
 
 def _indexed_roots(graph: LinkGraph, sources: Optional[DataFrame]) -> DataFrame:
@@ -150,35 +149,21 @@ def hop_distances(
     """
     from graph_data_science_spark.operators.betweenness import guard_all_sources
 
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, None)
+    roots = guard_all_sources(graph, sources, exact, "hop_distances")
     edges = graph.oriented_edges(orientation).select("src", "dst").distinct().cache()
 
-    roots = guard_all_sources(graph, sources, exact, "hop_distances").select(
-        F.col("id").alias("root")
+    def hop(frontier, t):
+        return frontier.join(edges, frontier["id"] == edges["src"]).select(
+            "root", F.col("dst").alias("id")
+        ).distinct()
+
+    run = reach(
+        graph.nodes, graph.edges, roots.select(F.col("id").alias("root"), "id"),
+        hop, keys=["root", "id"], level="dist", algorithm="hop_distances",
+        max_steps=max_depth,
     )
-    frontier = roots.select("root", F.col("root").alias("id"), F.lit(0).alias("dist"))
-    visited = frontier
-    depth = 0
-    with no_aqe(spark):
-        while depth < max_depth:
-            depth += 1
-            nxt = (
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select("root", F.col("dst").alias("id"))
-                .distinct()
-                .join(visited.select("root", "id"), ["root", "id"], "left_anti")
-                .withColumn("dist", F.lit(depth))
-            )
-            nxt = ckpt.checkpoint(nxt, depth, name="frontier")
-            if nxt.isEmpty():
-                break
-            visited = ckpt.checkpoint(
-                visited.unionByName(nxt), depth, name="visited"
-            )
-            frontier = nxt
     edges.unpersist()
-    return visited.where(F.col("dist") > 0)
+    return run.state.where(F.col("dist") > 0)
 
 
 def closeness_centrality(

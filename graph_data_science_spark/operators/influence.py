@@ -7,9 +7,9 @@ per-node Monte-Carlo simulations.  CELF's lazy priority queue is inherently
 driver-sequential; the scalable formulation of the SAME objective is
 Reverse-Influence-Sampling (RIS / Borgs et al., the basis of TIM/IMM):
 
-1. sample R random reverse-reachable (RR) sets — reverse BFS from a random
-   root over edges kept with probability p (seeded md5 arithmetic per
-   (sample, edge), partition-stable);
+1. sample R random reverse-reachable (RR) sets — reverse BFS (the superstep
+   kernel's `reach`) from a random root over edges kept with probability p
+   (seeded md5 arithmetic per (sample, edge), partition-stable);
 2. greedy max-coverage over the RR sets: k rounds of "pick the node covering
    the most uncovered sets" (one groupBy + top-1 per round);
 3. spread estimate of the seed set = n * covered_fraction — an unbiased
@@ -21,16 +21,15 @@ one aggregate each (k is small by definition of the problem).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
-from graph_data_science_spark.session import no_aqe
+from graph_data_science_spark.plans.superstep import reach
 
 
 @dataclass
@@ -84,27 +83,19 @@ def influence_maximization(
         (_u01(F.col("set_id"), F.lit("root"), F.lit(seed)) * n).cast("long").alias("idx"),
     ).join(idx, "idx").select("set_id", F.col("node").alias("id"))
 
-    member = roots
-    member = ckpt.checkpoint(member, 0, name="rr")
-    frontier = member
-    with no_aqe(spark):
-        for depth in range(1, max_depth + 1):
-            # edge (u -> v) live in sample s iff u01(s, u, v) < p; note the
-            # predicate keys the ORIGINAL edge direction (dst, src of rev)
-            nxt = (
-                frontier.join(rev, frontier["id"] == rev["src"])
-                .where(
-                    _u01(F.col("set_id"), F.col("dst"), F.col("src"), F.lit(seed)) < p
-                )
-                .select("set_id", F.col("dst").alias("id"))
-                .distinct()
-                .join(member, ["set_id", "id"], "left_anti")
-            )
-            nxt, seen = write(ckpt, nxt, {"c": F.count(F.lit(1))}, depth, name="rr_frontier")
-            if seen["c"] == 0:
-                break
-            member = ckpt.checkpoint(member.unionByName(nxt), depth, name="rr")
-            frontier = nxt
+    # edge (u -> v) live in sample s iff u01(s, u, v) < p; note the
+    # predicate keys the ORIGINAL edge direction (dst, src of rev)
+    def hop(frontier, t):
+        return frontier.join(rev, frontier["id"] == rev["src"]).where(
+            _u01(F.col("set_id"), F.col("dst"), F.col("src"), F.lit(seed)) < p
+        ).select("set_id", F.col("dst").alias("id")).distinct()
+
+    rr = reach(
+        graph.nodes, graph.edges, roots, hop, keys=["set_id", "id"],
+        level="depth", algorithm="influence_rr", max_steps=max_depth,
+        checkpoint_path=checkpoint_path and os.path.join(checkpoint_path, "rr"),
+    )
+    member = rr.state.select("set_id", "id")
 
     # greedy max coverage: k rounds of top-1 by covered-set count
     seeds: list = []
@@ -130,4 +121,4 @@ def influence_maximization(
 
     rev.unpersist()
     spread = n * covered_total / max(n_rr_sets, 1)
-    return InfluenceResult(seeds, float(spread), n_rr_sets, ckpt.metrics)
+    return InfluenceResult(seeds, float(spread), n_rr_sets, rr.metrics + ckpt.metrics)

@@ -125,6 +125,7 @@ def label_propagation(
             "orientation": str(cfg.orientation),
         },
     )
+    edges.unpersist()
     return LabelPropagationResult(
         run.state.select("id", "label"), run.steps, run.converged, run.metrics
     )

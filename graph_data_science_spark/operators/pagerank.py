@@ -209,6 +209,7 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
     # otherwise maxIterations.
     ran, converged = cfg.max_iterations, False
     if cfg.max_iterations <= 0:
+        shares.unpersist()
         return CentralityResult(state.select("id", F.col("rank").alias("score")), 0, False)
 
     t0 = time.time()
@@ -405,6 +406,7 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
                 ran, converged = t, True
                 break
 
+    shares.unpersist()
     scores = state.select("id", F.col("rank").alias("score"))
     if cfg.scaler and cfg.scaler.upper() != "NONE":
         from graph_data_science_spark.operators.scaling import scale_property
@@ -517,6 +519,7 @@ def eigenvector(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Centrali
         done=lambda pre, seen, t: t > 1 and seen["lag_active"] == 0,
         checkpoint_path=cfg.checkpoint_path,
     )
+    shares.unpersist()
     if run.converged:
         scores = run.state.select("id", F.col("prev_rank").alias("score"))
         ran = run.steps - 1

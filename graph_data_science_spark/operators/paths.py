@@ -29,6 +29,7 @@
   invocations; each invocation is fully distributed).
 """
 
+import sys
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
+from graph_data_science_spark.plans.superstep import reach, write
 from graph_data_science_spark.session import cache_copartitioned, no_aqe
 
 
@@ -59,34 +60,22 @@ def bfs(
     max_depth: Optional[int] = None,
     orientation: Orientation = Orientation.NATURAL,
 ) -> DataFrame:
-    """id, hops for every node reachable from source (source included, 0)."""
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, None)
+    """id, hops for every node reachable from source (source included, 0);
+    ``max_depth=None`` expands until the frontier is empty."""
     edges = graph.oriented_edges(orientation).select("src", "dst").distinct().cache()
-    visited = spark.createDataFrame([(int(source), 0)], "id long, hops int")
-    frontier = visited
-    depth = 0
-    with no_aqe(spark):
-        while True:
-            depth += 1
-            if max_depth is not None and depth > max_depth:
-                break
-            nxt = (
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(visited.select("id"), "id", "left_anti")
-                .withColumn("hops", F.lit(depth))
-            )
-            # parquet-backed checkpoint: truncates lineage AND resets plan stats
-            # (localCheckpoint preserves inflated sizeInBytes — see plans/checkpoint.py)
-            nxt = ckpt.checkpoint(nxt, depth, name="frontier")
-            if nxt.isEmpty():
-                break
-            visited = ckpt.checkpoint(visited.unionByName(nxt), depth, name="visited")
-            frontier = nxt
+    source_row = graph.nodes.sparkSession.createDataFrame([(int(source),)], "id long")
+
+    def hop(frontier, t):
+        return frontier.join(edges, frontier["id"] == edges["src"]).select(
+            F.col("dst").alias("id")
+        ).distinct()
+
+    run = reach(
+        graph.nodes, graph.edges, source_row, hop, keys=["id"], level="hops", algorithm="bfs",
+        max_steps=sys.maxsize if max_depth is None else max_depth,
+    )
     edges.unpersist()
-    return visited
+    return run.state
 
 
 # DFS visit order depends on a strictly sequential stack discipline, so the

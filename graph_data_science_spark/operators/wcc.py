@@ -116,6 +116,7 @@ def wcc(graph: LinkGraph, cfg: WccConfig | None = None) -> WccResult:
         checkpoint_path=cfg.checkpoint_path,
         identity={"threshold": cfg.threshold, "seed_property": cfg.seed_property},
     )
+    sym.unpersist()
 
     comps = run.state.select("id", "comp")
     if cfg.seed_property and cfg.seed_property in graph.nodes.columns:

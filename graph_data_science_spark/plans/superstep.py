@@ -23,6 +23,7 @@ The loop owns everything else: the (graph, config) fingerprint, the
 checkpointer with its superstep-0 cost report, durable resume, AQE off,
 the per-superstep metrics row (``wall_s`` cumulative, ``step_s`` for the
 step alone) and the ``algorithm:superstep`` Spark job description.
+``reach`` is the one level-synchronous frontier-expansion step built on it.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from contextlib import contextmanager
 from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans.checkpoint import (
     SuperstepCheckpointer,
@@ -158,3 +160,44 @@ def run_supersteps(
                 if stop:
                     return Run(state, seen, t, True, ckpt.metrics)
     return Run(state, seen, max_steps, False, ckpt.metrics)
+
+
+def reach(
+    nodes: DataFrame,
+    edges: DataFrame,
+    seeds: DataFrame,
+    expand: Callable[[DataFrame, int], DataFrame],
+    *,
+    keys: list,
+    level: str,
+    algorithm: str,
+    max_steps: int,
+    checkpoint_path: Optional[str] = None,
+) -> Run:
+    """Level-synchronous frontier expansion (algo/.../traverse/BFS.java).
+
+    ``seeds`` are the level-0 rows; ``expand(frontier, t)`` returns the rows
+    one hop out (``keys`` plus the seeds' other columns, distinct on
+    ``keys``).  Reached rows and the frontier are ONE frame, the frontier
+    flagged ``_new``: superstep ``t`` tags the expansion rows whose ``keys``
+    are unreached ``level = t`` and unions them in — one write, whose
+    observed ``new`` count is the stop test.  The deepest level is
+    ``steps - 1`` if the run converged, else ``steps``.
+    """
+
+    def init():
+        return seeds.withColumn(level, F.lit(0)).withColumn("_new", F.lit(True)), {}
+
+    def step(state, seen, t):
+        fresh = expand(state.where("_new").drop("_new"), t).join(
+            state.select(*keys), keys, "left_anti"
+        )
+        return state.withColumn("_new", F.lit(False)).unionByName(
+            fresh.withColumn(level, F.lit(t)).withColumn("_new", F.lit(True))
+        ), {"new": F.sum(F.col("_new").cast("long"))}
+
+    run = run_supersteps(
+        nodes, edges, init, step, algorithm=algorithm, max_steps=max_steps,
+        done=zero("new"), checkpoint_path=checkpoint_path,
+    )
+    return run._replace(state=run.state.drop("_new"))

@@ -65,6 +65,8 @@ def get_spark(
         # overhead off the superstep critical path; clusters override.
         n = cpus if cpus != "*" else os.cpu_count() or 8
         shuffle_partitions = int(n)
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = f"{max(1, min(48, int(0.4 * phys) >> 30))}g"
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -82,8 +84,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: driver == executor; size the heap so per-task execution
-        # memory fits a superstep partition without sort spills
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # memory fits a superstep partition without sort spills, at ~40% of
+        # physical memory (at most 48g): a heap near all of it gets OOM-killed
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", heap))
         # per-superstep checkpoint writes: v2 committer renames files in the
         # tasks instead of a serial driver-side rename pass, and the _SUCCESS
         # marker write is skipped — both are on the superstep critical path

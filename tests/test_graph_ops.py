@@ -141,6 +141,10 @@ class TestPaths:
         g = LinkGraph.from_edges(spark, [(0, 1), (1, 2), (2, 3), (0, 3)], nodes=range(5))
         hops = {r["id"]: r["hops"] for r in bfs(g, 0).collect()}
         assert hops == {0: 0, 1: 1, 3: 1, 2: 2}  # 4 unreachable
+        # max_depth=0 is the source alone, not "unbounded"
+        assert {r["id"]: r["hops"] for r in bfs(g, 0, max_depth=0).collect()} == {0: 0}
+        hops = {r["id"]: r["hops"] for r in bfs(g, 0, max_depth=1).collect()}
+        assert hops == {0: 0, 1: 1, 3: 1}
 
     def test_sssp_delta_weighted(self, spark):
         edges = [(0, 1, 5.0), (0, 2, 1.0), (2, 1, 1.0), (1, 3, 1.0)]

@@ -13,14 +13,21 @@ from graph_data_science_spark.operators.labelprop import (
     LabelPropagationConfig,
     label_propagation,
 )
-from graph_data_science_spark.operators.pagerank import PageRankConfig, eigenvector
+from graph_data_science_spark.operators.betweenness import betweenness_centrality
+from graph_data_science_spark.operators.closeness import hop_distances
+from graph_data_science_spark.operators.pagerank import (
+    PageRankConfig,
+    eigenvector,
+    page_rank,
+)
+from graph_data_science_spark.operators.paths import bfs
 from graph_data_science_spark.operators.pregel import (
     PregelComputation,
     PregelConfig,
     run_pregel,
 )
 from graph_data_science_spark.operators.wcc import WccConfig, wcc
-from graph_data_science_spark.plans.superstep import run_supersteps, zero
+from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
 
 COMMON = {"run_id", "superstep", "ts", "algorithm", "wall_s", "step_s"}
 LETTERS = "abcdefg"
@@ -149,3 +156,55 @@ def test_caller_description_restored_when_a_step_raises(spark):
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setJobDescription(None)
+
+
+def test_reach_levels_a_path(spark):
+    g = _chain(spark, 3)
+    edges = g.edges.select("src", "dst")
+
+    def hop(frontier, t):
+        return (
+            frontier.join(edges, frontier["id"] == edges["src"])
+            .select(F.col("dst").alias("id"))
+            .distinct()
+        )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    run = reach(
+        g.nodes, g.edges, spark.createDataFrame([(0,)], "id long"), hop,
+        keys=["id"], level="hops", algorithm="bfs", max_steps=10,
+    )
+    new = sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    assert {r["id"]: r["hops"] for r in run.state.collect()} == {0: 0, 1: 1, 2: 2, 3: 3}
+    # the level-4 expansion is empty: that superstep stops the run
+    assert run.steps == 4 and run.converged
+    rows = _superstep_rows(run.metrics)
+    assert [r["new"] for r in rows] == [1, 1, 1, 0]
+    assert all(set(r) == COMMON | {"new"} for r in rows)
+    tags = set(_descriptions(sc, new).values())
+    assert {f"bfs:{t}" for t in range(5)} <= tags, tags
+
+
+def _cached_tables(spark):
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+def test_operators_release_their_cached_edge_tables(spark):
+    g = _graph(spark)
+    calls = {
+        "wcc": lambda: wcc(g),
+        "label_propagation": lambda: label_propagation(
+            g, LabelPropagationConfig(max_iterations=3)
+        ),
+        "page_rank": lambda: page_rank(g, PageRankConfig(max_iterations=5)),
+        "eigenvector": lambda: eigenvector(g, PageRankConfig(max_iterations=5)),
+        "bfs": lambda: bfs(g, 0),
+        "hop_distances": lambda: hop_distances(g),
+        "betweenness_centrality": lambda: betweenness_centrality(g),
+    }
+    for name, call in calls.items():
+        before = _cached_tables(spark)
+        call()
+        assert _cached_tables(spark) == before, name
