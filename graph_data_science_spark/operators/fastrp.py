@@ -21,12 +21,14 @@ Spark decomposition (all JVM-side array ops — no Python):
 - each iteration: mean over in/out neighbors (undirected: both) of the
   previous vector — one join + one groupBy with element-wise sums via
   posexplode (nodes*dim-bounded shuffle, map-side partial agg).
+- state: ONE frame (id, vec, acc) on the shared superstep loop
+  (plans/superstep.py) — the iteration's normalized vector and the running
+  weighted sum ride the same checkpoint write, one per iteration.
 """
 
 from __future__ import annotations
 
 import math
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -34,8 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
+from graph_data_science_spark.plans.superstep import run_supersteps
 from graph_data_science_spark.session import cache_copartitioned
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
 
 SQRT3 = math.sqrt(3.0)
 
@@ -67,7 +69,6 @@ def _l2_normalize(vec):
 def fastrp(graph: LinkGraph, cfg: Optional[FastRPConfig] = None) -> FastRPResult:
     cfg = cfg or FastRPConfig()
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     dim = cfg.embedding_dimension
 
@@ -95,29 +96,29 @@ def fastrp(graph: LinkGraph, cfg: Optional[FastRPConfig] = None) -> FastRPResult
             F.when(h == 0, F.lit(SQRT3)).when(h == 1, F.lit(-SQRT3)).otherwise(F.lit(0.0))
         )
 
-    nodes = graph.nodes.select("id").join(deg, "id", "left").select(
-        "id", F.coalesce("deg", F.lit(0)).alias("deg")
-    )
-    scale = F.pow(
-        F.when(F.col("deg") > 0, F.col("deg").cast("double")).otherwise(F.lit(1.0)),
-        F.lit(cfg.normalization_strength),
-    )
-    state = nodes.select(
-        "id",
-        F.transform(dims, base_entry).alias("vec"),
-        scale.alias("scale"),
-    ).select("id", _l2_normalize(F.transform("vec", lambda x: x * F.col("scale"))).alias("vec"))
-    state = ckpt.checkpoint(state, 0)
+    zeros = F.transform(dims, lambda d: F.lit(0.0))
 
-    # accumulate weighted sum of normalized per-iteration embeddings; the
-    # base vector is the iteration-0 input only (FastRP.propagateEmbeddings
-    # never includes it in the sum)
-    acc = state.select("id", F.transform(dims, lambda d: F.lit(0.0)).alias("acc"))
-    acc = ckpt.checkpoint(acc, 0, name="acc")
+    def init():
+        nodes = graph.nodes.select("id").join(deg, "id", "left").select(
+            "id", F.coalesce("deg", F.lit(0)).alias("deg")
+        )
+        scale = F.pow(
+            F.when(F.col("deg") > 0, F.col("deg").cast("double")).otherwise(F.lit(1.0)),
+            F.lit(cfg.normalization_strength),
+        )
+        # the base vector is the iteration-0 input only: the weighted sum
+        # `acc` starts at zero (FastRP.propagateEmbeddings never sums it)
+        return nodes.select(
+            "id",
+            F.transform(dims, base_entry).alias("vec"),
+            scale.alias("scale"),
+        ).select(
+            "id",
+            _l2_normalize(F.transform("vec", lambda x: x * F.col("scale"))).alias("vec"),
+            zeros.alias("acc"),
+        ), {}
 
-    t0 = time.time()
-    n_iter = len(cfg.iteration_weights)
-    for t in range(1, n_iter + 1):
+    def step(state, seen, t):
         prev = state.select(F.col("id").alias("dst"), F.col("vec").alias("nbr_vec"))
         # mean over neighbors, element-wise via posexplode (shuffle bounded
         # by nodes*dim rows with map-side partial aggregation)
@@ -130,29 +131,24 @@ def fastrp(graph: LinkGraph, cfg: Optional[FastRPConfig] = None) -> FastRPResult
             .agg(F.sort_array(F.collect_list(F.struct("dim", "mu"))).alias("cells"))
             .select(F.col("src").alias("id"), F.col("cells.mu").alias("raw"))
         )
-        state = (
-            graph.nodes.select("id")
+        out = (
+            state.select("id", "acc")
             .join(summed, "id", "left")
-            .select(
-                "id",
-                F.coalesce(
-                    F.col("raw"), F.transform(dims, lambda d: F.lit(0.0))
-                ).alias("raw"),
-            )
-            .select("id", _l2_normalize(F.col("raw")).alias("vec"))
+            .select("id", _l2_normalize(F.coalesce(F.col("raw"), zeros)).alias("vec"), "acc")
         )
-        state = ckpt.checkpoint(state, t)
         wgt = float(cfg.iteration_weights[t - 1])
         if wgt != 0.0:  # zero-weight iterations still propagate, never sum
-            acc = (
-                acc.join(state, "id")
-                .select(
-                    "id",
-                    F.zip_with("acc", "vec", lambda a, v: a + v * F.lit(wgt)).alias("acc"),
-                )
+            out = out.withColumn(
+                "acc", F.zip_with("acc", "vec", lambda a, v: a + v * F.lit(wgt))
             )
-            acc = ckpt.checkpoint(acc, t, name="acc")
-        ckpt.log(t, algorithm="fastrp", wall_s=time.time() - t0)
+        return out, {}
 
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="fastrp",
+        max_steps=len(cfg.iteration_weights),
+        done=lambda state, seen, t: False, checkpoint_path=cfg.checkpoint_path,
+    )
     sym.unpersist()
-    return FastRPResult(acc.select("id", F.col("acc").alias("embedding")), n_iter, ckpt.metrics)
+    return FastRPResult(
+        run.state.select("id", F.col("acc").alias("embedding")), run.steps, run.metrics
+    )

@@ -4,19 +4,20 @@ Reference: alpha/alpha-proc/src/main/java/org/neo4j/gds/pregel/Hits.java —
 phased Pregel: auth(v) = Σ hub(u) over in-edges, then global L2 normalization
 via masterCompute; hub(u) = Σ auth(v) over out-edges, normalized likewise.
 
-Spark decomposition: two join+sum aggregations per iteration — and exactly
-TWO actions per iteration (one checkpoint write per phase).  The global L2
-norm of each phase rides that phase's checkpoint write as an `observe()`
-metric, so normalization costs no extra job and nothing is recomputed: the
-normalized column is derived lazily from the materialized raw column and
-the observed scalar (the masterCompute analog).  The convergence delta
-likewise rides the hub-phase write.  (The naive shape is 3 collects + 3
-checkpoints per iteration; a broadcast-scalar-subplan variant gets to one
-action but re-executes the phase joins inside the norm subplans, which
-costs more than the barrier it saves.)
+Spark decomposition: the same phases, one per superstep of the shared loop
+(plans/superstep.py) over ONE state frame (id, auth, hub, auth_prev) —
+odd supersteps are the auth phase, even ones the hub phase, so an iteration
+is two supersteps and exactly TWO actions (one checkpoint write each).  A
+phase writes its column RAW and its L2 norm rides that write as an
+`observe()` metric; the next phase divides the raw column by the observed
+norm (the masterCompute analog), so normalization costs no extra job and
+nothing is recomputed.  The hub phase also observes the auth vector's L2
+change, the stop test.  (The naive shape is 3 collects + 3 checkpoints per
+iteration; a broadcast-scalar-subplan variant gets to one action but
+re-executes the phase joins inside the norm subplans, which costs more than
+the barrier it saves.)
 """
 
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -24,9 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -44,73 +44,59 @@ class HitsResult:
     metrics: list = field(default_factory=list)
 
 
+def _norm(seen: dict):
+    """L2 norm of the column the previous phase wrote raw (1 before any)."""
+    return F.lit(float(seen.get("_ss", 1.0)) ** 0.5 or 1.0)
+
+
 def hits(graph: LinkGraph, cfg: Optional[HitsConfig] = None) -> HitsResult:
     cfg = cfg or HitsConfig()
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from graph_data_science_spark.plans.estimate import cost_report
-
-    ckpt.log(0, estimate=cost_report("hits", graph.nodes, graph.edges, cfg.hits_iterations, state_cols=3))
-
     edges = cache_copartitioned(
         graph.edges.select("src", "dst").distinct(), n_part, "src"
     )
-    state = graph.nodes.select("id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub"))
-    state = ckpt.checkpoint(state, 0)
 
-    ran, converged = cfg.hits_iterations, False
-    t0 = time.time()
-    with no_aqe(spark):
-        for t in range(1, cfg.hits_iterations + 1):
-            # auth phase: auth(v) = Σ hub(u) for u->v; the L2 norm rides the
-            # phase checkpoint via observe (no extra job, no recompute)
-            hubs = state.select(F.col("id").alias("src"), "hub")
-            auth_raw = (
-                edges.join(hubs, "src").groupBy("dst").agg(F.sum("hub").alias("auth_raw"))
-            )
-            s1 = state.join(auth_raw, state["id"] == auth_raw["dst"], "left").select(
-                state["id"],
-                F.coalesce("auth_raw", F.lit(0.0)).alias("auth_new"),
+    def init():
+        one = F.lit(1.0)
+        return graph.nodes.select(
+            "id", one.alias("auth"), one.alias("hub"), one.alias("auth_prev")
+        ), {}
+
+    def step(state, seen, t):
+        if t % 2:
+            # auth phase: auth(v) = Σ hub(u) for u->v, written raw
+            hub = F.col("hub") / _norm(seen)
+            hubs = state.select(F.col("id").alias("src"), hub.alias("hub"))
+            raw = edges.join(hubs, "src").groupBy("dst").agg(F.sum("hub").alias("raw"))
+            out = state.join(raw, F.col("id") == F.col("dst"), "left").select(
+                "id",
+                F.coalesce("raw", F.lit(0.0)).alias("auth"),
+                hub.alias("hub"),
                 F.col("auth").alias("auth_prev"),
-                "hub",
             )
-            s1, seen = write(
-                ckpt, s1, {"ss": F.sum(F.col("auth_new") ** 2)}, t, name="auth_phase"
-            )
-            na = float(seen["ss"]) ** 0.5 or 1.0
+            return out, {"_ss": F.sum(F.col("auth") ** 2)}
+        # hub phase: hub(u) = Σ auth(v) for u->v, written raw
+        auth = F.col("auth") / _norm(seen)
+        auths = state.select(F.col("id").alias("dst"), auth.alias("auth"))
+        raw = edges.join(auths, "dst").groupBy("src").agg(F.sum("auth").alias("raw"))
+        out = state.join(raw, F.col("id") == F.col("src"), "left").select(
+            "id",
+            auth.alias("auth"),
+            F.coalesce("raw", F.lit(0.0)).alias("hub"),
+            "auth_prev",
+        )
+        return out, {
+            "_ss": F.sum(F.col("hub") ** 2),
+            "l2_delta": F.sqrt(F.sum((F.col("auth") - F.col("auth_prev")) ** 2)),
+        }
 
-            # hub phase: hub(u) = Σ auth(v) for u->v; normalized auth derived
-            # lazily from the materialized raw column + the observed scalar
-            auth_n = F.col("auth_new") / F.lit(na)
-            auths = s1.select(F.col("id").alias("dst"), auth_n.alias("auth_n"))
-            hub_raw = (
-                edges.join(auths, "dst").groupBy("src").agg(F.sum("auth_n").alias("hub_raw"))
-            )
-            s2 = s1.join(hub_raw, s1["id"] == hub_raw["src"], "left").select(
-                s1["id"],
-                auth_n.alias("auth"),
-                F.col("auth_prev"),
-                F.coalesce("hub_raw", F.lit(0.0)).alias("hub_new"),
-            )
-            s2, row = write(
-                ckpt, s2,
-                {
-                    "ss": F.sum(F.col("hub_new") ** 2),
-                    "delta": F.sqrt(F.sum((F.col("auth") - F.col("auth_prev")) ** 2)),
-                },
-                t, name="hub_phase",
-            )
-            nh = float(row["ss"]) ** 0.5 or 1.0
-            delta = float(row["delta"])
-            state = s2.select(
-                "id", "auth", (F.col("hub_new") / F.lit(nh)).alias("hub")
-            )
-            ckpt.log(t, algorithm="hits", l2_delta=delta, wall_s=time.time() - t0)
-            if delta <= cfg.tolerance:
-                ran, converged = t, True
-                break
-
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="hits",
+        max_steps=2 * cfg.hits_iterations,
+        done=lambda state, seen, t: t % 2 == 0 and seen["l2_delta"] <= cfg.tolerance,
+        checkpoint_path=cfg.checkpoint_path,
+    )
     edges.unpersist()
-    return HitsResult(state.select("id", "auth", "hub"), ran, converged, ckpt.metrics)
+    scores = run.state.select("id", "auth", (F.col("hub") / _norm(run.seen)).alias("hub"))
+    return HitsResult(scores, run.steps // 2, run.converged, run.metrics)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
 
 
 @dataclass
@@ -86,33 +86,23 @@ def biased_random_walks(
     per-walker cumulative-weight window over the bounded candidate set.
     """
     cfg = cfg or Node2VecConfig()
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     from pyspark.sql.window import Window
 
-    from graph_data_science_spark.operators.walks import blocked_adjacency
+    from graph_data_science_spark.operators.walks import blocked_adjacency, walk_starts
 
     B, cap = cfg.block_size, cfg.neighbor_cap
     e = graph.edges.select("src", "dst").distinct().cache()
     adjb = blocked_adjacency(e, B).cache()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg")).cache()
 
-    walks = graph.nodes.select("id").crossJoin(
-        spark.range(cfg.walks_per_node).select(F.col("id").alias("walk_seq"))
-    ).select(
-        (F.col("id") * cfg.walks_per_node + F.col("walk_seq")).alias("walk_id"),
-        F.col("id").alias("start"),
-        F.array(F.col("id")).alias("path"),
-        F.col("id").alias("cur"),
-        F.lit(None).cast("long").alias("prev"),
-        F.lit(False).alias("done"),
-    )
-    walks = ckpt.checkpoint(walks, 0, name="n2v_walks")
-
     inv_p = 1.0 / cfg.return_factor
     inv_q = 1.0 / cfg.in_out_factor
 
-    for step in range(1, cfg.walk_length):
+    def init():
+        start = walk_starts(graph, cfg.walks_per_node)
+        return start.withColumn("prev", F.lit(None).cast("long")), {}
+
+    def step(walks, seen, t):
         live = (
             walks.where(~F.col("done"))
             .join(deg.withColumnRenamed("src", "cur"), "cur", "left")
@@ -131,7 +121,7 @@ def biased_random_walks(
                         F.concat_ws(
                             ":",
                             F.col("walk_id").cast("string"),
-                            F.lit(str(step)),
+                            F.lit(str(t)),
                             F.col("i").cast("string"),
                             F.lit(str(cfg.seed)),
                         )
@@ -175,7 +165,7 @@ def biased_random_walks(
         # sum(_w) whose last-ulp difference could exceed every _cum).
         ww = Window.partitionBy("walk_id").orderBy("i")
         wa = Window.partitionBy("walk_id")
-        r = _rnd6(F.col("walk_id"), F.lit(step), F.lit(cfg.seed))
+        r = _rnd6(F.col("walk_id"), F.lit(t), F.lit(cfg.seed))
         sel = (
             cand.withColumn("_cum", F.sum("_w").over(ww))
             .withColumn("_tot", F.max("_cum").over(wa))
@@ -185,7 +175,7 @@ def biased_random_walks(
         )
         nxt = walks.join(sel, "walk_id", "left")
         pick = F.when(F.col("done"), F.lit(None).cast("long")).otherwise(F.col("_pick"))
-        walks = nxt.select(
+        return nxt.select(
             "walk_id",
             "start",
             F.when(pick.isNull(), F.col("path"))
@@ -196,13 +186,17 @@ def biased_random_walks(
             .otherwise(F.col("cur"))
             .alias("prev"),
             (F.col("done") | pick.isNull()).alias("done"),
-        )
-        walks = ckpt.checkpoint(walks, step, name="n2v_walks")
+        ), {"live": F.sum((~F.col("done")).cast("long"))}
 
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="biased_random_walks",
+        max_steps=cfg.walk_length - 1, done=zero("live"),
+        checkpoint_path=cfg.checkpoint_path,
+    )
     adjb.unpersist()
     deg.unpersist()
     e.unpersist()
-    return walks.select("walk_id", "start", "path")
+    return run.state.select("walk_id", "start", "path")
 
 
 def node2vec(graph: LinkGraph, cfg: Optional[Node2VecConfig] = None) -> Node2VecResult:

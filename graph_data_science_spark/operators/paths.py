@@ -29,6 +29,7 @@
   invocations; each invocation is fully distributed).
 """
 
+import os
 import sys
 from dataclasses import dataclass, field
 from typing import Optional
@@ -37,9 +38,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import reach, write
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
+from graph_data_science_spark.session import cache_copartitioned
 
 
 def collapse_path(graph: LinkGraph, other: Optional[LinkGraph] = None) -> DataFrame:
@@ -178,16 +178,11 @@ def sssp_delta(
     chosen path is a shortest path but may differ from the untargeted
     run's min-id one."""
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = F.col("weight") if weighted else F.lit(1.0)
     edges = cache_copartitioned(
         graph.edges.select("src", "dst", w.alias("w")), n_part, "src"
     )
-
-    dist = spark.createDataFrame([(int(source), 0.0)], "id long, distance double")
-    frontier = dist
-    rounds = 0
     tset = sorted({int(t) for t in targets}) if targets else []
     if tset and weighted:
         min_w = edges.agg(F.min("w")).first()[0]
@@ -197,44 +192,50 @@ def sssp_delta(
                 f"found weight {min_w}; run without targets instead"
             )
 
-    with no_aqe(spark):
-        for r in range(1, max_rounds + 1):
-            rounds = r
-            cand = (
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .groupBy("dst")
-                .agg(F.min(F.col("distance") + F.col("w")).alias("nd"))
-            )
-            merged = dist.join(cand, dist["id"] == cand["dst"], "full").select(
-                F.coalesce(dist["id"], cand["dst"]).alias("id"),
-                F.coalesce("distance", F.lit(float("inf"))).alias("old"),
-                F.least(
-                    F.coalesce("distance", F.lit(float("inf"))),
-                    F.coalesce("nd", F.lit(float("inf"))),
-                ).alias("distance"),
-            )
-            # improved-count rides the checkpoint write — one action per round
-            improved_flag = F.col("distance") < F.col("old")
-            aggs = {"imp": F.sum(improved_flag.cast("long"))}
-            if tset:
-                is_t = F.col("id").isin(tset)
-                aggs["fmin"] = F.min(F.when(improved_flag, F.col("distance")))
-                aggs["tmax"] = F.max(F.when(is_t, F.col("distance")))
-                aggs["treached"] = F.count(F.when(is_t, F.lit(1)))
-            merged, got = write(ckpt, merged, aggs, r)
-            improved = got["imp"]
-            frontier = merged.where(F.col("distance") < F.col("old")).select("id", "distance")
-            ckpt.log(r, algorithm="sssp_delta", improved=improved)
-            dist = merged.select("id", "distance")
-            if improved == 0:
-                break
-            # improved > 0 here, so fmin (min improved distance) is non-null
-            if tset and got["treached"] == len(tset):
-                if got["fmin"] >= got["tmax"]:
-                    ckpt.log(r, algorithm="sssp_delta", targets_settled=True)
-                    break
+    def init():
+        return spark.createDataFrame(
+            [(int(source), 0.0, True)], "id long, distance double, improved boolean"
+        ), {}
+
+    def step(state, seen, t):
+        cand = (
+            state.where("improved")
+            .join(edges, F.col("id") == F.col("src"))
+            .groupBy("dst")
+            .agg(F.min(F.col("distance") + F.col("w")).alias("nd"))
+        )
+        merged = state.join(cand, F.col("id") == F.col("dst"), "full").select(
+            F.coalesce("id", "dst").alias("id"),
+            F.coalesce("distance", F.lit(float("inf"))).alias("old"),
+            F.least(
+                F.coalesce("distance", F.lit(float("inf"))),
+                F.coalesce("nd", F.lit(float("inf"))),
+            ).alias("distance"),
+        )
+        improved = F.col("distance") < F.col("old")
+        aggs = {"improved": F.sum(improved.cast("long"))}
+        if tset:
+            is_t = F.col("id").isin(tset)
+            aggs["_fmin"] = F.min(F.when(improved, F.col("distance")))
+            aggs["_tmax"] = F.max(F.when(is_t, F.col("distance")))
+            aggs["_treached"] = F.count(F.when(is_t, F.lit(1)))
+        return merged.withColumn("improved", improved), aggs
+
+    def done(state, seen, t):
+        if seen["improved"] == 0:
+            return True
+        # improved > 0 here, so _fmin (min improved distance) is non-null
+        if tset and seen["_treached"] == len(tset) and seen["_fmin"] >= seen["_tmax"]:
+            seen["targets_settled"] = True
+            return True
+        return False
+
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="sssp_delta",
+        max_steps=max_rounds, done=done, checkpoint_path=checkpoint_path,
+    )
     edges.unpersist()
-    return SsspResult(dist, rounds, ckpt.metrics)
+    return SsspResult(run.state.select("id", "distance"), run.steps, run.metrics)
 
 
 @dataclass
@@ -270,7 +271,6 @@ def shortest_paths(
     segments — no sequential per-node chase.
     """
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     res = sssp_delta(graph, source, weighted=weighted, max_rounds=max_rounds,
                      checkpoint_path=checkpoint_path, targets=targets)
     dist = res.distances.where(F.col("distance") != float("inf"))
@@ -292,7 +292,7 @@ def shortest_paths(
                 "node_ids array<long>, costs array<double>",
             )
             return ShortestPathResult(
-                empty_paths, dist.where(F.lit(False)), res.rounds, ckpt.metrics
+                empty_paths, dist.where(F.lit(False)), res.rounds, res.metrics
             )
         dist = dist.where(F.col("distance") <= float(horizon))
 
@@ -312,9 +312,8 @@ def shortest_paths(
     # pointer doubling over the predecessor forest: state(v) = (anc, seg)
     # where seg = path nodes from anc (exclusive) to v (inclusive), each
     # carrying its cumulative cost; anc NULL <=> seg starts at the source.
-    state = (
-        dist.join(preds, "id", "left")
-        .select(
+    def init():
+        return dist.join(preds, "id", "left").select(
             "id",
             F.when(F.col("id") == int(source), F.lit(None).cast("long"))
             .otherwise(F.col("pred"))
@@ -322,14 +321,13 @@ def shortest_paths(
             F.array(F.struct(F.col("id").alias("node"), F.col("distance").alias("cost"))).alias(
                 "seg"
             ),
-        )
-    )
-    state = ckpt.checkpoint(state, 0, name="paths")
-    for r in range(1, 64):
+        ), {}
+
+    def step(state, seen, t):
         anc_map = state.select(
             F.col("id").alias("anc"), F.col("anc").alias("anc2"), F.col("seg").alias("seg2")
         )
-        merged = state.join(anc_map, "anc", "left").select(
+        return state.join(anc_map, "anc", "left").select(
             "id",
             F.when(F.col("anc").isNull(), F.lit(None).cast("long"))
             .otherwise(F.col("anc2"))
@@ -337,15 +335,15 @@ def shortest_paths(
             F.when(F.col("seg2").isNull(), F.col("seg"))
             .otherwise(F.concat("seg2", "seg"))
             .alias("seg"),
-        )
-        state, seen = write(
-            ckpt, merged, {"open": F.sum(F.col("anc").isNotNull().cast("long"))},
-            r, name="paths",
-        )
-        if seen["open"] == 0:
-            break
+        ), {"open": F.sum(F.col("anc").isNotNull().cast("long"))}
 
-    paths = state.select(
+    # own durable directory: its metrics files must not overwrite sssp_delta's
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="shortest_paths", max_steps=63,
+        done=zero("open"),
+        checkpoint_path=checkpoint_path and os.path.join(checkpoint_path, "paths"),
+    )
+    paths = run.state.select(
         F.lit(int(source)).alias("source"),
         F.col("id").alias("target"),
         F.element_at(F.col("seg"), F.size("seg")).getField("cost").alias("total_cost"),
@@ -355,7 +353,7 @@ def shortest_paths(
     if targets:
         paths = paths.where(F.col("target").isin(tset))
         dist = dist.where(F.col("id").isin(tset))
-    return ShortestPathResult(paths, dist, res.rounds, ckpt.metrics)
+    return ShortestPathResult(paths, dist, res.rounds, res.metrics + run.metrics)
 
 
 def dijkstra_source_target(

@@ -9,7 +9,9 @@ hop per superstep — current frontier joins the adjacency-array DF and picks
 a seeded pseudo-random neighbor index (md5-hex-prefix arithmetic over
 (walk_id, step, seed) % degree — SQL-replayable by the correctness oracle),
 so the walk is deterministic, partition-stable, and fully vectorized;
-dead-ends terminate the walk (reference behavior).
+dead-ends terminate the walk (reference behavior).  The walk frame is the
+state of the shared superstep loop (plans/superstep.py): each write observes
+the walks still live, and the run stops once none is.
 
 Split reference: alpha/.../SplitRelationships* — hold out a fraction of
 edges as test positives, sample an equal number of non-edges as test
@@ -28,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
 
 
 @dataclass
@@ -57,6 +59,18 @@ def blocked_adjacency(edges: DataFrame, block_size: int) -> DataFrame:
     )
 
 
+def walk_starts(graph: LinkGraph, walks_per_node: int) -> DataFrame:
+    """Superstep-0 walk frame: walk_id, start, path = [start], cur, done."""
+    seq = graph.nodes.sparkSession.range(walks_per_node).select(F.col("id").alias("walk_seq"))
+    return graph.nodes.select("id").crossJoin(seq).select(
+        (F.col("id") * walks_per_node + F.col("walk_seq")).alias("walk_id"),
+        F.col("id").alias("start"),
+        F.array(F.col("id")).alias("path"),
+        F.col("id").alias("cur"),
+        F.lit(False).alias("done"),
+    )
+
+
 def random_walks(graph: LinkGraph, cfg: Optional[RandomWalkConfig] = None) -> DataFrame:
     """Rows: walk_id, start, path ARRAY<BIGINT> (length <= walk_length;
     shorter when a dead-end is hit).
@@ -68,26 +82,13 @@ def random_walks(graph: LinkGraph, cfg: Optional[RandomWalkConfig] = None) -> Da
     neighbors stay spread over ~deg/block_size rows.
     """
     cfg = cfg or RandomWalkConfig()
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
     B = cfg.block_size
 
     e = graph.edges.select("src", "dst").distinct()
     adjb = blocked_adjacency(e, B).cache()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg")).cache()
 
-    walks = graph.nodes.select("id").crossJoin(
-        spark.range(cfg.walks_per_node).select(F.col("id").alias("walk_seq"))
-    ).select(
-        (F.col("id") * cfg.walks_per_node + F.col("walk_seq")).alias("walk_id"),
-        F.col("id").alias("start"),
-        F.array(F.col("id")).alias("path"),
-        F.col("id").alias("cur"),
-        F.lit(False).alias("done"),
-    )
-    walks = ckpt.checkpoint(walks, 0, name="walks")
-
-    for step in range(1, cfg.walk_length):
+    def step(walks, seen, t):
         j = walks.join(deg.withColumnRenamed("src", "cur"), "cur", "left")
         # md5-hex-prefix pseudo-random rank (replayable in ANSI SQL)
         rnd = F.conv(
@@ -96,7 +97,7 @@ def random_walks(graph: LinkGraph, cfg: Optional[RandomWalkConfig] = None) -> Da
                     F.concat_ws(
                         ":",
                         F.col("walk_id").cast("string"),
-                        F.lit(str(step)),
+                        F.lit(str(t)),
                         F.lit(str(cfg.seed)),
                     )
                 ),
@@ -122,7 +123,7 @@ def random_walks(graph: LinkGraph, cfg: Optional[RandomWalkConfig] = None) -> Da
         pick = F.when(F.col("_k").isNull() | F.col("dsts").isNull(), F.lit(None)).otherwise(
             F.element_at("dsts", (F.pmod(F.col("_k"), F.lit(B)) + 1).cast("int"))
         )
-        walks = j.select(
+        return j.select(
             "walk_id",
             "start",
             F.when(pick.isNull(), F.col("path")).otherwise(
@@ -130,12 +131,17 @@ def random_walks(graph: LinkGraph, cfg: Optional[RandomWalkConfig] = None) -> Da
             ).alias("path"),
             F.coalesce(pick, F.col("cur")).alias("cur"),
             (F.col("done") | pick.isNull()).alias("done"),
-        )
-        walks = ckpt.checkpoint(walks, step, name="walks")
+        ), {"live": F.sum((~F.col("done")).cast("long"))}
 
+    run = run_supersteps(
+        graph.nodes, graph.edges, lambda: (walk_starts(graph, cfg.walks_per_node), {}),
+        step, algorithm="random_walks",
+        max_steps=cfg.walk_length - 1, done=zero("live"),
+        checkpoint_path=cfg.checkpoint_path,
+    )
     adjb.unpersist()
     deg.unpersist()
-    return walks.select("walk_id", "start", "path")
+    return run.state.select("walk_id", "start", "path")
 
 
 @dataclass

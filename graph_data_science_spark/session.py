@@ -67,6 +67,9 @@ def get_spark(
         shuffle_partitions = int(n)
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     heap = f"{max(1, min(48, int(0.4 * phys) >> 30))}g"
+    # Python workers import this package (Arrow UDFs) from any cwd
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pythonpath = os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -92,6 +95,7 @@ def get_spark(
         # marker write is skipped — both are on the superstep critical path
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

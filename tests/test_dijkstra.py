@@ -103,3 +103,35 @@ def test_targets_refuse_negative_weights(spark):
     res = sssp_delta(g, 0)
     dist = {r["id"]: r["distance"] for r in res.distances.collect()}
     assert dist == {0: 0.0, 1: 4.0, 2: 1.0, 3: 1.0, 4: 2.0}
+
+
+def test_shortest_paths_metrics_keep_both_row_sets(spark, tmp_path):
+    """`metrics` lists the sssp_delta supersteps, then the pointer-doubling
+    ones; their durable metrics files live in separate directories."""
+    import json
+    import os
+
+    g = _chain_with_branch(spark)
+    ck = str(tmp_path / "sp_ck")
+    res = shortest_paths(g, 0, weighted=True, checkpoint_path=ck)
+    steps = [m for m in res.metrics if "estimate" not in m]
+    algos = [m["algorithm"] for m in steps]
+    n_paths = algos.count("shortest_paths")
+    assert n_paths >= 1
+    assert algos == ["sssp_delta"] * res.rounds + ["shortest_paths"] * n_paths
+    files = sorted(os.listdir(os.path.join(ck, "metrics")))
+    assert files == [f"superstep_{t:05d}.json" for t in range(res.rounds + 1)]
+    for t in range(1, res.rounds + 1):
+        with open(os.path.join(ck, "metrics", f"superstep_{t:05d}.json")) as fh:
+            assert json.load(fh)["algorithm"] == "sssp_delta"
+    assert len(os.listdir(os.path.join(ck, "paths", "metrics"))) == n_paths + 1
+
+
+def test_targeted_sssp_logs_one_row_per_superstep(spark):
+    from graph_data_science_spark.operators.paths import sssp_delta
+
+    res = sssp_delta(_chain_with_branch(spark), 0, targets=[10])
+    steps = [m["superstep"] for m in res.metrics if "estimate" not in m]
+    # strictly increasing: the settling round is one row, not two
+    assert steps == list(range(1, res.rounds + 1))
+    assert res.metrics[-1].get("targets_settled") is True

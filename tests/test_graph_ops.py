@@ -36,6 +36,35 @@ class TestDegree:
         d = degree_distribution(g)
         assert d["max"] == 9.0 and d["min"] == 0.0
 
+    def test_distribution_percentile_rank_error(self, spark):
+        """percentile_approx(..., 10000) puts each reported percentile
+        within ceil(n / 10000) ranks of its exact rank on a heavy tail."""
+        import numpy as np
+
+        from graph_data_science_spark.sources.generator import generate_graph
+
+        n = 12_000
+        e = generate_graph(spark, n, 4, "POWER_LAW", seed=11, max_degree_cap=2000)
+        g = LinkGraph.from_edges(spark, e, nodes=spark.range(n))
+        slack = math.ceil(n / 10000)
+        # out-degrees are the heavy tail; in-degrees (uniform targets) are not
+        for orientation in (Orientation.NATURAL, Orientation.REVERSE):
+            d = degree_distribution(g, orientation)
+            exact = np.sort([r["degree"] for r in g.degrees(orientation).collect()])
+            assert len(exact) == n
+            if orientation == Orientation.NATURAL:
+                assert exact[-1] > 50 * np.median(exact)
+            for key, p in [("p50", 0.5), ("p75", 0.75), ("p90", 0.9),
+                           ("p95", 0.95), ("p99", 0.99), ("p999", 0.999)]:
+                target = math.ceil(p * n)  # 1-based rank of the exact value
+                # ranks holding the reported value (ties share a rank range)
+                lo = int(np.searchsorted(exact, d[key], "left")) + 1
+                hi = int(np.searchsorted(exact, d[key], "right"))
+                assert lo <= hi, (orientation, key, d[key])
+                assert max(lo - target, target - hi, 0) <= slack, (
+                    orientation, key, d[key], lo, hi, target
+                )
+
 
 class TestNodeSimilarity:
     def test_jaccard_fixture(self, spark):

@@ -15,17 +15,19 @@ from graph_data_science_spark.operators.labelprop import (
 )
 from graph_data_science_spark.operators.betweenness import betweenness_centrality
 from graph_data_science_spark.operators.closeness import hop_distances
+from graph_data_science_spark.operators.hits import HitsConfig, hits
 from graph_data_science_spark.operators.pagerank import (
     PageRankConfig,
     eigenvector,
     page_rank,
 )
-from graph_data_science_spark.operators.paths import bfs
+from graph_data_science_spark.operators.paths import bfs, sssp_delta
 from graph_data_science_spark.operators.pregel import (
     PregelComputation,
     PregelConfig,
     run_pregel,
 )
+from graph_data_science_spark.operators.walks import RandomWalkConfig, random_walks
 from graph_data_science_spark.operators.wcc import WccConfig, wcc
 from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
 
@@ -65,6 +67,7 @@ def test_every_operator_logs_one_row_shape(spark):
         "changed": wcc(g).metrics,
         "active": run_pregel(_chain(spark), _hops(), PregelConfig(max_iterations=20)).metrics,
         "lag_active": eigenvector(g, PageRankConfig(max_iterations=6)).metrics,
+        "improved": sssp_delta(_chain(spark), 0, weighted=False).metrics,
     }
     lp = label_propagation(g, LabelPropagationConfig(max_iterations=5)).metrics
     for name, metrics in [*runs.items(), ("changed", lp)]:
@@ -81,6 +84,17 @@ def test_every_operator_logs_one_row_shape(spark):
             assert 0.0 <= row["step_s"] <= row["wall_s"] - prev_wall + 1e-6
             prev_wall = row["wall_s"]
     assert _superstep_rows(runs["lag_active"])[0]["lag_active"] == 0
+
+
+def test_hits_phases_log_l2_delta_on_the_hub_phase(spark):
+    # a negative tolerance never converges: all 3 iterations run
+    res = hits(_graph(spark), HitsConfig(hits_iterations=3, tolerance=-1.0))
+    rows = _superstep_rows(res.metrics)
+    assert [r["superstep"] for r in rows] == list(range(1, 7))
+    assert res.ran_iterations == 3 and not res.did_converge
+    for r in rows:
+        hub_phase = r["superstep"] % 2 == 0
+        assert set(r) == COMMON | ({"l2_delta"} if hub_phase else set()), r
 
 
 def test_estimate_and_resume_rows_carry_no_wall_time(spark, tmp_path):
@@ -185,6 +199,21 @@ def test_reach_levels_a_path(spark):
     assert all(set(r) == COMMON | {"new"} for r in rows)
     tags = set(_descriptions(sc, new).values())
     assert {f"bfs:{t}" for t in range(5)} <= tags, tags
+
+
+def test_walks_stop_once_every_walk_is_done(spark):
+    """On a 4-node path every walk is at the dead end after 3 hops, so the
+    walk_length=20 run stops at superstep 4, the first with no live walk."""
+    g = _chain(spark, 3)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    walks = random_walks(g, RandomWalkConfig(walks_per_node=1, walk_length=20))
+    new = sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    tags = set(_descriptions(sc, new).values())
+    assert tags == {f"random_walks:{t}" for t in range(5)}, tags
+    paths = {r["start"]: list(r["path"]) for r in walks.collect()}
+    assert paths == {0: [0, 1, 2, 3], 1: [1, 2, 3], 2: [2, 3], 3: [3]}
 
 
 def _cached_tables(spark):
