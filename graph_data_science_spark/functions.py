@@ -30,14 +30,17 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def _sum(a: Column) -> Column:
     return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    return _sum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance."""
+    return _sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
 
 
 def cosine(a, b) -> Column:
@@ -48,14 +51,7 @@ def cosine(a, b) -> Column:
 
 def euclidean_distance(a, b) -> Column:
     """gds.similarity.euclideanDistance — raw L2 distance."""
-    a, b = _c(a), _c(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    return F.sqrt(_sq_dist(_c(a), _c(b)))
 
 
 def euclidean(a, b) -> Column:
@@ -87,21 +83,9 @@ def pearson(a, b) -> Column:
     n = F.size(a).cast("double")
     ma = _sum(a) / n
     mb = _sum(b) / n
-    cov = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - ma) * (y - mb)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    va = F.aggregate(
-        F.transform(a, lambda x: (x - ma) * (x - ma)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    vb = F.aggregate(
-        F.transform(b, lambda x: (x - mb) * (x - mb)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cov = _sum(F.zip_with(a, b, lambda x, y: (x - ma) * (y - mb)))
+    va = _sum(F.transform(a, lambda x: (x - ma) * (x - ma)))
+    vb = _sum(F.transform(b, lambda x: (x - mb) * (x - mb)))
     return cov / (F.sqrt(va) * F.sqrt(vb))
 
 

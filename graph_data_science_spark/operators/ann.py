@@ -15,8 +15,8 @@ distances: random init + neighbor-of-neighbor refinement.  `knn` implements
 that shape: LSH buckets seed the neighbor lists (a better-than-random init),
 then `knn_refine` runs NN-Descent rounds — candidates are neighbors of
 neighbors (in both directions, the reference's `reverse` join lists),
-re-ranked exactly and folded into the per-node top-k.  Each round is two
-self-joins + one window — no cross product ever materializes.
+re-ranked exactly and folded into the per-node top-k.  Each round is one
+self-join + one window — no cross product ever materializes.
 """
 
 from typing import Optional
@@ -25,17 +25,33 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graph_data_science_spark import functions as sim
+from graph_data_science_spark.functions import _dot, _sq_dist
+from graph_data_science_spark.plans.superstep import run_supersteps
+
 
 def _as_double(vec_col: str):
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _norm(v):
-    return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
+    return F.sqrt(_dot(v, v))
+
+
+def _top_k(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The k highest-``score`` rows per query_id, ties -> lower neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+
+
+def _cosine_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine) of each query's k most similar
+    neighbors; ``pairs`` carries the vectors qv/nv and their norms qn/nn."""
+    return _top_k(pairs.select(
+        "query_id",
+        "neighbor_id",
+        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cosine"),
+    ), k)
 
 
 def cosine_topk(
@@ -68,13 +84,7 @@ def cosine_topk(
     pairs = F.broadcast(q).crossJoin(
         base.select(F.col("_id").alias("neighbor_id"), F.col("_v").alias("nv"), F.col("_n").alias("nn"))
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return _cosine_top_k(pairs, k)
 
 
 def _bucket_expr(vec, n_planes: int, seed: int):
@@ -171,13 +181,7 @@ def lsh_ann_topk(
         .where(F.col("query_id") != F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return _cosine_top_k(cand, k)
 
 
 def knn_refine(
@@ -202,69 +206,57 @@ def knn_refine(
     clustered data (the NN-Descent property: a neighbor's neighbor is likely
     a neighbor).
 
+    Each round is one superstep of `plans/superstep.py:run_supersteps`
+    (jobs `knn_refine:<round>`, one Spark action): scored candidates, already
+    anti-joined against the lists, are tagged `_new`, so `updates` observed
+    on the top-k write counts the list entries new this round.
+
     Convergence knobs (Knn.java config parity — `deltaThreshold`,
     `sampleRate`):
     - `delta_threshold`: stop early when a round changes fewer than
       delta_threshold * n * k list entries (the reference's updateCount
-      termination; `rounds` becomes the maxIterations bound).  The update
-      count is one anti-join count per round over two parquet-backed
-      checkpoints — cheap relative to the round itself.
+      termination; `rounds` becomes the maxIterations bound).
     - `sample_rate`: each round proposes candidates from a deterministic
       seeded sample of the current list entries (xxhash64 gate, reseeded
       per round so coverage rotates) — the reference's per-node join-list
       sampling, bounding the two-hop join fan-out at dense spots.  Exact
       re-ranking and the keep-best-k merge are NOT sampled; only proposal
       generation is.
-    - `stats`: optional dict filled with {"rounds_run", "last_updates"}.
+    - `stats`: optional dict filled with {"rounds_run", "last_updates"}
+      (`last_updates` is None unless delta_threshold > 0).
     """
-    from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-
-    spark = embeddings.sparkSession
-    ckpt = SuperstepCheckpointer(spark, None)
     base = embeddings.select(
         F.col(id_col).alias("_id"), _as_double(vec_col).alias("_v")
     ).withColumn("_n", _norm(F.col("_v")))
-    cur = topk.select("query_id", "neighbor_id", "cosine")
-    # each round references `cur` six times (fwd x2, rev x2, anti-join,
-    # union); materialize once per round or the plan recomputes the whole
-    # history geometrically (parquet round-trip, not localCheckpoint — see
-    # plans/checkpoint.py on sizeInBytes blowup)
-    cur = ckpt.checkpoint(cur, 0, name="knn")
     n_nodes = embeddings.count() if delta_threshold > 0 else None
-    rounds_run, last_updates = 0, None
-    for r in range(rounds):
+
+    def init():
+        return topk.select("query_id", "neighbor_id", "cosine"), {}
+
+    def step(cur, seen, t):
         src = cur
         if sample_rate < 1.0:
             gate = int(sample_rate * 1_000_000)
             src = cur.where(
                 F.pmod(
-                    F.xxhash64("query_id", "neighbor_id", F.lit(seed + r)),
+                    F.xxhash64("query_id", "neighbor_id", F.lit(seed + t - 1)),
                     F.lit(1_000_000),
                 )
                 < gate
             )
-        fwd = (
-            src.select(F.col("query_id").alias("q"), F.col("neighbor_id").alias("mid"))
-            .join(
-                src.select(
-                    F.col("query_id").alias("mid"), F.col("neighbor_id").alias("cand")
-                ),
-                "mid",
-            )
-            .select("q", "cand")
-        )
-        rev = (
+        # q proposes the neighbors of every mid it lists (forward) and of
+        # every mid that lists q (reverse)
+        mids = src.select(
+            F.col("query_id").alias("q"), F.col("neighbor_id").alias("mid")
+        ).unionByName(
             src.select(F.col("neighbor_id").alias("q"), F.col("query_id").alias("mid"))
-            .join(
-                src.select(
-                    F.col("query_id").alias("mid"), F.col("neighbor_id").alias("cand")
-                ),
-                "mid",
-            )
-            .select("q", "cand")
         )
         cands = (
-            fwd.unionByName(rev)
+            mids.join(
+                src.select(F.col("query_id").alias("mid"), F.col("neighbor_id").alias("cand")),
+                "mid",
+            )
+            .select("q", "cand")
             .where(F.col("q") != F.col("cand"))
             .distinct()
             .join(cur.select(F.col("query_id").alias("q"), F.col("neighbor_id").alias("cand")),
@@ -283,31 +275,24 @@ def knn_refine(
                 F.col("q").alias("query_id"),
                 F.col("cand").alias("neighbor_id"),
                 (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cosine"),
+                F.lit(True).alias("_new"),
             )
         )
-        merged = cur.unionByName(scored)
-        w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        prev = cur
-        cur = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .drop("rn")
-        )
-        cur = ckpt.checkpoint(cur, r + 1, name="knn")
-        rounds_run = r + 1
-        if delta_threshold > 0:
-            # list entries new this round (both frames are parquet-backed)
-            last_updates = cur.join(
-                prev.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
-                "left_anti",
-            ).count()
-            if last_updates < delta_threshold * n_nodes * k:
-                break
+        merged = cur.withColumn("_new", F.lit(False)).unionByName(scored)
+        return _top_k(merged, k), {"updates": F.sum(F.col("_new").cast("long"))}
+
+    def done(cur, seen, t):
+        return delta_threshold > 0 and seen["updates"] < delta_threshold * n_nodes * k
+
+    # the neighbor lists are the "edges" the kernel's cost report sizes
+    run = run_supersteps(
+        base.select(F.col("_id").alias("id")), topk, init, step,
+        algorithm="knn_refine", max_steps=rounds, done=done,
+    )
     if stats is not None:
-        stats["rounds_run"] = rounds_run
-        stats["last_updates"] = last_updates
-    return cur
+        stats["rounds_run"] = run.steps
+        stats["last_updates"] = run.seen.get("updates") if delta_threshold > 0 else None
+    return run.state
 
 
 def ivf_topk(
@@ -361,16 +346,11 @@ def ivf_topk(
     q = base if query_ids is None else base.where(
         F.col("_id").isin([int(x) for x in query_ids])
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("_v"), F.col("_c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     pw = Window.partitionBy("_id").orderBy(F.asc("_d2"), F.asc("_plist"))
     q = (
         q.drop("_list")
         .crossJoin(F.broadcast(cent_df))
-        .withColumn("_d2", d2)
+        .withColumn("_d2", _sq_dist(F.col("_v"), F.col("_c")))
         .withColumn("_pr", F.row_number().over(pw))
         .where(F.col("_pr") <= min(n_probe, len(centroids)))
         .select(
@@ -389,16 +369,16 @@ def ivf_topk(
         ),
         "_list",
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        (_dot(F.col("qv"), F.col("nv")) / (F.col("qn") * F.col("nn"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return _cosine_top_k(cand, k)
 
 
 KNN_ALL_PAIRS_LIMIT = 16384
+_SIMILARITIES = {
+    "cosine": sim.cosine,
+    "euclidean": sim.euclidean,
+    "jaccard": sim.jaccard,
+    "overlap": sim.overlap,
+}
 
 
 def similarity_expr(metric: str, a, b):
@@ -408,32 +388,16 @@ def similarity_expr(metric: str, a, b):
     = cosine, LongArrayPropertySimilarityComputer = set overlap/jaccard,
     Long/DoublePropertySimilarityComputer = 1/(1+|a-b|)).
 
-    All pure JVM column algebra — no UDFs:
+    All pure JVM column algebra — no UDFs.  The array metrics are the
+    gds.similarity.* functions of `functions.py`:
       cosine     double arrays
       euclidean  double arrays, 1/(1+L2)
       jaccard    long arrays as sets: |∩| / |∪|
       overlap    long arrays as sets: |∩| / min(|A|,|B|)
       abs_diff   scalars: 1/(1+|a-b|)
     """
-    if metric == "cosine":
-        return _dot(a, b) / (_norm(a) * _norm(b))
-    if metric == "euclidean":
-        d2 = F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.lit(1.0) / (F.lit(1.0) + F.sqrt(d2))
-    if metric == "jaccard":
-        inter = F.size(F.array_intersect(a, b)).cast("double")
-        union = F.size(F.array_union(a, b)).cast("double")
-        return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    if metric == "overlap":
-        inter = F.size(F.array_intersect(a, b)).cast("double")
-        mn = F.least(
-            F.size(F.array_distinct(a)), F.size(F.array_distinct(b))
-        ).cast("double")
-        return F.when(mn > 0, inter / mn).otherwise(F.lit(0.0))
+    if metric in _SIMILARITIES:
+        return _SIMILARITIES[metric](a, b)
     if metric == "abs_diff":
         return F.lit(1.0) / (
             F.lit(1.0) + F.abs(a.cast("double") - b.cast("double"))
@@ -506,8 +470,7 @@ def knn_properties(
         "neighbor_id",
         (score / F.lit(float(len(sims)))).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return _top_k(scored, k, "score")
 
 
 def knn(
@@ -546,5 +509,4 @@ def knn(
         delta_threshold=delta_threshold, sample_rate=sample_rate, seed=seed,
         stats=stats,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return refined.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return _top_k(refined, k)

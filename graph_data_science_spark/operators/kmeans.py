@@ -9,6 +9,12 @@ Spark decomposition: centroids are tiny (k rows) -> broadcast; assignment is
 a broadcast-joined argmin over k distance expressions (JVM higher-order
 functions, no Python); centroid recompute is one groupBy over exploded
 (cluster, dim, value) triples — a single shuffle bounded by k*dim groups.
+
+Each Lloyd iteration is one superstep of `plans/superstep.py:run_supersteps`
+(jobs `kmeans:<t>`) over the (id, v, cluster, d2) assignment: superstep 0 is
+the first assignment, superstep t recomputes the centroids from the previous
+one (a k*dim-row collect), reassigns and observes `sse` and `changed`.  The
+returned centroids are the ones the final assignment is the argmin of.
 Deterministic init: the k nodes with smallest ids seed the centroids
 (the reference samples with a seeded RNG; any deterministic seed set
 satisfies the contract — tests assert convergence + cluster quality, not a
@@ -17,15 +23,14 @@ specific seed sequence).
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
+from graph_data_science_spark.functions import _sq_dist
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
 
 
 @dataclass
@@ -52,17 +57,15 @@ def kmeans(
 ) -> KmeansResult:
     cfg = cfg or KmeansConfig()
     spark = df.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
 
     base = df.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     ).cache()
 
-    # deterministic init: k smallest ids; fewer rows than k -> clamp k_eff
-    init_rows = base.orderBy("id").limit(cfg.k).collect()
-    centroids = [list(r["v"]) for r in init_rows]
-    k_eff = len(centroids)
+    # deterministic init: the k smallest ids (fewer rows than k -> fewer
+    # clusters)
+    centroids = [list(r["v"]) for r in base.orderBy("id").limit(cfg.k).collect()]
 
     def assign_step(cents: list[list[float]]) -> DataFrame:
         """Nearest-centroid assignment with O(1) generated code in k.
@@ -84,11 +87,7 @@ def kmeans(
         ds = F.transform(
             "_cents",
             lambda cen: F.struct(
-                F.aggregate(
-                    F.zip_with("v", cen["c"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d2"),
+                _sq_dist(F.col("v"), cen["c"]).alias("d2"),
                 cen["cluster"].alias("cluster"),
             ),
         )
@@ -97,35 +96,10 @@ def kmeans(
             "id", "v", best["cluster"].alias("cluster"), best["d2"].alias("d2")
         )
 
-    assign = None
-    ran, converged = cfg.max_iterations, False
-    t0 = time.time()
-    for t in range(1, cfg.max_iterations + 1):
-        new_assign = assign_step(centroids)
-        aggs = {"sse": F.sum("d2")}
-        # change-count rides the checkpoint write (observe) — one extra join
-        # against the previous assignment, zero extra jobs
-        if assign is not None:
-            new_assign = new_assign.join(
-                assign.select("id", F.col("cluster").alias("_old")), "id"
-            )
-            aggs["chg"] = F.sum((F.col("cluster") != F.col("_old")).cast("long"))
-        assign, row = write(ckpt, new_assign, aggs, t, ["id", "v", "cluster", "d2"])
-        changed = row.get("chg", -1)
-        ckpt.log(
-            t, algorithm="kmeans", changed=changed,
-            sse=float(row["sse"]), wall_s=time.time() - t0,
-        )
-        if changed == 0:
-            ran, converged = t, True
-            break
-        if t == cfg.max_iterations:
-            break  # keep `centroids` == the ones this assignment is argmin of
-
-        # recompute centroids: explode to (cluster, dim, x), mean per cell
-        exploded = assign.select(
-            "cluster", F.posexplode("v").alias("dim", "x")
-        )
+    def centroids_of(assign: DataFrame) -> list[list[float]]:
+        """Cluster means of an assignment: explode to (cluster, dim, x), mean
+        per cell; an empty cluster keeps its previous centroid."""
+        exploded = assign.select("cluster", F.posexplode("v").alias("dim", "x"))
         means = (
             exploded.groupBy("cluster", "dim")
             .agg(F.avg("x").alias("mu"))
@@ -135,9 +109,31 @@ def kmeans(
             .collect()
         )
         by_cluster = {r["cluster"]: list(r["centroid"]) for r in means}
-        centroids = [by_cluster.get(j, centroids[j]) for j in range(k_eff)]
+        return [by_cluster.get(j, c) for j, c in enumerate(centroids)]
 
+    def init():
+        return assign_step(centroids), {"sse": F.sum("d2")}
+
+    def step(assign, seen, t):
+        centroids[:] = centroids_of(assign)
+        # the change count rides the write: one join against the previous
+        # assignment, no extra job
+        moved = assign_step(centroids).join(
+            assign.select("id", F.col("cluster").alias("_old")), "id"
+        )
+        return moved, {
+            "sse": F.sum("d2"),
+            "changed": F.sum((F.col("cluster") != F.col("_old")).cast("long")),
+        }
+
+    # no edge set: the vectors stand in for both sides of the cost report
+    run = run_supersteps(
+        base, base, init, step, algorithm="kmeans",
+        max_steps=cfg.max_iterations - 1, done=zero("changed"),
+        checkpoint_path=cfg.checkpoint_path,
+    )
     base.unpersist()
+    ran = run.steps + 1 if run.converged else cfg.max_iterations
     return KmeansResult(
-        assign.select("id", "cluster"), centroids, ran, converged, ckpt.metrics
+        run.state.select("id", "cluster"), centroids, ran, run.converged, run.metrics
     )

@@ -21,6 +21,11 @@ Spark decomposition:
   volume term).
 - composition: a `node → community` mapping joined through each level.
 
+Each level's local moving is one `plans/superstep.py:run_supersteps` call
+over (id, community, deg) (jobs `louvain:<round>`, rows tagged `level`); a
+durable level keeps its state and metrics under `<checkpoint_path>/level_l`.
+`metrics` lists each level's rounds, then its `louvain_level` row.
+
 Undirected semantics: the input edge set is canonicalized and each edge
 counted once; volumes use weighted degrees with self-loops counted twice,
 matching standard modularity bookkeeping.
@@ -28,6 +33,7 @@ matching standard modularity bookkeeping.
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field
 from typing import Optional
@@ -38,7 +44,7 @@ from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
+from graph_data_science_spark.plans.superstep import Run, run_supersteps
 
 
 @dataclass
@@ -114,35 +120,28 @@ def _local_moving(
     nodes: DataFrame,
     m: float,
     cfg: LouvainConfig,
-    ckpt: SuperstepCheckpointer,
     level: int,
-) -> DataFrame:
-    """One level of modularity optimization; returns id -> community."""
-    sym = edges.where(F.col("a") != F.col("b")).select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-    ).unionByName(
-        edges.where(F.col("a") != F.col("b")).select(
-            F.col("b").alias("src"), F.col("a").alias("dst"), "w"
-        )
-    )
+) -> Run:
+    """One level of modularity optimization; its state is
+    (id, community, deg)."""
+    und = edges.where(F.col("a") != F.col("b"))
+    sym = und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w").unionByName(
+        und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
+    ).cache()
     # weighted degree (self-loops count twice)
     deg = (
         edges.select(F.col("a").alias("id"), F.when(F.col("a") == F.col("b"), 2 * F.col("w")).otherwise(F.col("w")).alias("w"))
-        .unionByName(
-            edges.where(F.col("a") != F.col("b")).select(F.col("b").alias("id"), "w")
-        )
+        .unionByName(und.select(F.col("b").alias("id"), "w"))
         .groupBy("id")
         .agg(F.sum("w").alias("deg"))
     )
-    nodes_deg = nodes.join(deg, "id", "left").select(
-        "id", F.coalesce("deg", F.lit(0.0)).alias("deg")
-    ).cache()
 
-    comm = nodes_deg.select("id", F.col("id").alias("community"), "deg")
-    comm = ckpt.checkpoint(comm, 0, name=f"louvain_l{level}")
-    sym = sym.cache()
+    def init():
+        return nodes.join(deg, "id", "left").select(
+            "id", F.col("id").alias("community"), F.coalesce("deg", F.lit(0.0)).alias("deg")
+        ), {}
 
-    for it in range(1, cfg.max_inner_iterations + 1):
+    def step(comm, seen, it):
         vols = comm.groupBy("community").agg(F.sum("deg").alias("vol"))
         cd = comm.select(F.col("id").alias("dst"), F.col("community").alias("cand"))
         # weight from each node to each neighboring community
@@ -182,8 +181,7 @@ def _local_moving(
         # round (deterministic analog of the reference's color-batched
         # scheduling).  Convergence tests the UNFILTERED candidate count —
         # a round whose movers all sit in the skipped parity class must not
-        # terminate the loop.  Both counts ride the checkpoint write
-        # (observe) — one action per inner iteration.
+        # terminate the loop.
         apply_gate = (F.col("id") + it) % 2 == 0
         merged = comm.join(best, "id", "left").select(
             "id",
@@ -194,24 +192,25 @@ def _local_moving(
             F.col("new_comm").isNotNull().alias("_cand"),
             (F.col("new_comm").isNotNull() & apply_gate).alias("_moved"),
         )
-        comm, seen = write(
-            ckpt, merged,
-            {
-                "cand_moves": F.sum(F.col("_cand").cast("long")),
-                "moved": F.sum(F.col("_moved").cast("long")),
-            },
-            it, ["id", "community", "deg"], f"louvain_l{level}",
-        )
-        ckpt.log(
-            it, algorithm="louvain_move", level=level, moved=seen["moved"],
-            cand_moves=seen["cand_moves"],
-        )
-        if seen["cand_moves"] == 0:
-            break
+        return merged, {
+            "cand_moves": F.sum(F.col("_cand").cast("long")),
+            "moved": F.sum(F.col("_moved").cast("long")),
+        }
 
-    nodes_deg.unpersist()
+    def done(comm, seen, it):
+        seen["level"] = level
+        return seen["cand_moves"] == 0
+
+    # levels never share a state directory: the next level lazily reads
+    # this level's final state
+    run = run_supersteps(
+        nodes, edges, init, step, algorithm="louvain",
+        max_steps=cfg.max_inner_iterations, done=done,
+        checkpoint_path=None if cfg.checkpoint_path is None
+        else os.path.join(cfg.checkpoint_path, f"level_{level}"),
+    )
     sym.unpersist()
-    return comm.select("id", "community")
+    return run
 
 
 def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainResult:
@@ -227,14 +226,16 @@ def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainRes
     assignment = nodes.select("id", F.col("id").alias("community"))
     modularities: list[float] = []
     level_assignments: list[DataFrame] = []  # composed per-level (dendrogram)
-    ran_levels = 0
     t0 = time.time()
 
+    metrics: list = []
     lvl_edges, lvl_nodes = edges, nodes
     for level in range(1, cfg.max_levels + 1):
-        comm = _local_moving(lvl_edges, lvl_nodes, m, cfg, ckpt, level)
+        moving = _local_moving(lvl_edges, lvl_nodes, m, cfg, level)
+        comm = moving.state.select("id", "community")
         q = _modularity(lvl_edges, comm, m)
         ckpt.log(level, algorithm="louvain_level", modularity=q, wall_s=time.time() - t0)
+        metrics += [*moving.metrics, ckpt.metrics[-1]]
         # compose: nodes' current community -> new community of that community-node
         mapping = comm.select(
             F.col("id").alias("community_key"), F.col("community").alias("new_comm")
@@ -246,7 +247,6 @@ def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainRes
         assignment = ckpt.checkpoint(assignment, level, name="louvain_assign")
         if cfg.include_intermediate:
             level_assignments.append(assignment)
-        ran_levels = level
         if modularities and q - modularities[-1] < cfg.tolerance:
             modularities.append(q)
             break
@@ -293,6 +293,6 @@ def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainRes
                     ).alias("intermediate_communities"),
         )
     return LouvainResult(
-        assignment, final_q, modularities, ran_levels, ckpt.metrics,
+        assignment, final_q, modularities, len(modularities), metrics,
         intermediate_communities=intermediate,
     )

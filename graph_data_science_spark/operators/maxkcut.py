@@ -13,8 +13,11 @@ is the BEST-CUT iterate over the run, which is >= the deterministic id%k
 baseline by construction (the baseline is iterate 0).
 
 Per round: one join (edges x assignment) + one groupBy(node, partition)
-+ one argmin — all map-side-combined aggregations; counts ride the
-checkpoint write via observe.
++ one argmin — all map-side-combined aggregations.  A round is one superstep
+of `plans/superstep.py:run_supersteps` (jobs `maxkcut:<t>`) over (id,
+partition, best): the move count rides the write, the stop test computes
+the cut and flags an improvement, and the next round copies an improving
+`partition` into `best`.
 """
 
 from __future__ import annotations
@@ -27,9 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
-from graph_data_science_spark.session import no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps
 
 
 @dataclass
@@ -64,7 +65,6 @@ def approx_max_k_cut(
     checkpoint_path: Optional[str] = None,
 ) -> MaxKCutResult:
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # undirected incidence view: every edge contributes weight at both ends
@@ -80,71 +80,65 @@ def approx_max_k_cut(
         .cache()
     )
 
-    assign = graph.nodes.select("id", (F.col("id") % k).alias("partition"))
-    assign = ckpt.checkpoint(assign, 0, name="kcut")
-    # the incumbent best lives under its own checkpoint name so the
-    # ephemeral eviction of the main iterate stream never unlinks it
-    best_assign = ckpt.checkpoint(assign, 0, name="kcut_best")
-    best_cut = _cut_weight(graph, best_assign)
+    baseline = graph.nodes.select("id", (F.col("id") % k).alias("partition"))
+    best_cut = _cut_weight(graph, baseline)
 
-    ran = 0
-    with no_aqe(spark):
-        for it in range(1, max_iterations + 1):
-            ran = it
-            nbr = assign.select(
-                F.col("id").alias("dst"), F.col("partition").alias("np")
-            )
-            # weight from each node into each partition
-            w_to = (
-                sym.join(nbr, "dst")
-                .groupBy("src", "np")
-                .agg(F.sum("weight").alias("w"))
-            )
-            # argmin internal weight (maximize cut), ties -> lower partition;
-            # partitions with NO incident weight are best (w = 0): union the
-            # zero rows for all k partitions so they participate in the argmin
-            ids = w_to.select("src").distinct()
-            zeros = ids.crossJoin(
-                spark.range(k).select(F.col("id").cast("long").alias("np"))
-            ).select("src", "np", F.lit(0.0).alias("w0"))
-            full = zeros.join(w_to, ["src", "np"], "left").select(
-                "src", "np", F.coalesce("w", F.col("w0")).alias("w")
-            )
-            win = Window.partitionBy("src").orderBy(F.asc("w"), F.asc("np"))
-            best = (
-                full.withColumn("rn", F.row_number().over(win))
-                .where("rn = 1")
-                .select(F.col("src").alias("id"), F.col("np").alias("new_p"))
-            )
-            apply_gate = (F.col("id") + it) % 2 == 0
-            merged = assign.join(best, "id", "left").select(
-                "id",
-                F.when(
-                    F.col("new_p").isNotNull()
-                    & apply_gate
-                    & (F.col("new_p") != F.col("partition")),
-                    F.col("new_p"),
-                )
-                .otherwise(F.col("partition"))
-                .alias("partition"),
-                (
-                    F.col("new_p").isNotNull() & (F.col("new_p") != F.col("partition"))
-                ).alias("_cand"),
-            )
-            assign, seen = write(
-                ckpt, merged, {"cand": F.sum(F.col("_cand").cast("long"))},
-                it, ["id", "partition"], "kcut",
-            )
-            cand = seen["cand"]
-            cut = _cut_weight(graph, assign)
-            if cut > best_cut:
-                best_assign = ckpt.checkpoint(assign, it, name="kcut_best")
-                best_cut = cut
-            ckpt.log(it, algorithm="maxkcut", cand_moves=cand, cut=cut)
-            if cand == 0:
-                break
+    def init():
+        return baseline.withColumn("best", F.col("partition")), {}
 
+    def step(assign, seen, it):
+        nbr = assign.select(
+            F.col("id").alias("dst"), F.col("partition").alias("np")
+        )
+        # weight from each node into each partition
+        w_to = (
+            sym.join(nbr, "dst")
+            .groupBy("src", "np")
+            .agg(F.sum("weight").alias("w"))
+        )
+        # argmin internal weight (maximize cut), ties -> lower partition;
+        # partitions with NO incident weight are best (w = 0): union the
+        # zero rows for all k partitions so they participate in the argmin
+        ids = w_to.select("src").distinct()
+        zeros = ids.crossJoin(
+            spark.range(k).select(F.col("id").cast("long").alias("np"))
+        ).select("src", "np", F.lit(0.0).alias("w0"))
+        full = zeros.join(w_to, ["src", "np"], "left").select(
+            "src", "np", F.coalesce("w", F.col("w0")).alias("w")
+        )
+        win = Window.partitionBy("src").orderBy(F.asc("w"), F.asc("np"))
+        best = (
+            full.withColumn("rn", F.row_number().over(win))
+            .where("rn = 1")
+            .select(F.col("src").alias("id"), F.col("np").alias("new_p"))
+        )
+        apply_gate = (F.col("id") + it) % 2 == 0
+        moves = F.col("new_p").isNotNull() & (F.col("new_p") != F.col("partition"))
+        merged = assign.join(best, "id", "left").select(
+            "id",
+            F.when(moves & apply_gate, F.col("new_p"))
+            .otherwise(F.col("partition"))
+            .alias("partition"),
+            # the previous iterate becomes the incumbent if it improved
+            (F.col("partition") if seen.get("improved") else F.col("best")).alias("best"),
+            moves.alias("_cand"),
+        )
+        return merged, {"cand_moves": F.sum(F.col("_cand").cast("long"))}
+
+    def done(assign, seen, it):
+        nonlocal best_cut
+        seen["cut"] = cut = _cut_weight(graph, assign)
+        seen["improved"] = cut > best_cut
+        best_cut = max(best_cut, cut)
+        return seen["cand_moves"] == 0
+
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="maxkcut",
+        max_steps=max_iterations, done=done, checkpoint_path=checkpoint_path,
+    )
     sym.unpersist()
+    winner = "partition" if run.seen.get("improved") else "best"
     return MaxKCutResult(
-        best_assign.select("id", "partition"), best_cut, ran, ckpt.metrics
+        run.state.select("id", F.col(winner).alias("partition")),
+        best_cut, run.steps, run.metrics,
     )

@@ -145,6 +145,23 @@ def _teleport(cfg: PageRankConfig):
     return alpha
 
 
+def _jacobi(r: DataFrame, shares: DataFrame, init, d: float) -> DataFrame:
+    """(id, rank, delta): one Jacobi step rank = init + d·Mᵀr of the PageRank
+    fixpoint from the scores ``r`` and its residual delta = rank - r — one
+    join + one aggregation."""
+    msg = (
+        r.hint("shuffle_hash")
+        .join(shares, r["id"] == shares["src"])
+        .groupBy("dst")
+        .agg((F.lit(d) * F.sum(F.col("r") * F.col("share"))).alias("m"))
+        .select(F.col("dst").alias("id"), "m")
+    )
+    rank = init + F.coalesce("m", F.lit(0.0))
+    return r.join(msg, "id", "left").select(
+        "id", rank.alias("rank"), (rank - F.col("r")).alias("delta")
+    )
+
+
 def page_rank(graph: LinkGraph, cfg: PageRankConfig | None = None) -> CentralityResult:
     cfg = cfg or PageRankConfig()
     return _delta_push(graph, cfg, denominator="degree")
@@ -173,19 +190,8 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
         rank_col = "score" if "score" in cfg.seed_ranks.columns else "rank"
         r0 = graph.nodes.join(
             cfg.seed_ranks.select("id", F.col(rank_col).alias("_seed")), "id", "left"
-        ).select("id", F.coalesce("_seed", init).alias("r0"))
-        msg = (
-            r0.hint("shuffle_hash")
-            .join(shares, r0["id"] == shares["src"])
-            .groupBy("dst")
-            .agg((F.lit(d) * F.sum(F.col("r0") * F.col("share"))).alias("m"))
-            .select(F.col("dst").alias("id"), "m")
-        )
-        return r0.join(msg, "id", "left").select(
-            "id",
-            (init + F.coalesce("m", F.lit(0.0))).alias("rank"),
-            (init + F.coalesce("m", F.lit(0.0)) - F.col("r0")).alias("delta"),
-        ), {}
+        ).select("id", F.coalesce("_seed", init).alias("r"))
+        return _jacobi(r0, shares, init, d), {}
 
     ckpt, state, _, start_t = begin(
         graph.nodes, graph.edges, initial_state, algorithm=algorithm,
@@ -369,21 +375,10 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
                 # join), then restart the recurrence with one Jacobi step —
                 # identical to the seed_ranks warm-start path.
                 rstar = ckpt.checkpoint(
-                    agg.select("id", (F.col("rank") + corr).alias("r0")),
+                    agg.select("id", (F.col("rank") + corr).alias("r")),
                     t, name="xtrap",
                 )
-                msg = (
-                    rstar.hint("shuffle_hash")
-                    .join(shares, rstar["id"] == shares["src"])
-                    .groupBy("dst")
-                    .agg((F.lit(d) * F.sum(F.col("r0") * F.col("share"))).alias("m"))
-                    .select(F.col("dst").alias("id"), "m")
-                )
-                new_state = rstar.join(msg, "id", "left").select(
-                    "id",
-                    (init + F.coalesce("m", F.lit(0.0))).alias("rank"),
-                    (init + F.coalesce("m", F.lit(0.0)) - F.col("r0")).alias("delta"),
-                )
+                new_state = _jacobi(rstar, shares, init, d)
             active_col = (F.abs(F.col("delta")) > cfg.tolerance).cast("long")
             state, seen = write(
                 ckpt, new_state,
@@ -430,22 +425,9 @@ def pagerank_residual(
     shares = _out_shares(graph, cfg, "degree")
     init = _teleport(cfg)
     r = scores.select("id", F.col("score").alias("r"))
-    msg = (
-        r.hint("shuffle_hash")
-        .join(shares, r["id"] == shares["src"])
-        .groupBy("dst")
-        .agg(
-            (F.lit(cfg.damping_factor) * F.sum(F.col("r") * F.col("share"))).alias("m")
-        )
-        .select(F.col("dst").alias("id"), "m")
-    )
     out = (
-        r.join(msg, "id", "left")
-        .agg(
-            F.max(
-                F.abs(init + F.coalesce(F.col("m"), F.lit(0.0)) - F.col("r"))
-            ).alias("res")
-        )
+        _jacobi(r, shares, init, cfg.damping_factor)
+        .agg(F.max(F.abs(F.col("delta"))).alias("res"))
         .collect()[0]["res"]
     )
     shares.unpersist()

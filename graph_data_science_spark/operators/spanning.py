@@ -15,11 +15,14 @@ Spark decomposition per round:
   — one join + one window/min-struct aggregation
 - union chosen edges into the forest; merge components by min-label
   propagation over the chosen edges (tiny edge set — at most one per
-  component, pointer-jumped to fixpoint in O(log) steps).
+  component), run to fixpoint as one `plans/superstep.py:run_supersteps`
+  call per round (jobs `boruvka_merge:<t>`, durable state under
+  `<checkpoint_path>/merge_<round>`) that stops once no label changes.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -28,8 +31,27 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
+from graph_data_science_spark.plans.superstep import run_supersteps, write, zero
 from graph_data_science_spark.session import no_aqe
+
+
+def _merge(links: DataFrame, comp: DataFrame) -> DataFrame:
+    """One min-label step over the chosen links: every component takes the
+    smallest label among the components it links to (`_relabelled`)."""
+    lx = comp.select(F.col("id").alias("x"), F.col("comp").alias("cx"))
+    ly = comp.select(F.col("id").alias("y"), F.col("comp").alias("cy"))
+    m = (
+        links.join(lx, "x")
+        .join(ly, "y")
+        .groupBy(F.col("cx").alias("comp"))
+        .agg(F.min("cy").alias("new_comp"))
+        .where(F.col("new_comp") < F.col("comp"))
+    )
+    return comp.join(m, "comp", "left").select(
+        "id",
+        F.coalesce("new_comp", "comp").alias("comp"),
+        F.col("new_comp").isNotNull().alias("_relabelled"),
+    )
 
 
 @dataclass
@@ -72,6 +94,7 @@ def minimum_spanning_forest(
     comp = ckpt.checkpoint(comp, 0, name="mst_comp")
     forest = None
     rounds = 0
+    metrics: list = []
 
     with no_aqe(spark):
         for r in range(1, max_rounds + 1):
@@ -87,10 +110,8 @@ def minimum_spanning_forest(
             pick = F.struct(
                 F.col("w").alias("w"), F.col("a").alias("a"), F.col("b").alias("b")
             )
-            from_a = cross.select(F.col("ca").alias("c"), pick.alias("p"))
-            from_b = cross.select(F.col("cb").alias("c"), pick.alias("p"))
             chosen = (
-                from_a.unionByName(from_b)
+                cross.select(F.explode(F.array("ca", "cb")).alias("c"), pick.alias("p"))
                 .groupBy("c")
                 .agg(F.min("p").alias("p"))
                 .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), F.col("p.w").alias("w"))
@@ -99,6 +120,7 @@ def minimum_spanning_forest(
             chosen, seen = write(ckpt, chosen, {"n": F.count(F.lit(1))}, r, name="mst_chosen")
             n_chosen = seen["n"]
             ckpt.log(r, algorithm="boruvka", chosen=n_chosen)
+            metrics.append(ckpt.metrics[-1])
             if n_chosen == 0:
                 break
             forest = chosen if forest is None else forest.unionByName(chosen)
@@ -109,33 +131,27 @@ def minimum_spanning_forest(
             links = chosen.select(
                 F.col("a").alias("x"), F.col("b").alias("y")
             ).unionByName(chosen.select(F.col("b").alias("x"), F.col("a").alias("y")))
-            cl = comp
-            for j in range(64):
-                lx = cl.select(F.col("id").alias("x"), F.col("comp").alias("cx"))
-                ly = cl.select(F.col("id").alias("y"), F.col("comp").alias("cy"))
-                m = (
-                    links.join(lx, "x")
-                    .join(ly, "y")
-                    .groupBy(F.col("cx").alias("comp"))
-                    .agg(F.min("cy").alias("new_comp"))
-                    .where(F.col("new_comp") < F.col("comp"))
-                ).cache()
-                if m.isEmpty():
-                    m.unpersist()
-                    break
-                merged = cl.join(m, "comp", "left").select(
-                    "id", F.coalesce("new_comp", "comp").alias("comp")
-                )
-                cl = ckpt.checkpoint(merged, r * 100 + j, name="mst_merge")
-                m.unpersist()
-            comp = cl
+            # superstep 0 is the first step: every chosen link joins two
+            # components, so it always relabels
+            merge = run_supersteps(
+                graph.nodes, links,
+                lambda: (_merge(links, comp).drop("_relabelled"), {}),
+                lambda cl, seen, t: (_merge(links, cl), {
+                    "relabelled": F.sum(F.col("_relabelled").cast("long"))
+                }),
+                algorithm="boruvka_merge", max_steps=63, done=zero("relabelled"),
+                checkpoint_path=None if checkpoint_path is None
+                else os.path.join(checkpoint_path, f"merge_{r}"),
+            )
+            comp = merge.state
+            metrics += merge.metrics
 
     und.unpersist()
     if forest is None:
         empty = spark.createDataFrame([], "src long, dst long, weight double")
-        return SpanningForestResult(empty, 0.0, comp, rounds, ckpt.metrics)
+        return SpanningForestResult(empty, 0.0, comp, rounds, metrics)
     out = forest.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), (F.col("w") * sign).alias("weight")
     )
     total = out.agg(F.sum("weight")).collect()[0][0] or 0.0
-    return SpanningForestResult(out, float(total), comp, rounds, ckpt.metrics)
+    return SpanningForestResult(out, float(total), comp, rounds, metrics)

@@ -56,6 +56,26 @@ def test_louvain_two_cliques(spark):
     assert res.modularity > 0.3
 
 
+# six 4-cliques joined in a ring: level 1 finds the cliques, level 2 merges
+# neighbouring cliques
+RING_OF_CLIQUES = [
+    (a, b)
+    for c in range(0, 24, 4)
+    for a in range(c, c + 4)
+    for b in range(a + 1, c + 4)
+] + [(c + 3, (c + 4) % 24) for c in range(0, 24, 4)]
+
+
+def test_louvain_keeps_one_metrics_file_per_row(spark, tmp_path):
+    ck = tmp_path / "louvain"
+    g = LinkGraph.from_edges(spark, RING_OF_CLIQUES)
+    res = louvain(g, LouvainConfig(max_levels=3, checkpoint_path=str(ck)))
+    assert res.ran_levels >= 2
+    assert {m.get("level") for m in res.metrics if "level" in m} >= {1, 2}
+    files = list(ck.rglob("metrics/*.json"))
+    assert len(files) == len(res.metrics)
+
+
 def test_kmeans_separated_clusters(spark):
     rows = []
     for i in range(20):

@@ -2,6 +2,7 @@
 row shape for every iterative operator, and Spark jobs described as
 ``algorithm:superstep``."""
 
+import math
 import time
 
 import pytest
@@ -27,6 +28,11 @@ from graph_data_science_spark.operators.pregel import (
     PregelConfig,
     run_pregel,
 )
+from graph_data_science_spark.operators.ann import knn_refine
+from graph_data_science_spark.operators.kmeans import KmeansConfig, kmeans
+from graph_data_science_spark.operators.louvain import LouvainConfig, louvain
+from graph_data_science_spark.operators.maxkcut import _cut_weight, approx_max_k_cut
+from graph_data_science_spark.operators.spanning import minimum_spanning_forest
 from graph_data_science_spark.operators.walks import RandomWalkConfig, random_walks
 from graph_data_science_spark.operators.wcc import WccConfig, wcc
 from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
@@ -237,3 +243,97 @@ def test_operators_release_their_cached_edge_tables(spark):
         before = _cached_tables(spark)
         call()
         assert _cached_tables(spark) == before, name
+
+
+def _ring(n=12):
+    """A 2-d ring of n unit vectors (vec_id, embedding)."""
+    return [
+        (i, [math.cos(2 * math.pi * i / n), math.sin(2 * math.pi * i / n)])
+        for i in range(n)
+    ]
+
+
+def _far_lists(spark, vecs, k=2):
+    """(query_id, neighbor_id, cosine) lists holding k ids from the far side
+    of the ring: NN-Descent has several rounds of work to do."""
+    n = len(vecs)
+    rows = []
+    for q, (_, a) in enumerate(vecs):
+        for j in range(k):
+            nb = (q + n // 2 - 1 + j) % n
+            b = vecs[nb][1]
+            rows.append((q, nb, a[0] * b[0] + a[1] * b[1]))
+    return spark.createDataFrame(rows, "query_id long, neighbor_id long, cosine double")
+
+
+def _embeddings(spark, vecs):
+    return spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+
+
+def _new_jobs(spark, call):
+    """(result of call(), descriptions of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = call()
+    new = sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    return out, set(_descriptions(sc, new).values())
+
+
+def test_ported_loops_describe_their_jobs(spark):
+    g = LinkGraph.from_edges(spark, [(0, 1), (1, 2), (2, 0), (3, 4), (4, 5), (5, 3), (2, 3)])
+    weighted = LinkGraph.from_edges(
+        spark, [(0, 1, 3.0), (1, 2, 1.0), (2, 3, 2.0), (0, 3, 5.0)]
+    )
+    vecs = _ring(8)
+    calls = {
+        "louvain": lambda: louvain(g, LouvainConfig(max_levels=1)),
+        "kmeans": lambda: kmeans(_embeddings(spark, vecs), KmeansConfig(k=2, max_iterations=3)),
+        "knn_refine": lambda: knn_refine(
+            _embeddings(spark, vecs), _far_lists(spark, vecs), k=2, rounds=1
+        ),
+        "maxkcut": lambda: approx_max_k_cut(g, k=2, max_iterations=1),
+        "boruvka_merge": lambda: minimum_spanning_forest(weighted, max_rounds=1),
+    }
+    for algorithm, call in calls.items():
+        _, tags = _new_jobs(spark, call)
+        assert {f"{algorithm}:0", f"{algorithm}:1"} <= tags, (algorithm, tags)
+
+
+def _actions_by_description(spark, prefix):
+    """Description -> number of root SQL executions (one per action)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = {}
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() != e.rootExecutionId():
+            continue
+        d = e.description()
+        if d and d.startswith(prefix):
+            out[d] = out.get(d, 0) + 1
+    return out
+
+
+def test_knn_refine_with_delta_threshold_runs_one_action_per_round(spark):
+    vecs = _ring(12)
+    emb, init = _embeddings(spark, vecs), _far_lists(spark, vecs)
+    before = _actions_by_description(spark, "knn_refine:")
+    stats: dict = {}
+    knn_refine(emb, init, k=2, rounds=4, delta_threshold=1e-9, stats=stats)
+    after = _actions_by_description(spark, "knn_refine:")
+    assert stats["rounds_run"] >= 2 and stats["last_updates"] is not None
+    for t in range(1, stats["rounds_run"] + 1):
+        tag = f"knn_refine:{t}"
+        assert after.get(tag, 0) - before.get(tag, 0) == 1, (tag, before, after)
+
+
+def test_max_k_cut_reports_the_cut_of_its_assignment(spark):
+    n = 30
+    edges = [(i, (i * 7 + 1) % n) for i in range(n)] + [
+        (i, (i * 3 + 2) % n) for i in range(n)
+    ]
+    g = LinkGraph.from_edges(spark, [(a, b) for a, b in edges if a != b])
+    for iterations in (0, 1, 4):
+        res = approx_max_k_cut(g, k=3, max_iterations=iterations)
+        assert res.cut_weight == pytest.approx(_cut_weight(g, res.assignment))
