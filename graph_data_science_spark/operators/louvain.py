@@ -236,6 +236,8 @@ def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainRes
         q = _modularity(lvl_edges, comm, m)
         ckpt.log(level, algorithm="louvain_level", modularity=q, wall_s=time.time() - t0)
         metrics += [*moving.metrics, ckpt.metrics[-1]]
+        if modularities and q < modularities[-1]:
+            break  # this level lowered modularity: the previous one is the result
         # compose: nodes' current community -> new community of that community-node
         mapping = comm.select(
             F.col("id").alias("community_key"), F.col("community").alias("new_comm")

@@ -65,9 +65,13 @@ def main():
     con = duck(sf_dir)
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
+    n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if name not in oracles:
+            print(f"FAIL  {name}: no oracle_sql() entry")
+            n_fail += 1
             continue
         t0 = time.time()
         try:
@@ -75,10 +79,6 @@ def main():
         except Exception as ex:
             print(f"FAIL  {name}: spark error: {ex}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows (rows-only, {time.time()-t0:.1f}s)")
-            n_rows_only += 1
             continue
         try:
             ddf = con.sql(oracles[name]).df()
@@ -95,7 +95,7 @@ def main():
         else:
             print(f"ok    {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
             n_pass += 1
-    print(f"\n{n_pass} ok, {n_rows_only} rows-only, {n_fail} FAILED")
+    print(f"\n{n_pass} ok, {n_fail} FAILED")
     sys.exit(1 if n_fail else 0)
 
 

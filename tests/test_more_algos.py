@@ -6,7 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.graph import LinkGraph
+from graph_data_science_spark.operators.graph import Aggregation, LinkGraph
 from graph_data_science_spark.operators.coloring import k1coloring, validate_coloring
 from graph_data_science_spark.operators.louvain import louvain, LouvainConfig
 from graph_data_science_spark.operators.kmeans import kmeans, KmeansConfig
@@ -74,6 +74,21 @@ def test_louvain_keeps_one_metrics_file_per_row(spark, tmp_path):
     assert {m.get("level") for m in res.metrics if "level" in m} >= {1, 2}
     files = list(ck.rglob("metrics/*.json"))
     assert len(files) == len(res.metrics)
+
+
+def test_louvain_returns_its_best_level(spark):
+    """On this sparse orders graph the third level lowers modularity; the
+    result is the second level, and the dropped level is not reported."""
+    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    e = o.select(
+        (F.col("o_orderkey") % 4993).alias("src"),
+        ((F.col("o_custkey") * 7) % 4993).alias("dst"),
+    ).where(F.col("src") != F.col("dst"))
+    g = LinkGraph.from_edges(spark, e, aggregation=Aggregation.SINGLE)
+    res = louvain(g, LouvainConfig(max_levels=3, max_inner_iterations=5))
+    qs = res.modularities
+    assert all(b >= a for a, b in zip(qs, qs[1:]))
+    assert res.modularity == max(qs)
 
 
 def test_kmeans_separated_clusters(spark):

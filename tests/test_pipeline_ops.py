@@ -1,16 +1,10 @@
-"""Training-data pipeline operators: text analysis, dedup, ANN, multimodal
-plumbing — over the driver testdata `documents`/`embeddings` tables."""
+"""Training-data pipeline operators: text analysis, dedup and ANN over the
+driver testdata `documents`/`embeddings` tables."""
 
 import pyspark.sql.functions as F
 import pytest
 
 from graph_data_science_spark.operators import ann, dedup, text
-from graph_data_science_spark.operators.multimodal import (
-    extract_features,
-    frame_sample_stub,
-    resize_stub,
-    synth_media,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -223,25 +217,3 @@ class TestAnn:
             if r["neighbor_id"] in exact_sets.get(r["query_id"], set()):
                 hit += 1
         assert tot > 0 and hit / max(tot, 1) > 0.3  # bucketing keeps real neighbors
-
-
-class TestMultimodal:
-    def test_feature_extraction_deterministic(self, spark):
-        m = synth_media(spark, 50)
-        f1 = extract_features(m, dim=8).orderBy("media_id").collect()
-        f2 = extract_features(m.repartition(7), dim=8).orderBy("media_id").collect()
-        assert [r["feature"] for r in f1] == [r["feature"] for r in f2]
-        assert all(len(r["feature"]) == 8 for r in f1)
-
-    def test_resize_and_frames(self, spark):
-        m = synth_media(spark, 10)
-        rz = resize_stub(m, 64, 64).collect()
-        assert all(r["width"] == 64 and r["height"] == 64 for r in rz)
-        fr = frame_sample_stub(m, every_n=2)
-        assert fr.count() > 0
-        assert fr.columns == ["media_id", "frame_idx", "frame"]
-
-    def test_real_decode_raises(self, spark):
-        m = synth_media(spark, 5)
-        with pytest.raises(Exception):
-            extract_features(m, fake=False).collect()

@@ -1,4 +1,4 @@
-"""Session defaults from `get_spark`."""
+"""Session defaults from `get_spark`, and the driver entry's registry."""
 
 import os
 
@@ -13,3 +13,11 @@ def test_workers_find_the_package_from_any_cwd(spark):
     inherited = os.environ.get("PYTHONPATH")
     assert value == (root + os.pathsep + inherited if inherited else root)
     assert spark.sparkContext.environment["PYTHONPATH"] == value
+
+
+def test_every_query_has_an_oracle_and_every_oracle_a_query():
+    """`scripts/validate_entry.py` fails a query without oracle SQL; an
+    oracle without a query would never run."""
+    import __spark_entry__
+
+    assert set(__spark_entry__.queries()) == set(__spark_entry__.oracle_sql())

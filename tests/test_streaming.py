@@ -158,128 +158,3 @@ def test_windowed_degree_matches_batch_truncation(spark, tmp_path):
     )
     want = {(r.w.hour, r.id): r["count"] for r in batch.collect()}
     assert got == want == {(0, 9): 2, (1, 9): 1, (1, 8): 1, (2, 9): 1}
-
-
-class TestSessionize:
-    """applyInPandasWithState gap sessionization vs its exact batch twin."""
-
-    SCHEMA = "user_id long, ts timestamp, value double"
-
-    def _rows(self, spec):
-        # spec: (user, minute, value)
-        return [
-            (u, T0 + dt.timedelta(minutes=m), float(v)) for u, m, v in spec
-        ]
-
-    def test_stream_matches_batch_twin(self, spark, tmp_path):
-        import time as _time
-
-        from graph_data_science_spark.streaming.sessions import (
-            sessionize_batch,
-            sessionize_stream,
-        )
-
-        # file 1: u1 session A complete; u2 session opens
-        f1 = self._rows([(1, 0, 1.0), (1, 10, 2.0), (1, 20, 3.0), (2, 0, 5.0), (2, 55, 7.0)])
-        # file 2: u2's session CONTINUES across the batch boundary (70-55 <=
-        # 30); u1's new events CLOSE session A (120-20 > 30)
-        f2 = self._rows([(2, 70, 9.0), (1, 120, 4.0), (1, 125, 6.0)])
-        # file 3: far-future sentinel advances the watermark past every open
-        # session's gap horizon -> EventTimeTimeout flushes them
-        f3 = self._rows([(-1, 10_000, 0.0)])
-
-        inp = str(tmp_path / "in")
-        for i, rows in enumerate([f1, f2, f3]):
-            spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(inp)
-            _time.sleep(1.1)  # distinct mtimes: oldest-first batch order
-
-        stream = (
-            spark.readStream.schema(self.SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inp)
-        )
-        out = sessionize_stream(stream, gap_minutes=30).where("user_id >= 0")
-        outp, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        got = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events, r.value_sum)
-            for r in spark.read.parquet(outp).collect()
-        )
-        want_df = sessionize_batch(
-            spark.createDataFrame(f1 + f2, self.SCHEMA), gap_minutes=30
-        )
-        want = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events, r.value_sum)
-            for r in want_df.collect()
-        )
-        assert got == want
-        # shape sanity: u1 has sessions (0-20, n=3, v=6) and (120-125, n=2,
-        # v=10); u2 has (0-0, n=1, v=5) and (55-70, n=2, v=16)
-        assert [(g[0], g[3], g[4]) for g in got] == [
-            (1, 3, 6.0), (1, 2, 10.0), (2, 1, 5.0), (2, 2, 16.0),
-        ]
-
-    def test_late_rows_within_watermark_merge_exactly(self, spark, tmp_path):
-        """Out-of-order arrival: a batch-2 segment that lands BEFORE the open
-        state must bridge correctly (interval merge), not corrupt the open
-        session — and the final result must still equal the batch twin."""
-        import time as _time
-
-        from graph_data_science_spark.streaming.sessions import (
-            sessionize_batch,
-            sessionize_stream,
-        )
-
-        # batch 1: u1 open session [100, 110]
-        f1 = self._rows([(1, 100, 1.0), (1, 110, 2.0)])
-        # batch 2 (watermark still at 110 - delay=120min => 0-ish, so these
-        # are within-watermark late): 75 chains to 100 (25 <= 30) and 40
-        # does NOT (75-40 > 30) -> sessions [40,40] and [75,130]
-        f2 = self._rows([(1, 40, 4.0), (1, 75, 8.0), (1, 130, 16.0)])
-        f3 = self._rows([(-1, 10_000, 0.0)])
-        inp = str(tmp_path / "in")
-        for rows in [f1, f2, f3]:
-            spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(inp)
-            _time.sleep(1.1)
-
-        stream = (
-            spark.readStream.schema(self.SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inp)
-        )
-        out = sessionize_stream(
-            stream, gap_minutes=30, watermark="120 minutes"
-        ).where("user_id >= 0")
-        outp, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events, r.value_sum)
-            for r in spark.read.parquet(outp).collect()
-        )
-        want = sorted(
-            (r.user_id, r.session_start, r.session_end, r.n_events, r.value_sum)
-            for r in sessionize_batch(
-                spark.createDataFrame(f1 + f2, self.SCHEMA), gap_minutes=30
-            ).collect()
-        )
-        assert got == want
-        assert [(g[3], g[4]) for g in got] == [(1, 4.0), (4, 27.0)]
