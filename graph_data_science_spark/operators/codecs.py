@@ -1,15 +1,9 @@
-"""Pure-numpy media codecs for container-free formats.
+"""Pure-NumPy codecs for the container-free media formats.
 
-The reference has no media pipeline; this closes the round-2 "stub codecs"
-weakness of operators/multimodal.py as far as is honest in a container with
-no image/audio libraries: formats that are just headers over raw samples
-(PPM P6, uncompressed 24-bit BMP, PCM WAV) are decoded/encoded for real with
-numpy alone; entropy-coded formats (JPEG/PNG/MP4/...) remain an explicit
-NotImplementedError boundary where PIL/ffmpeg would plug in.
-
-Everything here is driver/executor-side pure functions — the distributed
-story stays in multimodal.py (Arrow-batched mapInPandas over binary
-columns); these are the per-batch kernels.
+PPM (P6), uncompressed 24-bit BMP and PCM WAV are headers over raw samples,
+so they encode and decode with NumPy and ``struct`` alone; ``resize_nearest``
+is the matching nearest-neighbour resampler.  Every function is a pure
+per-payload kernel with no Spark dependency.
 """
 
 from __future__ import annotations
@@ -17,14 +11,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-
-DECODABLE_IMAGE_MIMES = {
-    "image/x-portable-pixmap",
-    "image/bmp",
-    "image/png",
-    "image/jpeg",
-}
-DECODABLE_AUDIO_MIMES = {"audio/wav", "audio/x-wav"}
 
 
 # -- PPM (P6) ----------------------------------------------------------------
@@ -106,1074 +92,6 @@ def encode_bmp(arr: np.ndarray) -> bytes:
     return header + data
 
 
-# -- PNG (stdlib zlib + numpy unfilter; no image libraries) -------------------
-#
-# PNG's "entropy coding" is just DEFLATE, which the Python stdlib ships, so —
-# unlike JPEG/MP4 — real web-corpus PNGs ARE decodable here: parse IHDR/PLTE/
-# IDAT chunks, zlib-decompress the filtered scanlines, invert the per-row
-# filter (None/Sub/Up/Average/Paeth, RFC 2083 §6), and expand gray/palette/
-# alpha to (h, w, 3) uint8.  8-bit depth, non-interlaced (Adam7 raises —
-# interlaced PNGs are <1% of real corpora and say so in the error).
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# samples per pixel by color type: 0 gray, 2 rgb, 3 palette idx, 4 gray+a, 6 rgba
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _png_chunks(payload: bytes):
-    i = 8
-    while i + 8 <= len(payload):
-        (size,) = struct.unpack_from(">I", payload, i)
-        ctype = payload[i + 4 : i + 8]
-        yield ctype, payload[i + 8 : i + 8 + size]
-        i += 12 + size  # len + type + body + crc
-
-
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Paeth predictor over int16 vectors (a=left, b=up, c=up-left)."""
-    p = a + b - c
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-
-
-def _png_unfilter(raw: np.ndarray, h: int, rowbytes: int, bpp: int) -> np.ndarray:
-    """Invert per-scanline filtering.  raw = h rows of (1 filter byte +
-    rowbytes).  None/Up are whole-row vector ops; Sub is a wrapping
-    add-accumulate over the byte lanes; Average/Paeth carry a true
-    left-pixel dependency, so they run one bpp-wide vector op per pixel
-    column (the only loops are over rows and, for those two filters,
-    pixel columns — never over individual bytes)."""
-    raw = raw.reshape(h, 1 + rowbytes)
-    out = np.zeros((h, rowbytes), dtype=np.uint8)
-    prior = np.zeros(rowbytes, dtype=np.uint8)
-    for y in range(h):
-        ftype = int(raw[y, 0])
-        row = raw[y, 1:]
-        if ftype == 0:  # None
-            rec = row.copy()
-        elif ftype == 1:  # Sub: rec[x] = row[x] + rec[x-bpp]  (mod 256)
-            rec = np.add.accumulate(
-                row.reshape(-1, bpp), axis=0, dtype=np.uint8
-            ).reshape(-1)
-        elif ftype == 2:  # Up
-            rec = row + prior  # uint8 wraps
-        elif ftype == 3:  # Average
-            rec = np.empty(rowbytes, dtype=np.uint8)
-            left = np.zeros(bpp, dtype=np.int16)
-            p16 = prior.astype(np.int16)
-            for x in range(0, rowbytes, bpp):
-                left = (
-                    row[x : x + bpp] + ((left + p16[x : x + bpp]) >> 1)
-                ).astype(np.uint8)
-                rec[x : x + bpp] = left
-                left = left.astype(np.int16)
-        elif ftype == 4:  # Paeth
-            rec = np.empty(rowbytes, dtype=np.uint8)
-            left = np.zeros(bpp, dtype=np.int16)
-            ul = np.zeros(bpp, dtype=np.int16)
-            p16 = prior.astype(np.int16)
-            for x in range(0, rowbytes, bpp):
-                up = p16[x : x + bpp]
-                left = (row[x : x + bpp] + _paeth(left, up, ul)).astype(np.uint8)
-                rec[x : x + bpp] = left
-                left, ul = left.astype(np.int16), up
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-        out[y] = rec
-        prior = rec
-    return out
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """binary PNG -> (h, w, 3) uint8 (alpha dropped, palette/gray expanded)."""
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    import zlib
-
-    ihdr = None
-    plte = None
-    idat = []
-    for ctype, body in _png_chunks(payload):
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", body)
-        elif ctype == b"PLTE":
-            plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            break
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w, h, depth, ctype_, compression, flt, interlace = ihdr
-    if depth != 8:
-        raise NotImplementedError(f"PNG bit depth {depth} (only 8 supported)")
-    if compression != 0 or flt != 0:
-        raise ValueError("nonstandard PNG compression/filter method")
-    if interlace != 0:
-        raise NotImplementedError("Adam7-interlaced PNG not supported")
-    if ctype_ not in _PNG_CHANNELS:
-        raise ValueError(f"unknown PNG color type {ctype_}")
-    ch = _PNG_CHANNELS[ctype_]
-    rowbytes = w * ch
-    raw = np.frombuffer(zlib.decompress(b"".join(idat)), dtype=np.uint8)
-    if raw.size != h * (1 + rowbytes):
-        raise ValueError("PNG pixel data size mismatch")
-    px = _png_unfilter(raw, h, rowbytes, ch).reshape(h, w, ch)
-    if ctype_ == 2:  # RGB
-        return px.copy()
-    if ctype_ == 6:  # RGBA -> drop alpha
-        return px[:, :, :3].copy()
-    if ctype_ == 0:  # gray
-        return np.repeat(px, 3, axis=2)
-    if ctype_ == 4:  # gray+alpha
-        return np.repeat(px[:, :, :1], 3, axis=2)
-    if plte is None:
-        raise ValueError("palette PNG missing PLTE chunk")
-    return plte[px[:, :, 0]]
-
-
-def _png_chunk(ctype: bytes, body: bytes) -> bytes:
-    import zlib
-
-    return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
-    """(h, w, 3) uint8 -> PNG.  filter_type applies the spec's FORWARD filter
-    (0..4) to every scanline before DEFLATE — exercised by tests so the
-    decoder's unfilter path for each type is verified against an
-    independently-implemented inverse, not itself."""
-    import zlib
-
-    h, w, c = arr.shape
-    if c != 3:
-        raise ValueError("encode_png expects (h, w, 3)")
-    arr = arr.astype(np.uint8)
-    bpp = 3
-    rows = arr.reshape(h, w * 3).astype(np.int16)
-    out = bytearray()
-    prior = np.zeros(w * 3, dtype=np.int16)
-    for y in range(h):
-        cur = rows[y]
-        left = np.zeros_like(cur)
-        left[bpp:] = cur[:-bpp]
-        if filter_type == 0:
-            filt = cur
-        elif filter_type == 1:
-            filt = cur - left
-        elif filter_type == 2:
-            filt = cur - prior
-        elif filter_type == 3:
-            filt = cur - ((left + prior) >> 1)
-        elif filter_type == 4:
-            ul = np.zeros_like(prior)
-            ul[bpp:] = prior[:-bpp]
-            filt = cur - _paeth(left, prior, ul)
-        else:
-            raise ValueError(f"unknown PNG filter type {filter_type}")
-        out.append(filter_type)
-        out.extend((filt & 0xFF).astype(np.uint8).tobytes())
-        prior = cur
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-# -- JPEG (baseline sequential DCT; pure numpy + Python-int bit I/O) ----------
-#
-# Closes the "JPEG needs a huffman+IDCT decoder" boundary for real: marker/
-# DQT/DHT/SOF0/SOS parsing, byte-destuffed restart-aware huffman decoding
-# (16-bit peek LUT per table), then the whole image's coefficients are
-# dequantized / dezigzagged / IDCT'd in ONE vectorized numpy pass (batched
-# 8x8 matmuls), chroma nearest-upsampled and YCbCr->RGB'd as plane algebra.
-# The encoder is a real optimizing baseline encoder (per-image length-limited
-# canonical huffman tables, the libjpeg jpeg_gen_optimal_table algorithm) so
-# decode(encode(x)) round-trips are spec-level interop tests, and the test
-# suite additionally hand-crafts a minimal stream bit-by-bit from ITU T.81
-# rules so the decoder is checked against the spec, not just our encoder.
-# Progressive (SOF2) is fully supported both ways: the decoder implements
-# T.81 G.2 spectral-selection bands and DC/AC successive approximation
-# (EOBRUN coding, correction-bit refinement), the encoder emits the libjpeg
-# default 10-scan progression — and because progression transmits the same
-# quantized coefficients, decode(encode(x, progressive=True)) is asserted
-# BIT-IDENTICAL to the baseline encoding's decode.
-# Out of (documented) scope: arithmetic coding, 12-bit, hierarchical.
-#
-# Huffman symbol decoding is an inherently sequential bit loop (Python-side,
-# ~1 MB/s) — fine for the mapInPandas per-batch kernel at test scale; a C
-# codec plugs into decode_image() for production throughput.
-
-_DCT8 = np.array(
-    [
-        [
-            (np.sqrt(1.0 / 8.0) if u == 0 else np.sqrt(2.0 / 8.0))
-            * np.cos((2 * x + 1) * u * np.pi / 16.0)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ]
-)
-
-
-def _zigzag_order() -> np.ndarray:
-    """zigzag position i -> raster index, generated (not transcribed)."""
-    out = []
-    for s in range(15):
-        rows = range(s, -1, -1) if s % 2 == 0 else range(0, s + 1)
-        for r in rows:
-            c = s - r
-            if r < 8 and c < 8:
-                out.append(r * 8 + c)
-    return np.array(out, dtype=np.int64)
-
-
-_ZZ = _zigzag_order()
-
-
-def _huff_lut(counts: list, symbols: list) -> tuple[np.ndarray, np.ndarray]:
-    """Canonical JPEG huffman table -> 16-bit-peek LUT (symbol, code length).
-    Every code of length L owns the 2^(16-L) LUT slots sharing its prefix."""
-    lut_sym = np.full(1 << 16, -1, dtype=np.int32)
-    lut_len = np.zeros(1 << 16, dtype=np.int32)
-    code, k = 0, 0
-    for L in range(1, 17):
-        for _ in range(counts[L - 1]):
-            lo = code << (16 - L)
-            lut_sym[lo : lo + (1 << (16 - L))] = symbols[k]
-            lut_len[lo : lo + (1 << (16 - L))] = L
-            code += 1
-            k += 1
-        code <<= 1
-    return lut_sym, lut_len
-
-
-class _BitReader:
-    """MSB-first bit reader over destuffed entropy bytes (zero-padded tail)."""
-
-    def __init__(self, data: bytes):
-        self.d = data + b"\x00\x00\x00\x00"
-        self.pos = 0
-        self.end = len(data) * 8
-
-    def _window(self) -> tuple[int, int]:
-        i, sh = self.pos >> 3, self.pos & 7
-        return int.from_bytes(self.d[i : i + 4], "big"), sh
-
-    def peek16(self) -> int:
-        w, sh = self._window()
-        return (w >> (16 - sh)) & 0xFFFF
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        w, sh = self._window()
-        self.pos += n
-        return (w >> (32 - sh - n)) & ((1 << n) - 1)
-
-
-def _extend(v: int, s: int) -> int:
-    """ITU T.81 F.2.2.1 EXTEND: magnitude bits -> signed coefficient."""
-    return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
-
-
-def _jpeg_entropy_intervals(payload: bytes, start: int) -> tuple[list, int]:
-    """Entropy-coded data from `start` split at RSTn boundaries, destuffed.
-    Returns (intervals, index of the terminating marker's 0xFF)."""
-    intervals, seg_start, i, n = [], start, start, len(payload)
-    while i + 1 < n:
-        if payload[i] == 0xFF and payload[i + 1] != 0x00:
-            m = payload[i + 1]
-            if 0xD0 <= m <= 0xD7:  # RSTn: interval boundary, stay in scan
-                intervals.append(payload[seg_start:i].replace(b"\xff\x00", b"\xff"))
-                i += 2
-                seg_start = i
-                continue
-            break
-        i += 1 + (payload[i] == 0xFF)
-    intervals.append(payload[seg_start:i].replace(b"\xff\x00", b"\xff"))
-    return intervals, i
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """Baseline (SOF0/1) or progressive (SOF2) JPEG -> (h, w, 3) uint8
-    (grayscale replicated to 3 channels).  Progressive scans follow ITU
-    T.81 G.1/G.2: spectral selection bands, DC/AC successive approximation
-    with EOBRUN coding and correction-bit refinement; every scan accumulates
-    into the same whole-image coefficient buffer, so the final dequantize +
-    batched IDCT pass is shared with the baseline path."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
-    frame = None  # (h, w, comps) ; comps = [(id, Hi, Vi, tq)]
-    progressive = False
-    restart_interval = 0
-    coefs: dict[int, np.ndarray] = {}  # comp idx -> (by, bx, 64) zigzag ints
-    i = 2
-    n = len(payload)
-    while i + 1 < n:
-        if payload[i] != 0xFF:
-            i += 1
-            continue
-        marker = payload[i + 1]
-        if marker in (0xFF, 0x00, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2 if marker != 0xFF else 1
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack_from(">H", payload, i + 2)
-        body = payload[i + 4 : i + 2 + seglen]
-        if marker == 0xDB:  # DQT (possibly several tables per segment)
-            j = 0
-            while j < len(body):
-                prec, tid = body[j] >> 4, body[j] & 15
-                if prec == 0:
-                    qt[tid] = np.frombuffer(
-                        body, dtype=np.uint8, count=64, offset=j + 1
-                    ).astype(np.int64)
-                    j += 65
-                else:
-                    qt[tid] = np.frombuffer(
-                        body, dtype=">u2", count=64, offset=j + 1
-                    ).astype(np.int64)
-                    j += 129
-        elif marker == 0xC4:  # DHT
-            j = 0
-            while j < len(body):
-                cls, tid = body[j] >> 4, body[j] & 15
-                counts = list(body[j + 1 : j + 17])
-                nsym = sum(counts)
-                syms = list(body[j + 17 : j + 17 + nsym])
-                huff[(cls, tid)] = _huff_lut(counts, syms)
-                j += 17 + nsym
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
-            prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise NotImplementedError(f"JPEG sample precision {prec}")
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = struct.unpack_from(">BBB", body, 6 + 3 * c)
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (h, w, comps)
-            progressive = marker == 0xC2
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"JPEG frame type SOF{marker - 0xC0} not supported (baseline only)"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            h, w, comps = frame
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            ns = body[0]
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 15
-            scan = []  # (comp idx, dc lut, ac lut)
-            for s in range(ns):
-                cs, tt = body[1 + 2 * s], body[2 + 2 * s]
-                ci = next(k for k, c in enumerate(comps) if c[0] == cs)
-                # refinement scans may reference an absent table slot
-                scan.append((ci, huff.get((0, tt >> 4)), huff.get((1, tt & 15))))
-                if ci not in coefs:
-                    _, hi, vi, _ = comps[ci]
-                    coefs[ci] = np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int64)
-            intervals, i = _jpeg_entropy_intervals(payload, i + 2 + seglen)
-            if ns == 1:
-                ci, dct, act = scan[0]
-                _, hi, vi, _ = comps[ci]
-                bw = (w * hi + 8 * hmax - 1) // (8 * hmax)
-                bh = (h * vi + 8 * vmax - 1) // (8 * vmax)
-                units = [(ci, dct, act, y, x) for y in range(bh) for x in range(bw)]
-                per_mcu = 1
-            else:
-                units, per_mcu = [], 0
-                for m in range(mcux * mcuy):
-                    my, mx = divmod(m, mcux)
-                    for ci, dct, act in scan:
-                        _, hi, vi, _ = comps[ci]
-                        for v in range(vi):
-                            for u in range(hi):
-                                units.append((ci, dct, act, my * vi + v, mx * hi + u))
-                per_mcu = sum(comps[ci][1] * comps[ci][2] for ci, _, _ in scan)
-                per_mcu = max(per_mcu, 1)
-            if progressive and ss == 0 and se != 0:
-                raise ValueError("progressive DC scan must have Se=0")
-            p1, mm1 = 1 << al, -(1 << al)
-            ui = 0
-            for seg in intervals:
-                rd = _BitReader(seg)
-                pred = {ci: 0 for ci, _, _ in scan}
-                eobrun = 0  # EOB runs never cross a restart boundary
-                limit = (
-                    ui + restart_interval * max(per_mcu, 1)
-                    if restart_interval
-                    else len(units)
-                )
-                while ui < min(limit, len(units)) and rd.pos < rd.end:
-                    ci, dct_, act_, by, bx = units[ui]
-                    blk = coefs[ci][by, bx]
-                    if not progressive:
-                        dsym, dlen = dct_
-                        asym, alen = act_
-                        p = rd.peek16()
-                        s = int(dsym[p])
-                        if s < 0:
-                            raise ValueError("invalid JPEG huffman code (DC)")
-                        rd.pos += int(dlen[p])
-                        pred[ci] += _extend(rd.read(s), s)
-                        blk[0] = pred[ci]
-                        k = 1
-                        while k < 64:
-                            p = rd.peek16()
-                            rs = int(asym[p])
-                            if rs < 0:
-                                raise ValueError("invalid JPEG huffman code (AC)")
-                            rd.pos += int(alen[p])
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r != 15:
-                                    break  # EOB
-                                k += 16
-                                continue
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC run past block end")
-                            blk[k] = _extend(rd.read(s), s)
-                            k += 1
-                    elif ss == 0 and ah == 0:  # DC first: diffs of DC>>Al
-                        dsym, dlen = dct_
-                        p = rd.peek16()
-                        s = int(dsym[p])
-                        if s < 0:
-                            raise ValueError("invalid JPEG huffman code (DC)")
-                        rd.pos += int(dlen[p])
-                        pred[ci] += _extend(rd.read(s), s)
-                        blk[0] = pred[ci] << al
-                    elif ss == 0:  # DC refine: one bit per block at weight Al
-                        blk[0] = int(blk[0]) | (rd.read(1) << al)
-                    elif ah == 0:  # AC first: band coefficients + EOBRUN
-                        if eobrun > 0:
-                            eobrun -= 1
-                        else:
-                            asym, alen = act_
-                            k = ss
-                            while k <= se:
-                                p = rd.peek16()
-                                rs = int(asym[p])
-                                if rs < 0:
-                                    raise ValueError("invalid JPEG huffman code (AC)")
-                                rd.pos += int(alen[p])
-                                r, s = rs >> 4, rs & 15
-                                if s == 0:
-                                    if r != 15:
-                                        eobrun = (1 << r) - 1
-                                        if r:
-                                            eobrun += rd.read(r)
-                                        break
-                                    k += 16
-                                    continue
-                                k += r
-                                if k > se:
-                                    raise ValueError("JPEG AC run past band end")
-                                blk[k] = _extend(rd.read(s), s) << al
-                                k += 1
-                    else:  # AC refine (T.81 G.1.2.3: correction-bit advance)
-                        k = ss
-                        if eobrun == 0:
-                            asym, alen = act_
-                            while k <= se:
-                                p = rd.peek16()
-                                rs = int(asym[p])
-                                if rs < 0:
-                                    raise ValueError("invalid JPEG huffman code (AC)")
-                                rd.pos += int(alen[p])
-                                r, s = rs >> 4, rs & 15
-                                val = 0
-                                if s:
-                                    val = p1 if rd.read(1) else mm1
-                                elif r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += rd.read(r)
-                                    break
-                                # advance: skip r zero-history coefficients,
-                                # correcting nonzero-history ones on the way
-                                while k <= se:
-                                    c = int(blk[k])
-                                    if c != 0:
-                                        if rd.read(1) and (c & p1) == 0:
-                                            blk[k] = c + (p1 if c >= 0 else mm1)
-                                    else:
-                                        r -= 1
-                                        if r < 0:
-                                            break
-                                    k += 1
-                                if val:
-                                    blk[k] = val
-                                k += 1
-                        if eobrun > 0:
-                            while k <= se:
-                                c = int(blk[k])
-                                if c != 0 and rd.read(1) and (c & p1) == 0:
-                                    blk[k] = c + (p1 if c >= 0 else mm1)
-                                k += 1
-                            eobrun -= 1
-                    ui += 1
-            continue  # i already points at the terminating marker
-        i += 2 + seglen
-    if frame is None or not coefs:
-        raise ValueError("JPEG missing SOF/scan data")
-    h, w, comps = frame
-    if len(comps) not in (1, 3):
-        raise NotImplementedError(f"{len(comps)}-component JPEG not supported")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    planes = []
-    for ci, (cid, hi, vi, tq) in enumerate(comps):
-        z = coefs[ci] * qt[tq][None, None, :]
-        by, bx, _ = z.shape
-        blk = np.zeros((by, bx, 64), dtype=np.float64)
-        blk[:, :, _ZZ] = z  # dezigzag
-        blk = blk.reshape(by, bx, 8, 8)
-        spatial = _DCT8.T[None, None] @ blk @ _DCT8[None, None]
-        plane = spatial.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8) + 128.0
-        plane = np.repeat(np.repeat(plane, vmax // vi, axis=0), hmax // hi, axis=1)
-        planes.append(plane[:h, :w])
-    if len(planes) == 1:
-        g = np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8)
-        return np.repeat(g[:, :, None], 3, axis=2)
-    y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
-def _optimal_huffman(freq: np.ndarray) -> tuple[list, list]:
-    """Per-image length-limited canonical huffman table — the libjpeg
-    jpeg_gen_optimal_table algorithm (jchuff.c): chain-merge to code sizes,
-    fold lengths >16 down in pairs, drop the sentinel symbol 256 that
-    reserves the all-ones code.  Returns (16 counts, symbols)."""
-    freq = list(freq) + [1]  # sentinel claims the all-ones code
-    others = [-1] * 257
-    codesize = [0] * 257
-    while True:
-        c1 = min(
-            (f, -i) for i, f in enumerate(freq) if f > 0
-        )  # lowest freq, highest symbol on ties (libjpeg order)
-        c1 = -c1[1]
-        rest = [(f, -i) for i, f in enumerate(freq) if f > 0 and i != c1]
-        if not rest:
-            break
-        c2 = -min(rest)[1]
-        freq[c1] += freq[c2]
-        freq[c2] = 0
-        codesize[c1] += 1
-        while others[c1] != -1:
-            c1 = others[c1]
-            codesize[c1] += 1
-        others[c1] = c2
-        codesize[c2] += 1
-        while others[c2] != -1:
-            c2 = others[c2]
-            codesize[c2] += 1
-    bits = [0] * 33
-    for s in codesize:
-        if s:
-            bits[s] += 1
-    for L in range(32, 16, -1):  # length-limit to 16
-        while bits[L] > 0:
-            j = L - 2
-            while bits[j] == 0:
-                j -= 1
-            bits[L] -= 2
-            bits[L - 1] += 1
-            bits[j + 1] += 2
-            bits[j] -= 1
-    L = 16
-    while bits[L] == 0:
-        L -= 1
-    bits[L] -= 1  # the sentinel's slot (keeps all-ones unassigned)
-    # symbols ordered by pre-limiting code size (ascending, ties by value),
-    # assigned sequentially into the adjusted length classes — libjpeg's
-    # huffval emission order
-    ordered = sorted((codesize[s], s) for s in range(256) if codesize[s])
-    symbols = [s for _, s in ordered][: sum(bits[1:17])]
-    return bits[1:17], symbols
-
-
-def _huff_codes(counts: list, symbols: list) -> dict[int, tuple[int, int]]:
-    codes, code, k = {}, 0, 0
-    for L in range(1, 17):
-        for _ in range(counts[L - 1]):
-            codes[symbols[k]] = (code, L)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int) -> None:
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            b = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> None:
-        if self.nbits:
-            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)  # 1-pad
-
-
-# ISO/IEC 10918-1 Annex K.1 base tables, scaled by the libjpeg quality curve
-_Q_LUMA = np.array(
-    [16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-     14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-     18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-     49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99]
-)
-_Q_CHROMA = np.array(
-    [17, 18, 24, 47, 99, 99, 99, 99, 18, 21, 26, 66, 99, 99, 99, 99,
-     24, 26, 56, 99, 99, 99, 99, 99, 47, 66, 99, 99, 99, 99, 99, 99,
-     99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-     99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99]
-)
-
-
-def _quality_scale(base: np.ndarray, quality: int) -> np.ndarray:
-    quality = min(max(int(quality), 1), 100)
-    scale = 5000 // quality if quality < 50 else 200 - 2 * quality
-    return np.clip((base * scale + 50) // 100, 1, 255).astype(np.int64)
-
-
-def _plane_blocks(plane: np.ndarray, qt_raster: np.ndarray) -> np.ndarray:
-    """plane (H, W) multiple-of-8 -> (by*bx, 64) quantized zigzag ints."""
-    H, W = plane.shape
-    by, bx = H // 8, W // 8
-    blk = plane.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3).astype(np.float64) - 128.0
-    F8 = _DCT8[None, None] @ blk @ _DCT8.T[None, None]
-    q = np.rint(F8.reshape(by, bx, 64) / qt_raster[None, None, :]).astype(np.int64)
-    return q[:, :, _ZZ].reshape(by * bx, 64), by, bx
-
-
-def _pad_to(plane: np.ndarray, H: int, W: int) -> np.ndarray:
-    h, w = plane.shape
-    return np.pad(plane, ((0, H - h), (0, W - w)), mode="edge")
-
-
-def _jseg(marker: int, payload_: bytes) -> bytes:
-    return struct.pack(">BBH", 0xFF, marker, len(payload_) + 2) + payload_
-
-
-# libjpeg's default progression for 3-component images: coarse DC, a luma
-# low-band preview, coarse chroma, the luma high band, then one successive-
-# approximation refinement pass per band.  (ci, Ss, Se, Ah, Al); ci=None is
-# the interleaved all-component DC scan.
-_PROG_SCRIPT = [
-    (None, 0, 0, 0, 1),
-    (0, 1, 5, 0, 2),
-    (2, 1, 63, 0, 1),
-    (1, 1, 63, 0, 1),
-    (0, 6, 63, 0, 2),
-    (0, 1, 63, 2, 1),
-    (None, 0, 0, 1, 0),
-    (2, 1, 63, 1, 0),
-    (1, 1, 63, 1, 0),
-    (0, 1, 63, 1, 0),
-]
-
-
-def _ac_first_tokens(blocks: list, ss: int, se: int, al: int) -> list:
-    """AC first-pass scan tokens (T.81 G.1.2.2): (symbol, [(bits, n), ...]);
-    point-transformed band coefficients with ZRL + EOBRUN coding."""
-    toks: list = []
-    eobrun = 0
-
-    def flush():
-        nonlocal eobrun
-        if eobrun:
-            nb = eobrun.bit_length() - 1
-            toks.append((nb << 4, [(eobrun - (1 << nb), nb)] if nb else []))
-            eobrun = 0
-
-    for blk in blocks:
-        r = 0
-        for k in range(ss, se + 1):
-            t = int(blk[k])
-            t = t >> al if t >= 0 else -((-t) >> al)
-            if t == 0:
-                r += 1
-                continue
-            flush()
-            while r > 15:
-                toks.append((0xF0, []))
-                r -= 16
-            s = abs(t).bit_length()
-            toks.append(((r << 4) | s, [(t if t >= 0 else t + (1 << s) - 1, s)]))
-            r = 0
-        if r > 0:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                flush()
-    flush()
-    return toks
-
-
-def _ac_refine_tokens(blocks: list, ss: int, se: int, al: int) -> list:
-    """AC refinement scan tokens (T.81 G.1.2.3).  Correction bits are
-    emitted POSITIONALLY — each ZRL / newly-nonzero symbol carries exactly
-    the correction bits of the nonzero-history coefficients its advance
-    span covers, mirroring the decoder's interleaved-read discipline; an
-    EOB run buffers every member block's tail correction bits behind the
-    EOBn symbol in block order."""
-    toks: list = []
-    eobrun = 0
-    be: list = []  # correction bits buffered behind the pending EOB run
-
-    def flush():
-        nonlocal eobrun, be
-        if eobrun:
-            nb = eobrun.bit_length() - 1
-            extras = ([(eobrun - (1 << nb), nb)] if nb else []) + be
-            toks.append((nb << 4, extras))
-            eobrun, be = 0, []
-
-    for blk in blocks:
-        # event stream over the band: Z = zero history, C = nonzero history
-        # (its correction bit), N = newly nonzero (its sign bit)
-        ev = []
-        for k in range(ss, se + 1):
-            c = int(blk[k])
-            a = (c if c >= 0 else -c) >> al
-            if a == 0:
-                ev.append(("Z", 0))
-            elif a == 1:
-                ev.append(("N", 1 if c > 0 else 0))
-            else:
-                ev.append(("C", a & 1))
-        i = 0
-        while True:
-            if i >= len(ev):
-                # the last symbol stored at the band end: the decoder leaves
-                # this block immediately, so it must NOT join an EOB run
-                break
-            j, z, nxt = i, 0, None
-            while j < len(ev):
-                if ev[j][0] == "N":
-                    nxt = j
-                    break
-                if ev[j][0] == "Z":
-                    z += 1
-                j += 1
-            if nxt is None:  # tail joins the EOB run
-                eobrun += 1
-                be.extend((e[1], 1) for e in ev[i:] if e[0] == "C")
-                if eobrun == 0x7FFF or len(be) > 930:
-                    flush()
-                break
-            while z > 15:
-                flush()
-                bits, zc = [], 0
-                while zc < 16:  # span: the next 16 zero-history positions
-                    e = ev[i]
-                    i += 1
-                    if e[0] == "Z":
-                        zc += 1
-                    else:
-                        bits.append((e[1], 1))
-                toks.append((0xF0, bits))
-                z -= 16
-            flush()
-            bits = []
-            while i < nxt:
-                e = ev[i]
-                i += 1
-                if e[0] == "C":
-                    bits.append((e[1], 1))
-            toks.append(((z << 4) | 1, [(ev[nxt][1], 1)] + bits))
-            i = nxt + 1
-    flush()
-    return toks
-
-
-def _progressive_scans(
-    grids: list, true_dims: list, mcux: int, mcuy: int, hs: int, vs: int
-) -> bytes:
-    """All scan segments (per-scan optimal DHTs + SOS + entropy) for the
-    default progression.  grids[ci] is the MCU-padded (by, bx, 64) zigzag
-    block grid; true_dims[ci] the un-padded (bh, bw) used by the
-    non-interleaved AC scans (T.81 A.2.2: single-component scans code only
-    the component's own block grid)."""
-    samp = [(vs, hs), (1, 1), (1, 1)]
-    out = bytearray()
-    for ci, ss, se, ah, al in _PROG_SCRIPT:
-        toks: list = []  # (table_slot | None, symbol | None, extras)
-        if ci is None and ah == 0:  # interleaved DC first: diffs of DC>>Al
-            pred = [0, 0, 0]
-            for m in range(mcux * mcuy):
-                my, mx = divmod(m, mcux)
-                for c in range(3):
-                    nv, nh = samp[c]
-                    for v in range(nv):
-                        for u in range(nh):
-                            blk = grids[c][my * nv + v, mx * nh + u]
-                            dcv = int(blk[0]) >> al
-                            diff = dcv - pred[c]
-                            pred[c] = dcv
-                            s = abs(diff).bit_length()
-                            toks.append((
-                                0 if c == 0 else 1,
-                                s,
-                                [(diff if diff >= 0 else diff + (1 << s) - 1, s)]
-                                if s else [],
-                            ))
-        elif ci is None:  # interleaved DC refine: bit Al per block
-            for m in range(mcux * mcuy):
-                my, mx = divmod(m, mcux)
-                for c in range(3):
-                    nv, nh = samp[c]
-                    for v in range(nv):
-                        for u in range(nh):
-                            blk = grids[c][my * nv + v, mx * nh + u]
-                            toks.append((None, None, [((int(blk[0]) >> al) & 1, 1)]))
-        else:
-            bh, bw = true_dims[ci]
-            blocks = [grids[ci][y, x] for y in range(bh) for x in range(bw)]
-            gen = _ac_first_tokens if ah == 0 else _ac_refine_tokens
-            toks = [(0, sym, ex) for sym, ex in gen(blocks, ss, se, al)]
-
-        # per-scan optimal tables for the used slots
-        slots = sorted({t for t, sym, _ in toks if sym is not None})
-        codes = {}
-        for t in slots:
-            freq = np.zeros(256, dtype=np.int64)
-            for tt, sym, _ in toks:
-                if sym is not None and tt == t:
-                    freq[sym] += 1
-            counts, syms = _optimal_huffman(freq)
-            cls = 0 if ss == 0 else 1
-            out += _jseg(0xC4, bytes([(cls << 4) | t]) + bytes(counts) + bytes(syms))
-            codes[t] = _huff_codes(counts, syms)
-
-        if ci is None:
-            sos = bytes([3, 1, 0x00, 2, 0x10 if ah == 0 else 0x00, 3,
-                         0x10 if ah == 0 else 0x00])
-        else:
-            sos = bytes([1, ci + 1, 0x00])
-        out += _jseg(0xDA, sos + bytes([ss, se, (ah << 4) | al]))
-
-        bw_ = _BitWriter()
-        for t, sym, extras in toks:
-            if sym is not None:
-                code, L = codes[t][sym]
-                bw_.write(code, L)
-            for v, nb in extras:
-                if nb:
-                    bw_.write(v, nb)
-        bw_.flush()
-        out += bw_.out
-    return bytes(out)
-
-
-def encode_jpeg(
-    arr: np.ndarray,
-    quality: int = 85,
-    subsampling: str = "4:4:4",
-    restart_interval: int = 0,
-    progressive: bool = False,
-) -> bytes:
-    """(h, w, 3) uint8 -> JFIF JPEG with per-image optimal huffman tables.
-    subsampling: "4:4:4" or "4:2:0".  restart_interval > 0 emits DRI/RSTn
-    every that many MCUs (exercises the decoder's restart path).
-    progressive=True emits SOF2 with the libjpeg default progression
-    (spectral selection + successive approximation); it transmits the SAME
-    quantized coefficients, so the decode is bit-identical to the baseline
-    encoding's."""
-    h, w, c = arr.shape
-    if c != 3:
-        raise ValueError("encode_jpeg expects (h, w, 3)")
-    if progressive and restart_interval:
-        raise ValueError("restart_interval is not supported with progressive=True")
-    x = arr.astype(np.float64)
-    yy = 0.299 * x[:, :, 0] + 0.587 * x[:, :, 1] + 0.114 * x[:, :, 2]
-    cb = -0.168736 * x[:, :, 0] - 0.331264 * x[:, :, 1] + 0.5 * x[:, :, 2] + 128.0
-    cr = 0.5 * x[:, :, 0] - 0.418688 * x[:, :, 1] - 0.081312 * x[:, :, 2] + 128.0
-    if subsampling == "4:2:0":
-        hs = vs = 2
-        ch, cw = (h + 1) // 2, (w + 1) // 2
-        # chroma averaged over 2x2 (edge-padded to even dims first)
-        cbp = _pad_to(cb, (h + 1) & ~1, (w + 1) & ~1)
-        crp = _pad_to(cr, (h + 1) & ~1, (w + 1) & ~1)
-        cb = cbp.reshape(ch, 2, cw, 2).mean(axis=(1, 3))
-        cr = crp.reshape(ch, 2, cw, 2).mean(axis=(1, 3))
-    elif subsampling == "4:4:4":
-        hs = vs = 1
-        ch, cw = h, w
-    else:
-        raise ValueError(f"unsupported subsampling {subsampling!r}")
-    mcux = (w + 8 * hs - 1) // (8 * hs)
-    mcuy = (h + 8 * vs - 1) // (8 * vs)
-    qly = _quality_scale(_Q_LUMA, quality)  # zigzag order (Annex K lists it so)
-    qlc = _quality_scale(_Q_CHROMA, quality)
-    qly_r = np.empty(64, dtype=np.int64)
-    qlc_r = np.empty(64, dtype=np.int64)
-    qly_r[_ZZ] = qly
-    qlc_r[_ZZ] = qlc
-    yq, yby, ybx = _plane_blocks(_pad_to(yy, mcuy * vs * 8, mcux * hs * 8), qly_r)
-    bq, _, _ = _plane_blocks(_pad_to(cb, mcuy * 8, mcux * 8), qlc_r)
-    rq, _, _ = _plane_blocks(_pad_to(cr, mcuy * 8, mcux * 8), qlc_r)
-    yq = yq.reshape(yby, ybx, 64)
-    bq = bq.reshape(mcuy, mcux, 64)
-    rq = rq.reshape(mcuy, mcux, 64)
-
-    def seg(marker: int, payload_: bytes) -> bytes:
-        return _jseg(marker, payload_)
-
-    header = bytearray(b"\xff\xd8")
-    header += seg(0xE0, b"JFIF\x00" + struct.pack(">BBBHHBB", 1, 1, 0, 1, 1, 0, 0))
-    header += seg(0xDB, bytes([0x00]) + bytes(qly.astype(np.uint8)))
-    header += seg(0xDB, bytes([0x01]) + bytes(qlc.astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    sof += bytes([1, (hs << 4) | vs, 0, 2, 0x11, 1, 3, 0x11, 1])
-
-    if progressive:
-        true_dims = [
-            ((h + 7) // 8, (w + 7) // 8),
-            ((h + 8 * vs - 1) // (8 * vs), (w + 8 * hs - 1) // (8 * hs)),
-            ((h + 8 * vs - 1) // (8 * vs), (w + 8 * hs - 1) // (8 * hs)),
-        ]
-        out = header
-        out += seg(0xC2, sof)
-        out += _progressive_scans([yq, bq, rq], true_dims, mcux, mcuy, hs, vs)
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    # MCU-ordered (component, block) stream with DC differencing
-    def mcu_stream():
-        pred = [0, 0, 0]
-        since_rst = 0
-        for m in range(mcux * mcuy):
-            if restart_interval and m and m % restart_interval == 0:
-                yield ("RST", None, None, None)
-                pred = [0, 0, 0]
-            my, mx = divmod(m, mcux)
-            for ci, grid, (nv, nh) in (
-                (0, yq, (vs, hs)),
-                (1, bq, (1, 1)),
-                (2, rq, (1, 1)),
-            ):
-                for v in range(nv):
-                    for u in range(nh):
-                        blk = grid[my * nv + v, mx * nh + u]
-                        diff = int(blk[0]) - pred[ci]
-                        pred[ci] = int(blk[0])
-                        yield (ci, blk, diff, None)
-
-    def dc_size(v: int) -> int:
-        return int(abs(v)).bit_length()
-
-    # pass 1: symbol frequencies for the four optimal tables
-    fdc = [np.zeros(256, dtype=np.int64), np.zeros(256, dtype=np.int64)]
-    fac = [np.zeros(256, dtype=np.int64), np.zeros(256, dtype=np.int64)]
-
-    def ac_symbols(blk: np.ndarray):
-        nz = np.nonzero(blk[1:])[0]
-        k = 1
-        for idx in nz:
-            pos = int(idx) + 1
-            run = pos - k
-            while run >= 16:
-                yield (0xF0, 0, 0)
-                run -= 16
-            v = int(blk[pos])
-            s = dc_size(v)
-            yield ((run << 4) | s, v, s)
-            k = pos + 1
-        if k < 64:
-            yield (0x00, 0, 0)
-
-    for ci, blk, diff, _ in mcu_stream():
-        if ci == "RST":
-            continue
-        t = 0 if ci == 0 else 1
-        fdc[t][dc_size(diff)] += 1
-        for sym, _, _ in ac_symbols(blk):
-            fac[t][sym] += 1
-    tables = {}
-    for t in (0, 1):
-        tables[("dc", t)] = _optimal_huffman(fdc[t])
-        tables[("ac", t)] = _optimal_huffman(fac[t])
-    cdc = [_huff_codes(*tables[("dc", t)]) for t in (0, 1)]
-    cac = [_huff_codes(*tables[("ac", t)]) for t in (0, 1)]
-
-    # pass 2: entropy-coded segment
-    bw = _BitWriter()
-    body = bytearray()
-    rst_n = 0
-    for ci, blk, diff, _ in mcu_stream():
-        if ci == "RST":
-            bw.flush()
-            body += bw.out
-            bw = _BitWriter()
-            body += bytes([0xFF, 0xD0 + (rst_n & 7)])
-            rst_n += 1
-            continue
-        t = 0 if ci == 0 else 1
-        s = dc_size(diff)
-        code, L = cdc[t][s]
-        bw.write(code, L)
-        if s:
-            bw.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        for sym, v, vs_ in ac_symbols(blk):
-            code, L = cac[t][sym]
-            bw.write(code, L)
-            if vs_:
-                bw.write(v if v >= 0 else v + (1 << vs_) - 1, vs_)
-    bw.flush()
-    body += bw.out
-
-    out = header
-    out += seg(0xC0, sof)
-    for cls, t in ((0, 0), (0, 1), (1, 0), (1, 1)):
-        counts, syms = tables[("dc" if cls == 0 else "ac", t)]
-        out += seg(0xC4, bytes([(cls << 4) | t]) + bytes(counts) + bytes(syms))
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    out += seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    out += body
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 # -- WAV (PCM) ---------------------------------------------------------------
 
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
@@ -1223,388 +141,10 @@ def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
-# -- Video containers: AVI (RIFF) + MP4 (ISO BMFF), Motion-JPEG samples ------
-#
-# The multimodal video story needs a real demux -> frame-sample -> decode
-# path, not a byte-slicing stub.  Both containers are plain structured
-# headers over the per-frame payloads, so with the baseline JPEG codec above
-# they are fully decodable here: AVI per the RIFF/'movi' chunk layout
-# (msdn AVIMAINHEADER/AVISTREAMHEADER), MP4 per ISO/IEC 14496-12 box
-# structure (moov/trak/mdia/minf/stbl: stsd sample description, stts
-# timing, stsc sample-to-chunk, stsz sizes, stco chunk offsets).  The
-# muxers exist so tests and the synthetic corpus can fabricate spec-valid
-# files; the demuxers are general (multi-chunk stsc walks, co64, idx1-free
-# AVI scans) rather than inverses of our muxers.  Out of scope (documented):
-# inter-coded video (H.264/VP9/AV1) — that is where ffmpeg plugs in.
-
-DECODABLE_VIDEO_MIMES = {"video/avi", "video/x-msvideo", "video/mp4"}
-
-
-def jpeg_size(frame: bytes) -> tuple[int, int]:
-    """(width, height) from a JPEG's SOF0/1/2 marker (no full decode)."""
-    i, n = 2, len(frame)
-    while i + 4 <= n:
-        if frame[i] != 0xFF:
-            raise ValueError("bad JPEG marker stream")
-        m = frame[i + 1]
-        if m in (0xC0, 0xC1, 0xC2):
-            h, w = struct.unpack_from(">HH", frame, i + 5)
-            return w, h
-        if m == 0xD8 or 0xD0 <= m <= 0xD7:
-            i += 2
-            continue
-        i += 2 + struct.unpack_from(">H", frame, i + 2)[0]
-    raise ValueError("no SOF marker found")
-
-
-def _riff_chunks(buf: bytes, start: int, end: int):
-    """Yield (fourcc, body_start, body_size) over RIFF sub-chunks."""
-    i = start
-    while i + 8 <= end:
-        cid = buf[i : i + 4]
-        size = struct.unpack_from("<I", buf, i + 4)[0]
-        yield cid, i + 8, min(size, end - i - 8)
-        i += 8 + size + (size & 1)
-
-
-def encode_avi_mjpeg(frames: list[bytes], fps: float = 10.0) -> bytes:
-    """Mux JPEG frames into a spec-valid AVI ('vids'/'MJPG' stream + idx1)."""
-    if not frames:
-        raise ValueError("need at least one frame")
-    w, h = jpeg_size(frames[0])
-    usec = int(round(1e6 / fps))
-    max_bytes = max(len(f) for f in frames)
-
-    avih = struct.pack(
-        "<10I", usec, max_bytes * int(fps), 0, 0x10, len(frames), 0, 1,
-        max_bytes, w, h,
-    ) + b"\x00" * 16
-    strh = (
-        b"vidsMJPG"
-        + struct.pack("<IHHIIIIIIiI", 0, 0, 0, 0, 1000, int(fps * 1000), 0,
-                      len(frames), max_bytes, -1, 0)
-        + struct.pack("<4H", 0, 0, w, h)
-    )
-    strf = struct.pack("<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG",
-                       w * h * 3, 0, 0, 0, 0)
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        return cid + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    def lst(ltype: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", ltype + body)
-
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi_body = b""
-    idx = b""
-    for f in frames:
-        # idx1 offsets are relative to the movi list-type fourcc
-        idx += b"00dc" + struct.pack("<III", 0x10, 4 + len(movi_body), len(f))
-        movi_body += chunk(b"00dc", f)
-    riff_body = b"AVI " + hdrl + lst(b"movi", movi_body) + chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-def decode_avi(payload: bytes) -> dict:
-    """Demux an AVI: -> {frames: [bytes], fps, width, height, codec}.
-    Scans the movi list directly (no idx1 dependence); accepts 00dc/00db
-    (and any stream number's ..dc/..db) frame chunks."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI payload")
-    out = {"frames": [], "fps": 0.0, "width": 0, "height": 0, "codec": ""}
-    scale_rate = None
-    usec = None
-
-    def walk(start: int, end: int):
-        nonlocal scale_rate, usec
-        for cid, b, sz in _riff_chunks(payload, start, end):
-            if cid == b"LIST":
-                walk(b + 4, b + sz)
-            elif cid == b"avih":
-                vals = struct.unpack_from("<10I", payload, b)
-                usec = vals[0]
-                out["width"], out["height"] = vals[8], vals[9]
-            elif cid == b"strh" and payload[b : b + 4] == b"vids":
-                out["codec"] = payload[b + 4 : b + 8].decode("ascii", "replace")
-                vals = struct.unpack_from("<IHHIIIII", payload, b + 8)
-                scale_rate = (vals[4], vals[5])
-            elif cid[2:4] in (b"dc", b"db"):
-                out["frames"].append(bytes(payload[b : b + sz]))
-
-    walk(12, 8 + struct.unpack_from("<I", payload, 4)[0])
-    if scale_rate and scale_rate[0]:
-        out["fps"] = scale_rate[1] / scale_rate[0]
-    elif usec:
-        out["fps"] = 1e6 / usec
-    return out
-
-
-def _box(name: bytes, body: bytes) -> bytes:
-    return struct.pack(">I", 8 + len(body)) + name + body
-
-
-def _full(name: bytes, version: int, flags: int, body: bytes) -> bytes:
-    return _box(name, struct.pack(">I", (version << 24) | flags) + body)
-
-
-_MP4_UNITY = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-
-
-def encode_mp4_mjpeg(frames: list[bytes], fps: float = 10.0) -> bytes:
-    """Mux JPEG frames into a minimal ISO BMFF MP4 ('jpeg' sample entry,
-    one chunk per frame so demuxers must walk stsc/stco for real)."""
-    if not frames:
-        raise ValueError("need at least one frame")
-    w, h = jpeg_size(frames[0])
-    timescale = 600
-    delta = int(round(timescale / fps))
-    dur = delta * len(frames)
-
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2mp41")
-    mdat_payload = b"".join(frames)
-    base = len(ftyp) + 8  # first frame's absolute offset (mdat header = 8)
-    offsets, off = [], base
-    for f in frames:
-        offsets.append(off)
-        off += len(f)
-
-    entry = (
-        b"\x00" * 6 + struct.pack(">H", 1)          # data_reference_index
-        + struct.pack(">HH", 0, 0) + b"\x00" * 12    # pre_defined / reserved
-        + struct.pack(">HH", w, h)
-        + struct.pack(">II", 0x00480000, 0x00480000) # 72 dpi
-        + struct.pack(">I", 0) + struct.pack(">H", 1)
-        + b"\x00" * 32                               # compressorname
-        + struct.pack(">Hh", 24, -1)
-    )
-    stbl = _box(b"stbl",
-        _full(b"stsd", 0, 0, struct.pack(">I", 1) + _box(b"jpeg", entry))
-        + _full(b"stts", 0, 0, struct.pack(">III", 1, len(frames), delta))
-        + _full(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, 1, 1))
-        + _full(b"stsz", 0, 0, struct.pack(">II", 0, len(frames))
-                + b"".join(struct.pack(">I", len(f)) for f in frames))
-        + _full(b"stco", 0, 0, struct.pack(">I", len(offsets))
-                + b"".join(struct.pack(">I", o) for o in offsets)),
-    )
-    minf = _box(b"minf",
-        _full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-        + _box(b"dinf", _full(b"dref", 0, 0,
-                              struct.pack(">I", 1) + _full(b"url ", 0, 1, b"")))
-        + stbl)
-    mdia = _box(b"mdia",
-        _full(b"mdhd", 0, 0, struct.pack(">IIIIHH", 0, 0, timescale, dur, 0x55C4, 0))
-        + _full(b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide" + b"\x00" * 12
-                + b"VideoHandler\x00")
-        + minf)
-    tkhd = _full(b"tkhd", 0, 3,
-                 struct.pack(">IIIII", 0, 0, 1, 0, dur) + b"\x00" * 8
-                 + struct.pack(">HHHH", 0, 0, 0, 0) + _MP4_UNITY
-                 + struct.pack(">II", w << 16, h << 16))
-    mvhd = _full(b"mvhd", 0, 0,
-                 struct.pack(">IIII", 0, 0, timescale, dur)
-                 + struct.pack(">IHH", 0x00010000, 0x0100, 0) + b"\x00" * 8
-                 + _MP4_UNITY + b"\x00" * 24 + struct.pack(">I", 2))
-    moov = _box(b"moov", mvhd + _box(b"trak", tkhd + mdia))
-    return ftyp + _box(b"mdat", mdat_payload) + moov
-
-
-def _mp4_boxes(buf: bytes, start: int, end: int):
-    """Yield (name, body_start, body_size) over ISO BMFF boxes in [start, end)."""
-    i = start
-    while i + 8 <= end:
-        size = struct.unpack_from(">I", buf, i)[0]
-        name = buf[i + 4 : i + 8]
-        if size == 1:
-            size = struct.unpack_from(">Q", buf, i + 8)[0]
-            body = i + 16
-        elif size == 0:
-            size = end - i
-            body = i + 8
-        else:
-            body = i + 8
-        yield name, body, i + size
-        if size <= 0:
-            break
-        i += size
-
-
-def _mp4_find(buf: bytes, start: int, end: int, name: bytes):
-    for n, b, e in _mp4_boxes(buf, start, end):
-        if n == name:
-            return b, e
-    return None
-
-
-def decode_mp4(payload: bytes) -> dict:
-    """Demux an MP4: -> {frames: [bytes], fps, width, height, codec}.
-    Generic sample-table walk: stsc expanded over stco/co64 chunks, stsz
-    per-sample sizes, stts first-entry delta + mdhd timescale for fps.
-    Picks the first 'vide' track."""
-    n = len(payload)
-    moov = _mp4_find(payload, 0, n, b"moov")
-    if moov is None:
-        raise ValueError("not an ISO BMFF payload (no moov)")
-    out = {"frames": [], "fps": 0.0, "width": 0, "height": 0, "codec": ""}
-    for name, tb, te in _mp4_boxes(payload, *moov):
-        if name != b"trak":
-            continue
-        mdia = _mp4_find(payload, tb, te, b"mdia")
-        if mdia is None:
-            continue
-        hdlr = _mp4_find(payload, *mdia, b"hdlr")
-        if hdlr is None or payload[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        mdhd = _mp4_find(payload, *mdia, b"mdhd")
-        ver = payload[mdhd[0]]
-        timescale = struct.unpack_from(
-            ">I", payload, mdhd[0] + (20 if ver == 1 else 12)
-        )[0]
-        minf = _mp4_find(payload, *mdia, b"minf")
-        stbl = _mp4_find(payload, *minf, b"stbl")
-
-        stsd = _mp4_find(payload, *stbl, b"stsd")
-        eb = stsd[0] + 8  # past version/flags + entry_count
-        out["codec"] = payload[eb + 4 : eb + 8].decode("ascii", "replace")
-        out["width"], out["height"] = struct.unpack_from(">HH", payload, eb + 8 + 24)
-
-        stts = _mp4_find(payload, *stbl, b"stts")
-        if struct.unpack_from(">I", payload, stts[0] + 4)[0] > 0:
-            delta = struct.unpack_from(">I", payload, stts[0] + 12)[0]
-            if delta:
-                out["fps"] = timescale / delta
-
-        stsz = _mp4_find(payload, *stbl, b"stsz")
-        fixed, count = struct.unpack_from(">II", payload, stsz[0] + 4)
-        sizes = (
-            [fixed] * count
-            if fixed
-            else list(struct.unpack_from(f">{count}I", payload, stsz[0] + 12))
-        )
-
-        co = _mp4_find(payload, *stbl, b"stco")
-        if co is not None:
-            n_ch = struct.unpack_from(">I", payload, co[0] + 4)[0]
-            chunk_offsets = list(struct.unpack_from(f">{n_ch}I", payload, co[0] + 8))
-        else:
-            co = _mp4_find(payload, *stbl, b"co64")
-            n_ch = struct.unpack_from(">I", payload, co[0] + 4)[0]
-            chunk_offsets = list(struct.unpack_from(f">{n_ch}Q", payload, co[0] + 8))
-
-        stsc = _mp4_find(payload, *stbl, b"stsc")
-        n_e = struct.unpack_from(">I", payload, stsc[0] + 4)[0]
-        ents = [
-            struct.unpack_from(">III", payload, stsc[0] + 8 + 12 * k)
-            for k in range(n_e)
-        ]
-        # expand samples-per-chunk runs over the chunk list
-        spc = []
-        for k, (first, per, _sdi) in enumerate(ents):
-            last = ents[k + 1][0] - 1 if k + 1 < n_e else len(chunk_offsets)
-            spc += [per] * (last - first + 1)
-
-        si = 0
-        for c, coff in enumerate(chunk_offsets):
-            pos = coff
-            for _ in range(spc[c] if c < len(spc) else 0):
-                if si >= len(sizes):
-                    break
-                out["frames"].append(bytes(payload[pos : pos + sizes[si]]))
-                pos += sizes[si]
-                si += 1
-        return out
-    raise ValueError("no video track found")
-
-
-def decode_video(payload: bytes, mime: str | None = None) -> dict:
-    """Dispatch demux by magic: RIFF/AVI or ISO BMFF (ftyp).  Frames are the
-    raw per-sample payloads; for MJPEG tracks each is a decodable JPEG."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return decode_avi(payload)
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        return decode_mp4(payload)
-    raise NotImplementedError(
-        f"mime={mime!r}: only AVI/MP4 containers with Motion-JPEG samples are "
-        "decodable without a video library (H.264/VP9/AV1 — plug ffmpeg in here)"
-    )
-
-
-# -- dispatch + kernels ------------------------------------------------------
-
-def decode_image(payload: bytes, mime: str | None = None) -> np.ndarray:
-    """(h, w, 3) uint8 for decodable formats; NotImplementedError for
-    entropy-coded formats (the honest codec boundary)."""
-    if payload[:2] == b"P6":
-        return decode_ppm(payload)
-    if payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload)
-    raise NotImplementedError(
-        f"mime={mime!r}: only PPM(P6)/uncompressed-BMP/PNG/JPEG (baseline + "
-        "progressive) decodable without an image library (WebP, AVIF, ... — "
-        "plug PIL in here)"
-    )
-
+# -- Resampling ---------------------------------------------------------------
 
 def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
     h, w = img.shape[:2]
     yi = (np.arange(height) * (h / height)).astype(np.int64).clip(0, h - 1)
     xi = (np.arange(width) * (w / width)).astype(np.int64).clip(0, w - 1)
     return img[yi][:, xi]
-
-
-def image_features(img: np.ndarray, dim: int) -> list:
-    """Deterministic vector: per-channel mean/std + gray histogram, padded or
-    truncated to `dim` (resize-invariant up to sampling)."""
-    x = img.astype(np.float64) / 255.0
-    mean = x.mean(axis=(0, 1))
-    std = x.std(axis=(0, 1))
-    gray = x.mean(axis=2)
-    hist, _ = np.histogram(gray, bins=max(dim - 6, 2), range=(0.0, 1.0))
-    hist = hist / max(gray.size, 1)
-    feat = np.concatenate([mean, std, hist])
-    out = np.zeros(dim)
-    out[: min(dim, feat.size)] = feat[:dim]
-    return [float(v) for v in out]
-
-
-def audio_features(samples: np.ndarray, rate: int, dim: int) -> list:
-    """RMS, zero-crossing rate, mean, std, spectral centroid (normalized to
-    Nyquist) + 4 octave-ish band energy fractions + amplitude histogram ->
-    dim.  The spectral block is a real rfft periodogram, so a pure tone at
-    f0 yields centroid ~ f0/(rate/2) and all its energy in f0's band —
-    closed forms the tests pin."""
-    mono = samples.mean(axis=1)
-    rms = float(np.sqrt(np.mean(mono**2))) if mono.size else 0.0
-    zcr = (
-        float(np.mean(np.abs(np.diff(np.signbit(mono).astype(np.int8)))))
-        if mono.size > 1
-        else 0.0
-    )
-    if mono.size > 1:
-        spec = np.abs(np.fft.rfft(mono)) ** 2
-        spec[0] = 0.0  # drop DC: centroid/bands describe the AC spectrum
-        freqs = np.fft.rfftfreq(mono.size, d=1.0 / rate)
-        tot = float(spec.sum())
-        centroid = float((freqs * spec).sum() / tot / (rate / 2.0)) if tot > 0 else 0.0
-        # 4 bands split at Nyquist/16, /8, /2 (low, mid-low, mid, high)
-        edges = np.array([0.0, rate / 32.0, rate / 16.0, rate / 4.0, rate / 2.0])
-        bands = [
-            float(spec[(freqs > edges[b]) & (freqs <= edges[b + 1])].sum() / tot)
-            if tot > 0
-            else 0.0
-            for b in range(4)
-        ]
-    else:
-        centroid, bands = 0.0, [0.0] * 4
-    hist, _ = np.histogram(mono, bins=max(dim - 9, 2), range=(-1.0, 1.0))
-    hist = hist / max(mono.size, 1)
-    feat = np.concatenate([[rms, zcr, float(mono.mean()) if mono.size else 0.0,
-                            float(mono.std()) if mono.size else 0.0,
-                            centroid], bands, hist])
-    out = np.zeros(dim)
-    out[: min(dim, feat.size)] = feat[:dim]
-    return [float(v) for v in out]
