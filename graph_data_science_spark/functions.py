@@ -30,6 +30,26 @@ def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def let(value, body) -> Column:
+    """`body(v)` with `v` bound to `value`, which is evaluated once per row.
+
+    Spark inlines a column expression at every place it is referenced, so a
+    per-row value used more than once is computed more than once:
+
+    * inside a higher-order lambda (`transform`, `aggregate`, ...) every
+      outer expression is re-evaluated per element, so an O(d) aggregate
+      such as a norm or a mean becomes O(d^2) per row;
+    * projecting the value as a column first does not help: CollapseProject
+      inlines an alias referenced only once, and PushDownPredicates
+      substitutes aliases into filters and join conditions.
+
+    Passing the value through a one-element `transform` makes it a lambda
+    variable, which Catalyst neither inlines nor duplicates:
+    `element_at(transform(array(value), v -> body(v)), 1)`.  `body` is a
+    Python function of one Column, as for `F.transform`."""
+    return F.element_at(F.transform(F.array(_c(value)), body), 1)
+
+
 def _sum(a: Column) -> Column:
     return F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -81,12 +101,15 @@ def pearson(a, b) -> Column:
     """gds.similarity.pearson — population Pearson correlation."""
     a, b = _c(a), _c(b)
     n = F.size(a).cast("double")
-    ma = _sum(a) / n
-    mb = _sum(b) / n
-    cov = _sum(F.zip_with(a, b, lambda x, y: (x - ma) * (y - mb)))
-    va = _sum(F.transform(a, lambda x: (x - ma) * (x - ma)))
-    vb = _sum(F.transform(b, lambda x: (x - mb) * (x - mb)))
-    return cov / (F.sqrt(va) * F.sqrt(vb))
+
+    def corr(ma, mb):
+        cov = _sum(F.zip_with(a, b, lambda x, y: (x - ma) * (y - mb)))
+        va = _sum(F.transform(a, lambda x: (x - ma) * (x - ma)))
+        vb = _sum(F.transform(b, lambda x: (x - mb) * (x - mb)))
+        return cov / (F.sqrt(va) * F.sqrt(vb))
+
+    # bind the means: inline they are re-summed for every element
+    return let(_sum(a) / n, lambda ma: let(_sum(b) / n, lambda mb: corr(ma, mb)))
 
 
 # -- SQL surface ---------------------------------------------------------------

@@ -9,10 +9,19 @@ Canonical definitions (shared with the SQL oracles):
 - simhash bit p      = majority vote of bit p of the first-16-bit md5(word)
 - ngram jaccard      = |A∩B| / |A∪B| over DISTINCT word n-grams
 
+A document with fewer than n words has no n-grams: it verifies against
+nothing and `dedup_clusters` keeps it as its own cluster.
+
 Scale notes: minhash signatures are one explode + groupBy (map-side partial
 min); LSH candidate generation joins on (band_idx, band_hash) so only
 colliding docs ever meet — the classic shuffle-friendly band join.  Exact
-dedup is a single hash aggregation.
+dedup is a single hash aggregation.  Verification does each per-row step
+once: one tokenization per document in `word_ngrams` and one set
+intersection per candidate pair in `ngram_jaccard_pairs`, both bound with
+`functions.let` so that Catalyst cannot copy the expression into every
+place it is used (each gram, each pushed-down jaccard filter).  Pairs that
+share no gram are dropped by `arrays_overlap`, which stops at the first
+common element, before any intersection is built.
 """
 
 from typing import Optional
@@ -20,6 +29,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.functions import let
 from graph_data_science_spark.operators.text import ID_COL, TEXT_COL, tokens
 
 HEX = "0123456789abcdef"
@@ -241,16 +251,26 @@ def minhash_jaccard_estimate(docs: DataFrame, num_hashes: int = 16) -> DataFrame
 
 
 def word_ngrams(docs: DataFrame, n: int = 2) -> DataFrame:
-    """doc_id, ngram (distinct word n-grams, space-joined)."""
-    toks = tokens(F.col(TEXT_COL))
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + k).cast("int")) for k in range(n)]
-        ),
-    )
-    return docs.select(F.col(ID_COL), F.explode(grams).alias("ngram")).distinct()
+    """doc_id, ngram (distinct word n-grams, space-joined).
+
+    A document with fewer than n tokens, the empty one included, has no
+    n-grams and no rows here."""
+
+    def grams(toks):
+        # one gram per start token; the first size - n + 1 tokens start one
+        starts = F.slice(toks, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0)))
+        return F.transform(
+            starts,
+            lambda w, i: F.concat_ws(
+                " ", w, *[F.element_at(toks, i + 1 + k) for k in range(1, n)]
+            ),
+        )
+
+    # the token array is bound once per document: inline, every
+    # element_at would re-split the whole text (O(L^2) per document)
+    return docs.select(
+        F.col(ID_COL), F.explode(let(tokens(F.col(TEXT_COL)), grams)).alias("ngram")
+    ).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -260,7 +280,7 @@ def ngram_jaccard_pairs(
     max_id_distance: Optional[int] = None,
     fingerprint: bool = True,
 ) -> DataFrame:
-    """True n-gram Jaccard per candidate pair (intersection > 0):
+    """True n-gram Jaccard per candidate pair that shares a gram:
     doc1, doc2, jaccard.
 
     Candidates come from LSH by default; `max_id_distance` gives a cheap
@@ -313,16 +333,17 @@ def ngram_jaccard_pairs(
     b = gsets.select(
         F.col(ID_COL).alias("doc2"), F.col("gs").alias("gs2"), F.col("ng").alias("n2")
     )
-    inter = F.size(F.array_intersect("gs1", "gs2"))
+    # the intersection size is bound once per pair: the optimizer
+    # substitutes `jaccard` into every filter pushed below this projection
+    jaccard = let(
+        F.size(F.array_intersect("gs1", "gs2")),
+        lambda i: i / (F.col("n1") + F.col("n2") - i),
+    )
     return (
         candidate_pairs.join(a, "doc1")
         .join(b, "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            (inter / (F.col("n1") + F.col("n2") - inter)).alias("jaccard"),
-        )
-        .where(F.col("jaccard") > 0)
+        .where(F.arrays_overlap("gs1", "gs2"))
+        .select("doc1", "doc2", jaccard.alias("jaccard"))
     )
 
 

@@ -35,6 +35,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_data_science_spark.functions import let
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.superstep import run_supersteps
 from graph_data_science_spark.session import cache_copartitioned
@@ -63,7 +64,8 @@ def _l2_normalize(vec):
         F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
     )
     safe = F.when(norm > 0, norm).otherwise(F.lit(1.0))
-    return F.transform(vec, lambda x: x / safe)
+    # bound once per row: inline, the norm is re-summed for every element
+    return let(safe, lambda s: F.transform(vec, lambda x: x / s))
 
 
 def fastrp(graph: LinkGraph, cfg: Optional[FastRPConfig] = None) -> FastRPResult:

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graph_data_science_spark.operators.fastrp import _l2_normalize
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
 
@@ -210,13 +211,7 @@ def _matmul_act(df: DataFrame, W: np.ndarray, activation: str) -> DataFrame:
 
 
 def _l2_rows(df: DataFrame, col: str) -> DataFrame:
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    safe = F.when(norm > 0, norm).otherwise(F.lit(1.0))
-    return df.select("id", F.transform(col, lambda x: x / safe).alias("embedding"))
+    return df.select("id", _l2_normalize(F.col(col)).alias("embedding"))
 
 
 def graphsage_embeddings(

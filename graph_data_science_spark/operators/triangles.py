@@ -76,6 +76,10 @@ def _simple_degrees(und: DataFrame) -> DataFrame:
 def triangle_count(
     graph: LinkGraph, cfg: Optional[TriangleCountConfig] = None
 ) -> TriangleCountResult:
+    """Global and per-node triangle counts.  `global_triangles` is counted
+    eagerly; `local_triangles` is lazy and recomputes the whole pipeline
+    (orientation, wedges, closing join) when it is read, because nothing of
+    the eager count is still cached by then."""
     cfg = cfg or TriangleCountConfig()
     spark = graph.nodes.sparkSession
 
@@ -111,7 +115,7 @@ def triangle_count(
     e2 = oriented.select(F.col("src").alias("y"), F.col("dst").alias("z"))
     wedges = e1.join(e2, "y").select("x", "y", "z")
     closing = oriented.select(F.col("src").alias("x"), F.col("dst").alias("z"))
-    tris = wedges.join(closing, ["x", "z"], "left_semi").cache()
+    tris = wedges.join(closing, ["x", "z"], "left_semi")
 
     global_count = tris.count()
 
@@ -134,7 +138,6 @@ def triangle_count(
                 "triangles"
             ),
         )
-    tris.unpersist()
     oriented.unpersist()
     return TriangleCountResult(global_count, local)
 
@@ -169,7 +172,8 @@ def triangle_count_intersect(
     Mirrors the reference's GraphIntersect merge over sorted lists: for each
     oriented edge (A,B), count |{C > B} ∩ adj(A) ∩ adj(B)| via
     np.intersect1d on sort_array'd adjacency — the sortedness is established
-    at build (AdjacencyCompression.java:52-67 analog).
+    at build (AdjacencyCompression.java:52-67 analog).  As in
+    `triangle_count`, `local_triangles` is lazy and recomputes the pipeline.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -211,7 +215,6 @@ def triangle_count_intersect(
         .select("a", "b", common_gt("b", "nbrs_a", "nbrs_b").alias("cs"))
         .where(F.size("cs") > 0)
         .select("a", "b", F.explode("cs").alias("c"))
-        .cache()
     )
     global_count = tris.count()
     corners = (
@@ -229,7 +232,6 @@ def triangle_count_intersect(
             "id",
             F.when(F.col("_ex"), F.lit(EXCLUDED)).otherwise(F.col("triangles")).alias("triangles"),
         )
-    tris.unpersist()
     return TriangleCountResult(global_count, local)
 
 

@@ -1,12 +1,23 @@
 """Training-data pipeline operators: text analysis, dedup and ANN over the
-driver testdata `documents`/`embeddings` tables."""
+driver testdata `documents`/`embeddings` tables, plus `functions.let` and
+the per-row expressions it binds."""
 
 import pyspark.sql.functions as F
 import pytest
 
+from graph_data_science_spark import functions as gfn
 from graph_data_science_spark.operators import ann, dedup, text
+from graph_data_science_spark.operators.fastrp import _l2_normalize
+from graph_data_science_spark.operators.graphsage import _l2_rows
 
 SF = "/root/testdata/sf0.001"
+
+
+def _executed_plan(df) -> str:
+    """The executed physical plan of a collected frame; under adaptive
+    execution only its final part, not the initial plan printed below it."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
 
 
 @pytest.fixture(scope="module")
@@ -138,6 +149,47 @@ class TestDedup:
         rows = dedup.ngram_jaccard_pairs(d, n=2, max_id_distance=10).collect()
         assert rows[0]["jaccard"] == pytest.approx(0.5)
 
+    def test_jaccard_verify_intersects_once_per_pair(self, spark):
+        # the downstream threshold filter is pushed into the pair join with
+        # `jaccard` substituted; bound with `let`, the plan still holds one
+        # intersection for that filter and one for the projection (an
+        # inline expression gave 6: two per jaccard, in three places)
+        d = spark.createDataFrame(
+            [(1, "a b c d"), (2, "a b c e"), (3, "x y z"), (4, "a b x y")],
+            ["doc_id", "text"],
+        ).cache()
+        q = dedup.ngram_jaccard_pairs(d, n=2, max_id_distance=10).where(
+            F.col("jaccard") >= 0.5
+        )
+        rows = q.collect()
+        assert [(r["doc1"], r["doc2"]) for r in rows] == [(1, 2)]
+        assert rows[0]["jaccard"] == pytest.approx(0.5)
+        assert _executed_plan(q).count("array_intersect(") <= 2
+        d.unpersist()
+
+    def test_word_ngrams_tokenizes_once_per_document(self, docs):
+        # over a cached frame (a local relation would be constant-folded)
+        # the text is split once per document, not once per gram
+        g = dedup.word_ngrams(docs, 3)
+        g.collect()
+        assert _executed_plan(g).count("split(") == 1
+
+    def test_short_documents_have_no_ngrams_and_stay_singletons(self, spark):
+        # 0, 1 and exactly n=2 tokens; 3 and 4 are identical 2-token docs
+        d = spark.createDataFrame(
+            [(1, ""), (2, "one"), (3, "one two"), (4, "one two"), (5, "   ")],
+            ["doc_id", "text"],
+        )
+        grams = sorted(tuple(r) for r in dedup.word_ngrams(d, 2).collect())
+        assert grams == [(3, "one two"), (4, "one two")]
+        assert dedup.word_ngrams(d.where("doc_id < 3"), 1).count() == 1
+        pairs = dedup.ngram_jaccard_pairs(d, n=2, max_id_distance=10).collect()
+        assert [(r["doc1"], r["doc2"], r["jaccard"]) for r in pairs] == [(3, 4, 1.0)]
+        rows = {r["doc_id"]: r for r in dedup.dedup_clusters(d, n=2).collect()}
+        assert {i: (r["cluster"], r["keep"]) for i, r in rows.items()} == {
+            1: (1, True), 2: (2, True), 3: (3, True), 4: (3, False), 5: (5, True)
+        }
+
     def test_simhash_similar_docs_close(self, spark):
         d = spark.createDataFrame(
             [
@@ -217,3 +269,59 @@ class TestAnn:
             if r["neighbor_id"] in exact_sets.get(r["query_id"], set()):
                 hit += 1
         assert tot > 0 and hit / max(tot, 1) > 0.3  # bucketing keeps real neighbors
+
+
+def _inline_l2(vec):
+    """The L2 normalization as written before `let`: the norm inline."""
+    norm = F.sqrt(
+        F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
+    )
+    safe = F.when(norm > 0, norm).otherwise(F.lit(1.0))
+    return F.transform(vec, lambda x: x / safe)
+
+
+def _inline_pearson(a, b):
+    """Population Pearson as written before `let`: the means inline."""
+    a, b = F.col(a), F.col(b)
+    n = F.size(a).cast("double")
+    ma = gfn._sum(a) / n
+    mb = gfn._sum(b) / n
+    cov = gfn._sum(F.zip_with(a, b, lambda x, y: (x - ma) * (y - mb)))
+    va = gfn._sum(F.transform(a, lambda x: (x - ma) * (x - ma)))
+    vb = gfn._sum(F.transform(b, lambda x: (x - mb) * (x - mb)))
+    return cov / (F.sqrt(va) * F.sqrt(vb))
+
+
+class TestLet:
+    @pytest.fixture(scope="class")
+    def vecs(self, spark):
+        rows = [
+            (1, [3.0, 4.0, 0.0], [1.0, 2.0, 4.0]),
+            (2, [0.0, 0.0, 0.0], [2.0, -1.0, 0.5]),
+            (3, [-1.5, 2.25, 1e-3], [0.1, 0.2, 0.35]),
+            (4, [1e6, -3.0, 7.0], [-5.0, 5.0, 1.0]),
+        ]
+        return spark.createDataFrame(rows, ["id", "a", "b"])
+
+    def test_value_is_evaluated_once(self, spark):
+        # a nondeterministic value bound once differs from itself by 0
+        rows = spark.range(50).select(
+            gfn.let(F.rand(seed=3), lambda v: v - v).alias("d")
+        ).collect()
+        assert {r["d"] for r in rows} == {0.0}
+
+    def test_l2_normalize_matches_inline(self, vecs):
+        got = vecs.select("id", _l2_normalize(F.col("a")).alias("v"))
+        want = vecs.select("id", _inline_l2(F.col("a")).alias("v"))
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+    def test_l2_rows_matches_inline(self, vecs):
+        got = _l2_rows(vecs, "a").collect()
+        want = vecs.select("id", _inline_l2(F.col("a")).alias("embedding")).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+        assert [r["embedding"] for r in got if r["id"] == 1] == [[0.6, 0.8, 0.0]]
+
+    def test_pearson_matches_inline(self, vecs):
+        got = vecs.select("id", gfn.pearson("a", "b").alias("p")).where("id != 2")
+        want = vecs.select("id", _inline_pearson("a", "b").alias("p")).where("id != 2")
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
