@@ -139,17 +139,14 @@ _SQL_BODIES = {
         " / least(size(array_distinct(a)), size(array_distinct(b)))"
         " ELSE 0D END"
     ),
+    # the means are bound once per row, as `let` does for the Column form
     "pearson": (
-        "(aggregate(zip_with(a, b, (x, y) ->"
-        " (x - aggregate(a, 0D, (s, v) -> s + v) / size(a))"
-        " * (y - aggregate(b, 0D, (s, v) -> s + v) / size(b))), 0D,"
-        " (s, x) -> s + x))"
-        " / (sqrt(aggregate(a, 0D, (s, v) ->"
-        " s + (v - aggregate(a, 0D, (t, w) -> t + w) / size(a))"
-        " * (v - aggregate(a, 0D, (t, w) -> t + w) / size(a))))"
-        " * sqrt(aggregate(b, 0D, (s, v) ->"
-        " s + (v - aggregate(b, 0D, (t, w) -> t + w) / size(b))"
-        " * (v - aggregate(b, 0D, (t, w) -> t + w) / size(b)))))"
+        "element_at(transform(array(aggregate(a, 0D, (s, v) -> s + v) / size(a)),"
+        " ma -> element_at(transform(array(aggregate(b, 0D, (s, v) -> s + v) / size(b)),"
+        " mb -> aggregate(zip_with(a, b, (x, y) -> (x - ma) * (y - mb)), 0D,"
+        " (s, x) -> s + x)"
+        " / (sqrt(aggregate(a, 0D, (s, x) -> s + (x - ma) * (x - ma)))"
+        " * sqrt(aggregate(b, 0D, (s, x) -> s + (x - mb) * (x - mb))))), 1)), 1)"
     ),
 }
 

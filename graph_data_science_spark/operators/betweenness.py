@@ -12,9 +12,10 @@ Spark decomposition (all sources advance together, MSBFS-style):
 - forward: the superstep kernel's `reach` over (root, id) pairs; sigma(root,
   v) = sum of sigma over predecessor-frontier rows reaching v — one join +
   one groupBy per level.
-- backward: iterate levels from deepest to 1; each step joins level-L nodes
-  with their predecessors (edges reversed) and aggregates the dependency sum
-  — again one join + one groupBy per level.
+- backward: one `run_supersteps` call (jobs `betweenness_sweep:<t>`) from
+  the deepest level to 1 over two named frames: the dependencies (root, id,
+  delta) pushed onto the next level's nodes — one join + one groupBy per
+  level — and the node-sized running score (id, score), never pair-sized.
 Pair volume is O(sum of reachable pairs); use `sources` to sample on large
 graphs.  Directed semantics (NATURAL); run on an undirected LinkGraph view
 for the undirected variant (each undirected edge projected both ways).
@@ -28,9 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import reach
-from graph_data_science_spark.session import no_aqe
+from graph_data_science_spark.plans.superstep import reach, run_supersteps
 
 # All-sources exact mode materializes O(n * reachable) (root, id) pairs.
 # Above this node count, callers must either pass `sources=` (the
@@ -119,74 +118,65 @@ def betweenness_centrality(
     levels = run.state.cache()
     max_level = run.steps - 1 if run.converged else run.steps
 
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, None)
-    with no_aqe(spark):
-        # backward phase: delta per (root, id), deepest level first.
-        # Per-level dependency frames are checkpointed individually and only
-        # UNIONED LAZILY at the end — the accumulator is never re-written per
-        # level (previously acc was union-checkpointed every level, an
-        # O(levels * pairs) rewrite).
-        acc_parts: list[DataFrame] = []
-        delta_next = None  # (root, id, delta) of level L+1
-        for lvl in range(max_level, 0, -1):
-            lvl_nodes = levels.where(F.col("level") == lvl).select(
-                "root", "id", "sigma"
+    def sweep(lvl, delta=None, score=None):
+        """Backward level ``lvl`` from the dependencies (root, id, delta)
+        pushed onto its nodes: the dependencies it pushes onto level
+        ``lvl - 1``, and the node-sized running score (id, score) with this
+        level's nodes (v != root) added."""
+        cur = levels.where(F.col("level") == lvl).select("root", "id", "sigma")
+        if delta is None:  # the deepest level has no successors
+            cur = cur.withColumn("delta", F.lit(0.0))
+        else:
+            cur = cur.join(delta, ["root", "id"], "left").select(
+                "root", "id", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
             )
-            if delta_next is None:
-                cur_delta = lvl_nodes.select(
-                    "root", "id", "sigma", F.lit(0.0).alias("delta")
-                )
-            else:
-                cur_delta = lvl_nodes.join(
-                    delta_next, ["root", "id"], "left"
-                ).select(
-                    "root", "id", "sigma",
-                    F.coalesce("delta", F.lit(0.0)).alias("delta"),
-                )
-            # push dependency to predecessors: pred p of w iff edge p->w and
-            # level(p) = level(w) - 1; contribution = sigma_p/sigma_w * (1+delta_w)
-            w_side = cur_delta.select(
-                F.col("root"), F.col("id").alias("w"),
-                F.col("sigma").alias("sigma_w"), F.col("delta").alias("delta_w"),
+        # push dependency to predecessors: pred p of w iff edge p->w and
+        # level(p) = level(w) - 1; contribution = sigma_p/sigma_w * (1+delta_w)
+        w_side = cur.select(
+            F.col("root"), F.col("id").alias("w"),
+            F.col("sigma").alias("sigma_w"), F.col("delta").alias("delta_w"),
+        )
+        preds = levels.where(F.col("level") == lvl - 1).select(
+            "root", F.col("id").alias("p"), F.col("sigma").alias("sigma_p")
+        )
+        contrib = (
+            w_side.join(edges, w_side["w"] == edges["dst"])
+            .join(
+                preds,
+                (w_side["root"] == preds["root"]) & (edges["src"] == preds["p"]),
             )
-            preds = levels.where(F.col("level") == lvl - 1).select(
-                "root", F.col("id").alias("p"), F.col("sigma").alias("sigma_p")
+            .drop(preds["root"])
+            .groupBy("root", "p")
+            .agg(
+                F.sum(
+                    (F.col("sigma_p") / F.col("sigma_w"))
+                    * (F.lit(1.0) + F.col("delta_w"))
+                ).alias("delta")
             )
-            contrib = (
-                w_side.join(edges, w_side["w"] == edges["dst"])
-                .join(
-                    preds,
-                    (w_side["root"] == preds["root"]) & (edges["src"] == preds["p"]),
-                )
-                .drop(preds["root"])
-                .groupBy("root", "p")
-                .agg(
-                    F.sum(
-                        (F.col("sigma_p") / F.col("sigma_w"))
-                        * (F.lit(1.0) + F.col("delta_w"))
-                    ).alias("delta")
-                )
-                .select("root", F.col("p").alias("id"), "delta")
-            )
-            delta_next = ckpt.checkpoint(contrib, lvl, name="delta")
-            # dependencies of this level's nodes contribute to bc (v != root);
-            # checkpointed once per level, unioned lazily below
-            scored = cur_delta.where(F.col("id") != F.col("root")).select(
-                "root", "id", F.col("delta").alias("score")
-            )
-            acc_parts.append(ckpt.checkpoint(scored, lvl, name=f"acc_l{lvl}"))
+            .select("root", F.col("p").alias("id"), "delta")
+        )
+        scored = cur.where(F.col("id") != F.col("root")).select(
+            "id", F.col("delta").alias("score")
+        )
+        if score is not None:
+            scored = score.unionByName(scored)
+        return {
+            "delta": contrib,
+            "score": scored.groupBy("id").agg(F.sum("score").alias("score")),
+        }, {}
 
+    # backward phase, deepest level first: superstep t sweeps max_level - t
+    # (with no level past the sources, superstep 0 sweeps them: no score)
+    run = run_supersteps(
+        graph.nodes, graph.edges, lambda: sweep(max_level),
+        lambda state, seen, t: sweep(max_level - t, state["delta"], state["score"]),
+        algorithm="betweenness_sweep", max_steps=max(max_level - 1, 0),
+        done=lambda state, seen, t: False,
+    )
     edges.unpersist()
     levels.unpersist()
-    if not acc_parts:
-        return graph.nodes.select("id", F.lit(0.0).alias("score"))
-    acc = acc_parts[0]
-    for part in acc_parts[1:]:
-        acc = acc.unionByName(part)
-    bc = acc.groupBy("id").agg(F.sum("score").alias("score"))
     return (
         graph.nodes.select("id")
-        .join(bc, "id", "left")
+        .join(run.state["score"], "id", "left")
         .select("id", F.coalesce("score", F.lit(0.0)).alias("score"))
     )

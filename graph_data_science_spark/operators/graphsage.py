@@ -21,7 +21,9 @@ Reference: algo/src/main/java/org/neo4j/gds/embeddings/graphsage/ —
   nodes come from the same layer rule; here that pass is fully distributed
   (one bounded join + mean per layer + an Arrow-batched matmul) and
   therefore INDUCTIVE: unseen nodes with features get embeddings from the
-  stored weights without retraining.
+  stored weights without retraining.  Training materializes that pass as
+  the superstep-0 write of a zero-step `plans/superstep.py:run_supersteps`
+  call (job `graphsage:0`).
 
 Lite deviations (documented, not hidden): mean aggregator only (no
 max-pooling layer), unweighted aggregation, uniform seeded negatives
@@ -47,7 +49,7 @@ from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.fastrp import _l2_normalize
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
+from graph_data_science_spark.plans.superstep import run_supersteps
 
 
 @dataclass
@@ -726,13 +728,14 @@ def graphsage_train(
         embedding_dimension=cfg.embedding_dimension,
         seed=cfg.seed,
     )
-    # final distributed pass reuses the cached per-layer adjacencies, then the
-    # result is materialized to parquet (lineage + stats truncation) so EVERY
-    # cache this function created can be released before returning — repeated
+    # final distributed pass reuses the cached per-layer adjacencies; its
+    # parquet write releases EVERY cache this function created — repeated
     # training calls in a long session must not accumulate executor storage
-    emb = graphsage_embeddings(graph, feats, model, _adjs=adjs)
-    ckpt = SuperstepCheckpointer(spark, None)
-    emb = ckpt.checkpoint(emb, 0, name="graphsage_emb")
+    emb = run_supersteps(
+        graph.nodes, graph.edges,
+        lambda: (graphsage_embeddings(graph, feats, model, _adjs=adjs), {}),
+        None, algorithm="graphsage", max_steps=0, done=None,
+    ).state
     roots.unpersist()
     feats.unpersist()
     for a in adjs:

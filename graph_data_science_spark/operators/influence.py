@@ -11,7 +11,9 @@ Reverse-Influence-Sampling (RIS / Borgs et al., the basis of TIM/IMM):
    kernel's `reach`) from a random root over edges kept with probability p
    (seeded md5 arithmetic per (sample, edge), partition-stable);
 2. greedy max-coverage over the RR sets: k rounds of "pick the node covering
-   the most uncovered sets" (one groupBy + top-1 per round);
+   the most uncovered sets" (one groupBy + top-1 per round), run as one
+   `run_supersteps` call (jobs `influence:<round>`) over the memberships of
+   the uncovered sets, which stops once every set is covered;
 3. spread estimate of the seed set = n * covered_fraction — an unbiased
    estimator of the expected independent-cascade spread.
 
@@ -28,8 +30,7 @@ from typing import Optional
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import reach
+from graph_data_science_spark.plans.superstep import reach, run_supersteps
 
 
 @dataclass
@@ -55,7 +56,6 @@ def influence_maximization(
     checkpoint_path: Optional[str] = None,
 ) -> InfluenceResult:
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     p = float(propagation_probability)
 
@@ -97,11 +97,11 @@ def influence_maximization(
     )
     member = rr.state.select("set_id", "id")
 
-    # greedy max coverage: k rounds of top-1 by covered-set count
-    seeds: list = []
-    covered_total = 0
-    remaining = member
-    for _ in range(k):
+    # greedy max coverage: k rounds of top-1 by covered-set count, over the
+    # (set_id, id) memberships of the sets no seed covers yet
+    seeds: list = []  # [(node, sets covered)]
+
+    def step(remaining, seen, t):
         top = (
             remaining.groupBy("id")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -109,16 +109,23 @@ def influence_maximization(
             .limit(1)
             .collect()
         )
-        if not top:
-            break
-        node, cnt = int(top[0]["id"]), int(top[0]["cnt"])
-        seeds.append((node, cnt))
-        covered_total += cnt
-        covered_sets = remaining.where(F.col("id") == node).select("set_id")
-        remaining = remaining.join(covered_sets, "set_id", "left_anti")
-        remaining = ckpt.checkpoint(remaining, len(seeds), name="rr_remaining")
-        ckpt.log(len(seeds), algorithm="influence_ris", seed_node=node, covered=cnt)
+        if top:
+            node, cnt = int(top[0]["id"]), int(top[0]["cnt"])
+            seeds.append((node, cnt))
+            covered_sets = remaining.where(F.col("id") == node).select("set_id")
+            remaining = remaining.join(covered_sets, "set_id", "left_anti")
+        return remaining, {"remaining": F.count(F.lit(1))}
 
+    def done(remaining, seen, t):
+        if len(seeds) == t:
+            seen["seed_node"], seen["covered"] = seeds[-1]
+        return seen["remaining"] == 0
+
+    greedy = run_supersteps(
+        graph.nodes, graph.edges, lambda: (member, {}), step,
+        algorithm="influence", max_steps=k, done=done,
+        checkpoint_path=checkpoint_path,
+    )
     rev.unpersist()
-    spread = n * covered_total / max(n_rr_sets, 1)
-    return InfluenceResult(seeds, float(spread), n_rr_sets, rr.metrics + ckpt.metrics)
+    spread = n * sum(cnt for _, cnt in seeds) / max(n_rr_sets, 1)
+    return InfluenceResult(seeds, float(spread), n_rr_sets, rr.metrics + greedy.metrics)

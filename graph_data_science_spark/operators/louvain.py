@@ -19,12 +19,19 @@ Spark decomposition:
 - coarsening: `groupBy(comp(src), comp(dst)).sum(weight)` builds the
   next-level edge DF (self-loops = internal weight, kept — they count in the
   volume term).
-- composition: a `node → community` mapping joined through each level.
+- composition: a `node → community` mapping joined through each level; the
+  per-level communities ride the assignment as an array column.
 
-Each level's local moving is one `plans/superstep.py:run_supersteps` call
-over (id, community, deg) (jobs `louvain:<round>`, rows tagged `level`); a
-durable level keeps its state and metrics under `<checkpoint_path>/level_l`.
-`metrics` lists each level's rounds, then its `louvain_level` row.
+The level loop is one `plans/superstep.py:run_supersteps` call (jobs
+`louvain_level:<level>`) over three named frames: the composed assignment
+(id, community, levels), the coarse edges and the coarse nodes.  The
+coarse-node count and the level's modularity are observed on the coarse-node
+write; a level that lowers modularity stops the loop and the previous level
+is the result.  Each level's local moving is a nested `run_supersteps` over
+(id, community, deg) whose superstep 0 is the first round (jobs
+`louvain:<round - 1>`, rows tagged `level`); a durable level keeps its state
+and metrics under `<checkpoint_path>/level_l`.  `metrics` lists every
+level's rounds, then the level loop's rows.
 
 Undirected semantics: the input edge set is canonicalized and each edge
 counted once; volumes use weighted degrees with self-loops counted twice,
@@ -34,7 +41,6 @@ matching standard modularity bookkeeping.
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -43,7 +49,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
 from graph_data_science_spark.plans.superstep import Run, run_supersteps
 
 
@@ -55,9 +60,8 @@ class LouvainConfig:
     checkpoint_path: Optional[str] = None
     # retain the per-level dendrogram (Louvain.java:90-140 keeps a
     # HugeLongArray per level; includeIntermediateCommunities in the proc
-    # config).  The per-level assignments are already checkpointed as
-    # `louvain_assign` — this only keeps their handles and joins them at
-    # the end, so the extra cost is one k-way join of (id, long) frames.
+    # config).  The per-level communities are always carried as an array
+    # column of the assignment; this only returns them.
     include_intermediate: bool = False
 
 
@@ -86,35 +90,6 @@ def _canonical_weighted(graph: LinkGraph) -> DataFrame:
     )
 
 
-def _modularity(edges: DataFrame, comm: DataFrame, m: float) -> float:
-    """Undirected modularity of assignment `comm(id, community)` on canonical
-    edges (a<=b, weight w): Q = Σ_C [ int_C/m − (vol_C/(2m))² ]."""
-    ca = comm.select(F.col("id").alias("a"), F.col("community").alias("c_a"))
-    cb = comm.select(F.col("id").alias("b"), F.col("community").alias("c_b"))
-    e = edges.join(ca, "a").join(cb, "b")
-    internal = (
-        e.where(F.col("c_a") == F.col("c_b"))
-        .groupBy(F.col("c_a").alias("c"))
-        .agg(F.sum("w").alias("int_w"))
-    )
-    # volume: each endpoint contributes w; self-loop contributes 2w to its node
-    vol = (
-        e.select(F.col("c_a").alias("c"), F.col("w"))
-        .unionByName(e.select(F.col("c_b").alias("c"), F.col("w")))
-        .groupBy("c")
-        .agg(F.sum("w").alias("vol"))
-    )
-    j = vol.join(internal, "c", "left").select(
-        "c",
-        F.coalesce("int_w", F.lit(0.0)).alias("int_w"),
-        "vol",
-    )
-    row = j.agg(
-        F.sum(F.col("int_w") / F.lit(m) - (F.col("vol") / F.lit(2 * m)) ** 2)
-    ).collect()[0][0]
-    return float(row or 0.0)
-
-
 def _local_moving(
     edges: DataFrame,
     nodes: DataFrame,
@@ -122,26 +97,22 @@ def _local_moving(
     cfg: LouvainConfig,
     level: int,
 ) -> Run:
-    """One level of modularity optimization; its state is
-    (id, community, deg)."""
+    """One level of modularity optimization over ``nodes`` (id, deg); its
+    state is (id, community, deg)."""
     und = edges.where(F.col("a") != F.col("b"))
     sym = und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w").unionByName(
         und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
     ).cache()
-    # weighted degree (self-loops count twice)
-    deg = (
-        edges.select(F.col("a").alias("id"), F.when(F.col("a") == F.col("b"), 2 * F.col("w")).otherwise(F.col("w")).alias("w"))
-        .unionByName(und.select(F.col("b").alias("id"), "w"))
-        .groupBy("id")
-        .agg(F.sum("w").alias("deg"))
-    )
 
     def init():
-        return nodes.join(deg, "id", "left").select(
-            "id", F.col("id").alias("community"), F.coalesce("deg", F.lit(0.0)).alias("deg")
-        ), {}
+        # superstep 0 is round 1, moving from the singleton communities
+        comm = nodes.select("id", F.col("id").alias("community"), "deg")
+        if cfg.max_inner_iterations:
+            comm = step(comm, {}, 0)[0].drop("_cand", "_moved")
+        return comm, {}
 
-    def step(comm, seen, it):
+    def step(comm, seen, t):
+        it = t + 1  # the round
         vols = comm.groupBy("community").agg(F.sum("deg").alias("vol"))
         cd = comm.select(F.col("id").alias("dst"), F.col("community").alias("cand"))
         # weight from each node to each neighboring community
@@ -205,7 +176,7 @@ def _local_moving(
     # this level's final state
     run = run_supersteps(
         nodes, edges, init, step, algorithm="louvain",
-        max_steps=cfg.max_inner_iterations, done=done,
+        max_steps=max(cfg.max_inner_iterations - 1, 0), done=done,
         checkpoint_path=None if cfg.checkpoint_path is None
         else os.path.join(cfg.checkpoint_path, f"level_{level}"),
     )
@@ -215,49 +186,38 @@ def _local_moving(
 
 def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainResult:
     cfg = cfg or LouvainConfig()
-    spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, cfg.checkpoint_path)
-
-    edges = _canonical_weighted(graph).cache()
-    m = edges.agg(F.sum("w")).collect()[0][0] or 1.0
-    nodes = graph.nodes.select("id")
-
-    # node -> community composed across levels
-    assignment = nodes.select("id", F.col("id").alias("community"))
     modularities: list[float] = []
-    level_assignments: list[DataFrame] = []  # composed per-level (dendrogram)
-    t0 = time.time()
+    moving_metrics: list = []
+    total = {}  # m: the total edge weight, observed on the superstep-0 write
 
-    metrics: list = []
-    lvl_edges, lvl_nodes = edges, nodes
-    for level in range(1, cfg.max_levels + 1):
-        moving = _local_moving(lvl_edges, lvl_nodes, m, cfg, level)
-        comm = moving.state.select("id", "community")
-        q = _modularity(lvl_edges, comm, m)
-        ckpt.log(level, algorithm="louvain_level", modularity=q, wall_s=time.time() - t0)
-        metrics += [*moving.metrics, ckpt.metrics[-1]]
-        if modularities and q < modularities[-1]:
-            break  # this level lowered modularity: the previous one is the result
-        # compose: nodes' current community -> new community of that community-node
-        mapping = comm.select(
-            F.col("id").alias("community_key"), F.col("community").alias("new_comm")
+    def init():
+        edges = _canonical_weighted(graph)
+        # weighted degree: a self-loop counts twice
+        deg = edges.select(F.col("a").alias("id"), "w").unionByName(
+            edges.select(F.col("b").alias("id"), "w")
+        ).groupBy("id").agg(F.sum("w").alias("deg"))
+        nodes = graph.nodes.join(deg, "id", "left").select(
+            "id", F.coalesce("deg", F.lit(0.0)).alias("deg")
         )
-        assignment = (
-            assignment.join(mapping, assignment["community"] == mapping["community_key"])
-            .select("id", F.col("new_comm").alias("community"))
-        )
-        assignment = ckpt.checkpoint(assignment, level, name="louvain_assign")
-        if cfg.include_intermediate:
-            level_assignments.append(assignment)
-        if modularities and q - modularities[-1] < cfg.tolerance:
-            modularities.append(q)
-            break
-        modularities.append(q)
-        # coarsen: communities become nodes; aggregate edge weights
+        return {
+            "edges": edges,
+            "nodes": nodes,
+            "assign": graph.nodes.select(
+                "id", F.col("id").alias("community"),
+                F.array().cast("array<long>").alias("levels"),
+            ),
+        }, {"_m": F.sum("w")}
+
+    def step(state, seen, level):
+        m = total.setdefault("m", seen.get("_m") or 1.0)
+        moving = _local_moving(state["edges"], state["nodes"], m, cfg, level)
+        moving_metrics.extend(moving.metrics)
+        comm = moving.state
+        # coarsen: communities become nodes; self-loops keep internal weight
         ca = comm.select(F.col("id").alias("a"), F.col("community").alias("c_a"))
         cb = comm.select(F.col("id").alias("b"), F.col("community").alias("c_b"))
-        nxt = (
-            lvl_edges.join(ca, "a")
+        coarse = (
+            state["edges"].join(ca, "a")
             .join(cb, "b")
             .select(
                 F.least("c_a", "c_b").alias("a"),
@@ -267,34 +227,57 @@ def louvain(graph: LinkGraph, cfg: Optional[LouvainConfig] = None) -> LouvainRes
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
         )
-        nxt = ckpt.checkpoint(nxt, level, name="louvain_edges")
-        n_next = comm.select("community").distinct().count()
-        n_cur = lvl_nodes.count()
-        if n_next == n_cur:  # no contraction -> converged
-            break
-        lvl_edges = nxt
-        lvl_nodes = comm.select(F.col("community").alias("id")).distinct()
-
-    edges.unpersist()
-    final_q = modularities[-1] if modularities else 0.0
-    intermediate = None
-    if cfg.include_intermediate and level_assignments:
-        # dendrogram join: each element is already COMPOSED down to original
-        # node ids (Louvain.java:90-140 parity — its dendrogram stores the
-        # per-level community of every original node, not the coarse node),
-        # so level k is a refinement history: equal at level i => equal at
-        # every later level.  k <= max_levels (10) joins of (id, long) rows.
-        intermediate = nodes
-        for i, a in enumerate(level_assignments):
-            intermediate = intermediate.join(
-                a.select("id", F.col("community").alias(f"_c{i}")), "id"
-            )
-        intermediate = intermediate.select(
+        internal = coarse.where(F.col("a") == F.col("b")).select(
+            F.col("a").alias("id"), F.col("w").alias("_int")
+        )
+        # a community's volume is its degree as a coarse node
+        coarse_nodes = comm.groupBy(F.col("community").alias("id")).agg(
+            F.sum("deg").alias("deg"), F.count(F.lit(1)).alias("_members")
+        ).join(internal, "id", "left")
+        # compose: nodes' current community -> new community of that
+        # community-node, appended to the per-level history
+        mapping = comm.select(
+            F.col("id").alias("community"), F.col("community").alias("_next")
+        )
+        assign = state["assign"].join(mapping, "community").select(
             "id",
-            F.array(*[F.col(f"_c{i}") for i in range(len(level_assignments))]
-                    ).alias("intermediate_communities"),
+            F.col("_next").alias("community"),
+            F.concat("levels", F.array("_next")).alias("levels"),
+        )
+        # Q = sum over communities of int_C/m - (vol_C/(2m))^2
+        return {"nodes": coarse_nodes, "assign": assign, "edges": coarse}, {
+            "nodes": F.count(F.lit(1)),
+            "modularity": F.sum(
+                F.coalesce("_int", F.lit(0.0)) / F.lit(m)
+                - (F.col("deg") / F.lit(2 * m)) ** 2
+            ),
+            "_merged": F.sum(F.col("_members") - 1),
+        }
+
+    def done(state, seen, level):
+        q = seen["modularity"]
+        if modularities and q < modularities[-1]:
+            return True  # this level lowered modularity: the previous one is the result
+        modularities.append(q)
+        return (
+            len(modularities) > 1 and q - modularities[-2] < cfg.tolerance
+        ) or seen["_merged"] == 0  # no contraction -> converged
+
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="louvain_level",
+        max_steps=cfg.max_levels, done=done, checkpoint_path=cfg.checkpoint_path,
+    )
+    ran = len(modularities)
+    assign = run.state["assign"]
+    community = F.col("community") if ran == run.steps else F.element_at("levels", ran)
+    intermediate = None
+    if cfg.include_intermediate and ran:
+        intermediate = assign.select(
+            "id", F.slice("levels", 1, ran).alias("intermediate_communities")
         )
     return LouvainResult(
-        assignment, final_q, modularities, len(modularities), metrics,
+        assign.select("id", community.alias("community")),
+        modularities[-1] if modularities else 0.0,
+        modularities, ran, [*moving_metrics, *run.metrics],
         intermediate_communities=intermediate,
     )

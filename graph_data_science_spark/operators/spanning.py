@@ -9,15 +9,19 @@ the same total weight as Prim on distinct weights (ties broken
 deterministically by (weight, src, dst) ordering, so the result is unique
 and reproducible here too).
 
-Spark decomposition per round:
-- comp(id -> component)   (min-label semantics like WCC)
+Spark decomposition: the rounds are one `plans/superstep.py:run_supersteps`
+call (jobs `boruvka:<round>`) over two named frames, the forest (a, b, w,
+`_new`) and comp(id -> component) (min-label semantics like WCC).  Round r:
+- merge components along the previous round's `_new` forest edges by
+  min-label propagation over that tiny edge set (at most one edge per
+  component), run to fixpoint as a nested `run_supersteps` call (jobs
+  `boruvka_merge:<t>`, durable state under `<checkpoint_path>/merge_<r-1>`)
+  that stops once no label changes;
 - per component: argmin over outgoing edges by (weight, canonical src, dst)
-  — one join + one window/min-struct aggregation
-- union chosen edges into the forest; merge components by min-label
-  propagation over the chosen edges (tiny edge set — at most one per
-  component), run to fixpoint as one `plans/superstep.py:run_supersteps`
-  call per round (jobs `boruvka_merge:<t>`, durable state under
-  `<checkpoint_path>/merge_<round>`) that stops once no label changes.
+  — one join + one min-struct aggregation;
+- union the chosen edges into the forest as `_new`; their count, observed on
+  the forest write, stops the loop at 0.
+A run cut by `max_rounds` merges its last round's edges after the loop.
 """
 
 from __future__ import annotations
@@ -30,9 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import run_supersteps, write, zero
-from graph_data_science_spark.session import no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps, zero
 
 
 def _merge(links: DataFrame, comp: DataFrame) -> DataFrame:
@@ -71,7 +73,6 @@ def minimum_spanning_forest(
 ) -> SpanningForestResult:
     """Borůvka minimum (or maximum) spanning forest over the undirected view."""
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     sign = -1.0 if maximum else 1.0
@@ -89,69 +90,68 @@ def minimum_spanning_forest(
         .repartition(n_part, "a")
         .cache()
     )
-
-    comp = graph.nodes.select("id", F.col("id").alias("comp"))
-    comp = ckpt.checkpoint(comp, 0, name="mst_comp")
-    forest = None
-    rounds = 0
     metrics: list = []
 
-    with no_aqe(spark):
-        for r in range(1, max_rounds + 1):
-            rounds = r
-            ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
-            cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-            cross = (
-                und.join(ca, "a")
-                .join(cb, "b")
-                .where(F.col("ca") != F.col("cb"))
-            )
-            # min outgoing edge per component, deterministic tie-break
-            pick = F.struct(
-                F.col("w").alias("w"), F.col("a").alias("a"), F.col("b").alias("b")
-            )
-            chosen = (
-                cross.select(F.explode(F.array("ca", "cb")).alias("c"), pick.alias("p"))
-                .groupBy("c")
-                .agg(F.min("p").alias("p"))
-                .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), F.col("p.w").alias("w"))
-                .distinct()
-            )
-            chosen, seen = write(ckpt, chosen, {"n": F.count(F.lit(1))}, r, name="mst_chosen")
-            n_chosen = seen["n"]
-            ckpt.log(r, algorithm="boruvka", chosen=n_chosen)
-            metrics.append(ckpt.metrics[-1])
-            if n_chosen == 0:
-                break
-            forest = chosen if forest is None else forest.unionByName(chosen)
-            forest = ckpt.checkpoint(forest, r, name="mst_forest")
+    def merge(forest, comp, r):
+        """Merge components along the forest's `_new` edges: min-label to
+        fixpoint over that tiny edge set (<= #components edges)."""
+        chosen = forest.where("_new")
+        links = chosen.select(
+            F.col("a").alias("x"), F.col("b").alias("y")
+        ).unionByName(chosen.select(F.col("b").alias("x"), F.col("a").alias("y")))
+        # superstep 0 is the first step: every chosen link joins two
+        # components, so it always relabels
+        run = run_supersteps(
+            graph.nodes, links,
+            lambda: (_merge(links, comp).drop("_relabelled"), {}),
+            lambda cl, seen, t: (_merge(links, cl), {
+                "relabelled": F.sum(F.col("_relabelled").cast("long"))
+            }),
+            algorithm="boruvka_merge", max_steps=63, done=zero("relabelled"),
+            checkpoint_path=None if checkpoint_path is None
+            else os.path.join(checkpoint_path, f"merge_{r}"),
+        )
+        metrics.extend(run.metrics)
+        return run.state
 
-            # merge components along chosen edges: min-label to fixpoint over
-            # the tiny chosen-edge set (<= #components edges)
-            links = chosen.select(
-                F.col("a").alias("x"), F.col("b").alias("y")
-            ).unionByName(chosen.select(F.col("b").alias("x"), F.col("a").alias("y")))
-            # superstep 0 is the first step: every chosen link joins two
-            # components, so it always relabels
-            merge = run_supersteps(
-                graph.nodes, links,
-                lambda: (_merge(links, comp).drop("_relabelled"), {}),
-                lambda cl, seen, t: (_merge(links, cl), {
-                    "relabelled": F.sum(F.col("_relabelled").cast("long"))
-                }),
-                algorithm="boruvka_merge", max_steps=63, done=zero("relabelled"),
-                checkpoint_path=None if checkpoint_path is None
-                else os.path.join(checkpoint_path, f"merge_{r}"),
-            )
-            comp = merge.state
-            metrics += merge.metrics
+    def init():
+        return {
+            "forest": spark.createDataFrame([], "a long, b long, w double, _new boolean"),
+            "comp": graph.nodes.select("id", F.col("id").alias("comp")),
+        }, {}
 
+    def step(state, seen, r):
+        forest, comp = state["forest"], state["comp"]
+        if r > 1:
+            comp = merge(forest, comp, r - 1)
+        ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
+        cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
+        cross = und.join(ca, "a").join(cb, "b").where(F.col("ca") != F.col("cb"))
+        # min outgoing edge per component, deterministic tie-break
+        pick = F.struct(F.col("w").alias("w"), F.col("a").alias("a"), F.col("b").alias("b"))
+        chosen = (
+            cross.select(F.explode(F.array("ca", "cb")).alias("c"), pick.alias("p"))
+            .groupBy("c")
+            .agg(F.min("p").alias("p"))
+            .select("p.a", "p.b", "p.w", F.lit(True).alias("_new"))
+            .distinct()
+        )
+        forest = forest.withColumn("_new", F.lit(False)).unionByName(chosen)
+        return {"forest": forest, "comp": comp}, {
+            "chosen": F.sum(F.col("_new").cast("long")),
+            "_w": F.sum("w"),
+        }
+
+    run = run_supersteps(
+        graph.nodes, graph.edges, init, step, algorithm="boruvka",
+        max_steps=max_rounds, done=zero("chosen"), checkpoint_path=checkpoint_path,
+    )
+    forest, comp = run.state["forest"], run.state["comp"]
+    if not run.converged and run.steps:
+        comp = merge(forest, comp, run.steps)  # the last round's edges
     und.unpersist()
-    if forest is None:
-        empty = spark.createDataFrame([], "src long, dst long, weight double")
-        return SpanningForestResult(empty, 0.0, comp, rounds, metrics)
     out = forest.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), (F.col("w") * sign).alias("weight")
     )
-    total = out.agg(F.sum("weight")).collect()[0][0] or 0.0
-    return SpanningForestResult(out, float(total), comp, rounds, metrics)
+    total = sign * run.seen.get("_w", 0.0) or 0.0
+    return SpanningForestResult(out, float(total), comp, run.steps, run.metrics + metrics)

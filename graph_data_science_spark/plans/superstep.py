@@ -5,19 +5,26 @@ runs every iterative algorithm through one loop — compute, masterCompute,
 stop test.  ``run_supersteps`` is that loop for DataFrame state; an operator
 supplies only its superstep body:
 
-- ``init() -> (frame, aggregates)``: the superstep-0 state.  Its columns are
+- ``init() -> (frames, aggregates)``: the superstep-0 state.  Its columns are
   the state schema: every later superstep keeps exactly these columns.
-- ``step(state, seen, t) -> (frame, aggregates)``: superstep ``t`` from the
-  previous state and the aggregates observed on its write.  The frame may
+- ``step(state, seen, t) -> (frames, aggregates)``: superstep ``t`` from the
+  previous state and the aggregates observed on its write.  A frame may
   carry extra columns for its aggregates; they are dropped before the write.
 - ``done(state, seen, t) -> bool``: the stop test, run on the driver after
   each write (the masterCompute analog).  It may add driver-side globals to
   ``seen``; they are logged with the superstep.
 
+``frames`` is one DataFrame, or a dict name -> DataFrame for state with
+several streams (the reference keeps one value array per schema element,
+pregel/.../NodeValue.java:44-60): each is written under its name with the
+schema ``init`` gave it, and ``state`` is the dict of committed frames.
+Resume stays single-frame: named frames with an ``identity`` raise.
+
 ``aggregates`` maps names to Column aggregates.  They ride the checkpoint
-write as ``observe()`` metrics, so a superstep is ONE Spark action; a
-``None`` result (no rows) is read as 0.  Names starting with ``_`` are
-driver-only scalars (e.g. a norm) and are not logged.
+write (of the first named frame) as ``observe()`` metrics, so a superstep
+is one Spark action per frame; a ``None`` result (no rows) is read as 0.
+Names starting with ``_`` are driver-only scalars (e.g. a norm) and are not
+logged.
 
 The loop owns everything else: the (graph, config) fingerprint, the
 checkpointer with its superstep-0 cost report, durable resume, AQE off,
@@ -30,7 +37,7 @@ from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from typing import Callable, NamedTuple, Optional
+from typing import Callable, NamedTuple, Optional, Union
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -43,11 +50,12 @@ from graph_data_science_spark.plans.estimate import cost_report
 from graph_data_science_spark.session import no_aqe
 
 Aggregates = dict[str, Column]
-Frame = tuple[DataFrame, Aggregates]
+Frames = Union[DataFrame, dict[str, DataFrame]]
+Frame = tuple[Frames, Aggregates]
 
 
 class Run(NamedTuple):
-    state: DataFrame  # the last committed superstep
+    state: Frames  # the last committed superstep
     seen: dict  # aggregates observed on its write (+ globals added by done)
     steps: int  # the superstep that stopped the loop, else max_steps
     converged: bool
@@ -68,14 +76,22 @@ def job_tags(spark: SparkSession):
 
 def write(
     ckpt: SuperstepCheckpointer,
-    frame: DataFrame,
+    frame: Frames,
     aggregates: Aggregates,
     t: int,
-    columns: Optional[list] = None,
+    columns=None,
     name: str = "state",
-) -> tuple[DataFrame, dict]:
+) -> tuple[Frames, dict]:
     """Checkpoint superstep ``t`` of stream ``name`` (projected to
-    ``columns``) with its aggregates observed on the write: one action."""
+    ``columns``) with its aggregates observed on the write: one action.
+    Named frames are written each under its name (``columns`` by name), the
+    aggregates observed on the first."""
+    if isinstance(frame, dict):
+        written = [
+            write(ckpt, f, {} if i else aggregates, t, columns and columns[n], n)
+            for i, (n, f) in enumerate(frame.items())
+        ]
+        return dict(zip(frame, (state for state, _ in written))), written[0][1]
     obs = Observation()
     if aggregates:
         frame = frame.observe(obs, *[c.alias(k) for k, c in aggregates.items()])
@@ -94,7 +110,7 @@ def begin(
     max_steps: int,
     checkpoint_path: Optional[str] = None,
     identity: Optional[dict] = None,
-) -> tuple[SuperstepCheckpointer, DataFrame, dict, int]:
+) -> tuple[SuperstepCheckpointer, Frames, dict, int]:
     """(checkpointer, state, seen, superstep to continue from) of one run.
 
     The superstep-0 cost report is logged first.  With both a durable path
@@ -114,7 +130,10 @@ def begin(
     if resumed is not None and 0 < resumed < max_steps:
         ckpt.log(resumed, algorithm=algorithm, resumed_from=resumed)
         return ckpt, ckpt.load(resumed), {}, resumed
-    state, seen = write(ckpt, *init(), 0)
+    frames, aggregates = init()
+    if identity is not None and not isinstance(frames, DataFrame):
+        raise ValueError(f"{algorithm}: named frames do not resume; drop identity")
+    state, seen = write(ckpt, frames, aggregates, 0)
     return ckpt, state, seen, 0
 
 
@@ -127,11 +146,11 @@ def run_supersteps(
     nodes: DataFrame,
     edges: DataFrame,
     init: Callable[[], Frame],
-    step: Callable[[DataFrame, dict, int], Frame],
+    step: Callable[[Frames, dict, int], Frame],
     *,
     algorithm: str,
     max_steps: int,
-    done: Callable[[DataFrame, dict, int], bool],
+    done: Callable[[Frames, dict, int], bool],
     checkpoint_path: Optional[str] = None,
     identity: Optional[dict] = None,
 ) -> Run:
@@ -143,7 +162,9 @@ def run_supersteps(
             nodes, edges, init, algorithm=algorithm, max_steps=max_steps,
             checkpoint_path=checkpoint_path, identity=identity,
         )
-        columns = state.columns
+        columns = state.columns if isinstance(state, DataFrame) else {
+            name: frame.columns for name, frame in state.items()
+        }
         t0 = time.time()
         with no_aqe(spark):
             for t in range(first + 1, max_steps + 1):

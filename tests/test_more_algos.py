@@ -1,14 +1,12 @@
-"""Tests for K-1 coloring, Louvain, KMeans, FastRP, random walks, and
-relationship splitting."""
+"""Tests for K-1 coloring, KMeans, FastRP, random walks, and relationship
+splitting."""
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
-from graph_data_science_spark.operators.graph import Aggregation, LinkGraph
+from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.operators.coloring import k1coloring, validate_coloring
-from graph_data_science_spark.operators.louvain import louvain, LouvainConfig
 from graph_data_science_spark.operators.kmeans import kmeans, KmeansConfig
 from graph_data_science_spark.operators.fastrp import fastrp, FastRPConfig
 from graph_data_science_spark.operators.walks import (
@@ -43,52 +41,6 @@ def test_k1coloring_deterministic(spark):
     a = sorted(map(tuple, k1coloring(g).colors.collect()))
     b = sorted(map(tuple, k1coloring(g).colors.collect()))
     assert a == b
-
-
-def test_louvain_two_cliques(spark):
-    g = LinkGraph.from_edges(spark, TWO_CLIQUES)
-    res = louvain(g, LouvainConfig(max_levels=3))
-    comm = {r["id"]: r["community"] for r in res.communities.collect()}
-    # the two cliques end in two distinct communities
-    assert len({comm[i] for i in [0, 1, 2, 3]}) == 1
-    assert len({comm[i] for i in [4, 5, 6, 7]}) == 1
-    assert comm[0] != comm[4]
-    assert res.modularity > 0.3
-
-
-# six 4-cliques joined in a ring: level 1 finds the cliques, level 2 merges
-# neighbouring cliques
-RING_OF_CLIQUES = [
-    (a, b)
-    for c in range(0, 24, 4)
-    for a in range(c, c + 4)
-    for b in range(a + 1, c + 4)
-] + [(c + 3, (c + 4) % 24) for c in range(0, 24, 4)]
-
-
-def test_louvain_keeps_one_metrics_file_per_row(spark, tmp_path):
-    ck = tmp_path / "louvain"
-    g = LinkGraph.from_edges(spark, RING_OF_CLIQUES)
-    res = louvain(g, LouvainConfig(max_levels=3, checkpoint_path=str(ck)))
-    assert res.ran_levels >= 2
-    assert {m.get("level") for m in res.metrics if "level" in m} >= {1, 2}
-    files = list(ck.rglob("metrics/*.json"))
-    assert len(files) == len(res.metrics)
-
-
-def test_louvain_returns_its_best_level(spark):
-    """On this sparse orders graph the third level lowers modularity; the
-    result is the second level, and the dropped level is not reported."""
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    e = o.select(
-        (F.col("o_orderkey") % 4993).alias("src"),
-        ((F.col("o_custkey") * 7) % 4993).alias("dst"),
-    ).where(F.col("src") != F.col("dst"))
-    g = LinkGraph.from_edges(spark, e, aggregation=Aggregation.SINGLE)
-    res = louvain(g, LouvainConfig(max_levels=3, max_inner_iterations=5))
-    qs = res.modularities
-    assert all(b >= a for a, b in zip(qs, qs[1:]))
-    assert res.modularity == max(qs)
 
 
 def test_kmeans_separated_clusters(spark):
@@ -162,36 +114,3 @@ def test_split_relationships(spark):
     assert sorted(map(tuple, out["test_pos"].collect())) == sorted(
         map(tuple, out2["test_pos"].collect())
     )
-
-
-def test_louvain_intermediate_communities(spark):
-    """Dendrogram parity (Louvain.java:90-140): per-level assignments are
-    retained, compose to the final assignment, and only ever MERGE across
-    levels (coarsening refinement history)."""
-    g = LinkGraph.from_edges(spark, TWO_CLIQUES)
-    res = louvain(g, LouvainConfig(max_levels=3, include_intermediate=True))
-    assert res.intermediate_communities is not None
-    rows = {
-        r["id"]: r["intermediate_communities"]
-        for r in res.intermediate_communities.collect()
-    }
-    final = {r["id"]: r["community"] for r in res.communities.collect()}
-    assert set(rows) == set(final)
-    n_levels = res.ran_levels
-    for i, levels in rows.items():
-        assert len(levels) == n_levels
-        # level-k assignment composes to the final assignment
-        assert levels[-1] == final[i]
-    # merge monotonicity: same community at level k => same at every level > k
-    ids = sorted(rows)
-    for k in range(n_levels - 1):
-        for a in ids:
-            for b in ids:
-                if rows[a][k] == rows[b][k]:
-                    assert rows[a][k + 1] == rows[b][k + 1]
-
-
-def test_louvain_default_skips_dendrogram(spark):
-    g = LinkGraph.from_edges(spark, TWO_CLIQUES)
-    res = louvain(g, LouvainConfig(max_levels=2))
-    assert res.intermediate_communities is None

@@ -16,7 +16,13 @@ from graph_data_science_spark.operators.labelprop import (
 )
 from graph_data_science_spark.operators.betweenness import betweenness_centrality
 from graph_data_science_spark.operators.closeness import hop_distances
+from graph_data_science_spark.operators.graphsage import (
+    GraphSageConfig,
+    degree_features,
+    graphsage_train,
+)
 from graph_data_science_spark.operators.hits import HitsConfig, hits
+from graph_data_science_spark.operators.influence import influence_maximization
 from graph_data_science_spark.operators.pagerank import (
     PageRankConfig,
     eigenvector,
@@ -238,6 +244,11 @@ def test_operators_release_their_cached_edge_tables(spark):
         "bfs": lambda: bfs(g, 0),
         "hop_distances": lambda: hop_distances(g),
         "betweenness_centrality": lambda: betweenness_centrality(g),
+        "louvain": lambda: louvain(g, LouvainConfig(max_levels=1, max_inner_iterations=1)),
+        "minimum_spanning_forest": lambda: minimum_spanning_forest(g, max_rounds=1),
+        "influence_maximization": lambda: influence_maximization(
+            g, k=1, n_rr_sets=5, max_depth=1
+        ),
     }
     for name, call in calls.items():
         before = _cached_tables(spark)
@@ -294,10 +305,26 @@ def test_ported_loops_describe_their_jobs(spark):
         ),
         "maxkcut": lambda: approx_max_k_cut(g, k=2, max_iterations=1),
         "boruvka_merge": lambda: minimum_spanning_forest(weighted, max_rounds=1),
+        "betweenness_sweep": lambda: betweenness_centrality(
+            g, sources=g.nodes.where("id = 0"), max_depth=2
+        ),
+        "influence": lambda: influence_maximization(g, k=1, n_rr_sets=5, max_depth=1),
     }
+    tags_of = {}
     for algorithm, call in calls.items():
         _, tags = _new_jobs(spark, call)
+        tags_of[algorithm] = tags
         assert {f"{algorithm}:0", f"{algorithm}:1"} <= tags, (algorithm, tags)
+    # the loops around Louvain's local moving and Borůvka's merge
+    for outer, inner in [("louvain_level", "louvain"), ("boruvka", "boruvka_merge")]:
+        assert {f"{outer}:0", f"{outer}:1"} <= tags_of[inner], (outer, tags_of[inner])
+    # GraphSAGE's final materialization is a zero-step run: superstep 0 only
+    _, tags = _new_jobs(spark, lambda: graphsage_train(
+        g, degree_features(g, dim=4),
+        GraphSageConfig(embedding_dimension=4, sample_sizes=(2,), epochs=1,
+                        max_iterations=1, max_train_nodes=4, search_depth=1),
+    ))
+    assert "graphsage:0" in tags and "graphsage:1" not in tags, tags
 
 
 def _actions_by_description(spark, prefix):
@@ -337,3 +364,52 @@ def test_max_k_cut_reports_the_cut_of_its_assignment(spark):
     for iterations in (0, 1, 4):
         res = approx_max_k_cut(g, k=3, max_iterations=iterations)
         assert res.cut_weight == pytest.approx(_cut_weight(g, res.assignment))
+
+
+def test_named_frames_are_written_under_their_names(spark, tmp_path):
+    """A dict of frames: each is written under its name and keeps its init
+    schema, the aggregates ride the write of the first frame (one action per
+    frame, no extra job), there is one metrics row per superstep, and an
+    ``identity`` (resume) is refused."""
+    g = _chain(spark, 4)
+    ck = tmp_path / "named"
+
+    def init():
+        return {
+            "a": g.nodes.select("id", F.lit(0).cast("long").alias("x")),
+            "b": g.nodes.select(F.col("id").alias("k")),
+        }, {}
+
+    def step(state, seen, t):
+        a = state["a"].select(
+            "id", (F.col("x") + 1).alias("x"), (F.col("id") < t).alias("_low")
+        )
+        return {"a": a, "b": state["b"].where(F.col("k") >= t)}, {
+            "low": F.sum(F.col("_low").cast("long"))
+        }
+
+    before = _actions_by_description(spark, "named:")
+    run = run_supersteps(
+        g.nodes, g.edges, init, step, algorithm="named", max_steps=5,
+        done=lambda state, seen, t: seen["low"] == 3, checkpoint_path=str(ck),
+    )
+    after = _actions_by_description(spark, "named:")
+    assert run.converged and run.steps == 3
+    assert set(run.state) == {"a", "b"}
+    assert run.state["a"].columns == ["id", "x"]
+    assert {r["x"] for r in run.state["a"].collect()} == {3}
+    assert sorted(r["k"] for r in run.state["b"].collect()) == [3, 4]
+    for t in range(4):
+        for name in ("a", "b"):
+            assert (ck / "state" / f"{name}_superstep={t:05d}" / "_COMMITTED").exists()
+        tag = f"named:{t}"
+        assert after.get(tag, 0) - before.get(tag, 0) == 2, (tag, before, after)
+    rows = _superstep_rows(run.metrics)
+    assert [r["superstep"] for r in rows] == [1, 2, 3]
+    assert [r["low"] for r in rows] == [1, 2, 3]
+    assert all(set(r) == COMMON | {"low"} for r in rows)
+    with pytest.raises(ValueError, match="named frames"):
+        run_supersteps(
+            g.nodes, g.edges, init, step, algorithm="named", max_steps=1,
+            done=lambda state, seen, t: True, identity={"max_steps": 1},
+        )
