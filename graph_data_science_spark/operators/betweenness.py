@@ -100,7 +100,6 @@ def betweenness_centrality(
     exact: bool = False,
 ) -> DataFrame:
     """id, score (unnormalized dependency sums, Brandes semantics)."""
-    roots = guard_all_sources(graph, sources, exact, "betweenness_centrality")
     edges = graph.oriented_edges(orientation).select("src", "dst").distinct().cache()
 
     # forward phase: levels[(root, id, sigma, level)]
@@ -109,12 +108,19 @@ def betweenness_centrality(
             "root", F.col("dst").alias("nid")
         ).agg(F.sum("sigma").alias("sigma")).withColumnRenamed("nid", "id")
 
-    run = reach(
-        graph.nodes, graph.edges,
-        roots.select(F.col("id").alias("root"), "id", F.lit(1.0).alias("sigma")),
-        hop, keys=["root", "id"], level="level", algorithm="betweenness",
-        max_steps=max_depth,
-    )
+    def roots():  # inside the run: the guard's node count is betweenness:0
+        return guard_all_sources(graph, sources, exact, "betweenness_centrality").select(
+            F.col("id").alias("root"), "id", F.lit(1.0).alias("sigma")
+        )
+
+    try:
+        run = reach(
+            graph.nodes, graph.edges, roots, hop, keys=["root", "id"], level="level",
+            algorithm="betweenness", max_steps=max_depth,
+        )
+    except ValueError:
+        edges.unpersist()
+        raise
     levels = run.state.cache()
     max_level = run.steps - 1 if run.converged else run.steps
 

@@ -149,19 +149,26 @@ def hop_distances(
     """
     from graph_data_science_spark.operators.betweenness import guard_all_sources
 
-    roots = guard_all_sources(graph, sources, exact, "hop_distances")
     edges = graph.oriented_edges(orientation).select("src", "dst").distinct().cache()
+
+    def roots():  # inside the run: the guard's node count is hop_distances:0
+        return guard_all_sources(graph, sources, exact, "hop_distances").select(
+            F.col("id").alias("root"), "id"
+        )
 
     def hop(frontier, t):
         return frontier.join(edges, frontier["id"] == edges["src"]).select(
             "root", F.col("dst").alias("id")
         ).distinct()
 
-    run = reach(
-        graph.nodes, graph.edges, roots.select(F.col("id").alias("root"), "id"),
-        hop, keys=["root", "id"], level="dist", algorithm="hop_distances",
-        max_steps=max_depth,
-    )
+    try:
+        run = reach(
+            graph.nodes, graph.edges, roots, hop, keys=["root", "id"], level="dist",
+            algorithm="hop_distances", max_steps=max_depth,
+        )
+    except ValueError:
+        edges.unpersist()
+        raise
     edges.unpersist()
     return run.state.where(F.col("dist") > 0)
 

@@ -13,7 +13,8 @@ Reverse-Influence-Sampling (RIS / Borgs et al., the basis of TIM/IMM):
 2. greedy max-coverage over the RR sets: k rounds of "pick the node covering
    the most uncovered sets" (one groupBy + top-1 per round), run as one
    `run_supersteps` call (jobs `influence:<round>`) over the memberships of
-   the uncovered sets, which stops once every set is covered;
+   the uncovered sets, which stops once every set is covered; superstep 0
+   only picks the first seed, as reach has already written the memberships;
 3. spread estimate of the seed set = n * covered_fraction — an unbiased
    estimator of the expected independent-cascade spread.
 
@@ -66,22 +67,26 @@ def influence_maximization(
         .repartition(n_part, "src")
         .cache()
     )
-    n = graph.node_count()
+    n = 0
 
-    # random roots: sample_id -> node picked by seeded index into the sorted
-    # node list (distributed zipWithIndex, no global window)
-    from pyspark.sql import types as T
+    def roots():
+        # random roots: sample_id -> node picked by seeded index into the
+        # sorted node list (distributed zipWithIndex, no global window); run
+        # inside the RR run, so these jobs are described influence_rr:0
+        from pyspark.sql import types as T
 
-    rdd = graph.nodes.select("id").orderBy("id").rdd.map(lambda r: r["id"]).zipWithIndex()
-    idx = spark.createDataFrame(
-        rdd, T.StructType([T.StructField("node", T.LongType(), False),
-                           T.StructField("idx", T.LongType(), False)])
-    )
-    samples = spark.range(n_rr_sets).select(F.col("id").alias("set_id"))
-    roots = samples.select(
-        "set_id",
-        (_u01(F.col("set_id"), F.lit("root"), F.lit(seed)) * n).cast("long").alias("idx"),
-    ).join(idx, "idx").select("set_id", F.col("node").alias("id"))
+        nonlocal n
+        n = graph.node_count()
+        rdd = graph.nodes.select("id").orderBy("id").rdd.map(lambda r: r["id"]).zipWithIndex()
+        idx = spark.createDataFrame(
+            rdd, T.StructType([T.StructField("node", T.LongType(), False),
+                               T.StructField("idx", T.LongType(), False)])
+        )
+        samples = spark.range(n_rr_sets).select(F.col("id").alias("set_id"))
+        return samples.select(
+            "set_id",
+            (_u01(F.col("set_id"), F.lit("root"), F.lit(seed)) * n).cast("long").alias("idx"),
+        ).join(idx, "idx").select("set_id", F.col("node").alias("id"))
 
     # edge (u -> v) live in sample s iff u01(s, u, v) < p; note the
     # predicate keys the ORIGINAL edge direction (dst, src of rev)
@@ -101,7 +106,7 @@ def influence_maximization(
     # (set_id, id) memberships of the sets no seed covers yet
     seeds: list = []  # [(node, sets covered)]
 
-    def step(remaining, seen, t):
+    def pick(remaining):
         top = (
             remaining.groupBy("id")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -110,19 +115,31 @@ def influence_maximization(
             .collect()
         )
         if top:
-            node, cnt = int(top[0]["id"]), int(top[0]["cnt"])
-            seeds.append((node, cnt))
-            covered_sets = remaining.where(F.col("id") == node).select("set_id")
-            remaining = remaining.join(covered_sets, "set_id", "left_anti")
-        return remaining, {"remaining": F.count(F.lit(1))}
+            seeds.append((int(top[0]["id"]), int(top[0]["cnt"])))
 
-    def done(remaining, seen, t):
+    def init():
+        # superstep 0 picks the first seed from reach's committed memberships
+        # and writes nothing
+        if k > 0:
+            pick(member)
+        return {}, {}
+
+    def step(state, seen, t):
+        remaining = state.get("remaining", member)
+        if t > 1:
+            pick(remaining)
+        if len(seeds) == t:
+            covered_sets = remaining.where(F.col("id") == seeds[-1][0]).select("set_id")
+            remaining = remaining.join(covered_sets, "set_id", "left_anti")
+        return {"remaining": remaining}, {"remaining": F.count(F.lit(1))}
+
+    def done(state, seen, t):
         if len(seeds) == t:
             seen["seed_node"], seen["covered"] = seeds[-1]
         return seen["remaining"] == 0
 
     greedy = run_supersteps(
-        graph.nodes, graph.edges, lambda: (member, {}), step,
+        graph.nodes, graph.edges, init, step,
         algorithm="influence", max_steps=k, done=done,
         checkpoint_path=checkpoint_path,
     )

@@ -21,29 +21,26 @@ Reference semantics (must match fixtures to 1e-5, FIXTURES.md §B1-B4):
 
 Spark decomposition: per superstep one join (active state ⋈ out-edge shares)
 + one hash aggregation (groupBy(dst).sum == the ReducingMessenger's combine,
-map-side partial agg included) + one outer join back into state.  State is
-checkpointed every superstep (plan truncation + resume, plans/checkpoint.py).
-At scale the state⋈edges join is AQE skew-split; the message aggregation
-needs no salting because partial (map-side) combine bounds reducer input by
-the map-task count.
+map-side partial agg included) + one outer join back into state on the
+co-partitioned id.  Every loop is `plans/superstep.py:run_supersteps`;
+PageRank and ArticleRank pass ``checkpoint_every`` as its window, so K
+supersteps run as one job with one checkpoint write (plan truncation +
+resume) whose observed active count is the stop test, and eigenvector
+writes every superstep.  The message aggregation needs no salting because
+partial (map-side) combine bounds reducer input by the map-task count.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph, Orientation
-from graph_data_science_spark.plans.superstep import (
-    begin,
-    job_tags,
-    run_supersteps,
-    write,
-)
-from graph_data_science_spark.session import cache_copartitioned, no_aqe
+from graph_data_science_spark.plans.superstep import run_supersteps
+from graph_data_science_spark.session import cache_copartitioned
 
 
 @dataclass
@@ -173,11 +170,13 @@ def article_rank(graph: LinkGraph, cfg: PageRankConfig | None = None) -> Central
 
 
 def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> CentralityResult:
-    spark = graph.nodes.sparkSession
     algorithm = "pagerank" if denominator == "degree" else "articlerank"
     d = cfg.damping_factor
     shares = _out_shares(graph, cfg, denominator)
     init = _teleport(cfg)
+    # supersteps 0..max_iterations-1: superstep 0 is the initial state
+    last = cfg.max_iterations - 1
+    every = max(1, int(cfg.checkpoint_every))
 
     def initial_state():
         if cfg.seed_ranks is None:
@@ -193,221 +192,178 @@ def _delta_push(graph: LinkGraph, cfg: PageRankConfig, denominator: str) -> Cent
         ).select("id", F.coalesce("_seed", init).alias("r"))
         return _jacobi(r0, shares, init, d), {}
 
-    ckpt, state, _, start_t = begin(
-        graph.nodes, graph.edges, initial_state, algorithm=algorithm,
-        max_steps=cfg.max_iterations, checkpoint_path=cfg.checkpoint_path,
-        identity={
-            "damping": cfg.damping_factor,
-            "tolerance": cfg.tolerance,
-            "source_nodes": cfg.source_nodes,
-            "weighted": cfg.weighted,
-            "orientation": str(cfg.orientation),
-            # seeded and unseeded runs must not resume each other's
-            # checkpoints; distinct seeds should use distinct paths
-            "seeded": cfg.seed_ranks is not None,
-            # extrapolated runs follow a different superstep trajectory
-            "extrapolate_every": cfg.extrapolate_every,
-        },
-    )
+    # The window (checkpoint_every = K) is the kernel's: K supersteps run as
+    # one job with one write.  Inside a window the state is a *delta-only*
+    # stream — (id, delta) of the nodes that received messages, rank left
+    # null — so each superstep references only the previous one's rows, the
+    # window's plan grows linearly, and nodes that stop sending drop out of
+    # the stream (active-set pruning in data volume, not just a filter).
+    # The kernel persists each in-window delta: it has TWO consumers, the
+    # next superstep's senders and the boundary rebuild, which would
+    # otherwise re-execute every aggregation of the chain.  At the boundary
+    # rank is rebuilt by a UNION of the committed rank rows with every
+    # window delta + one hash aggregation (stats ADD under union, so no
+    # sizeInBytes blowup); measured against a per-superstep join of the
+    # state with the new delta, this costs less CPU.  With K=1 this
+    # reproduces GDS's per-iteration convergence reporting exactly.
+    trail: list = []  # the window's states: committed, then the deltas
+    held: list = []  # persisted restart vectors r*
+    last_x = None  # superstep of the latest extrapolation, or of the start
+    restarted = False  # whether the latest boundary extrapolated
 
+    def step(state, seen, t):
+        nonlocal last_x, restarted
+        if last_x is None:
+            last_x = t - 1  # the superstep the run starts (or resumes) from
+        while held:  # the boundary that read r* has committed
+            held.pop().unpersist()
+        trail.append(state)
+        # superstep t receives what superstep t-1 sent; on the initial
+        # superstep every node sends regardless of tolerance
+        # (PageRankComputation.java:90 `delta > tolerance || isInitialSuperstep`).
+        # |delta|: seeded warm starts iterate on a residual that can be
+        # negative at nodes whose seed overshot; unseeded runs only ever
+        # produce nonnegative deltas, so abs() changes nothing there.
+        gate = F.lit(0.0) if t == 1 else F.lit(cfg.tolerance)
+        # SHUFFLE_HASH: broadcasting per-superstep node state is a serial
+        # driver bottleneck (and impossible at 10^12 nodes); sort-merge
+        # would re-sort the edge stream every superstep.
+        senders = state.where(F.abs(F.col("delta")) > gate).hint("shuffle_hash")
+        delta = (
+            senders.join(shares, senders["id"] == shares["src"])
+            .groupBy("dst")
+            .agg((F.lit(d) * F.sum(F.col("delta") * F.col("share"))).alias("delta"))
+            .select(
+                F.col("dst").alias("id"), F.lit(None).cast("double").alias("rank"), "delta"
+            )
+        )
+        if t % every and t != last:
+            return delta, {}
+        base, window = trail[0], [*trail[1:], delta]
+        trail.clear()
+        restarted = (
+            cfg.extrapolate_every > 0 and t - last_x >= cfg.extrapolate_every and t < last
+        )
+        if restarted:
+            last_x = t
+            new_state = extrapolated(base, window)
+        else:
+            # rank' = rank + the window's deltas (union + one agg); the last
+            # delta rides along tagged as the next window's senders
+            rows = base.select("id", F.col("rank").alias("v"), F.lit(0).alias("last"))
+            for i, w_df in enumerate(window):
+                rows = rows.unionByName(w_df.select(
+                    "id", F.col("delta").alias("v"),
+                    F.lit(1 if i == len(window) - 1 else 0).alias("last"),
+                ))
+            new_state = rows.groupBy("id").agg(
+                F.sum("v").alias("rank"),
+                F.coalesce(
+                    F.sum(F.when(F.col("last") == 1, F.col("v"))), F.lit(0.0)
+                ).alias("delta"),
+            )
+        active = F.sum((F.abs(F.col("delta")) > cfg.tolerance).cast("long"))
+        return new_state, {"active": active}
+
+    def extrapolated(base, window):
+        """Aitken Δ² restart at a boundary.  With a full window (≥4 deltas)
+        the extrapolation runs on the STRIDE-2 subsequence x_{t-2k}:
+        ΔX = δ_t + δ_{t-1} vs δ_{t-2} + δ_{t-3}, whose ratio is exactly d·λ²
+        for BOTH a pure geometric mode and a period-2 alternation (2-cycles
+        make consecutive per-node ratios oscillate, stalling plain Aitken —
+        stride 2 squares the oscillation away while reproducing δ·r/(1-r)
+        exactly on pure-geometric nodes).  Short windows fall back to 1-step
+        Aitken; for a length-1 window δ_{t-1} is the committed state's delta
+        column (already inside rank — excluded from the rank sum via
+        in_rank=0)."""
+        rows = base.select(
+            "id", F.col("rank").alias("v"), F.lit(0).alias("last"), F.lit(1).alias("in_rank"),
+        )
+        for i, w_df in enumerate(window):
+            back = len(window) - 1 - i  # 0 = δ_t, 1 = δ_{t-1}, ...
+            rows = rows.unionByName(w_df.select(
+                "id", F.col("delta").alias("v"),
+                F.lit(back + 1 if back < 4 else 0).alias("last"), F.lit(1).alias("in_rank"),
+            ))
+        if len(window) == 1:
+            rows = rows.unionByName(base.select(
+                "id", F.col("delta").alias("v"),
+                F.lit(2).alias("last"), F.lit(0).alias("in_rank"),
+            ))
+        stride2 = len(window) >= 4
+
+        def tagsum(tag: int):
+            return F.coalesce(F.sum(F.when(F.col("last") == tag, F.col("v"))), F.lit(0.0))
+
+        agg = rows.groupBy("id").agg(
+            F.sum(F.when(F.col("in_rank") == 1, F.col("v"))).alias("rank"),
+            *(
+                [(tagsum(1) + tagsum(2)).alias("d1"), (tagsum(3) + tagsum(4)).alias("d0")]
+                if stride2
+                else [tagsum(1).alias("d1"), tagsum(2).alias("d0")]
+            ),
+        )
+        # max tail a ratio-d mode can still contribute, in d1 units
+        cap = (d * d / (1.0 - d * d)) if stride2 else (d / (1.0 - d))
+        denom = F.col("d0") - F.col("d1")
+        # valid only while the per-node sequence is decaying with a
+        # consistent sign (implies denom != 0); elsewhere no correction —
+        # those nodes are converging on their own.
+        valid = (F.col("d1") * F.col("d0") > 0) & (
+            F.abs(F.col("d1")) < F.abs(F.col("d0"))
+        )
+        corr = F.when(
+            valid,
+            F.signum(F.col("d1"))
+            * F.least(
+                F.abs(F.col("d1") * F.col("d1") / denom),
+                F.lit(cap) * F.abs(F.col("d1")),
+            ),
+        ).otherwise(F.lit(0.0))
+        # persist r* once (it feeds both sides of the restart join), then
+        # restart the recurrence with one Jacobi step — identical to the
+        # seed_ranks warm-start path.
+        rstar = agg.select("id", (F.col("rank") + corr).alias("r"))
+        held.append(rstar.persist(StorageLevel.MEMORY_AND_DISK))
+        return _jacobi(held[-1], shares, init, d)
+
+    def done(state, seen, t):
+        # an extrapolated boundary spends one extra M^T·r product on the
+        # restart — logged for honest edges/sec accounting
+        seen["extrapolated"] = restarted
+        return cfg.tolerance > 0.0 and seen["active"] == 0
+
+    try:
+        run = run_supersteps(
+            graph.nodes, graph.edges, initial_state, step,
+            algorithm=algorithm, max_steps=last, done=done,
+            checkpoint_path=cfg.checkpoint_path, window=every,
+            identity={
+                "damping": cfg.damping_factor,
+                "tolerance": cfg.tolerance,
+                "source_nodes": cfg.source_nodes,
+                "weighted": cfg.weighted,
+                "orientation": str(cfg.orientation),
+                # seeded and unseeded runs must not resume each other's
+                # checkpoints; distinct seeds should use distinct paths
+                "seeded": cfg.seed_ranks is not None,
+                # extrapolated runs follow a different superstep trajectory
+                "extrapolate_every": cfg.extrapolate_every,
+            },
+        )
+    finally:
+        for frame in [shares, *held]:
+            frame.unpersist()
     # ranIterations mirrors Pregel.run (pregel/.../Pregel.java:154-190): on
     # convergence the 0-based index of the converged iteration is reported;
     # otherwise maxIterations.
-    ran, converged = cfg.max_iterations, False
-    if cfg.max_iterations <= 0:
-        shares.unpersist()
-        return CentralityResult(state.select("id", F.col("rank").alias("score")), 0, False)
-
-    t0 = time.time()
-    # Superstep window (checkpoint_every = K): K supersteps run as ONE job.
-    # The message stream is a *delta-only* chain — each step references only
-    # the previous step's (id, delta) rows, once — so the window's plan grows
-    # linearly, and nodes that stop sending drop out of the stream entirely
-    # (active-set pruning in data volume, not just a filter).  At the window
-    # boundary rank is rebuilt by UNION of the carried rank rows with every
-    # window delta + one hash aggregation (stats ADD under union, so no
-    # sizeInBytes blowup), and rank+final-delta are materialized in a single
-    # checkpoint write whose observe() metric doubles as the convergence
-    # count — one action, one barrier, one serial driver round per K
-    # supersteps.  With K=1 this reproduces GDS's per-iteration convergence
-    # reporting exactly.
-    #
-    # Each in-window delta is persisted (MEMORY_AND_DISK, node-sized rows):
-    # delta_i has TWO consumers — the next superstep's senders and the
-    # boundary rank rebuild — and without the persist the rebuild re-executes
-    # every reduce-side aggregation of the chain (measured: K=8 DOUBLED q1
-    # wall at sf0.1 vs K=4, BENCH.md "checkpoint-window sensitivity").  The
-    # cache is populated inside the one window job and dropped right after
-    # the boundary write commits, so peak extra memory is K node-sized
-    # frames; on block loss the lineage is intact and recompute is bounded by
-    # the previous parquet checkpoint.  With it, widening K trades nothing
-    # away — the serial barrier floor amortizes over K supersteps while the
-    # boundary rebuild stays one union + one agg over already-materialized
-    # rows.
-    every = max(1, int(cfg.checkpoint_every))
-    from pyspark import StorageLevel
-
-    lap = t0
-    with no_aqe(spark), job_tags(spark) as describe:
-        delta = None  # in-window chained (id, delta) stream; None = at boundary
-        window: list = []
-        last_x = start_t  # superstep of the latest extrapolation (or start)
-        for t in range(start_t + 1, cfg.max_iterations):
-            describe(f"{algorithm}:{t}")
-            # superstep t receives what superstep t-1 sent; on the initial
-            # superstep every node sends regardless of tolerance
-            # (PageRankComputation.java:90 `delta > tolerance || isInitialSuperstep`).
-            gate = F.lit(0.0) if t == 1 else F.lit(cfg.tolerance)
-            prev = state.select("id", "delta") if delta is None else delta
-            # SHUFFLE_HASH: broadcasting per-superstep node state is a serial
-            # driver bottleneck (and impossible at 10^12 nodes); sort-merge
-            # would re-sort the edge stream every superstep.
-            # |delta|: seeded warm starts iterate on a residual that can be
-            # negative at nodes whose seed overshot; unseeded runs only ever
-            # produce nonnegative deltas, so abs() changes nothing there.
-            senders = prev.where(F.abs(F.col("delta")) > gate).hint("shuffle_hash")
-            delta = (
-                senders.join(shares, senders["id"] == shares["src"])
-                .groupBy("dst")
-                .agg((F.lit(d) * F.sum(F.col("delta") * F.col("share"))).alias("delta"))
-                .select(F.col("dst").alias("id"), "delta")
-            )
-            delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
-            window.append(delta)
-            if t % every != 0 and t != cfg.max_iterations - 1:
-                continue
-
-            # boundary: rank' = rank + sum of window deltas (union + one agg);
-            # the final window delta rides along tagged so the next window's
-            # senders read it from the same materialized state.
-            do_x = (
-                cfg.extrapolate_every > 0
-                and t - last_x >= cfg.extrapolate_every
-                and t < cfg.max_iterations - 1
-            )
-            if do_x:
-                last_x = t
-            if not do_x:
-                rows = state.select(
-                    "id", F.col("rank").alias("v"), F.lit(0).alias("last")
-                )
-                for i, w_df in enumerate(window):
-                    tag = 1 if i == len(window) - 1 else 0
-                    rows = rows.unionByName(
-                        w_df.select(
-                            "id", F.col("delta").alias("v"), F.lit(tag).alias("last")
-                        )
-                    )
-                new_state = rows.groupBy("id").agg(
-                    F.sum("v").alias("rank"),
-                    F.coalesce(
-                        F.sum(F.when(F.col("last") == 1, F.col("v"))), F.lit(0.0)
-                    ).alias("delta"),
-                )
-            else:
-                # Aitken Δ² boundary.  With a full window (≥4 deltas) the
-                # extrapolation runs on the STRIDE-2 subsequence x_{t-2k}:
-                # ΔX = δ_t + δ_{t-1} vs δ_{t-2} + δ_{t-3}, whose ratio is
-                # exactly d·λ² for BOTH a pure geometric mode and a period-2
-                # alternation (2-cycles make consecutive per-node ratios
-                # oscillate, stalling plain Aitken — stride 2 squares the
-                # oscillation away while reproducing δ·r/(1-r) exactly on
-                # pure-geometric nodes).  Short windows fall back to 1-step
-                # Aitken; for a length-1 window δ_{t-1} is the carried
-                # state's delta column (already inside rank — excluded from
-                # the rank sum via in_rank=0).
-                rows = state.select(
-                    "id", F.col("rank").alias("v"),
-                    F.lit(0).alias("last"), F.lit(1).alias("in_rank"),
-                )
-                for i, w_df in enumerate(window):
-                    back = len(window) - 1 - i  # 0 = δ_t, 1 = δ_{t-1}, ...
-                    tag = back + 1 if back < 4 else 0
-                    rows = rows.unionByName(
-                        w_df.select(
-                            "id", F.col("delta").alias("v"),
-                            F.lit(tag).alias("last"), F.lit(1).alias("in_rank"),
-                        )
-                    )
-                if len(window) == 1:
-                    rows = rows.unionByName(
-                        state.select(
-                            "id", F.col("delta").alias("v"),
-                            F.lit(2).alias("last"), F.lit(0).alias("in_rank"),
-                        )
-                    )
-                stride2 = len(window) >= 4
-
-                def _tagsum(tag: int):
-                    return F.coalesce(
-                        F.sum(F.when(F.col("last") == tag, F.col("v"))), F.lit(0.0)
-                    )
-
-                agg = rows.groupBy("id").agg(
-                    F.sum(F.when(F.col("in_rank") == 1, F.col("v"))).alias("rank"),
-                    *(
-                        [
-                            (_tagsum(1) + _tagsum(2)).alias("d1"),
-                            (_tagsum(3) + _tagsum(4)).alias("d0"),
-                        ]
-                        if stride2
-                        else [_tagsum(1).alias("d1"), _tagsum(2).alias("d0")]
-                    ),
-                )
-                # max tail a ratio-d mode can still contribute, in d1 units
-                cap = (d * d / (1.0 - d * d)) if stride2 else (d / (1.0 - d))
-                denom = F.col("d0") - F.col("d1")
-                # valid only while the per-node sequence is decaying with a
-                # consistent sign (implies denom != 0); elsewhere no
-                # correction — those nodes are converging on their own.
-                valid = (F.col("d1") * F.col("d0") > 0) & (
-                    F.abs(F.col("d1")) < F.abs(F.col("d0"))
-                )
-                corr = F.when(
-                    valid,
-                    F.signum(F.col("d1"))
-                    * F.least(
-                        F.abs(F.col("d1") * F.col("d1") / denom),
-                        F.lit(cap) * F.abs(F.col("d1")),
-                    ),
-                ).otherwise(F.lit(0.0))
-                # materialize r* once (it feeds both sides of the restart
-                # join), then restart the recurrence with one Jacobi step —
-                # identical to the seed_ranks warm-start path.
-                rstar = ckpt.checkpoint(
-                    agg.select("id", (F.col("rank") + corr).alias("r")),
-                    t, name="xtrap",
-                )
-                new_state = _jacobi(rstar, shares, init, d)
-            active_col = (F.abs(F.col("delta")) > cfg.tolerance).cast("long")
-            state, seen = write(
-                ckpt, new_state,
-                {"active": F.sum(active_col)} if cfg.tolerance > 0.0 else {}, t,
-            )
-            for w_df in window:
-                w_df.unpersist()
-            delta, window = None, []
-            active = seen.get("active", -1)
-            now = time.time()
-            ckpt.log(
-                t, algorithm=algorithm, active=active,
-                wall_s=now - t0, step_s=now - lap,
-                # an extrapolated boundary spends one extra M^T·r product on
-                # the restart — counted here for honest edges/sec accounting
-                extrapolated=bool(do_x),
-            )
-            lap = now
-            if active == 0:
-                ran, converged = t, True
-                break
-
-    shares.unpersist()
-    scores = state.select("id", F.col("rank").alias("score"))
+    ran = run.steps if run.converged else max(cfg.max_iterations, 0)
+    scores = run.state.select("id", F.col("rank").alias("score"))
     if cfg.scaler and cfg.scaler.upper() != "NONE":
         from graph_data_science_spark.operators.scaling import scale_property
 
         scores = scale_property(scores, "score", cfg.scaler)
-    return CentralityResult(scores, ran, converged, ckpt.metrics)
+    return CentralityResult(scores, ran, run.converged, run.metrics)
 
 
 def pagerank_residual(

@@ -33,25 +33,30 @@ to its serial phase.  Both guards are explicit; an over-large residue simply
 continues distributed.  The reference itself is a sequential Tarjan variant
 (SccAlgorithm.java), so the local phase is also semantics-identical to it.
 
-Every phase is joins + groupBy aggregations with parquet-checkpointed state;
-convergence counts ride the checkpoint writes (observe) — no extra jobs.
-Output component id = MIN member id (matching WCC's union-by-min convention
-and the SQL oracle's mutual-reachability definition).
+Every loop runs on the superstep kernel (plans/superstep.py).  The outer
+rounds are one `run_supersteps` over the node frame (id, comp) (jobs
+`scc:<round>`): the active nodes are the rows whose comp is still null, and
+their count, observed on the write, is the stop test.  Inside a round, trim
+is a run over (id, alive) (`scc_trim:<t>`), color one over (id, color)
+(`scc_color:<t>`) and backward a `reach` over (root, id) pairs
+(`scc_backward:<t>`), each composing `window` supersteps per write; the
+count that stops each of them (peeled, recolored, newly reached) rides the
+boundary write, and a window whose last superstep changed nothing holds the
+fixpoint.  Output component id = MIN member id (matching WCC's union-by-min
+convention and the SQL oracle's mutual-reachability definition).
 """
 
 from __future__ import annotations
 
-import time
+import os
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
-from graph_data_science_spark.plans.checkpoint import SuperstepCheckpointer
-from graph_data_science_spark.plans.superstep import write
-from graph_data_science_spark.session import no_aqe
+from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
 
 
 @dataclass
@@ -129,9 +134,7 @@ def scc(
     local_finish_edges: int = 1_000_000,
 ) -> SccResult:
     spark = graph.nodes.sparkSession
-    ckpt = SuperstepCheckpointer(spark, checkpoint_path)
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     all_edges = (
         graph.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
@@ -139,225 +142,146 @@ def scc(
         .repartition(n_part, "src")
         .cache()
     )
-    # unique checkpoint names per outer round: trimmed-singleton parts keep
-    # lazy references to start-of-window actives until the final union, so
-    # none of these may be evicted by the per-name history window
-    active = graph.nodes.select("id")
-    active = ckpt.checkpoint(active, 0, name="active_0")
-    assigned_parts: list = []  # per-phase (id, comp) frames, unioned lazily
+    metrics: list = []  # the inner runs' rows, outer round by outer round
+    cached: list = []  # the open round's edge tables
+    finish: dict = {}  # the local finish's sizes, logged with its round
 
-    t0 = time.time()
-    outer = 0
-    with no_aqe(spark):
-        while outer < max_outer_rounds:
-            outer += 1
-
-            # -- 1. trim singleton SCCs (no in- or no out-edge in the active
-            # subgraph), iterated to a fixpoint.  `window` peel rounds are
-            # composed LAZILY and materialized with ONE action per window
-            # (web graphs have long peel tails; a checkpoint per round made
-            # trim the dominant cost of the whole decomposition).  The last
-            # in-window round's trim count rides the write via observe: 0
-            # means the fixpoint was reached inside the window (later rounds
-            # of a converged peel are no-ops).  Trimmed nodes are recovered
-            # per window as start-of-window minus end-of-window actives, both
-            # checkpointed frames with unique names so the lazy singleton
-            # parts survive until the final union.
-            trim_round = 0
-            trim_w = 0
-            n_active = None
-            while True:
-                trim_w += 1
-                win_start = active
-                cur = active
-                for _ in range(window):
-                    trim_round += 1
-                    e = (
-                        all_edges.join(cur.withColumnRenamed("id", "src"), "src", "left_semi")
-                        .join(cur.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                    )
-                    srcs = e.select(F.col("src").alias("id")).distinct().withColumn("_s", F.lit(1))
-                    dsts = e.select(F.col("dst").alias("id")).distinct().withColumn("_d", F.lit(1))
-                    marked = (
-                        cur.join(srcs, "id", "left")
-                        .join(dsts, "id", "left")
-                        .select(
-                            "id",
-                            (F.col("_s").isNotNull() & F.col("_d").isNotNull()).alias("_keep"),
-                        )
-                    )
-                    cur = marked.where(F.col("_keep")).select("id")
-                obs = Observation()
-                marked = marked.observe(
-                    obs,
-                    F.sum((~F.col("_keep")).cast("long")).alias("trimmed"),
-                    F.sum(F.col("_keep").cast("long")).alias("kept"),
-                )
-                cur = marked.where(F.col("_keep")).select("id")
-                cur = ckpt.checkpoint(cur, outer * 100 + trim_w, name=f"trim_{outer}_{trim_w}")
-                row = obs.get
-                n_trim_last, n_active = int(row["trimmed"] or 0), int(row["kept"] or 0)
-                assigned_parts.append(
-                    win_start.join(cur, "id", "left_anti").select(
-                        "id", F.col("id").alias("comp")
-                    )
-                )
-                active = cur
-                if n_trim_last == 0:
-                    break
-            ckpt.log(outer, algorithm="scc_trim", rounds=trim_round, wall_s=time.time() - t0)
-
-            if n_active == 0:
-                break
-
-            # -- Multistep local finish: the active set is SCC-closed, so a
-            # small residue can be finished serially on the driver (guarded
-            # on BOTH node and induced-edge counts; an over-large residue
-            # falls through and stays distributed).
-            if 0 < local_finish_nodes and n_active <= local_finish_nodes:
-                induced = all_edges.join(
-                    active.withColumnRenamed("id", "src"), "src", "left_semi"
-                ).join(active.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                e_rows = induced.limit(local_finish_edges + 1).collect()
-                if len(e_rows) <= local_finish_edges:
-                    ids = [r["id"] for r in active.collect()]
-                    comp_of = _tarjan_local(ids, [(r["src"], r["dst"]) for r in e_rows])
-                    schema = graph.nodes.select(
-                        "id", F.col("id").alias("comp")
-                    ).schema
-                    assigned_parts.append(
-                        spark.createDataFrame(
-                            [(i, comp_of[i]) for i in ids], schema
-                        )
-                    )
-                    ckpt.log(
-                        outer,
-                        algorithm="scc_local_finish",
-                        rounds=1,
-                        wall_s=time.time() - t0,
-                        nodes=n_active,
-                        edges=len(e_rows),
-                    )
-                    break
-
-            edges = (
-                all_edges.join(active.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(active.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            )
-            # src-partitioned cache: the color loop joins edges on src every
-            # round; a cached hash partitioning makes that side exchange-free
-            # across all rounds/windows of this outer round
-            edges = (
-                ckpt.checkpoint(edges, outer, name="edges")
-                .repartition(n_part, "src")
-                .cache()
-            )
-
-            # -- 2. color: forward max-id propagation to fixpoint -----------
-            # `window` propagation rounds per checkpoint; the LAST round's
-            # change count rides the write — 0 changes in the final round
-            # implies the fixpoint landed inside the window (max-propagation
-            # is monotone, so a quiescent round stays quiescent).
-            color = active.select("id", F.col("id").alias("color"))
-            color = ckpt.checkpoint(color, outer * 100, name="color")
-            it = 0
-            while True:
-                merged = None
-                for _ in range(window):
-                    it += 1
-                    cand = (
-                        edges.join(color.withColumnRenamed("id", "src"), "src")
-                        .groupBy("dst")
-                        .agg(F.max("color").alias("nbr_max"))
-                        .withColumnRenamed("dst", "id")
-                    )
-                    merged = color.join(cand, "id", "left").select(
-                        "id",
-                        F.greatest(
-                            F.col("color"), F.coalesce("nbr_max", F.col("color"))
-                        ).alias("color"),
-                        (F.coalesce("nbr_max", F.col("color")) > F.col("color")).alias("_chg"),
-                    )
-                    color = merged.select("id", "color")
-                color, seen = write(
-                    ckpt, merged, {"c": F.sum(F.col("_chg").cast("long"))},
-                    outer * 100 + it, ["id", "color"], "color",
-                )
-                if seen["c"] == 0:
-                    break
-            ckpt.log(outer, algorithm="scc_color", rounds=it, wall_s=time.time() - t0)
-
-            # -- 3. backward BFS from color roots inside each color class ---
-            # (root, id) pair frontier over reversed same-color edges
-            rev = (
-                edges.join(
-                    color.select(F.col("id").alias("src"), F.col("color").alias("c_src")), "src"
-                )
-                .join(
-                    color.select(F.col("id").alias("dst"), F.col("color").alias("c_dst")), "dst"
-                )
-                .where(F.col("c_src") == F.col("c_dst"))
-                .select(F.col("dst").alias("rsrc"), F.col("src").alias("rdst"))
-            )
-            rev = (
-                ckpt.checkpoint(rev, outer, name="rev")
-                .repartition(n_part, "rsrc")
-                .cache()
-            )
-            # `window` expansion rounds per checkpoint; member and the live
-            # frontier ride ONE write via a `_new` flag column (frontier =
-            # rows added in the window's last round).  rev is already
-            # restricted to same-color edges, so every node reached backward
-            # from root r has color r by induction — no extra color
-            # membership join is needed.  An empty last round implies the
-            # whole fixpoint landed inside the window (an empty frontier
-            # stays empty), so member is complete.
-            member = (
-                color.where(F.col("id") == F.col("color"))
-                .select(F.col("color").alias("root"), F.col("id"))
-                .withColumn("_new", F.lit(True))
-            )
-            member = ckpt.checkpoint(member, outer * 100, name="member")
-            it = 0
-            while True:
-                for _ in range(window):
-                    it += 1
-                    frontier = member.where(F.col("_new")).select("root", "id")
-                    nxt = (
-                        frontier.withColumnRenamed("id", "rsrc")
-                        .join(rev, "rsrc")
-                        .select("root", F.col("rdst").alias("id"))
-                        .distinct()
-                        .join(member.select("root", "id"), ["root", "id"], "left_anti")
-                    )
-                    member = member.select(
-                        "root", "id", F.lit(False).alias("_new")
-                    ).unionByName(nxt.withColumn("_new", F.lit(True)))
-                member, seen = write(
-                    ckpt, member, {"c": F.sum(F.col("_new").cast("long"))},
-                    outer * 100 + it, name="member",
-                )
-                if seen["c"] == 0:
-                    break
-            ckpt.log(outer, algorithm="scc_backward", rounds=it, wall_s=time.time() - t0)
-            member = member.select("root", "id")
-
-            # -- 4. extract SCCs, emit comp = min member id -----------------
-            comp_min = member.groupBy("root").agg(F.min("id").alias("comp"))
-            found = member.join(comp_min, "root").select("id", "comp")
-            found = ckpt.checkpoint(found, outer, name=f"found_{outer}")
-            assigned_parts.append(found)
-            active = active.join(found.select("id"), "id", "left_anti")
-            active = ckpt.checkpoint(active, outer * 100 + 99, name=f"active_{outer}")
-            edges.unpersist()
-            rev.unpersist()
-
-    all_edges.unpersist()
-    if not assigned_parts:
-        return SccResult(
-            graph.nodes.select("id", F.col("id").alias("comp")), outer, ckpt.metrics
+    def inner(name, t, init, step, done, n):
+        run = run_supersteps(
+            graph.nodes, all_edges, init, step, algorithm=f"scc_{name}",
+            max_steps=n + 1, done=done, window=window,
+            checkpoint_path=checkpoint_path and os.path.join(checkpoint_path, f"{name}_{t}"),
         )
-    comps = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        comps = comps.unionByName(part)
-    return SccResult(comps, outer, ckpt.metrics)
+        metrics.extend(run.metrics)
+        return run
+
+    def induced(ids):
+        return all_edges.join(
+            ids.withColumnRenamed("id", "src"), "src", "left_semi"
+        ).join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
+
+    def trim(state, seen, r):
+        # a node stays alive while it has both an in- and an out-edge inside
+        # the alive subgraph; `trimmed` counts this round's peels, and a
+        # round that peels nothing is the fixpoint (later rounds are no-ops)
+        e = induced(state.where("alive"))
+        srcs = e.select(F.col("src").alias("id")).distinct().withColumn("_s", F.lit(1))
+        dsts = e.select(F.col("dst").alias("id")).distinct().withColumn("_d", F.lit(1))
+        keep = F.col("_s").isNotNull() & F.col("_d").isNotNull()
+        marked = state.join(srcs, "id", "left").join(dsts, "id", "left").select(
+            "id", (F.col("alive") & keep).alias("alive"), (F.col("alive") & ~keep).alias("_t")
+        )
+        return marked, {
+            "trimmed": F.sum(F.col("_t").cast("long")),
+            "kept": F.sum(F.col("alive").cast("long")),
+        }
+
+    def recolor(edges):
+        # forward max-id propagation: color(v) = max id that reaches v; a
+        # round without change is the fixpoint (max-propagation is monotone)
+        def step(state, seen, r):
+            cand = (
+                edges.join(state.withColumnRenamed("id", "src"), "src")
+                .groupBy("dst")
+                .agg(F.max("color").alias("nbr_max"))
+                .withColumnRenamed("dst", "id")
+            )
+            nbr = F.coalesce("nbr_max", F.col("color"))
+            return state.join(cand, "id", "left").select(
+                "id", F.greatest(F.col("color"), nbr).alias("color"),
+                (nbr > F.col("color")).alias("_chg"),
+            ), {"changed": F.sum(F.col("_chg").cast("long"))}
+
+        return step
+
+    def backward(colored, edges, t, n):
+        """(id, comp) of every SCC a color class roots: BFS from each root
+        over reversed same-color edges.  Every node reached from root r has
+        color r by induction, so the reached set IS r's SCC."""
+        src, dst = (
+            colored.select(F.col("id").alias(k), F.col("color").alias("c"))
+            for k in ("src", "dst")
+        )
+        rev = (
+            edges.join(src, "src").join(dst, ["dst", "c"])
+            .select(F.col("dst").alias("rsrc"), F.col("src").alias("rdst"))
+            .repartition(n_part, "rsrc")
+            .cache()
+        )
+        cached.append(rev)
+
+        def back(frontier, r):
+            return frontier.withColumnRenamed("id", "rsrc").join(rev, "rsrc").select(
+                "root", F.col("rdst").alias("id")
+            ).distinct()
+
+        roots = colored.where(F.col("id") == F.col("color"))
+        run = reach(
+            graph.nodes, all_edges, roots.select(F.col("id").alias("root"), "id"),
+            back, keys=["root", "id"], level="depth", algorithm="scc_backward",
+            max_steps=n + 1, window=window,
+            checkpoint_path=checkpoint_path and os.path.join(checkpoint_path, f"backward_{t}"),
+        )
+        metrics.extend(run.metrics)
+        m = run.state  # comp = the SCC's min member id
+        return m.join(m.groupBy("root").agg(F.min("id").alias("comp")), "root").select(
+            "id", "comp"
+        )
+
+    def step(state, seen, t):
+        trimmed = inner("trim", t, lambda: (
+            state.where("comp IS NULL").select("id", F.lit(True).alias("alive")), {}
+        ), trim, zero("trimmed"), seen["active"])
+        alive = trimmed.state.where("alive").select("id")
+        found = trimmed.state.where(~F.col("alive")).select("id", F.col("id").alias("comp"))
+        n = trimmed.seen["kept"]
+        finish.clear()
+        # -- Multistep local finish: the active set is SCC-closed, so a
+        # small residue is finished serially on the driver (guarded on BOTH
+        # node and induced-edge counts; an over-large residue falls through
+        # and stays distributed).
+        if 0 < n <= local_finish_nodes:
+            rows = induced(alive).limit(local_finish_edges + 1).collect()
+            if len(rows) <= local_finish_edges:
+                # trimmed to its fixpoint, every alive node has an out-edge
+                pairs = [(r["src"], r["dst"]) for r in rows]
+                comp_of = _tarjan_local(sorted({src for src, _ in pairs}), pairs)
+                found = found.unionByName(spark.createDataFrame(
+                    list(comp_of.items()), "id long, comp long"
+                ))
+                finish.update(local_nodes=n, local_edges=len(rows))
+        if n and not finish:
+            # src-partitioned cache: the color rounds join edges on src
+            edges = induced(alive).repartition(n_part, "src").cache()
+            cached.append(edges)
+            colored = inner("color", t, lambda: (
+                alive.select("id", F.col("id").alias("color")), {}
+            ), recolor(edges), zero("changed"), n).state
+            found = found.unionByName(backward(colored, edges, t, n))
+        release()
+        return state.join(found.withColumnRenamed("comp", "_c"), "id", "left").select(
+            "id", F.coalesce("comp", "_c").alias("comp")
+        ), {"active": F.sum(F.col("comp").isNull().cast("long"))}
+
+    def release():
+        while cached:
+            cached.pop().unpersist()
+
+    def done(state, seen, t):
+        seen.update(finish)
+        return seen["active"] == 0
+
+    try:
+        run = run_supersteps(
+            graph.nodes, all_edges,
+            lambda: (graph.nodes.select("id", F.lit(None).cast("long").alias("comp")), {
+                "active": F.count(F.lit(1))
+            }),
+            step, algorithm="scc", max_steps=max_outer_rounds, done=done,
+            checkpoint_path=checkpoint_path,
+        )
+    finally:
+        release()
+        all_edges.unpersist()
+    components = run.state.where("comp IS NOT NULL")
+    return SccResult(components, run.steps, run.metrics + metrics)

@@ -1,4 +1,4 @@
-"""Round-2 operators: shortest paths (with path reconstruction), SCC,
+"""Round-2 operators: shortest paths (with path reconstruction),
 node2vec, the uniform execution-mode wrapper, KNN refinement, and the cost
 estimate surface."""
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.operators.paths import shortest_paths, sssp_delta
-from graph_data_science_spark.operators.scc import scc
 
 
 def _graph(spark, edges, weighted=False):
@@ -57,85 +56,6 @@ def test_shortest_paths_match_edges(spark):
         p = r["node_ids"]
         for a, b in zip(p, p[1:]):
             assert (a, b) in eset
-
-
-# -- SCC ----------------------------------------------------------------------
-
-def test_scc_two_cycles_and_bridge(spark):
-    # cycle {0,1,2}, cycle {3,4}, bridge 2->3, tail 5 (singleton)
-    g = _graph(spark, [(0, 1), (1, 2), (2, 0), (3, 4), (4, 3), (2, 3), (4, 5)])
-    comp = {r["id"]: r["comp"] for r in scc(g).components.collect()}
-    assert comp[0] == comp[1] == comp[2] == 0
-    assert comp[3] == comp[4] == 3
-    assert comp[5] == 5
-
-
-def test_scc_dag_is_all_singletons(spark):
-    g = _graph(spark, [(0, 1), (0, 2), (1, 3), (2, 3)])
-    comp = {r["id"]: r["comp"] for r in scc(g).components.collect()}
-    assert comp == {0: 0, 1: 1, 2: 2, 3: 3}
-
-
-def test_scc_multistep_local_finish_parity(spark):
-    # pseudo-random graph with a big cycle + chords: distributed-only,
-    # hybrid (small threshold: FW-BW first, serial tail), and serial-heavy
-    # (threshold > |V|) must agree exactly.
-    n = 60
-    edges = [(i, (i + 1) % n) for i in range(0, n, 2)] + [
-        (i, (i * 11 + 5) % n) for i in range(n)
-    ]
-    edges = sorted({(a, b) for a, b in edges if a != b})
-    g = _graph(spark, edges)
-    dist = {r["id"]: r["comp"] for r in scc(g, local_finish_nodes=0).components.collect()}
-    hybrid = {r["id"]: r["comp"] for r in scc(g, local_finish_nodes=10).components.collect()}
-    serial = {r["id"]: r["comp"] for r in scc(g, local_finish_nodes=n + 1).components.collect()}
-    assert dist == hybrid == serial
-
-
-def test_scc_local_finish_edge_guard_falls_through(spark):
-    # edge cap of 1 refuses the collect; the run must stay distributed and
-    # still produce the right answer.
-    g = _graph(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3)])
-    comp = {
-        r["id"]: r["comp"]
-        for r in scc(
-            g, local_finish_nodes=100, local_finish_edges=1
-        ).components.collect()
-    }
-    assert comp[0] == comp[1] == comp[2] == 0
-    assert comp[3] == comp[4] == 3
-
-
-def test_scc_matches_mutual_reachability(spark):
-    # pseudo-random functional graph + some extra edges; verify vs closure
-    import itertools
-
-    n = 40
-    edges = [(i, (i * 7 + 3) % n) for i in range(n)] + [
-        (i, (i * 5 + 1) % n) for i in range(0, n, 3)
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    g = _graph(spark, edges)
-    comp = {r["id"]: r["comp"] for r in scc(g).components.collect()}
-
-    adj = {i: set() for i in range(n)}
-    for a, b in edges:
-        adj[a].add(b)
-    reach = {}
-    for s in range(n):
-        seen, stack = {s}, [s]
-        while stack:
-            v = stack.pop()
-            for w in adj[v]:
-                if w not in seen:
-                    seen.add(w)
-                    stack.append(w)
-        reach[s] = seen
-    expected = {
-        v: min(u for u in range(n) if u in reach[v] and v in reach[u])
-        for v in range(n)
-    }
-    assert comp == expected
 
 
 # -- node2vec -----------------------------------------------------------------
@@ -204,19 +124,6 @@ def test_modes_stream_stats_mutate_write(spark, tmp_path):
     assert cstats["nodeCount"] == 5 and cstats["max"] >= cstats["min"]
 
 
-def test_modes_scc_and_errors(spark):
-    from graph_data_science_spark.operators.modes import run
-
-    g = _graph(spark, [(0, 1), (1, 0), (1, 2)])
-    df, _ = run(g, "scc", "stream")
-    comp = {r["id"]: r["component"] for r in df.collect()}
-    assert comp[0] == comp[1] != comp[2]
-    with pytest.raises(ValueError):
-        run(g, "nope", "stream")
-    with pytest.raises(ValueError):
-        run(g, "pagerank", "bogus")
-
-
 # -- KNN refinement -----------------------------------------------------------
 
 def test_knn_refine_recall(spark):
@@ -252,40 +159,6 @@ def test_cost_report_in_metrics(spark):
 
     wres = wcc_ops.wcc(g)
     assert any("estimate" in m for m in wres.metrics)
-
-
-# -- checkpoint_every window (bench default K=4) ------------------------------
-
-def test_pagerank_checkpoint_window_equivalence(spark):
-    from graph_data_science_spark.operators import pagerank as pr_ops
-
-    edges = [(i, (i * 3 + 1) % 23) for i in range(23)] + [
-        (i, (i * 7 + 2) % 23) for i in range(23)
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    g = _graph(spark, edges)
-    r1 = pr_ops.page_rank(g, pr_ops.PageRankConfig(tolerance=0.0, max_iterations=13))
-    r4 = pr_ops.page_rank(
-        g, pr_ops.PageRankConfig(tolerance=0.0, max_iterations=13, checkpoint_every=4)
-    )
-    s1 = {r["id"]: r["score"] for r in r1.scores.collect()}
-    s4 = {r["id"]: r["score"] for r in r4.scores.collect()}
-    assert s1.keys() == s4.keys()
-    for k in s1:
-        assert abs(s1[k] - s4[k]) < 1e-12
-
-
-def test_pagerank_checkpoint_window_convergence(spark):
-    from graph_data_science_spark.operators import pagerank as pr_ops
-
-    g = _graph(spark, [(0, 1), (1, 2), (2, 0)])
-    r = pr_ops.page_rank(
-        g, pr_ops.PageRankConfig(tolerance=1e-6, max_iterations=100, checkpoint_every=4)
-    )
-    assert r.did_converge
-    s = {x["id"]: x["score"] for x in r.scores.collect()}
-    # symmetric ring -> equal scores summing to ~n*alpha/(1-d) mass
-    assert abs(s[0] - s[1]) < 1e-6 and abs(s[1] - s[2]) < 1e-6
 
 
 # -- driver-barrier budget ----------------------------------------------------

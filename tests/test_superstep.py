@@ -38,6 +38,7 @@ from graph_data_science_spark.operators.ann import knn_refine
 from graph_data_science_spark.operators.kmeans import KmeansConfig, kmeans
 from graph_data_science_spark.operators.louvain import LouvainConfig, louvain
 from graph_data_science_spark.operators.maxkcut import _cut_weight, approx_max_k_cut
+from graph_data_science_spark.operators.scc import scc
 from graph_data_science_spark.operators.spanning import minimum_spanning_forest
 from graph_data_science_spark.operators.walks import RandomWalkConfig, random_walks
 from graph_data_science_spark.operators.wcc import WccConfig, wcc
@@ -249,6 +250,7 @@ def test_operators_release_their_cached_edge_tables(spark):
         "influence_maximization": lambda: influence_maximization(
             g, k=1, n_rr_sets=5, max_depth=1
         ),
+        "scc": lambda: scc(g, local_finish_nodes=0),
     }
     for name, call in calls.items():
         before = _cached_tables(spark)
@@ -309,6 +311,7 @@ def test_ported_loops_describe_their_jobs(spark):
             g, sources=g.nodes.where("id = 0"), max_depth=2
         ),
         "influence": lambda: influence_maximization(g, k=1, n_rr_sets=5, max_depth=1),
+        "scc": lambda: scc(g, local_finish_nodes=0),
     }
     tags_of = {}
     for algorithm, call in calls.items():
@@ -318,6 +321,9 @@ def test_ported_loops_describe_their_jobs(spark):
     # the loops around Louvain's local moving and Borůvka's merge
     for outer, inner in [("louvain_level", "louvain"), ("boruvka", "boruvka_merge")]:
         assert {f"{outer}:0", f"{outer}:1"} <= tags_of[inner], (outer, tags_of[inner])
+    # SCC's trim, color and backward runs write superstep 0, then per window
+    for phase in ("scc_trim", "scc_color", "scc_backward"):
+        assert f"{phase}:0" in tags_of["scc"], (phase, tags_of["scc"])
     # GraphSAGE's final materialization is a zero-step run: superstep 0 only
     _, tags = _new_jobs(spark, lambda: graphsage_train(
         g, degree_features(g, dim=4),
@@ -413,3 +419,99 @@ def test_named_frames_are_written_under_their_names(spark, tmp_path):
             g.nodes, g.edges, init, step, algorithm="named", max_steps=1,
             done=lambda state, seen, t: True, identity={"max_steps": 1},
         )
+
+
+def _min_label(g, window, algorithm, wrap=lambda step: step):
+    """Min-label propagation over the undirected edges: a WCC-style run."""
+    e = g.edges.select("src", "dst")
+    und = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+    def step(state, seen, t):
+        best = (
+            und.join(state.withColumnRenamed("id", "src"), "src")
+            .groupBy("dst")
+            .agg(F.min("label").alias("m"))
+            .withColumnRenamed("dst", "id")
+        )
+        m = F.coalesce("m", "label")
+        return state.join(best, "id", "left").select(
+            "id", F.least("label", m).alias("label"), (m < F.col("label")).alias("_chg")
+        ), {"changed": F.sum(F.col("_chg").cast("long"))}
+
+    return run_supersteps(
+        g.nodes, g.edges, lambda: (g.nodes.select("id", F.col("id").alias("label")), {}),
+        wrap(step), algorithm=algorithm, max_steps=30, done=zero("changed"),
+        window=window,
+    )
+
+
+def test_window_matches_single_steps_with_one_write_per_window(spark):
+    """On a 6-node path the min label reaches node 5 at superstep 5, so
+    superstep 6 is the first without change: window=1 stops there, and
+    window=4 at the boundary after it, with the same labels, one write per
+    window and one metrics row per window."""
+    g = _chain(spark, 5)
+    one = _min_label(g, 1, "window1")
+    before = _actions_by_description(spark, "window4:")
+    four = _min_label(g, 4, "window4")
+    after = _actions_by_description(spark, "window4:")
+
+    def labels(run):
+        return sorted((r["id"], r["label"]) for r in run.state.collect())
+
+    assert labels(four) == labels(one) == [(i, 0) for i in range(6)]
+    assert (one.steps, four.steps) == (6, 8) and four.converged
+    writes = {d: n - before.get(d, 0) for d, n in after.items() if n > before.get(d, 0)}
+    assert writes == {f"window4:{t}": 1 for t in (0, 4, 8)}, writes
+    rows = _superstep_rows(four.metrics)
+    assert [r["superstep"] for r in rows] == [4, 8]
+    assert [r["changed"] for r in rows] == [2, 0]
+
+
+def _persisted(spark):
+    return _cached_tables(spark), spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_window_unpersists_its_frames_also_when_a_step_raises(spark):
+    g = _chain(spark, 5)
+    before = _persisted(spark)
+    _min_label(g, 4, "window_release")
+    assert _persisted(spark) == before
+
+    def failing(step):
+        def wrapped(state, seen, t):
+            if t == 7:  # supersteps 5 and 6 of the open window are held
+                assert _cached_tables(spark) == before[0] + 2
+                raise RuntimeError("boom")
+            return step(state, seen, t)
+
+        return wrapped
+
+    with pytest.raises(RuntimeError, match="boom"):
+        _min_label(g, 4, "window_raise", failing)
+    assert _persisted(spark) == before
+
+
+def test_a_left_out_frame_is_carried_unwritten(spark):
+    """``init`` leaves ``b`` out; superstep 1 writes it first with its own
+    columns, and later supersteps, which return only ``a``, carry it."""
+    g = _chain(spark, 4)
+
+    def step(state, seen, t):
+        a = state["a"].select("id", (F.col("x") + 1).alias("x"))
+        if t == 1:
+            return {"a": a, "b": g.nodes.select(F.col("id").alias("k"))}, {}
+        return {"a": a}, {}
+
+    before = _actions_by_description(spark, "carry:")
+    run = run_supersteps(
+        g.nodes, g.edges,
+        lambda: ({"a": g.nodes.select("id", F.lit(0).cast("long").alias("x"))}, {}),
+        step, algorithm="carry", max_steps=3, done=lambda state, seen, t: False,
+    )
+    after = _actions_by_description(spark, "carry:")
+    writes = {d: n - before.get(d, 0) for d, n in after.items()}
+    assert writes == {"carry:0": 1, "carry:1": 2, "carry:2": 1, "carry:3": 1}, writes
+    assert {r["x"] for r in run.state["a"].collect()} == {3}
+    assert run.state["b"].columns == ["k"]
+    assert sorted(r["k"] for r in run.state["b"].collect()) == list(range(5))
