@@ -43,7 +43,9 @@ is a run over (id, alive) (`scc_trim:<t>`), color one over (id, color)
 count that stops each of them (peeled, recolored, newly reached) rides the
 boundary write, and a window whose last superstep changed nothing holds the
 fixpoint.  Output component id = MIN member id (matching WCC's union-by-min
-convention and the SQL oracle's mutual-reachability definition).
+convention and the SQL oracle's mutual-reachability definition).  A run cut
+by `max_outer_rounds` still returns every node: those it has not assigned
+keep a null comp, and `did_converge` is False.
 """
 
 from __future__ import annotations
@@ -61,8 +63,9 @@ from graph_data_science_spark.plans.superstep import reach, run_supersteps, zero
 
 @dataclass
 class SccResult:
-    components: DataFrame  # id, comp (min member id of the SCC)
+    components: DataFrame  # id, comp (min member id of the SCC; null if unassigned)
     outer_rounds: int
+    did_converge: bool
     metrics: list = field(default_factory=list)
 
 
@@ -283,5 +286,4 @@ def scc(
     finally:
         release()
         all_edges.unpersist()
-    components = run.state.where("comp IS NOT NULL")
-    return SccResult(components, run.steps, run.metrics + metrics)
+    return SccResult(run.state, run.steps, run.converged, run.metrics + metrics)

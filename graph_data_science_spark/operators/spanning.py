@@ -10,8 +10,9 @@ deterministically by (weight, src, dst) ordering, so the result is unique
 and reproducible here too).
 
 Spark decomposition: the rounds are one `plans/superstep.py:run_supersteps`
-call (jobs `boruvka:<round>`) over two named frames, the forest (a, b, w,
-`_new`) and comp(id -> component) (min-label semantics like WCC).  Round r:
+call (jobs `boruvka:<round>`) over two named frames, comp(id -> component)
+(min-label semantics like WCC), written at superstep 0, and the forest (a, b,
+w, `_new`), written first by round 1.  Round r:
 - merge components along the previous round's `_new` forest edges by
   min-label propagation over that tiny edge set (at most one edge per
   component), run to fixpoint as a nested `run_supersteps` call (jobs
@@ -72,6 +73,8 @@ def minimum_spanning_forest(
     checkpoint_path: Optional[str] = None,
 ) -> SpanningForestResult:
     """Borůvka minimum (or maximum) spanning forest over the undirected view."""
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be at least 1, got {max_rounds}")
     spark = graph.nodes.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -115,15 +118,12 @@ def minimum_spanning_forest(
         return run.state
 
     def init():
-        return {
-            "forest": spark.createDataFrame([], "a long, b long, w double, _new boolean"),
-            "comp": graph.nodes.select("id", F.col("id").alias("comp")),
-        }, {}
+        return {"comp": graph.nodes.select("id", F.col("id").alias("comp"))}, {}
 
     def step(state, seen, r):
-        forest, comp = state["forest"], state["comp"]
+        comp = state["comp"]
         if r > 1:
-            comp = merge(forest, comp, r - 1)
+            comp = merge(state["forest"], comp, r - 1)
         ca = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         cb = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
         cross = und.join(ca, "a").join(cb, "b").where(F.col("ca") != F.col("cb"))
@@ -136,7 +136,9 @@ def minimum_spanning_forest(
             .select("p.a", "p.b", "p.w", F.lit(True).alias("_new"))
             .distinct()
         )
-        forest = forest.withColumn("_new", F.lit(False)).unionByName(chosen)
+        forest = chosen if r == 1 else (
+            state["forest"].withColumn("_new", F.lit(False)).unionByName(chosen)
+        )
         return {"forest": forest, "comp": comp}, {
             "chosen": F.sum(F.col("_new").cast("long")),
             "_w": F.sum("w"),

@@ -3,8 +3,8 @@
 Defaults are tuned for iterative link-graph workloads:
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing)
 - Arrow on (all Python boundaries are vectorized pandas UDFs)
-- shuffle partitions sized by env (local test boxes) — on a real cluster this
-  is set per-job to ~2-3x total cores by the submitter.
+- local[cores] with one shuffle partition per core (``local_cores``) — on a
+  real cluster this is set per-job to ~2-3x total cores by the submitter.
 """
 
 from __future__ import annotations
@@ -52,19 +52,24 @@ def cache_copartitioned(df, num_partitions: int, *keys: str):
         return df.repartition(num_partitions, *keys).cache()
 
 
+def local_cores() -> int:
+    """Cores of a local-mode session: ``$SPARK_GRAFT_CPUS``, else the CPUs
+    this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "graph-data-science-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core keeps task-launch
         # overhead off the superstep critical path; clusters override.
-        n = cpus if cpus != "*" else os.cpu_count() or 8
-        shuffle_partitions = int(n)
+        shuffle_partitions = cpus
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     heap = f"{max(1, min(48, int(0.4 * phys) >> 30))}g"
     # Python workers import this package (Arrow UDFs) from any cwd

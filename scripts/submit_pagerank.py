@@ -17,7 +17,7 @@ dependency zip and submit:
 
 On a cluster the driver + executors resolve `graph_data_science_spark` from
 the shipped zip; no install step.  The same invocation at N and 4N executors
-is the scaling-criterion run (sandbox proxy: scripts/scaling_evidence.py).
+is the scaling-criterion run.
 Smoke-tested end-to-end in tests/test_submit_job.py via a real local
 spark-submit --py-files run.
 """

@@ -167,6 +167,22 @@ class TestDedup:
         assert _executed_plan(q).count("array_intersect(") <= 2
         d.unpersist()
 
+    def test_jaccard_verify_builds_gram_sets_once(self, spark, tmp_path):
+        # both sides of the pair join read one gram-set aggregation: the
+        # second reuses the first's exchange, so the text is split and the
+        # sets are collected once per call.  The input is a parquet copy
+        # that no test caches: adaptive execution does not reuse exchanges
+        # above a cached input (the `docs` fixture caches the original)
+        spark.read.parquet(f"{SF}/documents.parquet").write.parquet(str(tmp_path / "d"))
+        q = dedup.ngram_jaccard_pairs(
+            spark.read.parquet(str(tmp_path / "d")), max_id_distance=3
+        )
+        q.collect()
+        plan = _executed_plan(q)
+        assert plan.count("partial_collect_set(") == 1
+        assert plan.count("split(") == 1
+        assert "ReusedExchange" in plan
+
     def test_word_ngrams_tokenizes_once_per_document(self, docs):
         # over a cached frame (a local relation would be constant-folded)
         # the text is split once per document, not once per gram

@@ -100,3 +100,15 @@ def test_modes_scc_and_errors(spark):
         run(g, "nope", "stream")
     with pytest.raises(ValueError):
         run(g, "pagerank", "bogus")
+
+
+def test_scc_cut_by_max_outer_rounds_keeps_unassigned_nodes(spark):
+    # 0 and 1 take color 9 (9 -> 0), so their SCC needs a second FW-BW round
+    g = _graph(spark, [(8, 9), (9, 8), (9, 0), (0, 1), (1, 0)])
+    res = scc(g, local_finish_nodes=0, max_outer_rounds=1)
+    comp = {r["id"]: r["comp"] for r in res.components.collect()}
+    assert comp == {8: 8, 9: 8, 0: None, 1: None}
+    assert res.outer_rounds == 1 and res.did_converge is False
+    done = scc(g, local_finish_nodes=0)
+    assert done.did_converge is True
+    assert {r["id"]: r["comp"] for r in done.components.collect()} == {8: 8, 9: 8, 0: 0, 1: 0}
