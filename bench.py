@@ -42,7 +42,7 @@ N_BENCH = 99991  # node space of the lineitem-derived benchmark graph (per copy)
 # (same shuffle volume per copy)
 REPLICATE = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "1"))
 # superstep window: K supersteps per checkpoint/barrier (pagerank.py
-# checkpoint_every) amortizes the serial driver floor across K supersteps
+# checkpoint_every) — amortizes the serial driver floor across K supersteps
 CKPT_EVERY = 4
 LAYERS = ("wall_s", "in_job_s", "driver_s", "jobs")
 REPO = os.path.dirname(os.path.abspath(__file__))

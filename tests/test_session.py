@@ -21,3 +21,14 @@ def test_every_query_has_an_oracle_and_every_oracle_a_query():
     import __spark_entry__
 
     assert set(__spark_entry__.queries()) == set(__spark_entry__.oracle_sql())
+
+
+def test_local_cores_defaults_to_cpu_affinity(monkeypatch):
+    """One default core count for get_spark and bench.py: the CPUs this
+    process may run on, unless SPARK_GRAFT_CPUS says otherwise."""
+    from graph_data_science_spark.session import local_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cores() == 3
