@@ -540,7 +540,20 @@ def _yens_local(graph: LinkGraph, source: int, target: int, k: int, weighted: bo
             path.append(pred[path[-1]])
         return dist[target], path[::-1]
 
-    first = dijkstra(source, set(), set())
+    def root_cost(path: list, i: int) -> float:
+        return sum(
+            min(w for v, w in adj.get(path[j], ()) if v == path[j + 1]) for j in range(i)
+        )
+
+    return _yen_spur_loop(dijkstra(source, set(), set()), k, dijkstra, root_cost)
+
+
+def _yen_spur_loop(first, k: int, spur_path, root_cost) -> list:
+    """Yen's accepted/candidate loop, shared by both branches of `yens`.
+
+    `spur_path(spur, banned_edges, banned_nodes)` returns the (cost, path)
+    of a shortest spur-to-target path avoiding both sets, or None;
+    `root_cost(path, i)` is the cost of `path[: i + 1]`."""
     if first is None:
         return []
     accepted = [first]
@@ -556,21 +569,16 @@ def _yens_local(graph: LinkGraph, source: int, target: int, k: int, weighted: bo
                 if len(p) > i and p[: i + 1] == root:
                     banned_edges.add((p[i], p[i + 1]))
             banned_nodes = set(root[:-1])
-            tail = dijkstra(spur, banned_edges, banned_nodes)
+            tail = spur_path(spur, banned_edges, banned_nodes)
             if tail is None:
                 continue
             tail_cost, tail_path = tail
-            root_cost = 0.0
-            for j in range(i):
-                root_cost += min(
-                    w for v, w in adj.get(prev_path[j], ()) if v == prev_path[j + 1]
-                )
             full = root[:-1] + tail_path
             key = tuple(full)
             if key in seen:
                 continue
             seen.add(key)
-            candidates.append((root_cost + tail_cost, full))
+            candidates.append(((root_cost(prev_path, i) if i else 0.0) + tail_cost, full))
         if not candidates:
             break
         candidates.sort(key=lambda t: (t[0], t[1]))
@@ -604,43 +612,14 @@ def yens(
     """
     if graph.relationship_count() <= local_threshold:
         return _yens_local(graph, source, target, k, weighted)
-    first = _path_to(graph, source, target, weighted, max_rounds, set(), set())
-    if first is None:
-        return []
-    accepted = [first]
-    candidates: list = []
-    seen = {tuple(first[1])}
-    while len(accepted) < k:
-        prev_cost, prev_path = accepted[-1]
-        for i in range(len(prev_path) - 1):
-            spur = prev_path[i]
-            root = prev_path[: i + 1]
-            banned_edges = set()
-            for (_, p) in accepted:
-                if len(p) > i and p[: i + 1] == root:
-                    banned_edges.add((p[i], p[i + 1]))
-            banned_nodes = set(root[:-1])
-            tail = _path_to(
-                graph, spur, target, weighted, max_rounds, banned_edges, banned_nodes
-            )
-            if tail is None:
-                continue
-            tail_cost, tail_path = tail
-            root_cost = 0.0
-            if i > 0:
-                # cost of the root prefix along prev_path
-                root_cost = _prefix_cost(graph, prev_path, i, weighted)
-            full = root[:-1] + tail_path
-            key = tuple(full)
-            if key in seen:
-                continue
-            seen.add(key)
-            candidates.append((root_cost + tail_cost, full))
-        if not candidates:
-            break
-        candidates.sort(key=lambda t: (t[0], t[1]))
-        accepted.append(candidates.pop(0))
-    return accepted
+
+    def spur_path(spur: int, banned_edges: set, banned_nodes: set):
+        return _path_to(graph, spur, target, weighted, max_rounds, banned_edges, banned_nodes)
+
+    def root_cost(path: list, i: int) -> float:
+        return _prefix_cost(graph, path, i, weighted)
+
+    return _yen_spur_loop(spur_path(source, set(), set()), k, spur_path, root_cost)
 
 
 def _prefix_cost(graph: LinkGraph, path: list, upto: int, weighted: bool) -> float:

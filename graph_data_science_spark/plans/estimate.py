@@ -54,9 +54,9 @@ ALGO_ESTIMATES: dict[str, dict] = {
     "labelprop": {"state": _w("long", "long"),
                   "message": _w("long", "long", "double"), "iters": 10},
     "triangles": {"state": _w("long", "long"),
-                  # one (a,b,c)-oriented wedge row per edge pair is bounded
-                  # by sum(min(deg)) <= E^1.5; per-edge figure is the sorted
-                  # adjacency shuffle
+                  # one (x,y,z) wedge row per oriented edge pair, bounded
+                  # by sum(min(deg)) <= E^1.5; per-edge figure is one such
+                  # wedge row of the degree-oriented join
                   "message": _w("long", "long", "long"), "iters": 1},
     # remaining iterative suite
     "hits": {"state": _w("long", "double", "double"),

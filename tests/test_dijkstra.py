@@ -1,6 +1,7 @@
 """Dijkstra surface (gds.shortestPath.dijkstra / gds.allShortestPaths.dijkstra
 analogs, algo/.../paths/dijkstra/Dijkstra.java): source-target early exit,
-path parity with the full single-source run, modes-registry wiring."""
+path parity with the full single-source run, modes-registry wiring; Yen's K
+shortest paths (Yens.java), local and distributed branches."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,3 +136,51 @@ def test_targeted_sssp_logs_one_row_per_superstep(spark):
     # strictly increasing: the settling round is one row, not two
     assert steps == list(range(1, res.rounds + 1))
     assert res.metrics[-1].get("targets_settled") is True
+
+
+def _graph(spark, edges, weighted=True):
+    return LinkGraph.from_edges(spark, edges, weighted=weighted)
+
+
+# -- Yen's K shortest paths ---------------------------------------------------
+
+def test_yens_k_shortest(spark):
+    from graph_data_science_spark.operators.paths import yens
+
+    # classic example: multiple routes 0 -> 5
+    edges = [
+        (0, 1, 1.0), (1, 5, 1.0),          # cost 2
+        (0, 2, 1.0), (2, 5, 1.5),          # cost 2.5
+        (0, 3, 2.0), (3, 5, 1.0),          # cost 3
+        (1, 2, 0.3),                        # 0-1-2-5 = 2.8
+    ]
+    g = _graph(spark, edges)
+    paths = yens(g, 0, 5, k=3)
+    assert [p for _, p in paths][0] == [0, 1, 5]
+    costs = [c for c, _ in paths]
+    assert costs == sorted(costs)
+    assert abs(costs[0] - 2.0) < 1e-9
+    assert abs(costs[1] - 2.5) < 1e-9
+    assert abs(costs[2] - 2.8) < 1e-9
+    # loopless
+    for _, p in paths:
+        assert len(p) == len(set(p))
+
+
+def test_yens_local_matches_distributed(spark):
+    """The small-graph local fast path must return exactly what the
+    distributed spur loop returns (costs, paths, ordering)."""
+    from graph_data_science_spark.operators.paths import yens
+
+    edges = [
+        (0, 1, 1.0), (1, 5, 1.0),
+        (0, 2, 1.0), (2, 5, 1.5),
+        (0, 3, 2.0), (3, 5, 1.0),
+        (1, 2, 0.3),
+    ]
+    g = _graph(spark, edges)
+    local = yens(g, 0, 5, k=3)                       # local_threshold default
+    dist = yens(g, 0, 5, k=3, local_threshold=0)     # force distributed branch
+    assert [(round(c, 9), p) for c, p in local] == [
+        (round(c, 9), p) for c, p in dist
+    ]

@@ -3,13 +3,21 @@ implementations on hypothesis-generated random graphs.  Complements the
 ported GDS fixtures (FIXTURES.md) with adversarial topologies — self-loops,
 parallel edges, disconnected islands, cycles — that fixed fixtures miss."""
 
+import math
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from graph_data_science_spark.operators.graph import LinkGraph
 from graph_data_science_spark.operators.scc import scc
-from graph_data_science_spark.operators.triangles import triangle_count
+from graph_data_science_spark.operators.triangles import (
+    TriangleCountConfig,
+    local_clustering_coefficient,
+    triangle_count,
+)
 from graph_data_science_spark.operators.wcc import wcc
+from tests.conftest import brute_triangles
 
 edge_lists = st.lists(
     st.tuples(st.integers(0, 14), st.integers(0, 14)),
@@ -54,24 +62,22 @@ def test_wcc_matches_union_find(spark, edges):
 
 
 @settings(**SETTINGS)
-@given(edge_lists)
-def test_triangle_count_matches_brute_force(spark, edges):
-    clean = {(a, b) for a, b in edges if a != b}
-    if not clean:
-        return
-    und = {frozenset(e) for e in clean}
-    nodes = sorted({x for e in und for x in e})
-    nbrs = {n: {next(iter(e - {n})) for e in und if n in e} for n in nodes}
-    want = sum(
-        1
-        for i, a in enumerate(nodes)
-        for b in nodes[i + 1:]
-        if b in nbrs[a]
-        for c in nodes
-        if c > b and c in nbrs[a] and c in nbrs[b]
-    )
-    g = LinkGraph.from_edges(spark, sorted(clean))
-    assert triangle_count(g).global_triangles == want
+@given(edge_lists, st.none() | st.integers(1, 6))
+def test_triangle_count_matches_brute_force(spark, edges, max_degree):
+    cfg = TriangleCountConfig(max_degree=max_degree)
+    want_global, want_local, nbrs = brute_triangles(edges, max_degree=max_degree)
+    g = LinkGraph.from_edges(spark, edges)
+    res = triangle_count(g, cfg)
+    assert res.global_triangles == want_global
+    assert {r["id"]: r["triangles"] for r in res.local_triangles.collect()} == want_local
+    got = {r["id"]: r["coefficient"] for r in local_clustering_coefficient(g, cfg).collect()}
+    assert got.keys() == want_local.keys()
+    for n, t in want_local.items():
+        d = len(nbrs[n])
+        if t == -1:
+            assert math.isnan(got[n])
+        else:
+            assert got[n] == pytest.approx(2 * t / (d * (d - 1)) if t else 0.0)
 
 
 def _tarjan_scc_sets(edges):

@@ -1,5 +1,5 @@
-"""Round-2 long-tail operators: approximate max-k-cut, A*, Yen's K shortest
-paths, RIS influence maximization."""
+"""Round-2 long-tail operators: approximate max-k-cut, A*, RIS influence
+maximization."""
 
 import math
 
@@ -68,31 +68,6 @@ def test_astar_matches_dijkstra_cost(spark):
     assert abs(got[0]["total_cost"] - want["total_cost"]) < 1e-6
     assert got[0]["node_ids"] == want["node_ids"]
     assert abs(got[0]["costs"][-1] - got[0]["total_cost"]) < 1e-6
-
-
-# -- Yen's K shortest paths ---------------------------------------------------
-
-def test_yens_k_shortest(spark):
-    from graph_data_science_spark.operators.paths import yens
-
-    # classic example: multiple routes 0 -> 5
-    edges = [
-        (0, 1, 1.0), (1, 5, 1.0),          # cost 2
-        (0, 2, 1.0), (2, 5, 1.5),          # cost 2.5
-        (0, 3, 2.0), (3, 5, 1.0),          # cost 3
-        (1, 2, 0.3),                        # 0-1-2-5 = 2.8
-    ]
-    g = _graph(spark, edges)
-    paths = yens(g, 0, 5, k=3)
-    assert [p for _, p in paths][0] == [0, 1, 5]
-    costs = [c for c, _ in paths]
-    assert costs == sorted(costs)
-    assert abs(costs[0] - 2.0) < 1e-9
-    assert abs(costs[1] - 2.5) < 1e-9
-    assert abs(costs[2] - 2.8) < 1e-9
-    # loopless
-    for _, p in paths:
-        assert len(p) == len(set(p))
 
 
 # -- RIS influence maximization ----------------------------------------------
@@ -268,25 +243,6 @@ def test_dfs_guardrail(spark):
     g = LinkGraph.from_edges(spark, [(0, 1), (1, 2)])
     with pytest.raises(ValueError, match="max_edges"):
         dfs(g, 0, max_edges=1)
-
-
-def test_yens_local_matches_distributed(spark):
-    """The small-graph local fast path must return exactly what the
-    distributed spur loop returns (costs, paths, ordering)."""
-    from graph_data_science_spark.operators.paths import yens
-
-    edges = [
-        (0, 1, 1.0), (1, 5, 1.0),
-        (0, 2, 1.0), (2, 5, 1.5),
-        (0, 3, 2.0), (3, 5, 1.0),
-        (1, 2, 0.3),
-    ]
-    g = _graph(spark, edges)
-    local = yens(g, 0, 5, k=3)                       # local_threshold default
-    dist = yens(g, 0, 5, k=3, local_threshold=0)     # force distributed branch
-    assert [(round(c, 9), p) for c, p in local] == [
-        (round(c, 9), p) for c, p in dist
-    ]
 
 
 def test_ivf_topk_full_probe_equals_brute_force(spark):

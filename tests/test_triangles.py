@@ -1,6 +1,7 @@
 """Triangle count golden fixtures
 (algo/src/test/java/org/neo4j/gds/triangle/IntersectingTriangleCountTest.java,
-FIXTURES.md §B7).  All graphs UNDIRECTED; expected values exact."""
+FIXTURES.md §B7).  All graphs UNDIRECTED; expected values exact, and
+`run_both` also checks them against a plain-Python count."""
 
 import math
 
@@ -12,10 +13,13 @@ from graph_data_science_spark.operators.triangles import (
     average_clustering_coefficient,
     local_clustering_coefficient,
     triangle_count,
-    triangle_count_intersect,
     triangle_stream,
 )
-from tests.conftest import edges_from
+from tests.conftest import brute_triangles, edges_from
+
+# IntersectingTriangleCountTest.java:437-467: with max_degree=2, a and b
+# (degree 3) are excluded and only the e-f-g triangle is left
+MAX_DEGREE_EDGES = edges_from("abcdefg", "a->b, a->c, a->d, b->c, b->d, e->f, f->g, g->e")
 
 
 def locals_map(res):
@@ -23,12 +27,13 @@ def locals_map(res):
 
 
 def run_both(spark, edges, nodes, cfg=None):
+    """triangle_count on Spark against the plain-Python count."""
     g = LinkGraph.from_edges(spark, edges, nodes=nodes)
-    r1 = triangle_count(g, cfg)
-    r2 = triangle_count_intersect(g, cfg)
-    assert r1.global_triangles == r2.global_triangles
-    assert locals_map(r1) == locals_map(r2)
-    return r1
+    res = triangle_count(g, cfg)
+    want_global, want_local, _ = brute_triangles(edges, nodes, cfg and cfg.max_degree)
+    assert res.global_triangles == want_global
+    assert locals_map(res) == want_local
+    return res
 
 
 class TestTriangleCount:
@@ -96,17 +101,23 @@ class TestTriangleCount:
         assert locals_map(res) == {0: 1, 1: 1, 2: 1}
 
     def test_max_degree_filter(self, spark):
-        # IntersectingTriangleCountTest.java:437-467
-        edges = edges_from("abcdefg", "a->b, a->c, a->d, b->c, b->d, e->f, f->g, g->e")
-        res = run_both(spark, edges, range(7), TriangleCountConfig(max_degree=2))
+        res = run_both(spark, MAX_DEGREE_EDGES, range(7), TriangleCountConfig(max_degree=2))
         assert locals_map(res) == {0: -1, 1: -1, 2: 0, 3: 0, 4: 1, 5: 1, 6: 1}
         assert res.global_triangles == 1
+        # one triangle through a degree-3 hub, the hub being the largest
+        # and then the smallest id: it counts from no corner
+        for edges in ([(0, 1), (0, 3), (1, 3), (2, 3)], [(0, 1), (0, 2), (0, 3), (1, 2)]):
+            res = run_both(spark, edges, range(4), TriangleCountConfig(max_degree=2))
+            assert res.global_triangles == 0
 
     def test_triangle_stream(self, spark):
         edges = edges_from("abcde", "a->b, b->c, c->a, a->d, d->e, e->a")
         g = LinkGraph.from_edges(spark, edges, nodes=range(5))
         tris = {tuple(r) for r in triangle_stream(g).collect()}
         assert tris == {(0, 1, 2), (0, 3, 4)}
+        g = LinkGraph.from_edges(spark, MAX_DEGREE_EDGES, nodes=range(7))
+        tris = {tuple(r) for r in triangle_stream(g, TriangleCountConfig(max_degree=2)).collect()}
+        assert tris == {(4, 5, 6)}
 
 
 class TestClusteringCoefficient:
@@ -127,11 +138,10 @@ class TestClusteringCoefficient:
             assert lcc[i] == pytest.approx(1.0)
 
     def test_excluded_nodes_get_nan(self, spark):
-        edges = edges_from("abcdefg", "a->b, a->c, a->d, b->c, b->d, e->f, f->g, g->e")
-        g = LinkGraph.from_edges(spark, edges, nodes=range(7))
-        lcc = {
-            r["id"]: r["coefficient"]
-            for r in local_clustering_coefficient(g, TriangleCountConfig(max_degree=2)).collect()
-        }
+        g = LinkGraph.from_edges(spark, MAX_DEGREE_EDGES, nodes=range(7))
+        cfg = TriangleCountConfig(max_degree=2)
+        lcc = {r["id"]: r["coefficient"] for r in local_clustering_coefficient(g, cfg).collect()}
         assert math.isnan(lcc[0]) and math.isnan(lcc[1])
         assert lcc[4] == pytest.approx(1.0)
+        # c, d: 0.0; e, f, g: 1.0; the NaN nodes a, b count in the denominator
+        assert average_clustering_coefficient(g, cfg) == pytest.approx(3 / 7)
